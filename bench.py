@@ -497,22 +497,6 @@ def _vector_serving_section(spark, emb_dir: str,
     # r13 (vecidx3) the ksub=256 rebaseline.
     root = os.environ.get("SPARK_GRAFT_VECIDX_DIR",
                           f"/tmp/spark_graft_bench/vecidx5_{tag}")
-    writers = {
-        "bq": sim.write_bq_index,
-        "ivf_bq": sim.write_ivf_bq_index,
-        "sq8": sim.write_sq8_index,
-        "ivf_sq8": sim.write_ivf_sq8_index,
-        "pq": sim.write_pq_index,
-        "ivf_pq": sim.write_ivf_pq_index,
-    }
-    batchers = {
-        "bq": sim.bq_index_topk_batch,
-        "ivf_bq": sim.ivf_bq_index_topk_batch,
-        "sq8": sim.sq8_index_topk_batch,
-        "ivf_sq8": sim.ivf_sq8_index_topk_batch,
-        "pq": sim.pq_index_topk_batch,
-        "ivf_pq": sim.ivf_pq_index_topk_batch,
-    }
     queries = (emb.filter(F.col("vec_id") < 16)
                .select(F.col("vec_id").alias("query_id"), "embedding")
                .localCheckpoint(eager=True))
@@ -541,24 +525,21 @@ def _vector_serving_section(spark, emb_dir: str,
                 build_cached = build_s is not None
             except (FileNotFoundError, json.JSONDecodeError):
                 pass
-        except (FileNotFoundError, AssertionError):
+        except (FileNotFoundError, AssertionError, sim.IndexCorruptError):
             t0 = time.monotonic()
-            tf = _BUILD_TRAIN_FRACTION.get(kind)
-            if tf is not None:
-                writers[kind](emb, path, train_fraction=tf)
-            else:
-                writers[kind](emb, path)
+            tf = _BUILD_TRAIN_FRACTION.get(kind, 1.0)
+            sim.write_index(emb, path, kind, train_fraction=tf)
             build_s = round(time.monotonic() - t0, 3)
             try:
                 with open(sidecar, "w", encoding="utf-8") as fh:
                     json.dump({"build_s": build_s,
-                               "train_fraction": tf or 1.0}, fh)
+                               "train_fraction": tf}, fh)
             except OSError:
                 pass
         tune_s = tuned = None
         m = sim._index_manifest(spark, path)
-        want = ("default_nprobe" if kind.startswith("ivf_")
-                else "default_rerank_mult")
+        ivf = sim.INDEX_KINDS[kind].ivf
+        want = "default_nprobe" if ivf else "default_rerank_mult"
         if want not in m:
             # measure the recall curve, commit the cheapest operating
             # point meeting the target — nprobe for the IVF kinds,
@@ -572,13 +553,13 @@ def _vector_serving_section(spark, emb_dir: str,
             tune_s = round(time.monotonic() - t0, 3)
         # k=11 so dropping the self-hit still leaves 10 candidates;
         # nprobe=None = the manifest's tuned operating point
-        batchers[kind](spark, path, queries, emb, k=11).count()
+        sim.index_topk_batch(spark, path, queries, emb, k=11).count()
         samples, rows = [], []
         for _ in range(3):
             spark.catalog.clearCache()
             t0 = time.monotonic()
-            rows = batchers[kind](spark, path, queries, emb,
-                                  k=11).collect()
+            rows = sim.index_topk_batch(spark, path, queries, emb,
+                                        k=11).collect()
             samples.append(time.monotonic() - t0)
         hits = total = 0
         by_q: dict[int, list] = {}
@@ -605,7 +586,7 @@ def _vector_serving_section(spark, emb_dir: str,
             detail["build_cached"] = True   # cost from the sidecar,
             #                                 paid when the index built
         man = sim._index_manifest(spark, path)
-        if kind.startswith("ivf_"):
+        if ivf:
             detail["n_clusters"] = spark.read.parquet(
                 f"{path}/{man['centroids']}").count()
             out[kind]["nprobe"] = int(
@@ -627,7 +608,7 @@ def _vector_serving_section(spark, emb_dir: str,
         print(f"# vecserve[{tag}] {kind}: "
               f"{out[kind]['serve_s']}s "
               f"(recall@10 {out[kind]['recall10']}permille"
-              f"{', nprobe ' + str(out[kind].get('nprobe')) if kind.startswith('ivf_') else ''}"
+              f"{', nprobe ' + str(out[kind].get('nprobe')) if ivf else ''}"
               f", rerank {out[kind]['rerank']}"
               f") detail={json.dumps(detail)}",
               file=sys.stderr)

@@ -301,9 +301,6 @@ def cmd_web_curate(args: argparse.Namespace) -> int:
     return 0
 
 
-_FLAT_KINDS = ("sq8", "pq", "bq")
-
-
 def _parse_grid(s: str | None, kind: str | None = None
                 ) -> tuple[tuple | None, str | None]:
     """``--rerank-mults`` -> ``(grid, error)``.  None passes through
@@ -321,7 +318,9 @@ def _parse_grid(s: str | None, kind: str | None = None
     except ValueError:
         return None, (f"--rerank-mults: expected comma-separated "
                       f"integers, got {s!r}")
-    if not grid and kind in _FLAT_KINDS:
+    from .pipeline.similarity import INDEX_KINDS
+
+    if not grid and kind is not None and not INDEX_KINDS[kind].ivf:
         return None, (f"--rerank-mults '': an empty grid pins the IVF "
                       f"second rung off, but a {kind} index has no "
                       f"probe rung — the rerank grid is its only "
@@ -367,24 +366,10 @@ def cmd_vector_index(args: argparse.Namespace) -> int:
         tf = args.train_fraction
         attrs = (spark.read.parquet(args.attrs)
                  if getattr(args, "attrs", None) is not None else None)
-        if args.bq and args.ivf:
-            sim.write_ivf_bq_index(emb, args.path, dim=build_dim,
-                                   train_fraction=tf, attrs=attrs)
-        elif args.bq:
-            sim.write_bq_index(emb, args.path, dim=build_dim,
-                               attrs=attrs)
-        elif args.pq and args.ivf:
-            sim.write_ivf_pq_index(emb, args.path, dim=build_dim,
-                                   train_fraction=tf, attrs=attrs)
-        elif args.pq:
-            sim.write_pq_index(emb, args.path, dim=build_dim,
-                               train_fraction=tf, attrs=attrs)
-        elif args.ivf:
-            sim.write_ivf_sq8_index(emb, args.path, dim=build_dim,
-                                    train_fraction=tf, attrs=attrs)
-        else:
-            sim.write_sq8_index(emb, args.path, dim=build_dim,
-                                attrs=attrs)
+        codec = "bq" if args.bq else "pq" if args.pq else "sq8"
+        sim.write_index(emb, args.path,
+                        f"ivf_{codec}" if args.ivf else codec,
+                        dim=build_dim, train_fraction=tf, attrs=attrs)
         n = sim.read_index_codes(spark, args.path).count()
         print(json.dumps({"action": "build", "path": args.path,
                           "ivf": bool(args.ivf), "pq": bool(args.pq),
@@ -404,28 +389,9 @@ def cmd_vector_index(args: argparse.Namespace) -> int:
         if err:
             print(json.dumps(err))
             return 2
-        if kind == "ivf_sq8":
-            res = sim.ivf_sq8_index_topk(
-                spark, args.path, qvec, emb, k=args.k,
-                nprobe=args.nprobe, dim=args.dim, where=args.where)
-        elif kind == "ivf_pq":
-            res = sim.ivf_pq_index_topk(spark, args.path, qvec, emb,
-                                        k=args.k, nprobe=args.nprobe,
-                                        where=args.where)
-        elif kind == "pq":
-            res = sim.pq_index_topk(spark, args.path, qvec, emb,
-                                    k=args.k, where=args.where)
-        elif kind == "bq":
-            res = sim.bq_index_topk(spark, args.path, qvec, emb,
-                                    k=args.k, where=args.where)
-        elif kind == "ivf_bq":
-            res = sim.ivf_bq_index_topk(spark, args.path, qvec, emb,
-                                        k=args.k, nprobe=args.nprobe,
-                                        where=args.where)
-        else:
-            res = sim.sq8_index_topk(spark, args.path, qvec, emb,
-                                     k=args.k, dim=args.dim,
-                                     where=args.where)
+        res = sim.index_topk(spark, args.path, qvec, emb, k=args.k,
+                             nprobe=args.nprobe, dim=args.dim,
+                             where=args.where)
         out = [{"rank": r["rank"], "neighbor_id": r["neighbor_id"],
                 "cos_sim": r["cos_sim"]}
                for r in res.orderBy("rank").collect()]
@@ -444,30 +410,9 @@ def cmd_vector_index(args: argparse.Namespace) -> int:
         if err:
             print(json.dumps(err))
             return 2
-        if kind == "ivf_sq8":
-            res = sim.ivf_sq8_index_topk_batch(
-                spark, args.path, queries, emb, k=args.k,
-                nprobe=args.nprobe, where=args.where)
-        elif kind == "ivf_pq":
-            res = sim.ivf_pq_index_topk_batch(
-                spark, args.path, queries, emb, k=args.k,
-                nprobe=args.nprobe, where=args.where)
-        elif kind == "pq":
-            res = sim.pq_index_topk_batch(spark, args.path, queries,
-                                          emb, k=args.k,
-                                          where=args.where)
-        elif kind == "bq":
-            res = sim.bq_index_topk_batch(spark, args.path, queries,
-                                          emb, k=args.k,
-                                          where=args.where)
-        elif kind == "ivf_bq":
-            res = sim.ivf_bq_index_topk_batch(
-                spark, args.path, queries, emb, k=args.k,
-                nprobe=args.nprobe, where=args.where)
-        else:
-            res = sim.sq8_index_topk_batch(spark, args.path, queries,
-                                           emb, k=args.k,
-                                           where=args.where)
+        res = sim.index_topk_batch(spark, args.path, queries, emb,
+                                   k=args.k, nprobe=args.nprobe,
+                                   where=args.where)
         res.write.mode("overwrite").parquet(args.out)
         n_q = queries.select("query_id").distinct().count()
         n_r = spark.read.parquet(args.out).count()
@@ -476,26 +421,11 @@ def cmd_vector_index(args: argparse.Namespace) -> int:
                           "out": args.out}))
         return 0
     if args.action == "upsert":
-        # kind-TRUE dispatch: each layout has its own maintainer, and
-        # every maintainer refuses foreign kinds (decision
-        # "wrong_kind") — an ivf_sq8 index can no longer be silently
-        # downgraded by the flat-sq8 path committing a manifest that
-        # drops its centroids
+        # kind-TRUE: the upsert encodes and partitions by the kind the
+        # manifest records, so a layout can never be downgraded
         batch = spark.read.parquet(args.batch)
         kind = sim._index_manifest(spark, args.path).get("kind", "sq8")
-        if kind == "pq":
-            st = sim.pq_index_upsert(spark, args.path, batch)
-        elif kind == "ivf_sq8":
-            st = sim.ivf_sq8_index_upsert(spark, args.path, batch)
-        elif kind == "ivf_pq":
-            st = sim.ivf_pq_index_upsert(spark, args.path, batch)
-        elif kind == "bq":
-            st = sim.bq_index_upsert(spark, args.path, batch)
-        elif kind == "ivf_bq":
-            st = sim.ivf_bq_index_upsert(spark, args.path, batch)
-        else:
-            st = sim.sq8_index_upsert(spark, args.path, batch,
-                                      dim=args.dim)
+        st = sim.index_upsert(spark, args.path, batch, dim=args.dim)
         if args.auto_compact and st["decision"] in ("appended",
                                                      "replaced"):
             # the streaming maintainer's ops-loop closure, batch form:
@@ -509,44 +439,31 @@ def cmd_vector_index(args: argparse.Namespace) -> int:
         return 0 if st["decision"] not in ("rebuild", "wrong_kind") \
             else 3
     if args.action == "maintain":
-        # the closed maintenance loops, dispatched by the manifest's
-        # kind: upsert + sampled-recall monitor + bump-nprobe (ivf_sq8
-        # only — pruning has a runtime knob, codebooks don't) +
-        # rebuild-in-place decision.  Flat sq8's guard lives in its
-        # upsert; classic IVF's in maintain_ivf_index
+        # the closed maintenance loop: upsert + sampled-recall monitor
+        # + the kind's rungs (bump_nprobe on IVF, bump_rerank on bq) +
+        # rebuild-in-place.  Flat sq8's guard lives in its upsert and
+        # flat bq trains nothing, so they have no ladder; classic IVF's
+        # is maintain_ivf_index
         kind = sim._index_manifest(spark, args.path).get("kind", "sq8")
-        if kind not in ("pq", "ivf_sq8", "ivf_pq", "ivf_bq"):
-            print(json.dumps({"error": f"maintain drives pq/ivf_sq8/"
-                                       f"ivf_pq/ivf_bq indexes; this "
-                                       f"one is {kind!r}"}))
+        if not sim.INDEX_KINDS[kind].maintainable:
+            ladders = sorted(n for n, s in sim.INDEX_KINDS.items()
+                             if s.maintainable)
+            print(json.dumps({"error": f"maintain drives "
+                                       f"{'/'.join(ladders)} indexes; "
+                                       f"this one is {kind!r}"}))
             return 2
         batch = spark.read.parquet(args.batch)
         vectors = spark.read.parquet(args.emb)
-        if kind == "pq":
-            st = sim.maintain_pq_index(
-                spark, args.path, batch, vectors, k=args.k,
-                recall_floor_permille=args.recall_floor,
-                train_fraction=args.train_fraction)
-        elif kind == "ivf_pq":
-            st = sim.maintain_ivf_pq_index(
-                spark, args.path, batch, vectors, k=args.k,
-                nprobe=args.nprobe,
-                recall_floor_permille=args.recall_floor,
-                train_fraction=args.train_fraction)
-        elif kind == "ivf_bq":
-            st = sim.maintain_ivf_bq_index(
-                spark, args.path, batch, vectors, k=args.k,
-                nprobe=args.nprobe,
-                recall_floor_permille=args.recall_floor,
-                train_fraction=args.train_fraction)
-        else:
-            st = sim.maintain_ivf_sq8_index(
-                spark, args.path, batch, vectors, k=args.k,
-                nprobe=args.nprobe,
-                recall_floor_permille=args.recall_floor,
-                train_fraction=args.train_fraction)
+        st = sim.maintain_index(
+            spark, args.path, batch, vectors, k=args.k,
+            nprobe=args.nprobe, recall_floor_permille=args.recall_floor,
+            train_fraction=args.train_fraction)
         print(json.dumps({"action": "maintain", "kind": kind, **st}))
-        return 0 if st["decision"] in ("ok", "bump_nprobe") else 3
+        # every non-rebuild decision commits (at most) a manifest-only
+        # operating point that meets the floor: success
+        return 0 if st["decision"] in (
+            "ok", "bump_nprobe", "bump_rerank",
+            "bump_nprobe_rerank") else 3
     if args.action == "rebalance":
         # targeted skew repair: split the hottest cluster in two
         # (O(hot list), codes unchanged — only list membership moves);
@@ -697,23 +614,8 @@ def cmd_vector_pipeline(args: argparse.Namespace) -> int:
         .write.mode("overwrite").parquet(f"{wd}/emb")
     emb = spark.read.parquet(f"{wd}/emb")
     kind = args.kind
-    tf = args.train_fraction
-    if kind == "ivf_sq8":
-        sim.write_ivf_sq8_index(emb, f"{wd}/index", dim=args.dim,
-                                train_fraction=tf)
-    elif kind == "ivf_pq":
-        sim.write_ivf_pq_index(emb, f"{wd}/index", dim=args.dim,
-                               train_fraction=tf)
-    elif kind == "pq":
-        sim.write_pq_index(emb, f"{wd}/index", dim=args.dim,
-                           train_fraction=tf)
-    elif kind == "bq":
-        sim.write_bq_index(emb, f"{wd}/index", dim=args.dim)
-    elif kind == "ivf_bq":
-        sim.write_ivf_bq_index(emb, f"{wd}/index", dim=args.dim,
-                               train_fraction=tf)
-    else:
-        sim.write_sq8_index(emb, f"{wd}/index", dim=args.dim)
+    sim.write_index(emb, f"{wd}/index", kind, dim=args.dim,
+                    train_fraction=args.train_fraction)
 
     # optional tune step: measure the recall curve and commit the
     # cheapest operating point meeting --target-recall — nprobe for
@@ -730,24 +632,9 @@ def cmd_vector_pipeline(args: argparse.Namespace) -> int:
                .select(F.col("vec_id").alias("query_id"), "embedding"))
     # nprobe=None on the IVF kinds = the manifest's (possibly just
     # tuned) operating point; an explicit --nprobe still overrides
-    batchers = {
-        "ivf_sq8": lambda: sim.ivf_sq8_index_topk_batch(
-            spark, f"{wd}/index", queries, emb, k=args.k,
-            nprobe=args.nprobe),
-        "ivf_pq": lambda: sim.ivf_pq_index_topk_batch(
-            spark, f"{wd}/index", queries, emb, k=args.k,
-            nprobe=args.nprobe),
-        "pq": lambda: sim.pq_index_topk_batch(
-            spark, f"{wd}/index", queries, emb, k=args.k),
-        "bq": lambda: sim.bq_index_topk_batch(
-            spark, f"{wd}/index", queries, emb, k=args.k),
-        "ivf_bq": lambda: sim.ivf_bq_index_topk_batch(
-            spark, f"{wd}/index", queries, emb, k=args.k,
-            nprobe=args.nprobe),
-        "sq8": lambda: sim.sq8_index_topk_batch(
-            spark, f"{wd}/index", queries, emb, k=args.k),
-    }
-    batchers[kind]().write.mode("overwrite").parquet(f"{wd}/results")
+    sim.index_topk_batch(spark, f"{wd}/index", queries, emb, k=args.k,
+                         nprobe=args.nprobe) \
+        .write.mode("overwrite").parquet(f"{wd}/results")
     n_results = spark.read.parquet(f"{wd}/results").count()
     print(json.dumps({
         "workdir": wd, "n_docs": n_docs, "n_quarantined": n_bad,

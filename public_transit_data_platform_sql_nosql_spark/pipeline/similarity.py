@@ -1,24 +1,39 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Two strategies with one contract (query_id, rank, neighbor_id, cos_sim):
+IN-FLIGHT operators, one contract (query_id, rank, neighbor_id, cos_sim),
+each DuckDB-oracle-checked: ``brute_force_topk`` (exact baseline: the
+bounded query set broadcast against every vector), ``lsh_topk`` /
+``knn_join_lsh`` (random-hyperplane sign buckets), ``ivf_topk``,
+``sq8_topk``, ``pq_topk``, ``ivf_pq_topk`` and ``bq_topk``.  Hyperplane
+components and k-means updates are deterministic integer arithmetic and
+dot/cosine are left-fold doubles, so the oracle reproduces every bit
+(pipeline/core.py).
 
-- ``brute_force_topk``  — exact baseline: broadcast the (small) query set
-                          against every vector, per-query top-k via a
-                          row_number window.  Scales to 100 TB of vectors
-                          because the broadcast side is the bounded one;
-                          the scan side stays narrow + shuffle-free until
-                          the final per-query (tiny-cardinality) window.
-- ``lsh_topk``          — random-hyperplane LSH: an 8-bit sign bucket per
-                          vector; candidates are only the query's bucket
-                          (the IVF/LSH scale path: the self-join runs on
-                          the bucket key, touching ~1/256 of pairs).
+STORED indexes — manifest-committed serving layouts — are one core over
+two axes (the end of this module):
 
-Hyperplane components are deterministic integer arithmetic so the DuckDB
-oracle computes identical buckets; dot/cosine are left-fold doubles
-(bit-identical across engines — pipeline/core.py).
+- a CODEC turns a vector into scannable code and scores a candidate's
+  code against a query: ``sq8`` (a byte per dimension against a trained
+  [min, max] quantizer), ``pq`` (a byte per subspace against trained
+  codebooks, ADC-scored) or ``bq`` (a sign bit per dimension,
+  Hamming-scored, nothing trained);
+- a PARTITION LAYER is flat (the codes table is scanned whole) or IVF
+  (codes hive-partitioned by k-means cluster; a query ranks the centroid
+  table and reads only its ``nprobe`` best cluster directories).
+
+``INDEX_KINDS`` registers the six combinations (``sq8``, ``ivf_sq8``,
+``pq``, ``ivf_pq``, ``bq``, ``ivf_bq``).  ``write_index``, ``index_topk``,
+``index_topk_batch``, ``index_upsert`` and ``maintain_index`` serve every
+kind, reading it from the manifest (except on write); the per-kind names
+(``write_ivf_sq8_index``, ``ivf_sq8_index_topk_batch``, ...) pin the kind
+on the same core.  Every stored read shortlists ``k * rerank_mult`` rows
+on code scores and exact-cosine re-ranks them against the caller's
+full-precision primary store.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -250,9 +265,22 @@ def _next_index_version(spark, path: str) -> int:
     return version
 
 
+class IndexCorruptError(RuntimeError):
+    """A committed index manifest references data that no longer exists
+    (a deleted codes / quantizer / centroids / codebooks dir)."""
+
+
 def _index_manifest(spark, path: str) -> dict:
     """Resolve the newest COMMITTED snapshot of a manifest-versioned
-    index (raises FileNotFoundError for an empty/uncommitted path)."""
+    index (raises FileNotFoundError for an empty/uncommitted path).
+
+    Every data dir the manifest references is checked to exist — one
+    filesystem stat each — so a dangling manifest is a typed
+    :class:`IndexCorruptError` naming the missing path at every entry
+    point, never a ``PATH_NOT_FOUND`` deep in a plan or (on a probed
+    read, which skips absent cluster dirs) silently missing
+    candidates."""
+    from ..jobs.compact import _fs
     from ..jobs.versioned import _read_manifest, list_versions
 
     versions = list_versions(spark, path)
@@ -260,7 +288,18 @@ def _index_manifest(spark, path: str) -> dict:
         raise FileNotFoundError(
             f"vector index {path}: no committed version (data dirs "
             f"without a manifest are uncommitted orphans)")
-    return _read_manifest(spark, path, versions[-1])
+    m = _read_manifest(spark, path, versions[-1])
+    fs, _, jvm = _fs(spark, path)
+    refs = list(m.get("codes", [])) + [
+        m[a] for a in ("quantizer", "centroids", "codebooks") if a in m]
+    missing = [r for r in refs if not fs.exists(
+        jvm.org.apache.hadoop.fs.Path(f"{path}/{r}"))]
+    if missing:
+        raise IndexCorruptError(
+            f"vector index {path} is corrupt: committed version "
+            f"{versions[-1]} references missing data {missing} — "
+            f"rebuild the index (write_index) from the primary store")
+    return m
 
 
 def _manifest_fingerprint(spark, path: str, version: int,
@@ -326,15 +365,6 @@ def _resolve_nprobe(m: dict, nprobe: int | None) -> int:
     return int(m.get("default_nprobe", DEFAULT_NPROBE))
 
 
-def _kind_rerank_default(kind: str) -> int:
-    """The constant fallback rerank depth per layout kind — what an
-    UNTUNED index serves at (coarser codes default deeper, see the
-    constants' notes)."""
-    return {"sq8": SQ_RERANK_MULT, "ivf_sq8": SQ_RERANK_MULT,
-            "pq": PQ_RERANK_MULT, "ivf_pq": PQ_RERANK_MULT,
-            "bq": BQ_RERANK_MULT, "ivf_bq": BQ_RERANK_MULT}[kind]
-
-
 def _resolve_rerank(m: dict, rerank_mult: int | None) -> int:
     """Serving exact-rerank depth, resolved exactly like nprobe: an
     explicit caller value wins; ``None`` (the default everywhere)
@@ -348,7 +378,7 @@ def _resolve_rerank(m: dict, rerank_mult: int | None) -> int:
         return int(rerank_mult)
     if "default_rerank_mult" in m:
         return int(m["default_rerank_mult"])
-    return _kind_rerank_default(m.get("kind", "sq8"))
+    return INDEX_KINDS[m.get("kind", "sq8")].codec.rerank_default
 
 
 def _persist_operating_point(spark, path: str, *,
@@ -356,40 +386,25 @@ def _persist_operating_point(spark, path: str, *,
                              rerank_mult: int | None = None) -> int:
     """Commit a manifest-only version bump carrying the serving
     operating point — ``default_nprobe`` and/or ``default_rerank_mult``
-    (the :func:`tune_index` commit shape, shared with the maintainers'
-    bump rung so a bumped setting actually changes how later serving
-    calls run instead of riding home in a decision dict the caller
-    must remember to thread through).  Returns the committed version
-    (the current one when every passed setting is already in force).
-
-    A setting is skipped only when its key is EXPLICITLY present and
-    equal: an absent key merely falls back to the constant today, and
-    the point of persisting is to pin the measured operating point
-    against constant drift, not to rely on the fallback."""
+    (the :func:`tune_index` commit, shared with the maintenance ladder's
+    bump rungs so a bumped setting changes how every later serving call
+    runs).  Returns the committed version (the current one when every
+    passed setting is already in force).  A setting is skipped only when
+    its key is EXPLICITLY present and equal: the point is to pin the
+    measured operating point against constant drift."""
     from ..jobs.versioned import _write_manifest
 
     m = _index_manifest(spark, path)
-    patch: dict = {}
-    if nprobe is not None and not (
-            "default_nprobe" in m
-            and int(m["default_nprobe"]) == int(nprobe)):
-        patch["default_nprobe"] = int(nprobe)
-    if rerank_mult is not None and not (
-            "default_rerank_mult" in m
-            and int(m["default_rerank_mult"]) == int(rerank_mult)):
-        patch["default_rerank_mult"] = int(rerank_mult)
+    patch = {key: int(v) for key, v in (("default_nprobe", nprobe),
+                                        ("default_rerank_mult",
+                                         rerank_mult))
+             if v is not None and not (key in m and int(m[key]) == int(v))}
     if not patch:
         return int(m["version"])
     version = _next_index_version(spark, path)
     _write_manifest(spark, path, version,
                     {**m, "version": version, **patch})
     return version
-
-
-def _persist_nprobe(spark, path: str, nprobe: int) -> int:
-    """The maintainers' bump-rung commit: ``default_nprobe`` only
-    (:func:`_persist_operating_point`)."""
-    return _persist_operating_point(spark, path, nprobe=nprobe)
 
 
 def vacuum_index(spark, path: str, keep_last: int = 2) -> dict:
@@ -514,12 +529,12 @@ def compact_index(spark, path: str, min_dirs: int = 2) -> dict:
     whose per-dir open/footer overhead eventually taxes every probe
     (the small-files problem, at directory granularity).  Compaction
     union-reads the committed dirs, rewrites them as a single dir
-    (cluster-partitioned when the kind is ivf_sq8 / ivf_pq, so pruning
-    survives), and commits a manifest identical except for the codes
-    list — same crash protocol as every writer (data first, one
-    rename; an interrupted compaction leaves the fragmented version
-    fully readable).  ``vacuum_index`` then collects the old dirs once
-    they fall out of the retention window.
+    (cluster-partitioned on the IVF kinds, so pruning survives), and
+    commits a manifest identical except for the codes list — same
+    crash protocol as every writer (data first, one rename; an
+    interrupted compaction leaves the fragmented version readable).
+    ``vacuum_index`` then collects the old dirs once they fall out of
+    the retention window.
 
     Returns the decision as data: ``{"decision": "noop"}`` when the
     manifest already references fewer than ``min_dirs`` dirs (nothing
@@ -532,14 +547,10 @@ def compact_index(spark, path: str, min_dirs: int = 2) -> dict:
     codes = _manifest_codes(spark, path, m)
     version = _next_index_version(spark, path)
     base = f"data/v{version:06d}"
-    if m.get("kind") in ("ivf_sq8", "ivf_pq", "ivf_bq"):
-        cols = [c for c in codes.columns if c != "cluster_id"]
-        (codes.select(*cols, "cluster_id")
-         .repartition("cluster_id")
-         .write.mode("error").partitionBy("cluster_id")
-         .parquet(f"{path}/{base}/codes"))
-    else:
-        codes.write.mode("error").parquet(f"{path}/{base}/codes")
+    ivf = _kind_of(m, path).ivf
+    cols = [c for c in codes.columns if c != "cluster_id"]
+    _write_codes(codes.select(*cols, *(["cluster_id"] if ivf else [])),
+                 f"{path}/{base}/codes", ivf)
     new_m = {**m, "version": version, "codes": [f"{base}/codes"]}
     # the fold physically drops rebalance-retired rows (the read above
     # is exclusion-filtered), so the mask has nothing left to mask
@@ -550,196 +561,11 @@ def compact_index(spark, path: str, min_dirs: int = 2) -> dict:
 
 
 def read_index_codes(spark, path: str) -> DataFrame:
-    """The codes table of the newest COMMITTED snapshot of an SQ8 /
-    IVF-SQ8 index — what a maintenance job or audit reads; uncommitted
+    """The codes table of the newest COMMITTED snapshot of a stored
+    index — what a maintenance job or audit reads; uncommitted
     (crash-orphaned) data dirs are invisible by construction."""
     m = _index_manifest(spark, path)
     return _manifest_codes(spark, path, m)
-
-
-def write_sq8_index(emb: DataFrame, path: str, dim: int = 64,
-                    attrs: DataFrame | None = None) -> None:
-    """Persist the COMPRESSED vector serving layout: ``(vec_id,
-    codes)`` with the dim-byte packed blob per row plus the 1-row
-    quantizer — the on-disk twin of ``sq8_topk``'s in-flight
-    quantization and the IO claim behind it: the ANN candidate scan
-    reads this small codes table; full-precision vectors are touched
-    only for the re-rank shortlist (they stay in the caller's primary
-    store).
-
-    Commit protocol (jobs/versioned.py): codes and quantizer are
-    written FIRST under ``<path>/data/v<N>/``, then one manifest at
-    ``<path>/_versions/v<N>.json`` referencing both via an atomic
-    tmp+rename — a crash between any two writes leaves orphan data
-    dirs but never a reader-visible index whose codes and quantizer
-    disagree (the torn-write failure an index rebuilt over hours at
-    100 TB cannot afford).  Single-writer: a concurrent commit of the
-    same version number fails on the manifest create.
-
-    ``attrs`` (a ``(vec_id, <scalar cols>)`` DataFrame) stores
-    filterable attribute columns WITH the codes — the
-    ``write_ivf_sq8_index`` contract on the flat layout: serving
-    ``where=`` predicates reach the codes scan as parquet filters
-    before the shortlist TakeOrdered.  Flat scans see every row, so no
-    probe widening is needed — the filter just shrinks the scan."""
-    from ..jobs.versioned import _write_manifest
-
-    spark = emb.sparkSession
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    stats = _sq8_stats(emb, dim)
-    attr_cols = [c for c in (attrs.columns if attrs is not None else [])
-                 if c != "vec_id"]
-    encoded = (
-        emb.join(F.broadcast(stats))
-        .select("vec_id",
-                _sq8_pack(_sq8_codes(F.col("embedding"), F.col("mns"),
-                                     F.col("mxs"), dim)).alias("codes"))
-    )
-    if attrs is not None:
-        encoded = encoded.join(attrs, "vec_id", "left")
-    encoded.select("vec_id", "codes", *attr_cols) \
-        .write.mode("error").parquet(f"{path}/{base}/codes")
-    stats.coalesce(1).write.mode("error").parquet(
-        f"{path}/{base}/quantizer")
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "sq8", "dim": dim,
-        "codes": [f"{base}/codes"], "quantizer": f"{base}/quantizer",
-        **({"attrs": attr_cols} if attr_cols else {}),
-    })
-
-
-def sq8_index_topk(spark, path: str, query_vec: list[float],
-                   vectors: DataFrame, k: int = 10,
-                   rerank_mult: int | None = None,
-                   dim: int | None = None,
-                   allowed: DataFrame | None = None,
-                   where: str | None = None) -> DataFrame:
-    """Serve top-k from a ``write_sq8_index`` layout: resolve the
-    newest committed manifest, scan ONLY its codes dirs, score each
-    candidate's reconstruction against the full-precision query
-    (asymmetric-distance scoring), TakeOrdered the ``k * rerank_mult``
-    shortlist, then join ``vectors`` (the primary store) for exact
-    cosine on just those rows.  Returns ``(rank, neighbor_id,
-    cos_sim)``.
-
-    ``allowed`` (optional, a ``vec_id`` DataFrame) makes this a
-    FILTERED search — "nearest neighbors among docs matching a
-    metadata predicate", the production ANN shape: the candidate set
-    semi-joins the allow-list BEFORE the shortlist TakeOrdered, so
-    restrictive filters cannot starve the shortlist the way
-    post-filtering the top-k would (the caller computes the allow-list
-    from the metadata store, where its predicate pushes down).
-
-    ``where`` (a SQL predicate over the index's STORED attribute
-    columns — ``write_sq8_index(attrs=...)``) is the PUSHDOWN form:
-    the predicate reaches the codes scan as a parquet filter before
-    the shortlist TakeOrdered.  Trust boundary: the predicate is
-    CALLER-TRUSTED SQL over the stored attr columns — a filtering
-    convenience, not a tenant-isolation mechanism (a caller-controlled
-    string can reference any stored column); when the filter itself is
-    untrusted input, compute an ``allowed=`` id-list from a store the
-    caller is authorized on instead.
-
-    ``dim`` is resolved from the manifest (pass it only to assert);
-    ``rerank_mult=None`` resolves the committed operating point
-    (:func:`_resolve_rerank`)."""
-    m = _index_manifest(spark, path)
-    dim = _manifest_dim(m, dim, path)
-    rerank_mult = _resolve_rerank(m, rerank_mult)
-    stats = spark.read.parquet(f"{path}/{m['quantizer']}")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cand = _manifest_codes(spark, path, m)
-    if where is not None:
-        cand = cand.filter(where)                  # PushedFilters
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id",
-                         "left_semi")
-    shortlist = (
-        cand
-        .join(F.broadcast(stats))
-        .withColumn("ucodes", _sq8_unpack(F.col("codes"), dim))
-        .select(F.col("vec_id").alias("neighbor_id"),
-                cosine(q, _sq8_reconstruct(F.col("ucodes"), dim))
-                .alias("approx_sim"))
-        .orderBy(F.desc("approx_sim"), F.asc("neighbor_id"))
-        .limit(k * rerank_mult)
-        .select("neighbor_id")
-    )
-    pairs = (
-        shortlist.join(
-            vectors.select(F.col("vec_id").alias("neighbor_id"),
-                           F.col("embedding").alias("ne")),
-            "neighbor_id")
-        .select("neighbor_id",
-                F.round(cosine(q, F.col("ne")), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-        .limit(k)
-    )
-    return bounded_rank(
-        pairs, [-F.col("cos_sim"), F.col("neighbor_id")], "rank",
-        start=1,
-    ).select("rank", "neighbor_id", "cos_sim")
-
-
-def sq8_index_topk_batch(spark, path: str, queries: DataFrame,
-                         vectors: DataFrame, k: int = 10,
-                         rerank_mult: int | None = None,
-                         allowed: DataFrame | None = None,
-                         where: str | None = None) -> DataFrame:
-    """BATCH retrieval over a ``write_sq8_index`` layout: the codes
-    table is scanned ONCE and scored against every query in the
-    broadcast ``(query_id, embedding)`` batch — one distributed plan,
-    per-query windows for the ``k * rerank_mult`` shortlist and the
-    exact re-rank, the in-flight operators' ``(query_id, rank,
-    neighbor_id, cos_sim)`` contract out.  ``allowed`` semi-joins the
-    candidate set before scoring, as everywhere; ``where`` pushes an
-    attribute predicate into the codes scan (caller-trusted SQL — see
-    the :func:`sq8_index_topk` trust-boundary note)."""
-    m = _index_manifest(spark, path)
-    dim = int(m["dim"])
-    rerank_mult = _resolve_rerank(m, rerank_mult)
-    stats = spark.read.parquet(f"{path}/{m['quantizer']}")
-    q = queries.select("query_id", F.col("embedding").alias("qe"))
-    cand = _manifest_codes(spark, path, m)
-    if where is not None:
-        cand = cand.filter(where)                  # PushedFilters
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id",
-                         "left_semi")
-    # NOTE measured trade (r11): materializing the reconstruction
-    # once per candidate below the query join — the PQ hat placement —
-    # is 14x WORSE here (4.4 -> 60 s for a 16-query batch at sf0.1):
-    # SQ8's recon is a 64-double array whose UnsafeArrayData copy per
-    # joined pair costs more than re-running the codegen'd unpack over
-    # the 64-BYTE blob; PQ wins the same move only because its codes
-    # are m bytes against a huge shared literal.  Keep the recompute.
-    scored = (
-        cand.join(F.broadcast(stats))
-        .withColumn("ucodes", _sq8_unpack(F.col("codes"), dim))
-        .join(F.broadcast(q))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cosine(F.col("qe"),
-                       _sq8_reconstruct(F.col("ucodes"), dim))
-                .alias("approx_sim"))
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("neighbor_id"))
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    pairs = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(vectors.select(F.col("vec_id").alias("neighbor_id"),
-                             F.col("embedding").alias("ne")),
-              "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
 
 
 def hyperplane(j: int, dim: int = 64) -> F.Column:
@@ -1268,203 +1094,15 @@ def _sq8_drifted_dims(stats: DataFrame, new_emb: DataFrame, dim: int,
     return [int(d) for d in drifted] if drifted else []
 
 
-def sq8_index_upsert(spark, path: str, new_emb: DataFrame,
-                     dim: int | None = None,
-                     tol: float = SQ_DRIFT_TOL,
-                     attrs: DataFrame | None = None) -> dict:
-    """Maintain a ``write_sq8_index`` layout under batches, returning
-    the operational decision AS DATA (the ``maintain_ivf_index``
-    pattern): a scalar quantizer is trained on the corpus min/max, so
-    a batch whose values drift OUTSIDE the stored range would be
-    silently clamped to the edge codes — fine at the margin, recall
-    poison if the distribution moved.
-
-    One aggregate over the batch computes its per-dim min/max; dims
-    whose values exceed the stored range by more than ``tol`` x range
-    are counted.  Any such dim: NOTHING is written (the index stays
-    consistent) and ``{"decision": "rebuild", "drifted_dims": [...]}``
-    tells the caller to re-run ``write_sq8_index`` over the unioned
-    corpus — re-encoding everything, the honest cost of moving the
-    quantizer.  In-range batches encode with the EXISTING quantizer
-    (edge clamping only) and commit a new manifest version:
-
-    - all-new vec_ids: the batch lands as ONE new codes dir and the
-      manifest references old dirs + new (``{"decision": "appended"}``
-      — an append commit writes only the appended rows);
-    - any vec_id already indexed: keyed REPLACEMENT — survivors
-      (current codes anti-join batch) plus the re-encoded batch are
-      written as one fresh codes dir the new manifest points at alone
-      (``{"decision": "replaced", "n_replaced": N}``).  This rewrites
-      the codes table (the dim-byte/row artifact, not the vectors);
-      a file-granular copy-on-write (jobs/upsert.py) would bound it
-      further if re-submits ever dominate.
-
-    Crash-safe like the writer: data dirs first, manifest rename last —
-    an interrupted upsert leaves the PREVIOUS version fully readable.
-    Single-writer; batches must be vec_id-unique (raises otherwise).
-
-    KIND-GUARDED: this is the flat-sq8 maintainer only.  Applied to an
-    ``ivf_sq8`` layout it would append a codes dir with no cluster_id
-    partition column and commit a kind-"sq8" manifest that DROPS the
-    centroids reference — silently downgrading the index (the next
-    query would serve the unpruned flat path over mixed-schema dirs).
-    A non-sq8 manifest returns ``{"decision": "wrong_kind"}`` with
-    NOTHING written (decisions-as-data, the house pattern); dispatch
-    ``ivf_sq8`` batches to :func:`ivf_sq8_index_upsert`.  ``dim`` is
-    resolved from the manifest (pass it only to assert).
-    """
-    from ..jobs.upsert import _check_key_unique
-    from ..jobs.versioned import _write_manifest
-
-    _check_key_unique(new_emb, ["vec_id"])
-    m = _index_manifest(spark, path)
-    if m.get("kind") != "sq8":
-        return {"decision": "wrong_kind", "kind": m.get("kind"),
-                "expected": "sq8"}
-    dim = _manifest_dim(m, dim, path)
-    m_attrs, attr_rows = _upsert_attr_rows(m, new_emb, attrs, path)
-    stats = spark.read.parquet(f"{path}/{m['quantizer']}")
-    drifted = _sq8_drifted_dims(stats, new_emb, dim, tol)
-    n_new = new_emb.count()
-    if drifted:
-        return {"decision": "rebuild", "n_new": n_new,
-                "drifted_dims": drifted}
-    encoded = (
-        new_emb.join(F.broadcast(stats))
-        .select("vec_id",
-                _sq8_pack(_sq8_codes(F.col("embedding"), F.col("mns"),
-                                     F.col("mxs"), dim)).alias("codes"))
-    )
-    if m_attrs:
-        encoded = encoded.join(attr_rows, "vec_id", "left") \
-            .select("vec_id", "codes", *m_attrs)
-    current = _manifest_codes(spark, path, m)
-    batch_ids = new_emb.select("vec_id")
-    n_replaced = current.join(
-        F.broadcast(batch_ids), "vec_id", "left_semi").count()
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    if n_replaced == 0:
-        encoded.write.mode("error").parquet(f"{path}/{base}/codes")
-        dirs = m["codes"] + [f"{base}/codes"]
-        decision = "appended"
-    else:
-        survivors = current.join(
-            F.broadcast(batch_ids), "vec_id", "left_anti")
-        survivors.unionByName(encoded).write.mode("error").parquet(
-            f"{path}/{base}/codes")
-        dirs = [f"{base}/codes"]
-        decision = "replaced"
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "sq8", "dim": dim,
-        "codes": dirs, "quantizer": m["quantizer"],
-        **({"attrs": m_attrs} if m_attrs else {}),
-    })
-    return {"decision": decision, "n_new": n_new,
-            "n_replaced": n_replaced, "drifted_dims": []}
-
-
-def write_ivf_sq8_index(emb: DataFrame, path: str, k: int | None = None,
-                        n_iter: int = KMEANS_ITERS,
-                        dim: int = 64,
-                        train_fraction: float = 1.0,
-                        attrs: DataFrame | None = None) -> None:
-    """Pruning AND compression in one layout — the full 100-TB vector
-    serving stack: SQ8 codes hive-partitioned by k-means cluster
-    (``cluster_id=NN/`` directories), with the centroid table at
-    ``<path>/_centroids`` and the quantizer at ``<path>/_quantizer``.
-    A query scans the ``nprobe`` probed directories OF CODES — cost
-    ~ (nprobe/k) x (1/4 bytes) of a full-precision full scan, the
-    multiplicative composition of :func:`write_ivf_index`'s partition
-    pruning and :func:`write_sq8_index`'s byte codes.
-
-    Same commit protocol as ``write_sq8_index``: codes, centroids and
-    quantizer land under ``<path>/data/v<N>/`` first, then ONE manifest
-    rename commits all three together — a crash mid-write can never
-    leave codes served under the wrong quantizer or centroids.
-
-    ``train_fraction < 1`` hash-samples the k-means TRAINING input
-    (assignment and encoding still cover every vector); the SQ8
-    quantizer stats stay full-corpus regardless — min/max on a sample
-    would under-cover the range and clamp real values, and the stats
-    aggregation is one map-side-combinable pass, not a scale cost.
-
-    ``attrs`` (a ``(vec_id, <scalar cols>)`` DataFrame — tenant, lang,
-    license, collection...) stores filterable attributes WITH the
-    codes, making attribute-filtered serving a PushedFilters parquet
-    predicate on the codes scan (``where=`` on the topk paths) instead
-    of a semi-join against an id list: the multi-tenant / corpus-facet
-    serving shape at 100 TB, where the filter must cost a scan
-    predicate, not a join.  Left join — vectors without an attrs row
-    carry NULLs (a ``where`` predicate then excludes them, standard
-    SQL three-valued logic); the manifest records the attr columns and
-    upserts must supply the same ones.
-
-    ``k=None`` (default) derives the cluster count from the corpus
-    size (:func:`_default_ivf_k` — ~sqrt(N)); pass ``k=`` to pin."""
-    from ..jobs.versioned import _write_manifest
-
-    spark = emb.sparkSession
-    if k is None:
-        k = _default_ivf_k(emb)
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    if train_fraction >= 1.0:
-        assigned = emb.join(
-            embedding_kmeans(emb, k, n_iter)
-            .select("vec_id", "cluster_id"), "vec_id")
-    else:
-        cents_t = _trained_centroids(emb, k, n_iter, train_fraction)
-        assigned = emb.join(
-            _assign(emb.select("vec_id", "embedding"), cents_t)
-            .select("vec_id", F.col("cid").alias("cluster_id")),
-            "vec_id")
-    stats = _sq8_stats(emb, dim)
-    attr_cols = [c for c in (attrs.columns if attrs is not None else [])
-                 if c != "vec_id"]
-    encoded = (
-        assigned.join(F.broadcast(stats))
-        .select("vec_id", "cluster_id",
-                _sq8_pack(_sq8_codes(F.col("embedding"), F.col("mns"),
-                                     F.col("mxs"), dim)).alias("codes"))
-    )
-    if attrs is not None:
-        encoded = encoded.join(attrs, "vec_id", "left")
-    (
-        encoded.select("vec_id", "codes", *attr_cols, "cluster_id")
-        .repartition("cluster_id")
-        .write.mode("error").partitionBy("cluster_id")
-        .parquet(f"{path}/{base}/codes")
-    )
-    cents = _quantized_centroids(
-        assigned.withColumnRenamed("cluster_id", "cid"))
-    cents.select(F.col("cid").alias("cluster_id"), "centroid") \
-        .coalesce(1).write.mode("error") \
-        .parquet(f"{path}/{base}/centroids")
-    stats.coalesce(1).write.mode("error").parquet(
-        f"{path}/{base}/quantizer")
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "ivf_sq8", "dim": dim,
-        "codes": [f"{base}/codes"], "centroids": f"{base}/centroids",
-        "quantizer": f"{base}/quantizer",
-        **({"attrs": attr_cols} if attr_cols else {}),
-    })
-
-
 _CENTS_CACHE: dict = {}
 
 
 def _centroid_rows(spark, path: str, m: dict) -> list[tuple[int, list]]:
     """The stored centroid table as driver-side ``[(cluster_id,
-    centroid), ...]``, cached per (path, manifest version): centroids
-    are immutable once a version is committed (every writer/maintainer
-    bumps the version), so a serving process pays the k-row read ONCE
-    per index version instead of one Spark job per query — the fixed
-    cost that dominated small-batch serving latency.  The key carries
-    the manifest-file fingerprint too: versions restart at 0 after a
-    delete-and-rebuild at the same path, and without it a long-lived
-    driver would keep serving the OLD index's centroids against the
-    new codes (see :func:`_manifest_fingerprint`)."""
+    centroid), ...]``, cached per (path, manifest version, content
+    fingerprint — :func:`_manifest_fingerprint`): committed centroids
+    are immutable, so a serving process pays the k-row read ONCE per
+    index version instead of one Spark job per query."""
     key = (path, int(m["version"]), m["centroids"],
            _manifest_fingerprint(spark, path, int(m["version"]), m))
     hit = _CENTS_CACHE.get(key)
@@ -1483,15 +1121,12 @@ def _rank_centroids(query_vec: list[float],
                     ) -> list[tuple[float, int]]:
     """THE driver-side centroid ranking — ``[(round-6 cosine,
     cluster_id), ...]`` sorted (sim DESC, cluster_id ASC) — shared
-    VERBATIM by the single-query path (:func:`_rank_clusters`) and the
+    VERBATIM by the single-query path (:func:`index_topk`) and the
     batch path (:func:`_batch_candidates`), so their probe sets agree
-    exactly by construction.  numpy computes the cosine matrix: the
-    pure-Python zip/sum fold is |centroids| * dim interpreted ops per
-    query — at 4,096 clusters x dim 64 that is ~0.26M multiply-adds
-    per query, tens of seconds in CPython for a 1,000-query batch —
-    while one vectorized matmul is ~milliseconds; round-6 then
-    absorbs the fold-order ulps before the sort, exactly as it always
-    absorbed JVM-vs-Python ones."""
+    exactly by construction.  numpy computes the cosine matrix (one
+    matmul, ~ms at 4,096 clusters x dim 64, where a pure-Python fold
+    takes seconds per batch); round-6 absorbs the fold-order ulps
+    before the sort."""
     import numpy as np
 
     if not cents:
@@ -1508,15 +1143,6 @@ def _rank_centroids(query_vec: list[float],
         ((float(round(s, 6)), cid)
          for s, (cid, _) in zip(sims, cents)),
         key=lambda t: (-t[0], t[1]))
-
-
-def _rank_clusters(spark, path: str, m: dict,
-                   query_vec: list[float]) -> list[tuple[float, int]]:
-    """Driver-side cluster ranking for a single query against a stored
-    index's centroid table (tiny by construction) — the probe order
-    every cluster-partitioned layout (ivf_sq8, ivf_pq, ivf_bq) shares
-    (:func:`_rank_centroids`)."""
-    return _rank_centroids(query_vec, _centroid_rows(spark, path, m))
 
 
 def _widen_filtered_probes(codes_all: DataFrame,
@@ -1556,32 +1182,21 @@ def _batch_candidates(spark, queries_q: DataFrame,
                       codes_src, nprobe: int, k: int,
                       allowed: DataFrame | None,
                       code_proj=None,
-                      widen: bool | None = None) -> DataFrame:
-    """Batch probe resolution shared by the cluster-partitioned
-    layouts: per-query cluster ranking DRIVER-SIDE (the batch is the
-    bounded broadcast side by contract and the centroid table is k
-    rows — ranking |batch| x k cosines on the driver replaces a window
-    stage plus a distinct-collect job per serve, the fixed overhead
-    that dominated small-batch serving; it is THE single-query path's
-    :func:`_rank_centroids` — one shared function, so batch and single
-    probe SETS agree exactly by construction), the UNION of probed
-    clusters pushed as a static IN-filter so the codes scan
-    partition-prunes, and — under ``allowed=`` — PER-QUERY adaptive
-    probe widening: each round counts every query's reachable allowed
+                      widen: bool = False) -> DataFrame:
+    """Batch probe resolution of the IVF layer: per-query cluster ranking
+    DRIVER-SIDE with THE single-query path's :func:`_rank_centroids`
+    (the batch is the bounded broadcast side and the centroid table is
+    k rows, so this replaces a window stage plus a distinct-collect job
+    per serve, and batch and single probe SETS agree by construction),
+    the UNION of probed clusters read directly (``codes_src``:
+    ``probed_ids -> DataFrame``, the :func:`_probed_codes` read plus any
+    ``where=`` pushdown), and — with ``widen`` — PER-QUERY adaptive
+    probe widening: each round counts every query's reachable
     candidates in ONE partition-pruned aggregate and only the STARVED
     queries (< ``k`` reachable) double their depth, at most
-    O(log n_clusters) bounded count jobs.  Returns the candidate rows
-    ``(query_id, vec_id, codes, ...)`` ready for layout-specific
-    scoring.
-
-    Driver cost is |batch| numpy matmuls of (n_clusters x dim) —
-    ~2 ms per query at 4,096 clusters x dim 64, ~2 s for a
-    1,000-query batch; batches beyond that should shard (the contract
-    already caps the batch at broadcast size).  ``c_rows`` is the
-    driver-side centroid table (:func:`_centroid_rows` — cached per
-    manifest fingerprint); ``codes_src`` is a ``probed_ids ->
-    DataFrame`` callable (the layout's :func:`_probed_codes` read plus
-    any ``where=`` pushdown the caller composes onto it)."""
+    O(log n_clusters) bounded count jobs.  Returns ``(query_id, vec_id,
+    <codes>, ...)`` rows.  Driver cost is |batch| numpy matmuls of
+    (n_clusters x dim) — ~2 ms per query at 4,096 clusters x dim 64."""
     from pyspark.sql import types as T
 
     n_clusters = len(c_rows)
@@ -1614,8 +1229,6 @@ def _batch_candidates(spark, queries_q: DataFrame,
         return c
 
     depths = {qid: min(max(nprobe, 0), n_clusters) for qid in ranked}
-    if widen is None:
-        widen = allowed is not None
     if not widen:
         return _cand(depths)
     while True:
@@ -1632,191 +1245,6 @@ def _batch_candidates(spark, queries_q: DataFrame,
             depths[qid] = min(max(depths[qid] * 2, depths[qid] + 1),
                               n_clusters)
     return _cand(depths)
-
-
-def ivf_sq8_index_topk(spark, path: str, query_vec: list[float],
-                       vectors: DataFrame, k: int = 10,
-                       nprobe: int | None = None,
-                       rerank_mult: int | None = None,
-                       dim: int | None = None,
-                       allowed: DataFrame | None = None,
-                       where: str | None = None) -> DataFrame:
-    """Serve top-k from a ``write_ivf_sq8_index`` layout: rank the
-    k-row centroid table driver-side, partition-prune to the ``nprobe``
-    best cluster directories, score ONLY those clusters' codes against
-    the full-precision query (asymmetric reconstruction scoring), then
-    exact-cosine re-rank the ``k * rerank_mult`` shortlist against the
-    primary store.  Returns ``(rank, neighbor_id, cos_sim)``.
-
-    ``allowed`` (a ``vec_id`` DataFrame) makes this a FILTERED search
-    with the same semi-join-before-shortlist contract as
-    :func:`sq8_index_topk` — plus the layout-specific subtlety the flat
-    layouts don't have: the allowed vectors may live OUTSIDE the
-    ``nprobe`` probed clusters, and a fixed probe set would then starve
-    the shortlist no matter how the filter is applied.  So under a
-    filter the probe set WIDENS adaptively: probe ``nprobe`` clusters,
-    count the allowed candidates inside them (one partition-pruned
-    semi-join count), and double the probe set until it holds >= ``k``
-    allowed candidates or every cluster is probed.  Each widening step
-    costs one bounded count job; an unfiltered query never pays it.
-
-    ``dim`` is resolved from the manifest (pass it only to assert);
-    ``nprobe=None`` serves at the manifest's tuned operating point
-    (see :func:`_resolve_nprobe`).
-
-    ``where`` (a SQL predicate over the index's STORED attribute
-    columns — ``write_ivf_sq8_index(attrs=...)``) is the PUSHDOWN form
-    of filtered search: the predicate reaches the codes scan as a
-    parquet filter (no id-list join at all — the multi-tenant serving
-    shape), with the same adaptive probe widening, its counts running
-    under the pushed predicate.  Trust boundary: the predicate is
-    CALLER-TRUSTED SQL over the stored attr columns — a filtering
-    convenience, not a tenant-isolation mechanism (a caller-controlled
-    string can reference any stored column); when the filter itself is
-    untrusted input, compute an ``allowed=`` id-list from a store the
-    caller is authorized on instead."""
-    m = _index_manifest(spark, path)
-    dim = _manifest_dim(m, dim, path)
-    nprobe = _resolve_nprobe(m, nprobe)
-    rerank_mult = _resolve_rerank(m, rerank_mult)
-    ranked = _rank_clusters(spark, path, m, query_vec)
-    if allowed is not None or where is not None:
-        codes_all = _manifest_codes(spark, path, m)
-        if where is not None:
-            codes_all = codes_all.filter(where)
-        probe = _widen_filtered_probes(codes_all, allowed, ranked,
-                                       nprobe, k)
-    else:
-        probe = [cid for _, cid in ranked[:nprobe]]
-
-    stats = spark.read.parquet(f"{path}/{m['quantizer']}")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    # read ONLY the probed directories (no full partition listing)
-    cand = _probed_codes(spark, path, m, probe)
-    if where is not None:
-        cand = cand.filter(where)
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id",
-                         "left_semi")
-    shortlist = (
-        cand
-        .join(F.broadcast(stats))
-        .withColumn("ucodes", _sq8_unpack(F.col("codes"), dim))
-        .select(F.col("vec_id").alias("neighbor_id"),
-                cosine(q, _sq8_reconstruct(F.col("ucodes"), dim))
-                .alias("approx_sim"))
-        .orderBy(F.desc("approx_sim"), F.asc("neighbor_id"))
-        .limit(k * rerank_mult)
-        .select("neighbor_id")
-    )
-    pairs = (
-        shortlist.join(
-            vectors.select(F.col("vec_id").alias("neighbor_id"),
-                           F.col("embedding").alias("ne")),
-            "neighbor_id")
-        .select("neighbor_id",
-                F.round(cosine(q, F.col("ne")), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-        .limit(k)
-    )
-    return bounded_rank(
-        pairs, [-F.col("cos_sim"), F.col("neighbor_id")], "rank",
-        start=1,
-    ).select("rank", "neighbor_id", "cos_sim")
-
-
-def ivf_sq8_index_topk_batch(spark, path: str, queries: DataFrame,
-                             vectors: DataFrame, k: int = 10,
-                             nprobe: int | None = None,
-                             rerank_mult: int | None = None,
-                             allowed: DataFrame | None = None,
-                             where: str | None = None
-                             ) -> DataFrame:
-    """BATCH retrieval over a ``write_ivf_sq8_index`` layout — the
-    production serving shape: ``queries`` is a ``(query_id,
-    embedding)`` DataFrame and the whole batch runs as ONE distributed
-    plan (``(query_id, rank, neighbor_id, cos_sim)`` out, the in-flight
-    operators' contract), not a driver loop over single-query calls.
-
-    Stages: (1) per-query cluster ranking — queries x the broadcast
-    k-row centroid table, round-6 cosine, top-``nprobe`` per query via
-    a bounded window; (2) the UNION of probed clusters (<= the cluster
-    count, collected driver-side like the single-query path's ranking)
-    becomes a static IN-filter so the codes scan still partition-prunes
-    — each probed directory is read ONCE for the whole batch and the
-    probes join fans its rows out only to the queries that probed it;
-    (3) asymmetric reconstruction scoring + per-query
-    ``k * rerank_mult`` shortlist; (4) exact-cosine re-rank against the
-    primary store.  Queries ride broadcast (the bounded side, as in
-    ``brute_force_topk``); shuffle keys are (query_id) windows only.
-
-    ``allowed`` semi-joins the candidate set before the shortlist, as
-    everywhere — with PER-QUERY adaptive probe widening (the
-    single-query contract, batch form): each query starts at
-    ``nprobe``, the allowed candidates inside every query's probed
-    clusters are counted in ONE partition-pruned aggregate per round,
-    and only the STARVED queries (< ``k`` reachable candidates) double
-    their probe depth for the next round — at most O(log n_clusters)
-    bounded count jobs, and a batch with no restrictive filter pays
-    none of them.  Probe depths live driver-side, bounded by the batch
-    (queries are the broadcast side by contract)."""
-    m = _index_manifest(spark, path)
-    dim = int(m["dim"])
-    nprobe = _resolve_nprobe(m, nprobe)
-    rerank_mult = _resolve_rerank(m, rerank_mult)
-    c_rows = _centroid_rows(spark, path, m)
-    q = queries.select(F.col("query_id"),
-                       F.col("embedding").alias("qe"))
-
-    def codes_src(probed):
-        df = _probed_codes(spark, path, m, probed)
-        if where is not None:
-            # attribute pushdown: the predicate lands on the codes
-            # scan (PushedFilters), and the per-query widening counts
-            # under it — `widen` forces the loop even with no id list
-            df = df.filter(where)
-        return df
-
-    cand = _batch_candidates(spark, q, c_rows, codes_src, nprobe, k,
-                             allowed,
-                             widen=(allowed is not None
-                                    or where is not None) or None)
-    stats = spark.read.parquet(f"{path}/{m['quantizer']}")
-    # PLAN-SHAPE-CRITICAL: the ucodes projection must sit BELOW a join
-    # so it cannot collapse into the reconstruct/cosine projection —
-    # adjacent Projects let CollapseProject inline the hex/split/conv
-    # unpack into the per-dimension transform lambda, re-evaluating it
-    # dim x per pair (measured r12 at sf1: 20.7 s -> sub-second for a
-    # 16-query batch at nprobe=16; the flat sq8 path gets the same
-    # barrier for free from its broadcast-q join order).  cand already
-    # carries query_id (the probes fan-out), so the q join can land
-    # ABOVE the unpack with identical semantics.
-    scored = (
-        cand.join(F.broadcast(stats))
-        .withColumn("ucodes", _sq8_unpack(F.col("codes"), dim))
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cosine(F.col("qe"),
-                       _sq8_reconstruct(F.col("ucodes"), dim))
-                .alias("approx_sim"))
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("neighbor_id"))
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    pairs = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(vectors.select(F.col("vec_id").alias("neighbor_id"),
-                             F.col("embedding").alias("ne")),
-              "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
 
 
 def _upsert_attr_rows(m: dict, new_emb: DataFrame,
@@ -1871,136 +1299,42 @@ def _attrs_self_carry(spark, path: str, man: dict,
     return attrs_df.localCheckpoint(eager=True)
 
 
-def ivf_sq8_index_upsert(spark, path: str, new_emb: DataFrame,
-                         tol: float = SQ_DRIFT_TOL,
-                         attrs: DataFrame | None = None) -> dict:
-    """Maintain a ``write_ivf_sq8_index`` layout under batches — the
-    kind-true upsert the pruning x compression flagship needs
-    (``sq8_index_upsert`` refuses this kind: flat-encoding an ivf_sq8
-    batch would drop the cluster_id partition column and commit a
-    manifest without the centroids reference).  The
-    ``ivf_index_upsert`` assignment ported to the manifest protocol:
-
-    - the batch is drift-screened against the stored quantizer (the
-      shared SQ8 screen; out-of-range dims return ``{"decision":
-      "rebuild", ...}`` with NOTHING written);
-    - in-range vectors are assigned against the STORED centroids (one
-      k-row broadcast — the index geometry is not recomputed) and
-      encoded with the STORED quantizer via the writer's own
-      expressions, so a re-submitted identical vector re-encodes
-      bit-identically;
-    - all-new vec_ids land as ONE new cluster-partitioned codes dir
-      holding only the touched ``cluster_id=`` partitions; the manifest
-      references old dirs + new (``{"decision": "appended"}``) — probed
-      reads still partition-prune across every referenced dir;
-    - re-submitted vec_ids are keyed-REPLACED: survivors + the encoded
-      batch rewrite as one fresh partitioned dir the new manifest
-      points at alone (``{"decision": "replaced"}``; file-granular
-      copy-on-write would bound this further if re-submits dominate).
-
-    Same crash protocol as the writer: data dirs first, ONE manifest
-    rename last — an interrupted upsert leaves the previous version
-    fully readable with codes, centroids and quantizer consistent.
-    Centroids and quantizer are never moved by an upsert; retrain with
-    ``write_ivf_sq8_index`` when drift accumulates."""
-    from ..jobs.upsert import _check_key_unique
-    from ..jobs.versioned import _write_manifest
-
-    _check_key_unique(new_emb, ["vec_id"])
-    m = _index_manifest(spark, path)
-    if m.get("kind") != "ivf_sq8":
-        return {"decision": "wrong_kind", "kind": m.get("kind"),
-                "expected": "ivf_sq8"}
-    dim = int(m["dim"])
-    m_attrs, attr_rows = _upsert_attr_rows(m, new_emb, attrs, path)
-    stats = spark.read.parquet(f"{path}/{m['quantizer']}")
-    drifted = _sq8_drifted_dims(stats, new_emb, dim, tol)
-    n_new = new_emb.count()
-    if drifted:
-        return {"decision": "rebuild", "n_new": n_new,
-                "drifted_dims": drifted}
-    cents = (
-        spark.read.parquet(f"{path}/{m['centroids']}")
-        .withColumnRenamed("cluster_id", "cid")
-    )
-    encoded = (
-        _assign(new_emb.select("vec_id", "embedding"), cents)
-        .select("vec_id", F.col("cid").alias("cluster_id"))
-        .join(new_emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(stats))
-        .select("vec_id", "cluster_id",
-                _sq8_pack(_sq8_codes(F.col("embedding"), F.col("mns"),
-                                     F.col("mxs"), dim)).alias("codes"))
-    )
-    if m_attrs:
-        encoded = encoded.join(attr_rows, "vec_id", "left") \
-            .select("vec_id", "codes", *m_attrs, "cluster_id")
-    current = _manifest_codes(spark, path, m)
-    batch_ids = new_emb.select("vec_id")
-    n_replaced = current.join(
-        F.broadcast(batch_ids), "vec_id", "left_semi").count()
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    if n_replaced == 0:
-        (encoded.repartition("cluster_id")
-         .write.mode("error").partitionBy("cluster_id")
-         .parquet(f"{path}/{base}/codes"))
-        dirs = m["codes"] + [f"{base}/codes"]
-        decision = "appended"
-    else:
-        survivors = current.join(
-            F.broadcast(batch_ids), "vec_id", "left_anti")
-        (survivors.select("vec_id", "codes", *m_attrs, "cluster_id")
-         .unionByName(encoded)
-         .repartition("cluster_id")
-         .write.mode("error").partitionBy("cluster_id")
-         .parquet(f"{path}/{base}/codes"))
-        dirs = [f"{base}/codes"]
-        decision = "replaced"
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "ivf_sq8", "dim": dim,
-        **({"attrs": m_attrs} if m_attrs else {}),
-        "codes": dirs, "centroids": m["centroids"],
-        "quantizer": m["quantizer"],
-        # carry the tuned operating point across upserts — only a
-        # REBUILD (new centroids) invalidates it
-        **({"default_nprobe": m["default_nprobe"]}
-           if "default_nprobe" in m else {}),
-        # an APPEND keeps the old dirs, so rebalance-retired clusters
-        # stay masked; a REPLACE rewrote survivors exclusion-filtered
-        **({"excluded_clusters": m["excluded_clusters"]}
-           if (decision == "appended" and "excluded_clusters" in m)
-           else {}),
-    })
-    return {"decision": decision, "n_new": n_new,
-            "n_replaced": n_replaced, "drifted_dims": []}
-
-
 def _batched_min_recall(spark, queries: list, vectors: DataFrame,
                         k: int, serve) -> int:
-    """MIN per-query recall (integer permille) of a serving path
+    """MIN per-query recall (integer permille) of a batch serving path
     against exact brute force — ONE batched approx serve plus ONE
-    batched exact top-k per probe.  Replaces the maintainers'
-    per-query single-serve union loops (r13 verdict finding #3: up to
-    ``sample_queries`` x rungs x 2 single-query plans per maintenance
-    decision).  The ``*_topk_batch`` paths are pytest-pinned per-query
-    equal to the single paths and the exact arm below is the same
-    round-6 (cos DESC, vec_id ASC) top-k the loops computed — only as
-    one windowed plan — so ladder DECISIONS cannot change, only the
-    probe's job count.  Min, not mean: one drifted region is exactly
-    what the monitor must not average away.
+    batched exact top-k (:func:`_exact_topk`) per ladder rung.  Min, not
+    mean: one drifted region is exactly what the monitor must not
+    average away.  ``queries``: ``[(qid, [float, ...])]``; ``serve``:
+    ``(query_id, embedding)`` DataFrame -> ranked ``(query_id,
+    neighbor_id, ...)``."""
+    qdf = _queries_frame(spark, queries)
+    row = (ann_recall(serve(qdf), _exact_topk(qdf, vectors, k))
+           .agg(F.min("recall_permille").alias("r")).collect()[0])
+    return int(row["r"])
 
-    ``queries``: ``[(qid, [float, ...])]`` as the maintainers collect
-    them (bounded by ``sample_queries``); ``serve``: callable taking
-    the ``(query_id, embedding)`` queries DataFrame and returning the
-    kind's ranked ``(query_id, neighbor_id, ...)`` batch result."""
-    qdf = spark.createDataFrame(
+
+def _sample_queries(df: DataFrame, n: int) -> list:
+    """The first ``n`` vectors by vec_id as ``[(qid, [float, ...])]`` —
+    the recall probes' deterministic query sample."""
+    return [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
+            for r in df.select("vec_id", "embedding")
+            .orderBy("vec_id").limit(n).collect()]
+
+
+def _queries_frame(spark, queries: list) -> DataFrame:
+    return spark.createDataFrame(
         [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
         "query_id long, embedding array<double>")
-    approx = serve(qdf).select("query_id", "neighbor_id")
+
+
+def _exact_topk(qdf: DataFrame, vectors: DataFrame, k: int) -> DataFrame:
+    """Exact ``(query_id, neighbor_id)`` top-k by round-6 cosine (DESC,
+    vec_id ASC) — brute force over the primary store, one windowed
+    plan for the whole query batch."""
     ws = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id"))
-    exact = (
+    return (
         vectors.select(F.col("vec_id").alias("neighbor_id"),
                        F.col("embedding").alias("ne"))
         .join(F.broadcast(qdf.select(
@@ -2011,113 +1345,6 @@ def _batched_min_recall(spark, queries: list, vectors: DataFrame,
         .withColumn("rn", F.row_number().over(ws))
         .filter(F.col("rn") <= k)
         .select("query_id", "neighbor_id"))
-    row = (ann_recall(approx, exact)
-           .agg(F.min("recall_permille").alias("r")).collect()[0])
-    return int(row["r"])
-
-
-def maintain_ivf_sq8_index(spark, path: str, new_emb: DataFrame,
-                           vectors: DataFrame, *, k: int = 10,
-                           nprobe: int | None = None,
-                           recall_floor_permille: int = 600,
-                           max_nprobe: int | None = None,
-                           sample_queries: int = 4,
-                           rebuild: bool = True,
-                           train_fraction: float = 1.0) -> dict:
-    """The closed maintenance loop for the pruning x compression
-    flagship — ``maintain_ivf_index``'s decision ladder on the
-    manifest-committed layout: merge a batch (``ivf_sq8_index_upsert``),
-    measure MIN sampled serving recall vs brute force over the primary
-    store, and return the decision AS DATA:
-
-    - ``"ok"``          — min sampled recall >= the floor.
-    - ``"bump_nprobe"`` — recall recovered by probing more clusters
-      (doubled, capped at the cluster count / ``max_nprobe``); the
-      new setting is COMMITTED to the manifest as ``default_nprobe``
-      (``_persist_nprobe`` — ``nprobe_version`` in the result), so
-      every later ``nprobe=None`` serving call probes at it without
-      the caller threading the number through.  This rung exists here
-      and not in PQ: partition pruning has a runtime knob, codebooks
-      don't.
-    - ``"rebuild"``     — under the floor even at the probe cap, OR the
-      upsert itself refused on quantizer drift: centroids AND quantizer
-      retrain over ``vectors`` as a new committed version (the honest
-      cost — both artifacts are corpus-distribution-dependent), then
-      recall re-measures.
-
-    Same primary-store CONTRACT as ``maintain_pq_index``: ``vectors``
-    must already contain the batch (the probe's ground truth and any
-    rebuild read it); violations raise before anything is written."""
-    n_missing = (new_emb.select("vec_id")
-                 .join(vectors.select("vec_id"), "vec_id", "left_anti")
-                 .count())
-    if n_missing:
-        raise ValueError(
-            f"maintain_ivf_sq8_index: {n_missing} batch vec_ids are "
-            f"absent from `vectors` — pass the POST-merge primary "
-            f"store (the probe and any rebuild read it as ground "
-            f"truth)")
-    st = dict(ivf_sq8_index_upsert(spark, path, new_emb))
-    if st["decision"] == "wrong_kind":
-        return st
-    man = _index_manifest(spark, path)
-    nprobe = _resolve_nprobe(man, nprobe)
-    n_clusters = spark.read.parquet(
-        f"{path}/{man['centroids']}").count()
-    cap = min(max_nprobe or n_clusters, n_clusters)
-    queries = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in new_emb.select("vec_id", "embedding")
-        .orderBy("vec_id").limit(sample_queries).collect()
-    ]
-    out = {**st, "n_queries": len(queries), "nprobe": nprobe,
-           "recall_floor_permille": recall_floor_permille}
-
-    def _min_recall(np_: int) -> int:
-        return _batched_min_recall(
-            spark, queries, vectors, k,
-            lambda qdf: ivf_sq8_index_topk_batch(
-                spark, path, qdf, vectors, k=k, nprobe=np_))
-
-    def _rebuild_and_remeasure():
-        # the rebuild is the maintenance loop's expensive rung — at
-        # 100 TB it runs with the writer's sampled trainer (the same
-        # train_fraction= contract; 1.0 keeps the full-corpus default).
-        # Attrs self-carry through the retrain (_attrs_self_carry —
-        # the shared rebuild contract).
-        write_ivf_sq8_index(vectors, path, k=n_clusters,
-                            dim=int(man["dim"]),
-                            train_fraction=train_fraction,
-                            attrs=_attrs_self_carry(
-                                spark, path, man, new_emb))
-        if queries:
-            out["recall_after_rebuild_permille"] = _min_recall(nprobe)
-
-    if st["decision"] == "rebuild":            # quantizer drift refusal
-        if rebuild:
-            _rebuild_and_remeasure()
-        return out
-    if not queries:
-        out.update(decision="ok", recall_permille=None)
-        return out
-    r0 = _min_recall(nprobe)
-    out["recall_permille"] = r0
-    if r0 >= recall_floor_permille:
-        out["decision"] = "ok"
-        return out
-    bumped = min(max(nprobe * 2, nprobe + 1), cap)
-    if bumped > nprobe:
-        r1 = _min_recall(bumped)
-        out["recall_after_bump_permille"] = r1
-        if r1 >= recall_floor_permille:
-            out.update(decision="bump_nprobe", nprobe=bumped)
-            out["nprobe_version"] = _persist_nprobe(spark, path,
-                                                    bumped)
-            return out
-    out["decision"] = "rebuild"
-    if rebuild:
-        _rebuild_and_remeasure()
-    return out
 
 
 PQ_M = 8           # subspaces (dim must divide evenly)
@@ -2334,78 +1561,6 @@ def pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
     return _ranked(pairs, k)
 
 
-def write_pq_index(emb: DataFrame, path: str, m: int = PQ_M,
-                   k: int = PQ_INDEX_KSUB, dim: int = 64,
-                   n_iter: int = KMEANS_ITERS,
-                   train_fraction: float = 1.0,
-                   attrs: DataFrame | None = None) -> None:
-    """Persist a PRODUCT-QUANTIZATION serving layout — the third
-    compression point on the ANN spectrum (full vectors -> SQ8's
-    byte-per-dim -> PQ's byte-per-SUBSPACE): the vector splits into
-    ``m`` contiguous subvectors, each subspace learns its own ``k``-way
-    deterministic k-means codebook (``embedding_kmeans`` per slice —
-    same integer-quantized, engine-deterministic machinery), and every
-    vector stores just its ``m`` nearest-codeword ids, packed into an
-    ``m``-byte blob.  Effective grid = k^m cells from m*k stored
-    codewords; on-disk codes are dim/m of SQ8's and 1/(4*dim/m) of
-    float32.  The default resolution is ``PQ_INDEX_KSUB`` = 256 — the
-    full byte each code already occupies (see the constant's note; a
-    corpus smaller than k simply trains fewer codewords).
-
-    Codebooks are stored UNIT-NORMALIZED: ``_quantized_centroids``
-    emits integer milli-SUMS whose magnitude carries cluster size, and
-    concatenating subspaces with different cluster sizes would skew the
-    cross-subspace cosine — normalizing each codeword keeps every
-    subspace's contribution to the reconstruction direction-only (the
-    codes themselves are chosen by cosine, which is scale-free, so
-    assignment is unaffected).
-
-    Same manifest commit protocol as ``write_sq8_index``: codes +
-    codebooks land under ``data/v<N>/`` first, ONE atomic manifest
-    rename publishes both — codes can never be served under the wrong
-    codebooks.  Codes use the serving codebooks' PREDECESSOR assignment
-    (the write_ivf_index pattern: centroids are one update step fresher
-    than the assignment that chose the codes — standard for quantizers
-    trained in-pass)."""
-    from ..jobs.versioned import _write_manifest
-
-    spark = emb.sparkSession
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-
-    # books = the trainer's final (unit-normalized) codebooks; the
-    # stored CODES are then the nearest-codeword assignment against
-    # THOSE books (_pq_encode) — writer and upsert share the one
-    # encoding expression, so the index is self-consistent: the
-    # codeword a code points at is exactly the argmax the scoring
-    # reconstructs with, and a re-submitted identical vector re-encodes
-    # bit-identically.  The books are lineage-truncated first — they
-    # sit under every per-subspace encode branch, and re-deriving the
-    # 8 kmeans chains per branch would square the training work.
-    # train_fraction < 1 hash-samples the TRAINING corpus only (the m
-    # k-means chains are n_iter full passes each — the build's scale
-    # cost); _pq_encode below still encodes every vector.
-    books = _pq_books_trained(
-        _train_sample(emb, train_fraction), m, k, dim, n_iter)
-    sub = dim // m
-    attr_cols = [c for c in (attrs.columns if attrs is not None else [])
-                 if c != "vec_id"]
-    encoded = _pq_encode(emb, books, m, sub)
-    if attrs is not None:
-        # attrs stored WITH the codes for where= pushdown serving (the
-        # write_sq8_index contract, same left-join NULL semantics)
-        encoded = encoded.join(attrs, "vec_id", "left") \
-            .select("vec_id", "codes", *attr_cols)
-    encoded.write.mode("error").parquet(f"{path}/{base}/codes")
-    books.coalesce(1).write.mode("error").parquet(
-        f"{path}/{base}/codebooks")
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "pq", "dim": dim, "m": m, "k": k,
-        "codes": [f"{base}/codes"], "codebooks": f"{base}/codebooks",
-        **({"attrs": attr_cols} if attr_cols else {}),
-    })
-
-
 def _pq_encode(emb: DataFrame, books: DataFrame, m: int,
                sub: int) -> DataFrame:
     """(vec_id, codes): nearest stored codeword per subspace by the
@@ -2455,146 +1610,6 @@ def _pq_encode(emb: DataFrame, books: DataFrame, m: int,
                 "transform(sc, x -> cast(x.cid AS smallint))"))
             .alias("codes"))
     )
-
-
-def pq_index_upsert(spark, path: str, new_emb: DataFrame,
-                    attrs: DataFrame | None = None) -> dict:
-    """Maintain a ``write_pq_index`` layout under batches: new vectors
-    are encoded against the STORED codebooks (nearest codeword per
-    subspace by round-6 cosine with the trainer's tie-break — cosine is
-    scale-free, so the unit-normalized serving codewords induce the
-    same argmax geometry the trainer used) and committed through the
-    same atomic manifest protocol as ``sq8_index_upsert``: all-new
-    vec_ids append one codes dir; re-submitted vec_ids are
-    keyed-REPLACED; batches must be vec_id-unique.  The codebooks are
-    NOT moved — re-train with ``write_pq_index`` when the corpus
-    distribution drifts (the IVF maintain loop's rebuild decision is
-    the pattern; PQ's drift signal is falling sampled recall)."""
-    from ..jobs.upsert import _check_key_unique
-    from ..jobs.versioned import _write_manifest
-
-    _check_key_unique(new_emb, ["vec_id"])
-    man = _index_manifest(spark, path)
-    if man.get("kind") != "pq":
-        return {"decision": "wrong_kind", "kind": man.get("kind"),
-                "expected": "pq"}
-    m, dim = int(man["m"]), int(man["dim"])
-    sub = dim // m
-    m_attrs, attr_rows = _upsert_attr_rows(man, new_emb, attrs, path)
-    books = spark.read.parquet(f"{path}/{man['codebooks']}")
-    encoded = _pq_encode(new_emb, books, m, sub)
-    if m_attrs:
-        encoded = encoded.join(attr_rows, "vec_id", "left") \
-            .select("vec_id", "codes", *m_attrs)
-    current = _manifest_codes(spark, path, man)
-    batch_ids = new_emb.select("vec_id")
-    n_new = new_emb.count()
-    n_replaced = current.join(
-        F.broadcast(batch_ids), "vec_id", "left_semi").count()
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    if n_replaced == 0:
-        encoded.write.mode("error").parquet(f"{path}/{base}/codes")
-        dirs = man["codes"] + [f"{base}/codes"]
-        decision = "appended"
-    else:
-        survivors = current.join(
-            F.broadcast(batch_ids), "vec_id", "left_anti")
-        survivors.unionByName(encoded).write.mode("error").parquet(
-            f"{path}/{base}/codes")
-        dirs = [f"{base}/codes"]
-        decision = "replaced"
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "pq", "dim": dim, "m": m,
-        "k": int(man["k"]), "codes": dirs,
-        "codebooks": man["codebooks"],
-        **({"attrs": m_attrs} if m_attrs else {}),
-    })
-    return {"decision": decision, "n_new": n_new,
-            "n_replaced": n_replaced}
-
-
-def maintain_pq_index(spark, path: str, new_emb: DataFrame,
-                      vectors: DataFrame, *, k: int = 10,
-                      recall_floor_permille: int = 600,
-                      sample_queries: int = 4,
-                      rebuild: bool = True,
-                      train_fraction: float = 1.0) -> dict:
-    """The closed PQ maintenance loop (the ``maintain_ivf_index``
-    pattern for the codebook index): merge a vector batch
-    (``pq_index_upsert`` — codes against the STORED codebooks), measure
-    MIN sampled serving recall of the PQ path vs brute force over the
-    primary store, and return the decision AS DATA:
-
-    - ``"ok"``      — min sampled recall >= the floor; codebooks keep.
-    - ``"rebuild"`` — the batch drifted past what the stored codewords
-      quantize well (PQ has no nprobe to bump — codebook staleness IS
-      the failure mode); with ``rebuild=True`` the codebooks retrain
-      over ``vectors`` (the primary store, which the PQ layout never
-      duplicates) as a new committed version, and recall re-measures.
-
-    The recall probe is ONE batched serve + ONE batched exact top-k
-    per rung (:func:`_batched_min_recall`) — the monitor's honest
-    cost, amortized per maintenance batch.
-
-    CONTRACT: ``vectors`` (the primary store) must already contain the
-    batch — the recall probe compares the index against brute force
-    over ``vectors``, and a rebuild retrains over ``vectors`` alone, so
-    a pre-merge store would skew the probe (batch self-hits counted
-    against recall) and silently drop the batch from a rebuilt index.
-    Violations raise before anything is written (one bounded anti-join
-    count of the batch ids)."""
-    n_missing = (new_emb.select("vec_id")
-                 .join(vectors.select("vec_id"), "vec_id", "left_anti")
-                 .count())
-    if n_missing:
-        raise ValueError(
-            f"maintain_pq_index: {n_missing} batch vec_ids are absent "
-            f"from `vectors` — pass the POST-merge primary store (the "
-            f"probe and any rebuild read it as ground truth)")
-    st = dict(pq_index_upsert(spark, path, new_emb))
-    queries = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in new_emb.select("vec_id", "embedding")
-        .orderBy("vec_id").limit(sample_queries).collect()
-    ]
-    out = {**st, "n_queries": len(queries),
-           "recall_floor_permille": recall_floor_permille}
-
-    def _min_recall() -> int:
-        return _batched_min_recall(
-            spark, queries, vectors, k,
-            lambda qdf: pq_index_topk_batch(
-                spark, path, qdf, vectors, k=k))
-
-    if not queries:
-        out.update(decision="ok", recall_permille=None)
-        return out
-    r0 = _min_recall()
-    out["recall_permille"] = r0
-    if r0 >= recall_floor_permille:
-        out["decision"] = "ok"
-        return out
-    out["decision"] = "rebuild"
-    if rebuild:
-        man = _index_manifest(spark, path)
-        # rebuild-at-higher-RESOLUTION rung: a recall floor the stored
-        # codebooks cannot reach is often code-resolution-limited, not
-        # staleness-limited (the r12 sf1 frontier: ksub=16 topped out
-        # at 100 permille recall@10 no matter the training) — and with
-        # ADC serving ksub-independent and codes already a byte per
-        # subspace, retraining at PQ_INDEX_KSUB costs only build time.
-        # An index built at or above the default keeps its resolution.
-        new_ksub = max(int(man["k"]), PQ_INDEX_KSUB)
-        out["ksub"] = new_ksub
-        out["ksub_escalated"] = new_ksub > int(man["k"])
-        write_pq_index(vectors, path, m=int(man["m"]),
-                       k=new_ksub, dim=int(man["dim"]),
-                       train_fraction=train_fraction,
-                       attrs=_attrs_self_carry(
-                           spark, path, man, new_emb))
-        out["recall_after_rebuild_permille"] = _min_recall()
-    return out
 
 
 _PQ_BOOKS_CACHE: dict = {}
@@ -2751,122 +1766,6 @@ def _pq_adc_score(m: int, with_norm: bool = False) -> F.Column:
             (a["dn"] + F.element_at(F.element_at("pnorm", x["j"]),
                                     x["c"] + 1)).alias("dn")),
         lambda a: a["nm"] / F.col("qn") / F.sqrt(a["dn"]))
-
-
-def pq_index_topk_batch(spark, path: str, queries: DataFrame,
-                        vectors: DataFrame, k: int = 10,
-                        rerank_mult: int | None = None,
-                        allowed: DataFrame | None = None,
-                        where: str | None = None) -> DataFrame:
-    """BATCH retrieval over a ``write_pq_index`` layout: the m-byte
-    codes are scanned ONCE, each (candidate, query) pair scored by m
-    ADC lookups against the broadcast per-query tables
-    (``_pq_adc_frame`` — the query batch is the bounded broadcast side
-    by contract, collected once to build them), and per-query windows
-    take the shortlist and exact re-rank — one distributed plan with
-    the in-flight ``(query_id, rank, neighbor_id, cos_sim)`` contract.
-    ``where`` pushes an attribute predicate into the codes scan
-    (caller-trusted SQL — the :func:`sq8_index_topk` trust-boundary
-    note)."""
-    m_an = _index_manifest(spark, path)
-    rerank_mult = _resolve_rerank(m_an, rerank_mult)
-    q = queries.select("query_id", F.col("embedding").alias("qe"))
-    adc = _pq_adc_frame(spark, path, m_an, [
-        (int(r["query_id"]), [float(x) for x in r["embedding"]])
-        for r in queries.select("query_id", "embedding").collect()])
-    cand = _manifest_codes(spark, path, m_an)
-    if where is not None:
-        cand = cand.filter(where)                  # PushedFilters
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id",
-                         "left_semi")
-    # per-CANDIDATE projection below the fan-out (ucodes + hn), m
-    # pdot lookups per pair above it — the flat scan's measured
-    # placement, 6.8 -> 4.6 s (see _pq_adc_candidates)
-    below = _pq_adc_candidates(
-        spark, path, m_an,
-        cand.select(F.col("vec_id").alias("neighbor_id"), "codes"),
-        with_norm=True)
-    scored = (
-        below.join(F.broadcast(adc))
-        .select("query_id", "neighbor_id",
-                _pq_adc_score(int(m_an["m"]), with_norm=True)
-                .alias("approx_sim"))
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("neighbor_id"))
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    pairs = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(vectors.select(F.col("vec_id").alias("neighbor_id"),
-                             F.col("embedding").alias("ne")),
-              "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
-
-
-def pq_index_topk(spark, path: str, query_vec: list[float],
-                  vectors: DataFrame, k: int = 10,
-                  rerank_mult: int | None = None,
-                  allowed: DataFrame | None = None,
-                  where: str | None = None) -> DataFrame:
-    """Serve top-k from a ``write_pq_index`` layout: the query's ADC
-    lookup tables (``_pq_adc_frame`` — one tiny broadcast row) score
-    the m-byte codes column with m element_at lookups per candidate —
-    cost independent of the codebook resolution ``ksub`` — then
-    TakeOrdered the ``k * rerank_mult`` shortlist, exact-rerank
-    against the primary store.  No shuffle before the bounded
-    shortlist; the scan reads m bytes per row.  ``allowed`` (a
-    ``vec_id`` DataFrame) restricts the search to a metadata-filtered
-    candidate set BEFORE the shortlist, exactly as in
-    :func:`sq8_index_topk`; ``where`` pushes an attribute predicate
-    into the codes scan (caller-trusted SQL — the
-    :func:`sq8_index_topk` trust-boundary note)."""
-    m_an = _index_manifest(spark, path)
-    rerank_mult = _resolve_rerank(m_an, rerank_mult)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    adc = _pq_adc_frame(spark, path, m_an, [
-        (0, [float(x) for x in query_vec])]).drop("query_id")
-    cand = _manifest_codes(spark, path, m_an)
-    if where is not None:
-        cand = cand.filter(where)                  # PushedFilters
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id",
-                         "left_semi")
-    below = _pq_adc_candidates(
-        spark, path, m_an,
-        cand.select(F.col("vec_id").alias("neighbor_id"), "codes"),
-        with_norm=True)
-    shortlist = (
-        below.join(F.broadcast(adc))               # one-row build side
-        .select("neighbor_id",
-                _pq_adc_score(int(m_an["m"]), with_norm=True)
-                .alias("approx_sim"))
-        .orderBy(F.desc("approx_sim"), F.asc("neighbor_id"))
-        .limit(k * rerank_mult)
-        .select("neighbor_id")
-    )
-    pairs = (
-        shortlist.join(
-            vectors.select(F.col("vec_id").alias("neighbor_id"),
-                           F.col("embedding").alias("ne")),
-            "neighbor_id")
-        .select("neighbor_id",
-                F.round(cosine(q, F.col("ne")), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-        .limit(k)
-    )
-    return bounded_rank(
-        pairs, [-F.col("cos_sim"), F.col("neighbor_id")], "rank",
-        start=1,
-    ).select("rank", "neighbor_id", "cos_sim")
 
 
 def embedding_kmeans_iterate(emb: DataFrame, k: int = KMEANS_K,
@@ -3134,15 +2033,10 @@ def maintain_ivf_index(spark, path: str, new_emb: DataFrame, *,
 
 
 # ---------------------------------------------------------------------------
-# IVF x PQ — coarse partition pruning over product-quantized codes, the
-# fourth point on the serving matrix (flat/full -> SQ8 -> IVFxSQ8 -> PQ ->
-# IVFxPQ): a query scans the nprobe probed cluster directories OF m-BYTE
-# codes — the multiplicative composition of write_ivf_index's pruning and
-# write_pq_index's compression, and the classic billion-scale layout
-# (FAISS's IVFPQ).  Codebooks quantize the RAW vectors, not residuals:
-# every scorer in this family is cosine (direction-only), where residual
-# encoding loses its L2 meaning — documented trade, matching ivf_sq8's
-# raw-value quantizer.
+# IVF x PQ — coarse partition pruning over product-quantized codes (FAISS's
+# IVFPQ).  Codebooks quantize the RAW vectors, not residuals: every scorer
+# here is cosine (direction-only), where residual encoding loses its L2
+# meaning — the same raw-value choice as ivf_sq8's quantizer.
 
 
 def ivf_pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
@@ -3222,387 +2116,12 @@ def ivf_pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
     return _ranked(pairs, k)
 
 
-def write_ivf_pq_index(emb: DataFrame, path: str, k: int | None = None,
-                       m: int = PQ_M, ksub: int = PQ_INDEX_KSUB,
-                       dim: int = 64,
-                       n_iter: int = KMEANS_ITERS,
-                       train_fraction: float = 1.0,
-                       attrs: DataFrame | None = None) -> None:
-    """Persist the IVF x PQ serving layout: ``m``-byte PQ codes
-    hive-partitioned by coarse k-means cluster (``cluster_id=NN/``
-    directories), the coarse centroid table and the ``m * ksub``
-    codeword table beside them.  A query reads nprobe/k of the corpus
-    at m bytes per row — at dim=64, m=8 that is 1/8 of SQ8's bytes
-    inside 1/4 of the partitions (nprobe=2, k=8): ~1/256 of a
-    full-precision full scan.
-
-    The stored centroids are the ones the assignment ran against
-    (``_trained_centroids`` -> ``_assign``), so serving ranks exactly
-    the geometry the codes were partitioned by.  Codes are the
-    nearest-codeword assignment against the final (unit-normalized)
-    codebooks via ``_pq_encode`` — writer and upsert share the one
-    encoding expression (the ``write_pq_index`` contract).
-
-    ``train_fraction < 1`` hash-samples BOTH trainers' input (the
-    coarse k-means and the m codebook chains — the build's scale
-    costs); assignment and encoding still cover every vector.
-
-    Same commit protocol as every index writer: codes + centroids +
-    codebooks land under ``data/v<N>/`` first, ONE manifest rename
-    publishes all three.  ``k=None`` derives the coarse cluster count
-    from the corpus size (:func:`_default_ivf_k`)."""
-    from ..jobs.versioned import _write_manifest
-
-    spark = emb.sparkSession
-    if k is None:
-        k = _default_ivf_k(emb)
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    cents_t = _trained_centroids(emb, k, n_iter, train_fraction)
-    assigned = _assign(emb.select("vec_id", "embedding"), cents_t) \
-        .select("vec_id", F.col("cid").alias("cluster_id"))
-    # books sit under every per-subspace encode branch — lineage-
-    # truncate once (the write_pq_index pattern)
-    books = _pq_books_trained(
-        _train_sample(emb, train_fraction), m, ksub, dim, n_iter)
-    encoded = _pq_encode(emb, books, m, dim // m).join(assigned, "vec_id")
-    attr_cols = [c for c in (attrs.columns if attrs is not None else [])
-                 if c != "vec_id"]
-    if attrs is not None:
-        encoded = encoded.join(attrs, "vec_id", "left")
-    (
-        encoded.select("vec_id", "codes", *attr_cols, "cluster_id")
-        .repartition("cluster_id")
-        .write.mode("error").partitionBy("cluster_id")
-        .parquet(f"{path}/{base}/codes")
-    )
-    cents_t.select(F.col("cid").alias("cluster_id"), "centroid") \
-        .coalesce(1).write.mode("error") \
-        .parquet(f"{path}/{base}/centroids")
-    books.coalesce(1).write.mode("error").parquet(
-        f"{path}/{base}/codebooks")
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "ivf_pq", "dim": dim, "m": m,
-        "k": ksub, "codes": [f"{base}/codes"],
-        "centroids": f"{base}/centroids",
-        "codebooks": f"{base}/codebooks",
-        **({"attrs": attr_cols} if attr_cols else {}),
-    })
-
-
-def ivf_pq_index_topk(spark, path: str, query_vec: list[float],
-                      vectors: DataFrame, k: int = 10,
-                      nprobe: int | None = None,
-                      rerank_mult: int | None = None,
-                      allowed: DataFrame | None = None,
-                      where: str | None = None) -> DataFrame:
-    """Serve top-k from a ``write_ivf_pq_index`` layout: rank the
-    centroid table driver-side, partition-prune to the ``nprobe`` best
-    cluster directories, score only those clusters' m-byte codes by m
-    ADC lookups against the query's broadcast table
-    (``_pq_adc_frame`` — ksub-independent), exact-cosine re-rank the
-    ``k * rerank_mult`` shortlist against the primary store.  ``allowed`` makes this a
-    FILTERED search with the cluster-partitioned family's adaptive
-    probe widening (``_widen_filtered_probes`` — a restrictive
-    allow-list whose survivors live outside the probed clusters widens
-    the probe set instead of starving the shortlist); ``where`` is the
-    pushdown form over stored attrs (caller-trusted SQL — the
-    :func:`ivf_sq8_index_topk` trust-boundary note)."""
-    m_an = _index_manifest(spark, path)
-    nprobe = _resolve_nprobe(m_an, nprobe)
-    rerank_mult = _resolve_rerank(m_an, rerank_mult)
-    ranked = _rank_clusters(spark, path, m_an, query_vec)
-    if allowed is not None or where is not None:
-        codes_all = _manifest_codes(spark, path, m_an)
-        if where is not None:
-            codes_all = codes_all.filter(where)
-        probe = _widen_filtered_probes(codes_all, allowed, ranked,
-                                       nprobe, k)
-    else:
-        probe = [cid for _, cid in ranked[:nprobe]]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    adc = _pq_adc_frame(spark, path, m_an, [
-        (0, [float(x) for x in query_vec])]).drop("query_id")
-    # read ONLY the probed directories (no full partition listing)
-    cand = _probed_codes(spark, path, m_an, probe)
-    if where is not None:
-        cand = cand.filter(where)
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id",
-                         "left_semi")
-    below = _pq_adc_candidates(
-        spark, path, m_an,
-        cand.select(F.col("vec_id").alias("neighbor_id"), "codes"))
-    shortlist = (
-        below.join(F.broadcast(adc))               # one-row build side
-        .select("neighbor_id",
-                _pq_adc_score(int(m_an["m"])).alias("approx_sim"))
-        .orderBy(F.desc("approx_sim"), F.asc("neighbor_id"))
-        .limit(k * rerank_mult)
-        .select("neighbor_id")
-    )
-    pairs = (
-        shortlist.join(
-            vectors.select(F.col("vec_id").alias("neighbor_id"),
-                           F.col("embedding").alias("ne")),
-            "neighbor_id")
-        .select("neighbor_id",
-                F.round(cosine(q, F.col("ne")), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-        .limit(k)
-    )
-    return bounded_rank(
-        pairs, [-F.col("cos_sim"), F.col("neighbor_id")], "rank",
-        start=1,
-    ).select("rank", "neighbor_id", "cos_sim")
-
-
-def ivf_pq_index_topk_batch(spark, path: str, queries: DataFrame,
-                            vectors: DataFrame, k: int = 10,
-                            nprobe: int | None = None,
-                            rerank_mult: int | None = None,
-                            allowed: DataFrame | None = None,
-                            where: str | None = None
-                            ) -> DataFrame:
-    """BATCH retrieval over a ``write_ivf_pq_index`` layout — ONE
-    distributed plan for the whole ``(query_id, embedding)`` batch:
-    per-query cluster ranking against the broadcast centroid table,
-    the probed-cluster UNION pushed as a partition IN-filter (each
-    probed directory read once for the batch), per-pair ADC-lookup
-    scoring (``_pq_adc_frame`` joined on query_id — m element_at
-    lookups per pair, ksub-independent; the per-CANDIDATE half —
-    unpack + reconstruction norm — rides below the fan-out via
-    ``code_proj``, the measured placement of ``_pq_adc_candidates``),
-    per-query shortlist windows, exact re-rank.  ``allowed`` gets the
-    shared PER-QUERY adaptive probe widening
-    (``_batch_candidates``)."""
-    m_an = _index_manifest(spark, path)
-    nprobe = _resolve_nprobe(m_an, nprobe)
-    rerank_mult = _resolve_rerank(m_an, rerank_mult)
-    c_rows = _centroid_rows(spark, path, m_an)
-    q = queries.select(F.col("query_id"),
-                       F.col("embedding").alias("qe"))
-
-    def codes_src(probed):
-        df = _probed_codes(spark, path, m_an, probed)
-        if where is not None:
-            df = df.filter(where)                  # PushedFilters
-        return df
-
-    adc = _pq_adc_frame(spark, path, m_an, [
-        (int(r["query_id"]), [float(x) for x in r["qe"]])
-        for r in q.select("query_id", "qe").collect()])
-    cand = _batch_candidates(
-        spark, q, c_rows, codes_src, nprobe, k, allowed,
-        code_proj=lambda df: _pq_adc_candidates(spark, path, m_an, df),
-        widen=(allowed is not None or where is not None) or None)
-    scored = (
-        cand.select("query_id", "vec_id", "ucodes")
-        .join(F.broadcast(adc), "query_id")
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                _pq_adc_score(int(m_an["m"])).alias("approx_sim"))
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("neighbor_id"))
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    pairs = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(vectors.select(F.col("vec_id").alias("neighbor_id"),
-                             F.col("embedding").alias("ne")),
-              "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
-
-
-def ivf_pq_index_upsert(spark, path: str, new_emb: DataFrame,
-                        attrs: DataFrame | None = None) -> dict:
-    """Maintain a ``write_ivf_pq_index`` layout under batches — the
-    kind-true upsert (foreign kinds are refused as data, the uniform
-    contract): new vectors are assigned against the STORED centroids
-    (one k-row broadcast) and encoded against the STORED codebooks via
-    the writer's own ``_pq_encode``, so a re-submitted identical vector
-    re-encodes bit-identically.  All-new vec_ids append ONE new
-    cluster-partitioned codes dir (probed reads keep pruning across
-    every referenced dir); re-submitted vec_ids keyed-REPLACE into one
-    fresh partitioned dir.  Centroids and codebooks never move on an
-    upsert — ``maintain_ivf_pq_index`` owns the retrain decision.
-    Same crash protocol as every writer: data first, ONE manifest
-    rename last."""
-    from ..jobs.upsert import _check_key_unique
-    from ..jobs.versioned import _write_manifest
-
-    _check_key_unique(new_emb, ["vec_id"])
-    man = _index_manifest(spark, path)
-    if man.get("kind") != "ivf_pq":
-        return {"decision": "wrong_kind", "kind": man.get("kind"),
-                "expected": "ivf_pq"}
-    m, dim = int(man["m"]), int(man["dim"])
-    m_attrs, attr_rows = _upsert_attr_rows(man, new_emb, attrs, path)
-    books = spark.read.parquet(f"{path}/{man['codebooks']}")
-    cents = (
-        spark.read.parquet(f"{path}/{man['centroids']}")
-        .withColumnRenamed("cluster_id", "cid")
-    )
-    encoded = (
-        _pq_encode(new_emb, books, m, dim // m)
-        .join(_assign(new_emb.select("vec_id", "embedding"), cents)
-              .select("vec_id", F.col("cid").alias("cluster_id")),
-              "vec_id")
-        .select("vec_id", "cluster_id", "codes")
-    )
-    if m_attrs:
-        encoded = encoded.join(attr_rows, "vec_id", "left") \
-            .select("vec_id", "codes", *m_attrs, "cluster_id")
-    current = _manifest_codes(spark, path, man)
-    batch_ids = new_emb.select("vec_id")
-    n_new = new_emb.count()
-    n_replaced = current.join(
-        F.broadcast(batch_ids), "vec_id", "left_semi").count()
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    if n_replaced == 0:
-        (encoded.repartition("cluster_id")
-         .write.mode("error").partitionBy("cluster_id")
-         .parquet(f"{path}/{base}/codes"))
-        dirs = man["codes"] + [f"{base}/codes"]
-        decision = "appended"
-    else:
-        survivors = current.join(
-            F.broadcast(batch_ids), "vec_id", "left_anti")
-        (survivors.select("vec_id", "codes", *m_attrs, "cluster_id")
-         .unionByName(encoded)
-         .repartition("cluster_id")
-         .write.mode("error").partitionBy("cluster_id")
-         .parquet(f"{path}/{base}/codes"))
-        dirs = [f"{base}/codes"]
-        decision = "replaced"
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "ivf_pq", "dim": dim, "m": m,
-        "k": int(man["k"]), "codes": dirs,
-        "centroids": man["centroids"],
-        "codebooks": man["codebooks"],
-        **({"attrs": m_attrs} if m_attrs else {}),
-        **({"default_nprobe": man["default_nprobe"]}
-           if "default_nprobe" in man else {}),
-        **({"excluded_clusters": man["excluded_clusters"]}
-           if (decision == "appended" and "excluded_clusters" in man)
-           else {}),
-    })
-    return {"decision": decision, "n_new": n_new,
-            "n_replaced": n_replaced}
-
-
-def maintain_ivf_pq_index(spark, path: str, new_emb: DataFrame,
-                          vectors: DataFrame, *, k: int = 10,
-                          nprobe: int | None = None,
-                          recall_floor_permille: int = 600,
-                          max_nprobe: int | None = None,
-                          sample_queries: int = 4,
-                          rebuild: bool = True,
-                          train_fraction: float = 1.0) -> dict:
-    """The closed IVF x PQ maintenance loop — the full
-    ``maintain_ivf_sq8_index`` decision ladder (this layout has BOTH
-    failure modes: stale partitioning, which ``bump_nprobe`` recovers,
-    and stale codebooks, which only a rebuild fixes): merge a batch
-    (``ivf_pq_index_upsert``), measure MIN sampled serving recall vs
-    brute force over the primary store, and return the decision AS
-    DATA — ``"ok"`` / ``"bump_nprobe"`` (the new setting is committed
-    to the manifest as ``default_nprobe``, like ``tune_index``) /
-    ``"rebuild"`` (centroids AND codebooks retrain over ``vectors`` as
-    a new committed version, then recall re-measures).
-
-    Same primary-store CONTRACT as the other maintainers: ``vectors``
-    must already contain the batch; violations raise before anything
-    is written."""
-    n_missing = (new_emb.select("vec_id")
-                 .join(vectors.select("vec_id"), "vec_id", "left_anti")
-                 .count())
-    if n_missing:
-        raise ValueError(
-            f"maintain_ivf_pq_index: {n_missing} batch vec_ids are "
-            f"absent from `vectors` — pass the POST-merge primary "
-            f"store (the probe and any rebuild read it as ground "
-            f"truth)")
-    st = dict(ivf_pq_index_upsert(spark, path, new_emb))
-    if st["decision"] == "wrong_kind":
-        return st
-    man = _index_manifest(spark, path)
-    nprobe = _resolve_nprobe(man, nprobe)
-    n_clusters = spark.read.parquet(
-        f"{path}/{man['centroids']}").count()
-    cap = min(max_nprobe or n_clusters, n_clusters)
-    queries = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in new_emb.select("vec_id", "embedding")
-        .orderBy("vec_id").limit(sample_queries).collect()
-    ]
-    out = {**st, "n_queries": len(queries), "nprobe": nprobe,
-           "recall_floor_permille": recall_floor_permille}
-
-    def _min_recall(np_: int) -> int:
-        return _batched_min_recall(
-            spark, queries, vectors, k,
-            lambda qdf: ivf_pq_index_topk_batch(
-                spark, path, qdf, vectors, k=k, nprobe=np_))
-
-    if not queries:
-        out.update(decision="ok", recall_permille=None)
-        return out
-    r0 = _min_recall(nprobe)
-    out["recall_permille"] = r0
-    if r0 >= recall_floor_permille:
-        out["decision"] = "ok"
-        return out
-    bumped = min(max(nprobe * 2, nprobe + 1), cap)
-    if bumped > nprobe:
-        r1 = _min_recall(bumped)
-        out["recall_after_bump_permille"] = r1
-        if r1 >= recall_floor_permille:
-            out.update(decision="bump_nprobe", nprobe=bumped)
-            out["nprobe_version"] = _persist_nprobe(spark, path,
-                                                    bumped)
-            return out
-    out["decision"] = "rebuild"
-    if rebuild:
-        # the rebuild-at-higher-resolution rung (the maintain_pq_index
-        # note): bump_nprobe failing above means probing deeper cannot
-        # recover the floor — the remaining lever is code resolution,
-        # so the retrain escalates ksub to the PQ_INDEX_KSUB default
-        # (kept when the index is already at or above it).  This is
-        # the wire from tune_index's `target_unreachable`: its honest
-        # refusal names this rung as the fix, and the rung now
-        # actually raises the resolution instead of retraining the
-        # same ceiling.
-        new_ksub = max(int(man["k"]), PQ_INDEX_KSUB)
-        out["ksub"] = new_ksub
-        out["ksub_escalated"] = new_ksub > int(man["k"])
-        write_ivf_pq_index(vectors, path, k=n_clusters,
-                           m=int(man["m"]), ksub=new_ksub,
-                           dim=int(man["dim"]),
-                           train_fraction=train_fraction,
-                           attrs=_attrs_self_carry(
-                               spark, path, man, new_emb))
-        out["recall_after_rebuild_permille"] = _min_recall(nprobe)
-    return out
-
-
 # ---------------------------------------------------------------------------
-# Binary quantization (BQ) — the fifth point on the serving matrix and
-# the cheapest pre-filter of all: ONE SIGN BIT per dimension (dim=64 ->
-# 8 bytes/vector, 1/32 of float32), candidates ranked by Hamming
-# distance (xor + popcount — pure integer ops, no floats anywhere until
-# the exact re-rank).  Sign quantization is DATA-INDEPENDENT: there is
-# no trained artifact to drift, so the layout has upsert but no
-# maintenance loop — recall is structural (set by dim and rerank_mult),
-# not operational.  Bits pack into TWO 32-bit halves (lo = dims 1..32,
-# hi = 33..64) so neither engine ever touches a sign-bit edge case.
+# Binary quantization (BQ) — ONE SIGN BIT per dimension (dim=64 -> 8
+# bytes/vector, 1/32 of float32), candidates ranked by Hamming distance
+# (xor + popcount: no floats until the exact re-rank).  Sign quantization
+# is DATA-INDEPENDENT — nothing trains, nothing drifts.  Bits pack into TWO
+# 32-bit halves so neither engine ever touches a sign-bit edge case.
 
 BQ_RERANK_MULT = 8   # BQ quantizes coarsest of all (1 bit/dim) — same
 #                      deepened exact-rerank shortlist as PQ
@@ -3688,216 +2207,16 @@ def bq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
     return _ranked(pairs, k)
 
 
-def write_bq_index(emb: DataFrame, path: str, dim: int = 64,
-                   attrs: DataFrame | None = None) -> None:
-    """Persist the binary-quantization serving layout: ``(vec_id, lo,
-    hi)`` — two packed 32-bit sign-bit halves per vector, 8 bytes of
-    scannable code.  NOTHING trains (the sign quantizer is the data-
-    independent function x > 0), so the manifest carries only the
-    codes reference; same atomic commit protocol as every writer.
-    ``attrs`` stores filterable attribute columns with the codes for
-    ``where=`` pushdown serving (the ``write_sq8_index`` contract)."""
-    from ..jobs.versioned import _write_manifest
-
-    if dim != 64:
-        raise ValueError(
-            f"bq packs exactly 64 sign bits (got dim={dim})")
-    spark = emb.sparkSession
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    attr_cols = [c for c in (attrs.columns if attrs is not None else [])
-                 if c != "vec_id"]
-    encoded = emb.select("vec_id",
-                         _bq_half("embedding", 0).alias("lo"),
-                         _bq_half("embedding", 32).alias("hi"))
-    if attrs is not None:
-        encoded = encoded.join(attrs, "vec_id", "left")
-    encoded.select("vec_id", "lo", "hi", *attr_cols) \
-        .write.mode("error").parquet(f"{path}/{base}/codes")
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "bq", "dim": dim,
-        "codes": [f"{base}/codes"],
-        **({"attrs": attr_cols} if attr_cols else {}),
-    })
-
-
 def _bq_query_bits(query_vec: list[float]) -> tuple[int, int]:
     lo = sum(1 << i for i in range(32) if query_vec[i] > 0)
     hi = sum(1 << i for i in range(32) if query_vec[32 + i] > 0)
     return lo, hi
 
 
-def bq_index_topk(spark, path: str, query_vec: list[float],
-                  vectors: DataFrame, k: int = 10,
-                  rerank_mult: int | None = None,
-                  allowed: DataFrame | None = None,
-                  where: str | None = None) -> DataFrame:
-    """Serve top-k from a ``write_bq_index`` layout: the query's sign
-    bits are two Python ints inlined as literals, candidate scoring is
-    two xors + two popcounts over the 8-byte codes scan, TakeOrdered
-    the ``k * rerank_mult`` shortlist (Hamming ASC), exact-cosine
-    re-rank against the primary store.  ``allowed`` semi-joins the
-    candidate set before the shortlist, as everywhere; ``where``
-    pushes an attribute predicate into the codes scan (caller-trusted
-    SQL — the :func:`sq8_index_topk` trust-boundary note)."""
-    m_an = _index_manifest(spark, path)
-    rerank_mult = _resolve_rerank(m_an, rerank_mult)
-    if m_an.get("kind") != "bq":
-        raise ValueError(
-            f"vector index {path} is kind={m_an.get('kind')!r}, "
-            f"not bq")
-    qlo, qhi = _bq_query_bits(query_vec)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cand = _manifest_codes(spark, path, m_an)
-    if where is not None:
-        cand = cand.filter(where)                  # PushedFilters
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id",
-                         "left_semi")
-    shortlist = (
-        cand.select(
-            F.col("vec_id").alias("neighbor_id"),
-            _bq_hamming(F.col("lo"), F.col("hi"),
-                        F.lit(qlo).cast("long"),
-                        F.lit(qhi).cast("long")).alias("ham"))
-        .orderBy(F.asc("ham"), F.asc("neighbor_id"))
-        .limit(k * rerank_mult)
-        .select("neighbor_id")
-    )
-    pairs = (
-        shortlist.join(
-            vectors.select(F.col("vec_id").alias("neighbor_id"),
-                           F.col("embedding").alias("ne")),
-            "neighbor_id")
-        .select("neighbor_id",
-                F.round(cosine(q, F.col("ne")), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-        .limit(k)
-    )
-    return bounded_rank(
-        pairs, [-F.col("cos_sim"), F.col("neighbor_id")], "rank",
-        start=1,
-    ).select("rank", "neighbor_id", "cos_sim")
-
-
-def bq_index_topk_batch(spark, path: str, queries: DataFrame,
-                        vectors: DataFrame, k: int = 10,
-                        rerank_mult: int | None = None,
-                        allowed: DataFrame | None = None,
-                        where: str | None = None) -> DataFrame:
-    """BATCH retrieval over a ``write_bq_index`` layout: the 8-byte
-    codes are scanned once, each query's sign bits computed once on
-    the broadcast side, Hamming scored per pair (two xors + two
-    popcounts), per-query shortlist windows, exact re-rank — ONE
-    distributed plan with the shared ``(query_id, rank, neighbor_id,
-    cos_sim)`` contract.  ``where`` pushes an attribute predicate into
-    the codes scan (caller-trusted SQL — the :func:`sq8_index_topk`
-    trust-boundary note)."""
-    m_an = _index_manifest(spark, path)
-    rerank_mult = _resolve_rerank(m_an, rerank_mult)
-    if m_an.get("kind") != "bq":
-        raise ValueError(
-            f"vector index {path} is kind={m_an.get('kind')!r}, "
-            f"not bq")
-    q = queries.select(
-        "query_id", F.col("embedding").alias("qe"),
-        _bq_half("embedding", 0).alias("qlo"),
-        _bq_half("embedding", 32).alias("qhi"))
-    cand = _manifest_codes(spark, path, m_an)
-    if where is not None:
-        cand = cand.filter(where)                  # PushedFilters
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id",
-                         "left_semi")
-    scored = (
-        cand.join(F.broadcast(q))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                _bq_hamming(F.col("lo"), F.col("hi"),
-                            F.col("qlo"), F.col("qhi")).alias("ham"))
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.asc("ham"), F.asc("neighbor_id"))
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    pairs = (
-        shortlist.join(F.broadcast(q.select("query_id", "qe")),
-                       "query_id")
-        .join(vectors.select(F.col("vec_id").alias("neighbor_id"),
-                             F.col("embedding").alias("ne")),
-              "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
-
-
-def bq_index_upsert(spark, path: str, new_emb: DataFrame,
-                    attrs: DataFrame | None = None) -> dict:
-    """Maintain a ``write_bq_index`` layout under batches — the
-    kind-true upsert: new vectors are sign-packed with the writer's
-    own expression (data-independent, so there is no drift screen and
-    nothing to retrain — EVER: the only maintenance a BQ layout needs
-    is this upsert plus ``compact_index``/``vacuum_index`` hygiene).
-    All-new vec_ids append one codes dir; re-submitted vec_ids are
-    keyed-REPLACED.  Same crash protocol as every writer."""
-    from ..jobs.upsert import _check_key_unique
-    from ..jobs.versioned import _write_manifest
-
-    _check_key_unique(new_emb, ["vec_id"])
-    man = _index_manifest(spark, path)
-    if man.get("kind") != "bq":
-        return {"decision": "wrong_kind", "kind": man.get("kind"),
-                "expected": "bq"}
-    m_attrs, attr_rows = _upsert_attr_rows(man, new_emb, attrs, path)
-    encoded = new_emb.select(
-        "vec_id",
-        _bq_half("embedding", 0).alias("lo"),
-        _bq_half("embedding", 32).alias("hi"))
-    if m_attrs:
-        encoded = encoded.join(attr_rows, "vec_id", "left") \
-            .select("vec_id", "lo", "hi", *m_attrs)
-    current = _manifest_codes(spark, path, man)
-    batch_ids = new_emb.select("vec_id")
-    n_new = new_emb.count()
-    n_replaced = current.join(
-        F.broadcast(batch_ids), "vec_id", "left_semi").count()
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    if n_replaced == 0:
-        encoded.write.mode("error").parquet(f"{path}/{base}/codes")
-        dirs = man["codes"] + [f"{base}/codes"]
-        decision = "appended"
-    else:
-        survivors = current.join(
-            F.broadcast(batch_ids), "vec_id", "left_anti")
-        survivors.unionByName(encoded).write.mode("error").parquet(
-            f"{path}/{base}/codes")
-        dirs = [f"{base}/codes"]
-        decision = "replaced"
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "bq", "dim": int(man["dim"]),
-        "codes": dirs,
-        **({"attrs": m_attrs} if m_attrs else {}),
-    })
-    return {"decision": decision, "n_new": n_new,
-            "n_replaced": n_replaced}
-
-
 # ---------------------------------------------------------------------------
 # Index observability — the ops counterpart of the maintenance loops:
 # everything an operator needs to DECIDE (compact? vacuum? bump nprobe?
 # rebuild?) surfaced as data, never by prodding index internals.
-
-
-_CODE_BYTES = {
-    # bytes of scannable code per vector, by layout kind
-    "bq": 8,
-    "ivf_bq": 8,
-}
 
 
 def index_stats(spark, path: str) -> dict:
@@ -3916,25 +2235,19 @@ def index_stats(spark, path: str) -> dict:
     from ..jobs.versioned import list_versions
 
     m = _index_manifest(spark, path)
-    kind = m.get("kind", "sq8")
+    spec = _kind_of(m, path)
     codes = _manifest_codes(spark, path, m)
-    dim = int(m["dim"])
-    if kind in _CODE_BYTES:
-        bpv = _CODE_BYTES[kind]
-    elif kind in ("pq", "ivf_pq"):
-        bpv = int(m["m"])
-    else:
-        bpv = dim                                   # sq8 / ivf_sq8
     out = {
-        "kind": kind, "dim": dim, "version": int(m["version"]),
+        "kind": spec.name, "dim": int(m["dim"]),
+        "version": int(m["version"]),
         "n_versions_retained": len(list_versions(spark, path)),
         "n_vectors": codes.count(),
         "n_codes_dirs": len(m["codes"]),
-        "code_bytes_per_vector": bpv,
+        "code_bytes_per_vector": spec.codec.code_bytes(m),
         "n_retired_clusters": len(m.get("excluded_clusters", [])),
         "attrs": list(m.get("attrs", [])),
     }
-    if kind.startswith("ivf_"):
+    if spec.ivf:
         # the probe operating point: the committed default_nprobe
         # (tune_index / a maintainer's bump), or the constant fallback
         # an UNTUNED index serves at — `tuned` says which.  Emitted
@@ -4001,52 +2314,17 @@ def _recall_points(spark, path: str, vectors: DataFrame,
     rerank_mult)`` operating point — the shared engine behind
     :func:`index_recall_curve` and both of :func:`tune_index`'s rungs:
     the first ``num_queries`` stored vectors serve as queries, exact
-    brute force over the primary store is truth, one bounded top-k job
-    per (query, point).  ``None`` in either slot means "resolve the
-    committed default", exactly as in serving."""
-    m = _index_manifest(spark, path)
-    kind = m.get("kind", "sq8")
-    servers = {
-        "sq8": lambda qv, np_, rm: sq8_index_topk(
-            spark, path, qv, vectors, k=k, rerank_mult=rm),
-        "pq": lambda qv, np_, rm: pq_index_topk(
-            spark, path, qv, vectors, k=k, rerank_mult=rm),
-        "bq": lambda qv, np_, rm: bq_index_topk(
-            spark, path, qv, vectors, k=k, rerank_mult=rm),
-        "ivf_sq8": lambda qv, np_, rm: ivf_sq8_index_topk(
-            spark, path, qv, vectors, k=k, nprobe=np_, rerank_mult=rm),
-        "ivf_pq": lambda qv, np_, rm: ivf_pq_index_topk(
-            spark, path, qv, vectors, k=k, nprobe=np_, rerank_mult=rm),
-        "ivf_bq": lambda qv, np_, rm: ivf_bq_index_topk(
-            spark, path, qv, vectors, k=k, nprobe=np_, rerank_mult=rm),
-    }
-    serve = servers[kind]
-    queries = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in vectors.select("vec_id", "embedding")
-        .orderBy("vec_id").limit(num_queries).collect()
-    ]
-    exact = None
-    for qid, qv in queries:
-        qcol = F.array(*[F.lit(float(x)) for x in qv])
-        e = (vectors.select(
-                "vec_id",
-                F.round(cosine(F.col("embedding"), qcol), 6)
-                .alias("cos_sim"))
-             .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-             .limit(k)
-             .select(F.lit(qid).cast("long").alias("query_id"),
-                     F.col("vec_id").alias("neighbor_id")))
-        exact = e if exact is None else exact.unionByName(e)
-    exact = exact.localCheckpoint(eager=True)
+    brute force over the primary store is truth (one windowed plan,
+    checkpointed), and each point is ONE :func:`index_topk_batch` plan
+    over the whole sample (per-query equal to the single path, pinned
+    by tests).  ``None`` in either slot means "resolve the committed
+    default", exactly as in serving."""
+    qdf = _queries_frame(spark, _sample_queries(vectors, num_queries))
+    exact = _exact_topk(qdf, vectors, k).localCheckpoint(eager=True)
     rows = []
     for np_, rm in points:
-        approx = None
-        for qid, qv in queries:
-            a = serve(qv, np_, rm).select(
-                F.lit(qid).cast("long").alias("query_id"),
-                F.col("neighbor_id"))
-            approx = a if approx is None else approx.unionByName(a)
+        approx = index_topk_batch(spark, path, qdf, vectors, k=k,
+                                  nprobe=np_, rerank_mult=rm)
         rec = (ann_recall(approx, exact)
                .agg(F.min("recall_permille").alias("mn"),
                     F.avg("recall_permille").alias("mean"))
@@ -4083,12 +2361,12 @@ def index_recall_curve(spark, path: str, vectors: DataFrame,
     grid (one row per (nprobe, rerank) pair) — the 2-D view
     ``tune_index``'s second rung consumes.
 
-    Cost: num_queries x len(points) bounded top-k jobs plus one exact
-    pass per query — a monitor you run per maintenance batch or from
-    the CLI, never per serving query."""
+    Cost: one batch-serve plan per point plus one exact pass — a
+    monitor you run per maintenance batch or from the CLI, never per
+    serving query."""
     m = _index_manifest(spark, path)
-    kind = m.get("kind", "sq8")
-    if kind.startswith("ivf_"):
+    spec = _kind_of(m, path)
+    if spec.ivf:
         if nprobes is None:
             nprobes = _nprobe_ladder(spark.read.parquet(
                 f"{path}/{m['centroids']}").count())
@@ -4097,8 +2375,7 @@ def index_recall_curve(spark, path: str, vectors: DataFrame,
     else:
         if rerank_mults is None:
             rerank_mults = _rerank_ladder(
-                _kind_rerank_default(kind), k,
-                vectors.count())
+                spec.codec.rerank_default, k, vectors.count())
         points = [(None, int(rm)) for rm in rerank_mults]
     return _recall_points(spark, path, vectors, num_queries, k, points)
 
@@ -4112,24 +2389,18 @@ def tune_index(spark, path: str, vectors: DataFrame,
     (:func:`index_recall_curve`), pick the CHEAPEST measured operating
     point whose MIN sampled recall meets the target, and commit it to
     the manifest — ``default_nprobe`` (IVF kinds) and/or
-    ``default_rerank_mult`` (every kind has the re-rank knob) — the
-    settings every later serving call (single, batch, streaming, CLI)
-    resolves when the caller passes ``None`` (see
-    :func:`_resolve_nprobe` / :func:`_resolve_rerank`).  Min, not
-    mean: one drifted region is exactly what a mean averages away.
+    ``default_rerank_mult`` — which every later serving call resolves
+    when the caller passes ``None``.  Min, not mean: one drifted region
+    is exactly what a mean averages away.
 
     Two rungs, cheapest knob first:
 
-    - FLAT kinds (sq8/pq/bq): sweep the exact-rerank ladder, commit
-      the smallest depth meeting the target as
-      ``default_rerank_mult``.  This is the knob that decides what a
-      flat layout's recall IS (the r13 measurement that retired the
-      "flat kinds have nothing to tune" answer: bq at sf1 goes
-      181 -> 900+ permille purely on rerank depth, at a serve cost
-      that stays a Hamming scan + a bounded exact re-rank).  The
-      ladder ends at the corpus-covering depth, so the target is
-      always reachable on the default grid — what changes is the
-      honest COST of meeting it, which the curve records.
+    - FLAT kinds: sweep the exact-rerank ladder, commit the smallest
+      depth meeting the target as ``default_rerank_mult`` — the knob
+      that decides what a flat layout's recall IS (bq at sf1 goes
+      181 -> 900+ permille on rerank depth alone).  The ladder ends at
+      the corpus-covering depth, so the target is always reachable on
+      the default grid; the curve records the honest COST.
     - IVF kinds: sweep probe depth at the committed rerank first (the
       pruning knob — cheaper rows scanned beats deeper re-rank); if no
       probe depth reaches the target (resolution-limited within the
@@ -4139,45 +2410,45 @@ def tune_index(spark, path: str, vectors: DataFrame,
       nested probe sweep; the (nprobe, rerank_mult) pair commits
       together in ONE manifest bump.
 
-    The commit is a manifest-only version bump (no data write — the
-    cheapest possible commit under the same single-rename crash
-    protocol; an interrupted tune leaves the previous operating point
-    fully served).  Decisions AS DATA, like the maintainers:
+    The commit is a manifest-only version bump under the single-rename
+    crash protocol.  Decisions AS DATA, the curve riding along in each:
 
-    - ``{"decision": "noop"}``         — the measured pick is already
-      EXPLICITLY pinned in the manifest; no version written.  A pick
-      that merely equals the constant fallback on an untuned manifest
-      still commits (the ``_persist_operating_point`` rationale: pin
-      the measured point against constant drift).
-    - ``{"decision": "tuned", ...}``   — committed; carries ``nprobe``
-      (IVF) and/or ``rerank_mult`` (flat always; IVF when the second
-      rung fired) plus ``version``.
+    - ``{"decision": "noop"}`` — the pick is already EXPLICITLY pinned
+      in the manifest; no version written (a pick equal to an untuned
+      constant fallback still commits: pin the measured point).
+    - ``{"decision": "tuned", ...}`` — committed; carries ``nprobe``
+      and/or ``rerank_mult`` plus ``version``.
     - ``{"decision": "target_unreachable"}`` — no measured point meets
-      the target; NOTHING is written (serving deeper than the deepest
-      measured point is a guess).  Reachable only with a caller-pinned
-      grid (the default ladders end at exact-recall points) or when
-      the second rung's ceilings all fall short.  The honest lever is
-      then the maintainers' rebuild rung — for the PQ kinds that rung
-      RAISES CODE RESOLUTION (``maintain_pq_index`` /
-      ``maintain_ivf_pq_index`` retrain at ``PQ_INDEX_KSUB`` when the
-      stored ksub is below it).  The measured curve rides along in
-      every outcome for the operator to inspect.
-
-    Cost: the recall curve's bounded top-k jobs plus at most one
-    manifest rename — an operator action per maintenance window or
-    after bulk upserts, never per serving query."""
+      the target, NOTHING written (reachable only with a caller-pinned
+      grid or when every second-rung ceiling falls short).  The lever
+      is then :func:`maintain_index`'s rebuild rung, which for the PQ
+      kinds RAISES code resolution to ``PQ_INDEX_KSUB``."""
     m = _index_manifest(spark, path)
-    kind = m.get("kind", "sq8")
+    spec = _kind_of(m, path)
     if not 0 < target_recall_permille <= 1000:
         raise ValueError(
             f"target_recall_permille must be in (0, 1000] "
             f"(got {target_recall_permille})")
-    if not kind.startswith("ivf_"):
+
+    def commit(**point) -> dict:
+        # the shared operating-point commit skips ONLY when the setting
+        # is explicitly present and equal — a pick equal to the constant
+        # fallback on an untuned manifest still pins, so a later
+        # constant change can't silently move a tuned index
+        version = _persist_operating_point(spark, path, **point)
+        out.update(point)
+        if version == int(m["version"]):
+            out["decision"] = "noop"
+        else:
+            out.update(decision="tuned", version=version)
+        return out
+
+    if not spec.ivf:
         curve = index_recall_curve(
             spark, path, vectors, num_queries=num_queries, k=k,
             rerank_mults=(tuple(sorted(set(rerank_mults)))
                           if rerank_mults is not None else None))
-        out = {"kind": kind, "curve": curve,
+        out = {"kind": spec.name, "curve": curve,
                "target_recall_permille": target_recall_permille,
                "previous_rerank_mult": _resolve_rerank(m, None)}
         pick = next(
@@ -4187,39 +2458,21 @@ def tune_index(spark, path: str, vectors: DataFrame,
         if pick is None:
             out["decision"] = "target_unreachable"
             return out
-        version = _persist_operating_point(spark, path,
-                                           rerank_mult=int(pick))
-        if version == int(m["version"]):
-            out.update(decision="noop", rerank_mult=int(pick))
-        else:
-            out.update(decision="tuned", rerank_mult=int(pick),
-                       version=version)
-        return out
+        return commit(rerank_mult=int(pick))
     curve = index_recall_curve(spark, path, vectors,
                                num_queries=num_queries, k=k,
                                nprobes=(tuple(sorted(set(nprobes)))
                                         if nprobes is not None
                                         else None))
     current = int(m.get("default_nprobe", DEFAULT_NPROBE))
-    out = {"kind": kind, "curve": curve,
+    out = {"kind": spec.name, "curve": curve,
            "target_recall_permille": target_recall_permille,
            "previous_nprobe": current}
     pick = next((r["nprobe"] for r in curve
                  if r["min_recall_permille"] >= target_recall_permille),
                 None)
     if pick is not None:
-        # commit via the shared operating-point shape: it skips ONLY
-        # when default_nprobe is explicitly present and equal — a pick
-        # equal to the constant fallback on an untuned manifest still
-        # pins, so a later DEFAULT_NPROBE change can't silently move a
-        # tuned index's operating point
-        version = _persist_nprobe(spark, path, int(pick))
-        if version == int(m["version"]):
-            out.update(decision="noop", nprobe=int(pick))
-        else:
-            out.update(decision="tuned", nprobe=int(pick),
-                       version=version)
-        return out
+        return commit(nprobe=int(pick))
     # SECOND RUNG — probing deeper cannot reach the target (the codes
     # cannot rank the true neighbors within the probed clusters), so
     # the remaining serving-time lever is a deeper exact re-rank.
@@ -4231,7 +2484,7 @@ def tune_index(spark, path: str, vectors: DataFrame,
     cur_rm = _resolve_rerank(m, None)
     ladder = (tuple(sorted(set(rerank_mults)))
               if rerank_mults is not None
-              else _rerank_ladder(_kind_rerank_default(kind), k,
+              else _rerank_ladder(spec.codec.rerank_default, k,
                                   vectors.count()))
     out["rerank_curve"] = []
     for rm in (r for r in ladder if r > cur_rm):
@@ -4249,18 +2502,9 @@ def tune_index(spark, path: str, vectors: DataFrame,
             (r["nprobe"] for r in sub
              if r["min_recall_permille"] >= target_recall_permille),
             n_clusters)
-        version = _persist_operating_point(
-            spark, path, nprobe=int(np_pick), rerank_mult=int(rm))
-        if version == int(m["version"]):
-            out.update(decision="noop", nprobe=int(np_pick),
-                       rerank_mult=int(rm))
-        else:
-            out.update(decision="tuned", nprobe=int(np_pick),
-                       rerank_mult=int(rm), version=version)
-        return out
+        return commit(nprobe=int(np_pick), rerank_mult=int(rm))
     out["decision"] = "target_unreachable"
     return out
-
 
 
 def rebalance_index(spark, path: str, vectors: DataFrame, *,
@@ -4305,9 +2549,9 @@ def rebalance_index(spark, path: str, vectors: DataFrame, *,
     from ..jobs.versioned import _write_manifest
 
     m = _index_manifest(spark, path)
-    kind = m.get("kind", "sq8")
-    if kind not in ("ivf_sq8", "ivf_pq", "ivf_bq"):
-        return {"decision": "flat_kind", "kind": kind}
+    spec = _kind_of(m, path)
+    if not spec.ivf:
+        return {"decision": "flat_kind", "kind": spec.name}
     codes = _manifest_codes(spark, path, m)
     sizes = {int(r["cluster_id"]): int(r["n"])
              for r in codes.groupBy("cluster_id")
@@ -4315,7 +2559,7 @@ def rebalance_index(spark, path: str, vectors: DataFrame, *,
     mean = sum(sizes.values()) / len(sizes)
     hot_cid = max(sorted(sizes), key=lambda c: sizes[c])
     imb = int(1000 * sizes[hot_cid] / mean)
-    out = {"kind": kind, "n_clusters": len(sizes),
+    out = {"kind": spec.name, "n_clusters": len(sizes),
            "imbalance_permille": imb,
            "max_imbalance_permille": max_imbalance_permille,
            "cluster_id": hot_cid, "cluster_size": sizes[hot_cid]}
@@ -4387,111 +2631,473 @@ def rebalance_index(spark, path: str, vectors: DataFrame, *,
 
 
 # ---------------------------------------------------------------------------
-# IVF x BQ — coarse partition pruning over the 8-byte sign codes: the
-# layout for when even byte codes are too much scan.  A query reads
-# nprobe/k of the corpus at 8 bytes/vector with pure-integer scoring —
-# the cheapest probed read on the matrix; the coarse centroids are the
-# only trained artifact (the sign quantizer never trains), so the
-# maintenance ladder has the bump_nprobe rung but its rebuild only
-# re-clusters.
+# Stored vector indexes: ONE core over two axes.  Every manifest-committed
+# layout is a CODEC (how a vector becomes scannable code, and how a
+# candidate's code scores against a query) times a PARTITION LAYER (flat:
+# the codes table is scanned whole; IVF: codes hive-partitioned by k-means
+# cluster, a query reads only its nprobe best clusters).  INDEX_KINDS is
+# the registry of the six kinds; write / serve / batch-serve / upsert /
+# maintain are one function each, reading the kind from the manifest.
 
 
-def write_ivf_bq_index(emb: DataFrame, path: str, k: int | None = None,
-                       dim: int = 64, n_iter: int = KMEANS_ITERS,
-                       train_fraction: float = 1.0,
-                       attrs: DataFrame | None = None) -> None:
-    """Persist the IVF x BQ serving layout: the two packed 32-bit
-    sign-bit halves hive-partitioned by coarse k-means cluster, the
-    centroid table beside them.  Same atomic manifest protocol as
-    every writer; ``train_fraction`` samples the coarse trainer (the
-    only training this layout has).  ``attrs`` stores filterable
-    columns with the codes for ``where=`` pushdown serving (the
-    ``write_ivf_sq8_index`` contract).  ``k=None`` derives the coarse
-    cluster count from the corpus size (:func:`_default_ivf_k`)."""
-    from ..jobs.versioned import _write_manifest
+class _Codec:
+    """A stored-layout quantizer.  Besides the defaults below, each codec
+    implements ``encode(arts, emb, geom)`` -> ``(vec_id, *code_cols)``
+    (the ONE encoding expression writer and upsert share, so an
+    identical vector re-encodes bit-identically), ``code_bytes(man)``,
+    ``single_score(...)`` -> ``(neighbor_id, <score_col>)`` for one
+    query's candidates, and ``batch_score(...)`` -> ``(query_id,
+    neighbor_id, <score_col>)``: flat candidates cross the broadcast
+    query side, IVF candidates already carry the ``query_id`` of every
+    query that probed them.  Trained artifacts are written beside the
+    codes under ``data/v<N>/`` and referenced by manifest key."""
 
-    if dim != 64:
-        raise ValueError(
-            f"bq packs exactly 64 sign bits (got dim={dim})")
-    spark = emb.sparkSession
-    if k is None:
-        k = _default_ivf_k(emb)
-    version = _next_index_version(spark, path)
-    base = f"data/v{version:06d}"
-    cents_t = _trained_centroids(emb, k, n_iter, train_fraction)
-    assigned = _assign(emb.select("vec_id", "embedding"), cents_t) \
-        .select("vec_id", F.col("cid").alias("cluster_id"))
-    attr_cols = [c for c in (attrs.columns if attrs is not None else [])
-                 if c != "vec_id"]
-    encoded = (emb.select("vec_id",
+    code_cols: tuple = ("codes",)    # the scannable code columns
+    artifacts: tuple = ()            # trained artifact dirs, by manifest key
+    score_col = "approx_sim"         # candidate score column ...
+    score_desc = True                # ... and its nearest-first direction
+    rerank_default = SQ_RERANK_MULT  # untuned exact-rerank depth
+    retrainable = True               # a rebuild can move the quantizer
+    # staleness of the trained artifact is visible ONLY to a recall probe
+    # (PQ codebooks); SQ8 range drift is screened at upsert time and BQ
+    # trains nothing, so their flat layouts have no maintenance ladder
+    silent_drift = False
+
+    def params(self, m: int, ksub: int) -> dict:
+        """Geometry the manifest records beyond ``dim``."""
+        return {}
+
+    def check_dim(self, dim: int) -> None:
+        pass
+
+    def train(self, emb: DataFrame, geom: dict, n_iter: int,
+              train_fraction: float) -> dict:
+        """``{artifact: DataFrame}`` learned from ``emb``."""
+        return {}
+
+    def stored(self, spark, path: str, man: dict) -> dict:
+        return {a: spark.read.parquet(f"{path}/{man[a]}")
+                for a in self.artifacts}
+
+    def drift(self, arts: dict, new_emb: DataFrame, dim: int,
+              tol: float) -> list[int] | None:
+        """Dims an upsert batch drifted on (non-empty = refuse the
+        batch), or None when the codec has no screen."""
+        return None
+
+    def ivf_code_proj(self, spark, path: str, man: dict):
+        """Per-candidate projection applied to the probed codes BELOW
+        the IVF query fan-out (:func:`_batch_candidates`), or None."""
+        return None
+
+    def rebuild_params(self, man: dict, out: dict) -> dict:
+        """Writer overrides for the maintenance ladder's rebuild rung."""
+        return {}
+
+
+class _SQ8(_Codec):
+    """One byte per dimension against a corpus-trained per-dim [min, max]
+    quantizer; a candidate scores by the cosine of its reconstruction
+    against the full-precision query (asymmetric scoring)."""
+
+    artifacts = ("quantizer",)
+
+    def train(self, emb, geom, n_iter, train_fraction):
+        # full-corpus regardless of train_fraction: min/max over a sample
+        # would under-cover the range and clamp real values, and the
+        # stats aggregation is one map-side-combinable pass
+        return {"quantizer": _sq8_stats(emb, geom["dim"])}
+
+    def encode(self, arts, emb, geom):
+        return emb.join(F.broadcast(arts["quantizer"])).select(
+            "vec_id",
+            _sq8_pack(_sq8_codes(F.col("embedding"), F.col("mns"),
+                                 F.col("mxs"), int(geom["dim"])))
+            .alias("codes"))
+
+    def drift(self, arts, new_emb, dim, tol):
+        return _sq8_drifted_dims(arts["quantizer"], new_emb, dim, tol)
+
+    def code_bytes(self, man):
+        return int(man["dim"])
+
+    def single_score(self, spark, path, man, cand, query_vec, ivf):
+        dim = int(man["dim"])
+        q = F.array(*[F.lit(float(x)) for x in query_vec])
+        return (
+            cand.join(F.broadcast(self.stored(spark, path, man)
+                                  ["quantizer"]))
+            .withColumn("ucodes", _sq8_unpack(F.col("codes"), dim))
+            .select(F.col("vec_id").alias("neighbor_id"),
+                    cosine(q, _sq8_reconstruct(F.col("ucodes"), dim))
+                    .alias("approx_sim")))
+
+    def batch_score(self, spark, path, man, cand, queries, q, ivf):
+        dim = int(man["dim"])
+        # NOTE measured trade (r11): materializing the reconstruction
+        # once per candidate below the query join — the PQ hat placement
+        # — is 14x WORSE here (4.4 -> 60 s for a 16-query batch at
+        # sf0.1): SQ8's recon is a 64-double array whose UnsafeArrayData
+        # copy per joined pair costs more than re-running the codegen'd
+        # unpack over the 64-BYTE blob.  Keep the recompute.
+        # PLAN-SHAPE-CRITICAL: the ucodes projection must sit BELOW a
+        # join so it cannot collapse into the reconstruct/cosine
+        # projection — adjacent Projects let CollapseProject inline the
+        # hex/split/conv unpack into the per-dimension transform lambda,
+        # re-evaluating it dim x per pair (measured r12 at sf1: 20.7 s ->
+        # sub-second for a 16-query ivf batch at nprobe=16).  The query
+        # join above the unpack is that barrier: a cross join on the
+        # flat layout, the query_id join on IVF candidates.
+        return (
+            cand.join(F.broadcast(self.stored(spark, path, man)
+                                  ["quantizer"]))
+            .withColumn("ucodes", _sq8_unpack(F.col("codes"), dim))
+            .join(F.broadcast(q), "query_id" if ivf else None)
+            .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                    cosine(F.col("qe"),
+                           _sq8_reconstruct(F.col("ucodes"), dim))
+                    .alias("approx_sim")))
+
+
+class _PQ(_Codec):
+    """One byte per SUBSPACE: ``m`` contiguous subvectors, each with its
+    own ``k``-way unit-normalized k-means codebook; candidates score by
+    ADC lookups against per-query tables (:func:`_pq_adc_frame` —
+    ksub-independent)."""
+
+    artifacts = ("codebooks",)
+    rerank_default = PQ_RERANK_MULT
+    silent_drift = True
+
+    def params(self, m, ksub):
+        return {"m": m, "k": ksub}
+
+    def train(self, emb, geom, n_iter, train_fraction):
+        # the books sit under every per-subspace encode branch, so the
+        # trainer lineage-truncates them once; train_fraction < 1
+        # hash-samples the TRAINING corpus only — encoding still covers
+        # every vector
+        return {"codebooks": _pq_books_trained(
+            _train_sample(emb, train_fraction), int(geom["m"]),
+            int(geom["k"]), int(geom["dim"]), n_iter)}
+
+    def encode(self, arts, emb, geom):
+        m = int(geom["m"])
+        return _pq_encode(emb, arts["codebooks"], m, int(geom["dim"]) // m)
+
+    def code_bytes(self, man):
+        return int(man["m"])
+
+    def single_score(self, spark, path, man, cand, query_vec, ivf):
+        # the flat scan folds the reconstruction norm below the
+        # one-row ADC join; the small probed IVF scan keeps it a
+        # per-pair fold (the measured placements, _pq_adc_candidates)
+        adc = _pq_adc_frame(spark, path, man, [
+            (0, [float(x) for x in query_vec])]).drop("query_id")
+        below = _pq_adc_candidates(
+            spark, path, man,
+            cand.select(F.col("vec_id").alias("neighbor_id"), "codes"),
+            with_norm=not ivf)
+        return below.join(F.broadcast(adc)).select(
+            "neighbor_id",
+            _pq_adc_score(int(man["m"]), with_norm=not ivf)
+            .alias("approx_sim"))
+
+    def ivf_code_proj(self, spark, path, man):
+        # unpack once per stored row, below the probes fan-out
+        return lambda df: _pq_adc_candidates(spark, path, man, df)
+
+    def batch_score(self, spark, path, man, cand, queries, q, ivf):
+        m = int(man["m"])
+        adc = _pq_adc_frame(spark, path, man, [
+            (int(r["query_id"]), [float(x) for x in r["qe"]])
+            for r in q.collect()])
+        if ivf:
+            return (cand.select("query_id", "vec_id", "ucodes")
+                    .join(F.broadcast(adc), "query_id")
+                    .select("query_id",
+                            F.col("vec_id").alias("neighbor_id"),
+                            _pq_adc_score(m).alias("approx_sim")))
+        # per-CANDIDATE projection below the fan-out (ucodes + hn), m
+        # pdot lookups per pair above it — the flat scan's measured
+        # placement, 6.8 -> 4.6 s (see _pq_adc_candidates)
+        below = _pq_adc_candidates(
+            spark, path, man,
+            cand.select(F.col("vec_id").alias("neighbor_id"), "codes"),
+            with_norm=True)
+        return below.join(F.broadcast(adc)).select(
+            "query_id", "neighbor_id",
+            _pq_adc_score(m, with_norm=True).alias("approx_sim"))
+
+    def rebuild_params(self, man, out):
+        # rebuild-at-higher-RESOLUTION: a recall floor the stored books
+        # cannot reach is often code-resolution-limited, not staleness-
+        # limited (r12 sf1: ksub=16 topped out at 100 permille
+        # recall@10), and with ADC serving ksub-independent the retrain
+        # at PQ_INDEX_KSUB costs only build time.  An index at or above
+        # the default keeps its resolution.
+        new_ksub = max(int(man["k"]), PQ_INDEX_KSUB)
+        out["ksub"] = new_ksub
+        out["ksub_escalated"] = new_ksub > int(man["k"])
+        return {"m": int(man["m"]), "ksub": new_ksub}
+
+
+class _BQ(_Codec):
+    """One SIGN BIT per dimension packed into two 32-bit halves;
+    candidates rank by integer Hamming distance (xor + popcount).
+    Data-independent: nothing trains, nothing drifts."""
+
+    code_cols = ("lo", "hi")
+    score_col = "ham"
+    score_desc = False
+    rerank_default = BQ_RERANK_MULT
+    retrainable = False
+
+    def check_dim(self, dim):
+        if dim != 64:
+            raise ValueError(
+                f"bq packs exactly 64 sign bits (got dim={dim})")
+
+    def encode(self, arts, emb, geom):
+        return emb.select("vec_id",
                           _bq_half("embedding", 0).alias("lo"),
                           _bq_half("embedding", 32).alias("hi"))
-               .join(assigned, "vec_id"))
-    if attrs is not None:
-        encoded = encoded.join(attrs, "vec_id", "left")
-    (encoded
-     .select("vec_id", "lo", "hi", *attr_cols, "cluster_id")
-     .repartition("cluster_id")
-     .write.mode("error").partitionBy("cluster_id")
-     .parquet(f"{path}/{base}/codes"))
-    cents_t.select(F.col("cid").alias("cluster_id"), "centroid") \
-        .coalesce(1).write.mode("error") \
-        .parquet(f"{path}/{base}/centroids")
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "ivf_bq", "dim": dim,
-        "codes": [f"{base}/codes"], "centroids": f"{base}/centroids",
-        **({"attrs": attr_cols} if attr_cols else {}),
-    })
 
+    def code_bytes(self, man):
+        return 8
 
-def ivf_bq_index_topk(spark, path: str, query_vec: list[float],
-                      vectors: DataFrame, k: int = 10,
-                      nprobe: int | None = None,
-                      rerank_mult: int | None = None,
-                      allowed: DataFrame | None = None,
-                      where: str | None = None) -> DataFrame:
-    """Serve top-k from a ``write_ivf_bq_index`` layout: rank the
-    centroid table driver-side, partition-prune to the probed cluster
-    directories, integer-Hamming the 8-byte codes against the query's
-    inlined bit halves, exact-rerank the shortlist.  ``allowed`` gets
-    the cluster-partitioned family's adaptive probe widening;
-    ``where`` is the pushdown form over stored attrs (caller-trusted
-    SQL — the :func:`ivf_sq8_index_topk` trust-boundary note)."""
-    m_an = _index_manifest(spark, path)
-    if m_an.get("kind") != "ivf_bq":
-        raise ValueError(
-            f"vector index {path} is kind={m_an.get('kind')!r}, "
-            f"not ivf_bq")
-    nprobe = _resolve_nprobe(m_an, nprobe)
-    rerank_mult = _resolve_rerank(m_an, rerank_mult)
-    ranked = _rank_clusters(spark, path, m_an, query_vec)
-    if allowed is not None or where is not None:
-        codes_all = _manifest_codes(spark, path, m_an)
-        if where is not None:
-            codes_all = codes_all.filter(where)
-        probe = _widen_filtered_probes(codes_all, allowed, ranked,
-                                       nprobe, k)
-    else:
-        probe = [cid for _, cid in ranked[:nprobe]]
-    qlo, qhi = _bq_query_bits(query_vec)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    # read ONLY the probed directories (no full partition listing)
-    cand = _probed_codes(spark, path, m_an, probe)
-    if where is not None:
-        cand = cand.filter(where)
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id",
-                         "left_semi")
-    shortlist = (
-        cand.select(
+    def single_score(self, spark, path, man, cand, query_vec, ivf):
+        qlo, qhi = _bq_query_bits(query_vec)
+        return cand.select(
             F.col("vec_id").alias("neighbor_id"),
             _bq_hamming(F.col("lo"), F.col("hi"),
                         F.lit(qlo).cast("long"),
                         F.lit(qhi).cast("long")).alias("ham"))
-        .orderBy(F.asc("ham"), F.asc("neighbor_id"))
+
+    def batch_score(self, spark, path, man, cand, queries, q, ivf):
+        qb = queries.select("query_id",
+                            _bq_half("embedding", 0).alias("qlo"),
+                            _bq_half("embedding", 32).alias("qhi"))
+        return (cand.join(F.broadcast(qb), "query_id" if ivf else None)
+                .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                        _bq_hamming(F.col("lo"), F.col("hi"),
+                                    F.col("qlo"), F.col("qhi"))
+                        .alias("ham")))
+
+
+@dataclass(frozen=True)
+class IndexKind:
+    """One registry entry: a codec on a partition layer.
+    ``refit_centroids`` (ivf_sq8) stores the centroids re-fit to the
+    final assignment — the ``write_ivf_index`` geometry — where the
+    other IVF kinds store the centroids the assignment ran against."""
+
+    name: str
+    codec: _Codec
+    ivf: bool
+    refit_centroids: bool = False
+
+    @property
+    def maintainable(self) -> bool:
+        """Has a recall-driven maintenance ladder (IVF partitioning can
+        go stale; so can a codec whose drift only recall shows)."""
+        return self.ivf or self.codec.silent_drift
+
+
+_SQ8_CODEC, _PQ_CODEC, _BQ_CODEC = _SQ8(), _PQ(), _BQ()
+INDEX_KINDS = {
+    "sq8": IndexKind("sq8", _SQ8_CODEC, ivf=False),
+    "ivf_sq8": IndexKind("ivf_sq8", _SQ8_CODEC, ivf=True,
+                         refit_centroids=True),
+    "pq": IndexKind("pq", _PQ_CODEC, ivf=False),
+    "ivf_pq": IndexKind("ivf_pq", _PQ_CODEC, ivf=True),
+    "bq": IndexKind("bq", _BQ_CODEC, ivf=False),
+    "ivf_bq": IndexKind("ivf_bq", _BQ_CODEC, ivf=True),
+}
+
+
+def _kind_of(m: dict, path: str, expect: str | None = None) -> IndexKind:
+    """The manifest's registry entry (legacy manifests without a kind
+    are sq8); ``expect`` refuses any other kind."""
+    kind = m.get("kind", "sq8")
+    if expect is not None and kind != expect:
+        raise ValueError(
+            f"vector index {path} is kind={m.get('kind')!r}, "
+            f"not {expect}")
+    return INDEX_KINDS[kind]
+
+
+def _wrong_kind(m: dict, expect: str | None) -> dict | None:
+    """The per-kind maintainers' refusal AS DATA (nothing written)."""
+    if expect is not None and m.get("kind", "sq8") != expect:
+        return {"decision": "wrong_kind", "kind": m.get("kind"),
+                "expected": expect}
+    return None
+
+
+def _ivf_train(emb: DataFrame, k: int, n_iter: int,
+               train_fraction: float, refit: bool):
+    """A fresh IVF partition: ``(assignment (vec_id, cluster_id),
+    centroids (cluster_id, centroid))``.  ``train_fraction < 1`` trains
+    the k-means chains on a hash-sample (:func:`_train_sample`) and
+    assigns the FULL corpus against the learned centroids."""
+    if refit and train_fraction >= 1.0:
+        asg = embedding_kmeans(emb, k, n_iter).select(
+            "vec_id", "cluster_id")
+    else:
+        cents = _trained_centroids(emb, k, n_iter, train_fraction)
+        asg = _assign(emb.select("vec_id", "embedding"), cents) \
+            .select("vec_id", F.col("cid").alias("cluster_id"))
+    if refit:
+        cents = _quantized_centroids(
+            emb.join(asg, "vec_id").withColumnRenamed("cluster_id", "cid"))
+    return asg, cents.select(F.col("cid").alias("cluster_id"), "centroid")
+
+
+def _write_codes(df: DataFrame, dest: str, ivf: bool) -> None:
+    """Write one codes dir — hive-partitioned by ``cluster_id`` on the IVF
+    layer, so probed reads partition-prune."""
+    if ivf:
+        df = df.repartition("cluster_id")
+        df.write.mode("error").partitionBy("cluster_id").parquet(dest)
+    else:
+        df.write.mode("error").parquet(dest)
+
+
+def _filtered(cand: DataFrame, allowed: DataFrame | None,
+              where: str | None) -> DataFrame:
+    """Apply the two filter forms to a candidate set BEFORE scoring:
+    ``where`` lands on the codes scan (PushedFilters), ``allowed``
+    semi-joins the id list."""
+    if where is not None:
+        cand = cand.filter(where)
+    if allowed is not None:
+        cand = cand.join(allowed.select("vec_id"), "vec_id", "left_semi")
+    return cand
+
+
+def write_index(emb: DataFrame, path: str, kind: str, *,
+                k: int | None = None, dim: int = 64, m: int = PQ_M,
+                ksub: int = PQ_INDEX_KSUB, n_iter: int = KMEANS_ITERS,
+                train_fraction: float = 1.0,
+                attrs: DataFrame | None = None) -> None:
+    """Persist a compressed serving layout of ``kind`` (a key of
+    :data:`INDEX_KINDS`): ``(vec_id, <codes>)`` encoded by the kind's
+    codec, its trained artifact (sq8 quantizer, pq codebooks; bq trains
+    nothing) and, on the IVF kinds, codes hive-partitioned by k-means
+    cluster with the centroid table beside them.  The ANN scan reads
+    these small codes; full-precision vectors stay in the caller's
+    primary store and are read only for the exact re-rank shortlist.
+
+    Commit protocol (jobs/versioned.py): data lands under
+    ``<path>/data/v<N>/`` FIRST, then ONE manifest at
+    ``<path>/_versions/v<N>.json`` publishes it by atomic tmp+rename — a
+    crash leaves orphan dirs, never codes served under the wrong
+    artifacts.  Single-writer.
+
+    ``k``: IVF cluster count (None: ~sqrt(N), :func:`_default_ivf_k`);
+    ``m``/``ksub``: PQ subspaces and codebook resolution;
+    ``train_fraction < 1`` hash-samples the k-means/codebook TRAINING
+    input (encoding still covers every vector; the SQ8 quantizer is
+    always full-corpus).  ``attrs`` (``(vec_id, <scalar cols>)``) stores
+    filterable columns WITH the codes so ``where=`` predicates reach the
+    codes scan as parquet filters (left join: no attrs row = NULLs);
+    upserts must then supply the same columns."""
+    from ..jobs.versioned import _write_manifest
+
+    spec = INDEX_KINDS[kind]
+    codec = spec.codec
+    codec.check_dim(dim)
+    spark = emb.sparkSession
+    if spec.ivf and k is None:
+        k = _default_ivf_k(emb)
+    version = _next_index_version(spark, path)
+    base = f"data/v{version:06d}"
+    geom = {"dim": dim, **codec.params(m, ksub)}
+    arts = codec.train(emb, geom, n_iter, train_fraction)
+    encoded = codec.encode(arts, emb, geom)
+    if spec.ivf:
+        asg, cents = _ivf_train(emb, k, n_iter, train_fraction,
+                                spec.refit_centroids)
+        encoded = encoded.join(asg, "vec_id")
+    attr_cols = [c for c in (attrs.columns if attrs is not None else [])
+                 if c != "vec_id"]
+    if attrs is not None:
+        encoded = encoded.join(attrs, "vec_id", "left")
+    _write_codes(encoded.select("vec_id", *codec.code_cols, *attr_cols,
+                                *(["cluster_id"] if spec.ivf else [])),
+                 f"{path}/{base}/codes", spec.ivf)
+    refs = {}
+    if spec.ivf:
+        cents.coalesce(1).write.mode("error") \
+            .parquet(f"{path}/{base}/centroids")
+        refs["centroids"] = f"{base}/centroids"
+    for name, art in arts.items():
+        art.coalesce(1).write.mode("error").parquet(f"{path}/{base}/{name}")
+        refs[name] = f"{base}/{name}"
+    _write_manifest(spark, path, version, {
+        "version": version, "kind": kind, **geom,
+        "codes": [f"{base}/codes"], **refs,
+        **({"attrs": attr_cols} if attr_cols else {}),
+    })
+
+
+def index_topk(spark, path: str, query_vec: list[float],
+               vectors: DataFrame, k: int = 10, *,
+               nprobe: int | None = None, rerank_mult: int | None = None,
+               dim: int | None = None, allowed: DataFrame | None = None,
+               where: str | None = None,
+               kind: str | None = None) -> DataFrame:
+    """Serve top-k for one query from the newest committed snapshot:
+    score the candidates' codes against the full-precision query (the
+    codec's score), TakeOrdered the ``k * rerank_mult`` shortlist, and
+    exact-cosine re-rank just those rows against ``vectors`` (the primary
+    store).  Returns ``(rank, neighbor_id, cos_sim)``.  IVF kinds rank
+    the k-row centroid table driver-side and read only the ``nprobe``
+    best cluster directories.
+
+    ``allowed`` (a ``vec_id`` DataFrame) semi-joins the candidates
+    BEFORE the shortlist, so a restrictive filter cannot starve the
+    result; on IVF the probe set also WIDENS (doubling until >= ``k``
+    allowed candidates are reachable or every cluster is probed — one
+    bounded count per step, never paid unfiltered).  ``where`` (SQL over
+    the STORED attribute columns) is the pushdown form, with the same
+    widening.  Trust boundary: ``where`` is CALLER-TRUSTED SQL, a
+    filtering convenience, not tenant isolation — for an untrusted filter
+    pass an ``allowed=`` id-list from a store the caller is authorized
+    on.  ``dim`` only asserts against the manifest; ``nprobe=None`` /
+    ``rerank_mult=None`` serve the committed operating point
+    (:func:`_resolve_nprobe` / :func:`_resolve_rerank`); ``kind`` refuses
+    an index of any other kind."""
+    m = _index_manifest(spark, path)
+    spec = _kind_of(m, path, kind)
+    _manifest_dim(m, dim, path)
+    rerank_mult = _resolve_rerank(m, rerank_mult)
+    if spec.ivf:
+        nprobe = _resolve_nprobe(m, nprobe)
+        ranked = _rank_centroids(query_vec,
+                                 _centroid_rows(spark, path, m))
+        if allowed is not None or where is not None:
+            probe = _widen_filtered_probes(
+                _filtered(_manifest_codes(spark, path, m), None, where),
+                allowed, ranked, nprobe, k)
+        else:
+            probe = [cid for _, cid in ranked[:nprobe]]
+        # read ONLY the probed directories (no full partition listing)
+        cand = _probed_codes(spark, path, m, probe)
+    else:
+        cand = _manifest_codes(spark, path, m)
+    codec = spec.codec
+    order = F.desc if codec.score_desc else F.asc
+    shortlist = (
+        codec.single_score(spark, path, m,
+                           _filtered(cand, allowed, where),
+                           query_vec, spec.ivf)
+        .orderBy(order(codec.score_col), F.asc("neighbor_id"))
         .limit(k * rerank_mult)
         .select("neighbor_id")
     )
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
     pairs = (
         shortlist.join(
             vectors.select(F.col("vec_id").alias("neighbor_id"),
@@ -4508,58 +3114,51 @@ def ivf_bq_index_topk(spark, path: str, query_vec: list[float],
     ).select("rank", "neighbor_id", "cos_sim")
 
 
-def ivf_bq_index_topk_batch(spark, path: str, queries: DataFrame,
-                            vectors: DataFrame, k: int = 10,
-                            nprobe: int | None = None,
-                            rerank_mult: int | None = None,
-                            allowed: DataFrame | None = None,
-                            where: str | None = None
-                            ) -> DataFrame:
-    """BATCH retrieval over a ``write_ivf_bq_index`` layout — ONE
-    distributed plan: shared probe resolution (``_batch_candidates``,
-    with per-query adaptive widening under ``allowed``), integer
-    Hamming against each query's bit halves computed once on the
-    broadcast side, per-query shortlist windows, exact re-rank."""
-    m_an = _index_manifest(spark, path)
-    if m_an.get("kind") != "ivf_bq":
-        raise ValueError(
-            f"vector index {path} is kind={m_an.get('kind')!r}, "
-            f"not ivf_bq")
-    c_rows = _centroid_rows(spark, path, m_an)
-    nprobe = _resolve_nprobe(m_an, nprobe)
-    rerank_mult = _resolve_rerank(m_an, rerank_mult)
-    q = queries.select(
-        "query_id", F.col("embedding").alias("qe"),
-        _bq_half("embedding", 0).alias("qlo"),
-        _bq_half("embedding", 32).alias("qhi"))
+def index_topk_batch(spark, path: str, queries: DataFrame,
+                     vectors: DataFrame, k: int = 10, *,
+                     nprobe: int | None = None,
+                     rerank_mult: int | None = None,
+                     allowed: DataFrame | None = None,
+                     where: str | None = None,
+                     kind: str | None = None) -> DataFrame:
+    """BATCH retrieval — the production serving shape: a ``(query_id,
+    embedding)`` batch runs as ONE distributed plan (``(query_id, rank,
+    neighbor_id, cos_sim)`` out), per-query identical to
+    :func:`index_topk`.  Queries ride broadcast (the bounded side); flat
+    kinds scan the codes once, IVF kinds read each probed cluster once
+    and fan its rows out to the queries that probed it, each STARVED
+    query widening its own probe depth under a filter
+    (:func:`_batch_candidates`).  Per-query shortlist windows on the
+    codec's score, then the exact re-rank.  Arguments as in
+    :func:`index_topk`."""
+    m = _index_manifest(spark, path)
+    spec = _kind_of(m, path, kind)
+    codec = spec.codec
+    rerank_mult = _resolve_rerank(m, rerank_mult)
+    q = queries.select("query_id", F.col("embedding").alias("qe"))
+    if spec.ivf:
+        def codes_src(probed):
+            return _filtered(_probed_codes(spark, path, m, probed),
+                             None, where)
 
-    def codes_src(probed):
-        df = _probed_codes(spark, path, m_an, probed)
-        if where is not None:
-            df = df.filter(where)                  # PushedFilters
-        return df
-
-    cand = _batch_candidates(
-        spark, q.select("query_id", "qe"), c_rows, codes_src, nprobe,
-        k, allowed,
-        widen=(allowed is not None or where is not None) or None)
-    scored = (
-        cand.join(F.broadcast(q.select("query_id", "qlo", "qhi")),
-                  "query_id")
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                _bq_hamming(F.col("lo"), F.col("hi"),
-                            F.col("qlo"), F.col("qhi")).alias("ham"))
-    )
+        cand = _batch_candidates(
+            spark, q, _centroid_rows(spark, path, m), codes_src,
+            _resolve_nprobe(m, nprobe), k, allowed,
+            code_proj=codec.ivf_code_proj(spark, path, m),
+            widen=allowed is not None or where is not None)
+    else:
+        cand = _filtered(_manifest_codes(spark, path, m), allowed, where)
+    order = F.desc if codec.score_desc else F.asc
     ws = Window.partitionBy("query_id").orderBy(
-        F.asc("ham"), F.asc("neighbor_id"))
+        order(codec.score_col), F.asc("neighbor_id"))
     shortlist = (
-        scored.withColumn("rn", F.row_number().over(ws))
+        codec.batch_score(spark, path, m, cand, queries, q, spec.ivf)
+        .withColumn("rn", F.row_number().over(ws))
         .filter(F.col("rn") <= k * rerank_mult)
         .select("query_id", "neighbor_id")
     )
     pairs = (
-        shortlist.join(F.broadcast(q.select("query_id", "qe")),
-                       "query_id")
+        shortlist.join(F.broadcast(q), "query_id")
         .join(vectors.select(F.col("vec_id").alias("neighbor_id"),
                              F.col("embedding").alias("ne")),
               "neighbor_id")
@@ -4570,178 +3169,329 @@ def ivf_bq_index_topk_batch(spark, path: str, queries: DataFrame,
     return _ranked(pairs, k)
 
 
-def ivf_bq_index_upsert(spark, path: str, new_emb: DataFrame,
-                        attrs: DataFrame | None = None) -> dict:
-    """Kind-true upsert for the IVF x BQ layout: sign-pack with the
-    writer's expression, assign against the STORED centroids, append
-    one cluster-partitioned dir or keyed-replace.  No drift screen —
-    sign bits never drift; centroid staleness is the maintain loop's
-    recall monitor's job."""
+def index_upsert(spark, path: str, new_emb: DataFrame, *,
+                 dim: int | None = None, tol: float = SQ_DRIFT_TOL,
+                 attrs: DataFrame | None = None,
+                 kind: str | None = None) -> dict:
+    """Merge a batch into a stored index and return the decision AS DATA.
+    The batch encodes with the STORED artifacts through the writer's own
+    expression (an identical vector re-encodes bit-identically) and, on
+    IVF, assigns against the STORED centroids; neither moves.
+
+    - a codec with a drift screen (sq8: batch min/max beyond ``tol`` x
+      the stored range) refuses a drifted batch, NOTHING written:
+      ``{"decision": "rebuild", "drifted_dims": [...]}``;
+    - all-new vec_ids land as ONE new codes dir the manifest appends
+      (``"appended"``);
+    - any re-submitted vec_id is keyed-REPLACED: survivors plus the batch
+      rewrite one fresh dir the manifest points at alone (``"replaced"``).
+
+    The next manifest is the current one with only the version and codes
+    list moved, so a committed operating point (``default_nprobe`` /
+    ``default_rerank_mult``) survives every upsert; a replace rewrote
+    survivors exclusion-filtered, so it drops ``excluded_clusters``.
+    Crash-safe like the writer; single-writer; batches must be
+    vec_id-unique; an attrs-bearing index needs the same columns (via
+    ``attrs`` or on the batch).  ``kind`` refuses a foreign kind as
+    ``{"decision": "wrong_kind"}``, nothing written."""
     from ..jobs.upsert import _check_key_unique
     from ..jobs.versioned import _write_manifest
 
     _check_key_unique(new_emb, ["vec_id"])
-    man = _index_manifest(spark, path)
-    if man.get("kind") != "ivf_bq":
-        return {"decision": "wrong_kind", "kind": man.get("kind"),
-                "expected": "ivf_bq"}
-    m_attrs, attr_rows = _upsert_attr_rows(man, new_emb, attrs, path)
-    cents = (
-        spark.read.parquet(f"{path}/{man['centroids']}")
-        .withColumnRenamed("cluster_id", "cid")
-    )
-    encoded = (
-        new_emb.select("vec_id",
-                       _bq_half("embedding", 0).alias("lo"),
-                       _bq_half("embedding", 32).alias("hi"))
-        .join(_assign(new_emb.select("vec_id", "embedding"), cents)
-              .select("vec_id", F.col("cid").alias("cluster_id")),
-              "vec_id")
-        .select("vec_id", "lo", "hi", "cluster_id")
-    )
-    if m_attrs:
-        encoded = encoded.join(attr_rows, "vec_id", "left") \
-            .select("vec_id", "lo", "hi", *m_attrs, "cluster_id")
-    current = _manifest_codes(spark, path, man)
-    batch_ids = new_emb.select("vec_id")
+    m = _index_manifest(spark, path)
+    refused = _wrong_kind(m, kind)
+    if refused:
+        return refused
+    spec = _kind_of(m, path)
+    codec = spec.codec
+    dim = _manifest_dim(m, dim, path)
+    m_attrs, attr_rows = _upsert_attr_rows(m, new_emb, attrs, path)
+    arts = codec.stored(spark, path, m)
+    drifted = codec.drift(arts, new_emb, dim, tol)
     n_new = new_emb.count()
+    if drifted:
+        return {"decision": "rebuild", "n_new": n_new,
+                "drifted_dims": drifted}
+    cols = ["vec_id", *codec.code_cols, *m_attrs,
+            *(["cluster_id"] if spec.ivf else [])]
+    encoded = codec.encode(arts, new_emb, m)
+    if spec.ivf:
+        # assigned against the STORED centroids (one k-row broadcast —
+        # an upsert never recomputes the index geometry)
+        cents = (spark.read.parquet(f"{path}/{m['centroids']}")
+                 .withColumnRenamed("cluster_id", "cid"))
+        encoded = encoded.join(
+            _assign(new_emb.select("vec_id", "embedding"), cents)
+            .select("vec_id", F.col("cid").alias("cluster_id")),
+            "vec_id")
+    if m_attrs:
+        encoded = encoded.join(attr_rows, "vec_id", "left")
+    encoded = encoded.select(*cols)
+    current = _manifest_codes(spark, path, m)
+    batch_ids = new_emb.select("vec_id")
     n_replaced = current.join(
         F.broadcast(batch_ids), "vec_id", "left_semi").count()
     version = _next_index_version(spark, path)
     base = f"data/v{version:06d}"
+    nxt = {k_: v for k_, v in m.items() if k_ != "build_nonce"}
     if n_replaced == 0:
-        (encoded.repartition("cluster_id")
-         .write.mode("error").partitionBy("cluster_id")
-         .parquet(f"{path}/{base}/codes"))
-        dirs = man["codes"] + [f"{base}/codes"]
+        _write_codes(encoded, f"{path}/{base}/codes", spec.ivf)
+        nxt.update(version=version, codes=m["codes"] + [f"{base}/codes"])
         decision = "appended"
     else:
         survivors = current.join(
             F.broadcast(batch_ids), "vec_id", "left_anti")
-        (survivors.select("vec_id", "lo", "hi", *m_attrs, "cluster_id")
-         .unionByName(encoded)
-         .repartition("cluster_id")
-         .write.mode("error").partitionBy("cluster_id")
-         .parquet(f"{path}/{base}/codes"))
-        dirs = [f"{base}/codes"]
+        _write_codes(survivors.select(*cols).unionByName(encoded),
+                     f"{path}/{base}/codes", spec.ivf)
+        nxt.update(version=version, codes=[f"{base}/codes"])
+        nxt.pop("excluded_clusters", None)
         decision = "replaced"
-    _write_manifest(spark, path, version, {
-        "version": version, "kind": "ivf_bq", "dim": int(man["dim"]),
-        "codes": dirs, "centroids": man["centroids"],
-        **({"attrs": m_attrs} if m_attrs else {}),
-        **({"default_nprobe": man["default_nprobe"]}
-           if "default_nprobe" in man else {}),
-        **({"excluded_clusters": man["excluded_clusters"]}
-           if (decision == "appended" and "excluded_clusters" in man)
-           else {}),
-    })
-    return {"decision": decision, "n_new": n_new,
-            "n_replaced": n_replaced}
+    _write_manifest(spark, path, version, nxt)
+    out = {"decision": decision, "n_new": n_new, "n_replaced": n_replaced}
+    if drifted is not None:
+        out["drifted_dims"] = []
+    return out
 
 
-def maintain_ivf_bq_index(spark, path: str, new_emb: DataFrame,
-                          vectors: DataFrame, *, k: int = 10,
-                          nprobe: int | None = None,
-                          recall_floor_permille: int = 600,
-                          max_nprobe: int | None = None,
-                          sample_queries: int = 4,
-                          rebuild: bool = True,
-                          train_fraction: float = 1.0) -> dict:
-    """The IVF x BQ maintenance ladder: merge (``ivf_bq_index_upsert``),
-    measure MIN sampled recall vs brute force, decide as data — ``ok``
-    / ``bump_nprobe`` (pruning has the runtime knob; the bumped
-    setting commits to the manifest as ``default_nprobe``) /
-    ``bump_rerank`` (BQ-specific rung: the sign quantizer has NOTHING
-    to retrain, so a within-cluster resolution failure — sign bits
-    cannot rank near-identical-sign neighbors — is recoverable only by
-    a deeper exact re-rank, never by the rebuild below; the r13 tune
-    measurement behind the rung: sf1 bq goes 181 -> 1000 permille on
-    rerank depth alone at ~flat serve cost.  The doubled depth commits
-    as ``default_rerank_mult``, the same manifest-only shape as the
-    nprobe bump) / ``bump_nprobe_rerank`` (either knob alone missed the
-    floor but the combination clears it; both settings commit in ONE
-    manifest version) / ``rebuild`` (ONLY the coarse centroids
-    re-cluster — the partitioning-drift failure mode).  Same
-    primary-store contract as the other maintainers."""
+def maintain_index(spark, path: str, new_emb: DataFrame,
+                   vectors: DataFrame, *, k: int = 10,
+                   nprobe: int | None = None,
+                   recall_floor_permille: int = 600,
+                   max_nprobe: int | None = None,
+                   sample_queries: int = 4,
+                   rebuild: bool = True,
+                   train_fraction: float = 1.0,
+                   kind: str | None = None) -> dict:
+    """The closed maintenance loop: merge a batch (:func:`index_upsert`),
+    measure MIN sampled recall vs brute force over the primary store
+    (:func:`_batched_min_recall`, one batched serve + one batched exact
+    top-k per rung; min, because one drifted region is exactly what a
+    mean hides), and return the decision AS DATA.  Rungs by kind:
+
+    - ``"ok"`` — min sampled recall >= the floor.
+    - ``"bump_nprobe"`` (IVF) — a doubled probe depth (capped at the
+      cluster count / ``max_nprobe``) clears the floor; committed as the
+      manifest's ``default_nprobe``, which every later serve resolves.
+    - ``"bump_rerank"`` / ``"bump_nprobe_rerank"`` (a codec with nothing
+      to retrain: bq) — a doubled exact-rerank depth, alone or with the
+      bumped probe depth, clears the floor; committed in ONE manifest
+      version (a rebuild cannot raise sign-bit resolution, so it must
+      not shadow a recoverable operating point).
+    - ``"rebuild"`` — every cheaper rung missed, OR the upsert refused
+      the batch on quantizer drift: with ``rebuild=True`` the index
+      retrains over ``vectors`` at its geometry (PQ escalates ``ksub``;
+      attrs self-carry, :func:`_attrs_self_carry`) and recall
+      re-measures.
+
+    CONTRACT: ``vectors`` must already contain the batch (the probe's
+    ground truth; a rebuild retrains over it alone) — violations raise
+    before anything is written.  Flat sq8 (its upsert screens drift) and
+    flat bq (nothing trains) have no ladder and raise ValueError."""
+    man = _index_manifest(spark, path)
+    refused = _wrong_kind(man, kind)
+    if refused:
+        return refused
+    spec = _kind_of(man, path)
+    if not spec.maintainable:
+        raise ValueError(
+            f"vector index {path} is kind={spec.name!r}, which has no "
+            f"maintenance ladder")
     n_missing = (new_emb.select("vec_id")
                  .join(vectors.select("vec_id"), "vec_id", "left_anti")
                  .count())
     if n_missing:
         raise ValueError(
-            f"maintain_ivf_bq_index: {n_missing} batch vec_ids are "
+            f"maintain_{spec.name}_index: {n_missing} batch vec_ids are "
             f"absent from `vectors` — pass the POST-merge primary "
             f"store (the probe and any rebuild read it as ground "
             f"truth)")
-    st = dict(ivf_bq_index_upsert(spark, path, new_emb))
-    if st["decision"] == "wrong_kind":
-        return st
+    st = dict(index_upsert(spark, path, new_emb))
     man = _index_manifest(spark, path)
-    nprobe = _resolve_nprobe(man, nprobe)
-    n_clusters = spark.read.parquet(
-        f"{path}/{man['centroids']}").count()
-    cap = min(max_nprobe or n_clusters, n_clusters)
-    queries = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in new_emb.select("vec_id", "embedding")
-        .orderBy("vec_id").limit(sample_queries).collect()
-    ]
-    out = {**st, "n_queries": len(queries), "nprobe": nprobe,
-           "recall_floor_permille": recall_floor_permille}
+    queries = _sample_queries(new_emb, sample_queries)
+    out = {**st, "n_queries": len(queries)}
+    if spec.ivf:
+        nprobe = _resolve_nprobe(man, nprobe)
+        n_clusters = spark.read.parquet(
+            f"{path}/{man['centroids']}").count()
+        cap = min(max_nprobe or n_clusters, n_clusters)
+        out["nprobe"] = nprobe
+    out["recall_floor_permille"] = recall_floor_permille
 
-    def _min_recall(np_: int, rm: int | None = None) -> int:
+    def _min_recall(np_: int | None, rm: int | None = None) -> int:
         return _batched_min_recall(
             spark, queries, vectors, k,
-            lambda qdf: ivf_bq_index_topk_batch(
+            lambda qdf: index_topk_batch(
                 spark, path, qdf, vectors, k=k, nprobe=np_,
                 rerank_mult=rm))
 
+    def _rebuild_and_remeasure():
+        params = {"k": n_clusters} if spec.ivf else {}
+        write_index(vectors, path, spec.name, dim=int(man["dim"]),
+                    train_fraction=train_fraction,
+                    attrs=_attrs_self_carry(spark, path, man, new_emb),
+                    **params, **spec.codec.rebuild_params(man, out))
+        if queries:
+            out["recall_after_rebuild_permille"] = _min_recall(nprobe)
+
+    if st["decision"] == "rebuild":            # quantizer drift refusal
+        if rebuild:
+            _rebuild_and_remeasure()
+        return out
     if not queries:
         out.update(decision="ok", recall_permille=None)
         return out
+    floor = recall_floor_permille
     r0 = _min_recall(nprobe)
     out["recall_permille"] = r0
-    if r0 >= recall_floor_permille:
+    if r0 >= floor:
         out["decision"] = "ok"
         return out
-    bumped = min(max(nprobe * 2, nprobe + 1), cap)
-    if bumped > nprobe:
+    bumped = min(max(nprobe * 2, nprobe + 1), cap) if spec.ivf else None
+    if spec.ivf and bumped > nprobe:
         r1 = _min_recall(bumped)
         out["recall_after_bump_permille"] = r1
-        if r1 >= recall_floor_permille:
+        if r1 >= floor:
             out.update(decision="bump_nprobe", nprobe=bumped)
-            out["nprobe_version"] = _persist_nprobe(spark, path,
-                                                    bumped)
+            out["nprobe_version"] = _persist_operating_point(
+                spark, path, nprobe=bumped)
             return out
-    # the bump_rerank rung (see the docstring): probing deeper failed
-    # or was already maxed, and BQ's rebuild cannot raise code
-    # resolution — try doubling the exact-rerank depth first
-    cur_rm = _resolve_rerank(man, None)
-    r2 = _min_recall(nprobe, rm=cur_rm * 2)
-    out["recall_after_rerank_permille"] = r2
-    if r2 >= recall_floor_permille:
-        out.update(decision="bump_rerank", rerank_mult=cur_rm * 2)
-        out["rerank_version"] = _persist_operating_point(
-            spark, path, rerank_mult=cur_rm * 2)
-        return out
-    # combined rung: either knob alone failed, but (bumped nprobe,
-    # doubled rerank) may clear the floor — a rebuild for BQ cannot
-    # raise code resolution (signs never retrain), so it must not
-    # shadow a recoverable combination; both settings commit together
-    if bumped > nprobe:
-        r3 = _min_recall(bumped, rm=cur_rm * 2)
-        out["recall_after_bump_rerank_permille"] = r3
-        if r3 >= recall_floor_permille:
-            out.update(decision="bump_nprobe_rerank", nprobe=bumped,
-                       rerank_mult=cur_rm * 2)
-            out["operating_point_version"] = _persist_operating_point(
-                spark, path, nprobe=bumped, rerank_mult=cur_rm * 2)
+    if not spec.codec.retrainable:
+        # probing deeper failed or was maxed, and a rebuild cannot raise
+        # code resolution — try doubling the exact-rerank depth (the r13
+        # measurement: sf1 bq goes 181 -> 1000 permille on rerank depth
+        # alone at ~flat serve cost), then the combination
+        rm2 = _resolve_rerank(man, None) * 2
+        r2 = _min_recall(nprobe, rm=rm2)
+        out["recall_after_rerank_permille"] = r2
+        if r2 >= floor:
+            out.update(decision="bump_rerank", rerank_mult=rm2)
+            out["rerank_version"] = _persist_operating_point(
+                spark, path, rerank_mult=rm2)
             return out
+        if spec.ivf and bumped > nprobe:
+            r3 = _min_recall(bumped, rm=rm2)
+            out["recall_after_bump_rerank_permille"] = r3
+            if r3 >= floor:
+                out.update(decision="bump_nprobe_rerank", nprobe=bumped,
+                           rerank_mult=rm2)
+                out["operating_point_version"] = \
+                    _persist_operating_point(spark, path, nprobe=bumped,
+                                             rerank_mult=rm2)
+                return out
     out["decision"] = "rebuild"
     if rebuild:
-        write_ivf_bq_index(vectors, path, k=n_clusters,
-                           dim=int(man["dim"]),
-                           train_fraction=train_fraction,
-                           attrs=_attrs_self_carry(
-                               spark, path, man, new_emb))
-        out["recall_after_rebuild_permille"] = _min_recall(nprobe)
+        _rebuild_and_remeasure()
     return out
+
+
+# The per-kind public names: the kind pinned on the generic core.
+def write_sq8_index(emb, path, **kw):
+    return write_index(emb, path, "sq8", **kw)
+
+
+def write_ivf_sq8_index(emb, path, k=None, **kw):
+    return write_index(emb, path, "ivf_sq8", k=k, **kw)
+
+
+def write_pq_index(emb, path, m=PQ_M, k=PQ_INDEX_KSUB, **kw):
+    return write_index(emb, path, "pq", m=m, ksub=k, **kw)
+
+
+def write_ivf_pq_index(emb, path, k=None, **kw):
+    return write_index(emb, path, "ivf_pq", k=k, **kw)
+
+
+def write_bq_index(emb, path, **kw):
+    return write_index(emb, path, "bq", **kw)
+
+
+def write_ivf_bq_index(emb, path, k=None, **kw):
+    return write_index(emb, path, "ivf_bq", k=k, **kw)
+
+
+def sq8_index_topk(*a, **kw):
+    return index_topk(*a, kind="sq8", **kw)
+
+
+def ivf_sq8_index_topk(*a, **kw):
+    return index_topk(*a, kind="ivf_sq8", **kw)
+
+
+def pq_index_topk(*a, **kw):
+    return index_topk(*a, kind="pq", **kw)
+
+
+def ivf_pq_index_topk(*a, **kw):
+    return index_topk(*a, kind="ivf_pq", **kw)
+
+
+def bq_index_topk(*a, **kw):
+    return index_topk(*a, kind="bq", **kw)
+
+
+def ivf_bq_index_topk(*a, **kw):
+    return index_topk(*a, kind="ivf_bq", **kw)
+
+
+def sq8_index_topk_batch(*a, **kw):
+    return index_topk_batch(*a, kind="sq8", **kw)
+
+
+def ivf_sq8_index_topk_batch(*a, **kw):
+    return index_topk_batch(*a, kind="ivf_sq8", **kw)
+
+
+def pq_index_topk_batch(*a, **kw):
+    return index_topk_batch(*a, kind="pq", **kw)
+
+
+def ivf_pq_index_topk_batch(*a, **kw):
+    return index_topk_batch(*a, kind="ivf_pq", **kw)
+
+
+def bq_index_topk_batch(*a, **kw):
+    return index_topk_batch(*a, kind="bq", **kw)
+
+
+def ivf_bq_index_topk_batch(*a, **kw):
+    return index_topk_batch(*a, kind="ivf_bq", **kw)
+
+
+def sq8_index_upsert(*a, **kw):
+    return index_upsert(*a, kind="sq8", **kw)
+
+
+def ivf_sq8_index_upsert(*a, **kw):
+    return index_upsert(*a, kind="ivf_sq8", **kw)
+
+
+def pq_index_upsert(*a, **kw):
+    return index_upsert(*a, kind="pq", **kw)
+
+
+def ivf_pq_index_upsert(*a, **kw):
+    return index_upsert(*a, kind="ivf_pq", **kw)
+
+
+def bq_index_upsert(*a, **kw):
+    return index_upsert(*a, kind="bq", **kw)
+
+
+def ivf_bq_index_upsert(*a, **kw):
+    return index_upsert(*a, kind="ivf_bq", **kw)
+
+
+def maintain_pq_index(*a, **kw):
+    return maintain_index(*a, kind="pq", **kw)
+
+
+def maintain_ivf_sq8_index(*a, **kw):
+    return maintain_index(*a, kind="ivf_sq8", **kw)
+
+
+def maintain_ivf_pq_index(*a, **kw):
+    return maintain_index(*a, kind="ivf_pq", **kw)
+
+
+def maintain_ivf_bq_index(*a, **kw):
+    return maintain_index(*a, kind="ivf_bq", **kw)

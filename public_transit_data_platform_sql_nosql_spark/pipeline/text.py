@@ -401,7 +401,7 @@ def _where_doc_ids(spark, index_path: str, where: str) -> DataFrame:
     silently-dropped predicate would serve unfiltered (cross-tenant!)
     rows — the CLI's ``_refuse_where_without_attrs`` contract, at the
     library boundary.  ``where`` is caller-trusted SQL (the
-    :func:`~..similarity.sq8_index_topk` trust-boundary note)."""
+    :func:`~..similarity.index_topk` trust-boundary note)."""
     from .similarity import _index_manifest, _manifest_codes
 
     m = _index_manifest(spark, index_path)
@@ -425,7 +425,7 @@ def hybrid_index_search(spark, docs: DataFrame, index_path: str,
     """Hybrid retrieval with the dense arm served from a STORED vector
     index — the corpus-scale form of :func:`hybrid_search`: BM25 ranks
     its top-``pool`` lexically, the index's kind-dispatched serving
-    path (any of the five layouts, resolved from the manifest) ranks
+    path (any of the six layouts, resolved from the manifest) ranks
     its top-``pool`` semantically with the exact-rerank contract, and
     the two bounded lists fuse by the same integer RRF.  ``allowed``
     restricts BOTH arms (semi-join on the BM25 side, the filtered
@@ -439,15 +439,7 @@ def hybrid_index_search(spark, docs: DataFrame, index_path: str,
     Scale: the BM25 arm is corpus-scan + TakeOrdered; the dense arm
     reads nprobe partitions of byte codes (IVF kinds) or the flat code
     column.  The fusion never touches the corpus again."""
-    from .similarity import (
-        _index_manifest,
-        bq_index_topk,
-        ivf_bq_index_topk,
-        ivf_pq_index_topk,
-        ivf_sq8_index_topk,
-        pq_index_topk,
-        sq8_index_topk,
-    )
+    from .similarity import index_topk
 
     bm = search_bm25(docs, query_terms, top_k=pool)
     if allowed is not None:
@@ -462,28 +454,9 @@ def hybrid_index_search(spark, docs: DataFrame, index_path: str,
     bm_ranked = bounded_rank(
         bm, [-F.col("score_micro"), F.col("doc_id")], "bm25_rank"
     ).select("doc_id", "bm25_rank")
-    kind = _index_manifest(spark, index_path).get("kind", "sq8")
-    servers = {
-        "sq8": lambda: sq8_index_topk(
-            spark, index_path, query_vec, vectors, k=pool,
-            allowed=allowed, where=where),
-        "pq": lambda: pq_index_topk(
-            spark, index_path, query_vec, vectors, k=pool,
-            allowed=allowed, where=where),
-        "bq": lambda: bq_index_topk(
-            spark, index_path, query_vec, vectors, k=pool,
-            allowed=allowed, where=where),
-        "ivf_sq8": lambda: ivf_sq8_index_topk(
-            spark, index_path, query_vec, vectors, k=pool,
-            nprobe=nprobe, allowed=allowed, where=where),
-        "ivf_pq": lambda: ivf_pq_index_topk(
-            spark, index_path, query_vec, vectors, k=pool,
-            nprobe=nprobe, allowed=allowed, where=where),
-        "ivf_bq": lambda: ivf_bq_index_topk(
-            spark, index_path, query_vec, vectors, k=pool,
-            nprobe=nprobe, allowed=allowed, where=where),
-    }
-    dense_ranked = servers[kind]().select(
+    dense_ranked = index_topk(
+        spark, index_path, query_vec, vectors, k=pool, nprobe=nprobe,
+        allowed=allowed, where=where).select(
         F.col("neighbor_id").alias("doc_id"),
         F.col("rank").alias("dense_rank"))
     return _rrf_fuse(bm_ranked, dense_ranked, k, rrf_k)
@@ -514,8 +487,9 @@ def hybrid_index_search_batch(spark, docs: DataFrame, index_path: str,
     numbers), and only then does the bounded (query_id, token) table
     fan scores out to the queries that asked — per-query top-``pool``
     via bounded windows.  The dense arm is the index's kind-dispatched
-    ``*_index_topk_batch`` path (any of the six layouts, one probe
-    resolution for the batch); fusion is the per-query integer RRF.
+    :func:`~.similarity.index_topk_batch` (any of the six layouts, one
+    probe resolution for the batch); fusion is the per-query integer
+    RRF.
 
     ``allowed`` restricts BOTH arms, as in the single path: the BM25
     pool semi-joins it AFTER the top-``pool`` cut (single-path parity
@@ -525,15 +499,7 @@ def hybrid_index_search_batch(spark, docs: DataFrame, index_path: str,
     columns) restricts both arms the same way — pushed into the dense
     codes scan, semi-joined into the BM25 pool via
     :func:`_where_doc_ids`; requires an attrs-bearing index."""
-    from .similarity import (
-        _index_manifest,
-        bq_index_topk_batch,
-        ivf_bq_index_topk_batch,
-        ivf_pq_index_topk_batch,
-        ivf_sq8_index_topk_batch,
-        pq_index_topk_batch,
-        sq8_index_topk_batch,
-    )
+    from .similarity import index_topk_batch
 
     n_bad = queries.filter(
         F.col("terms").isNull() | (F.size("terms") == 0)).count()
@@ -633,29 +599,10 @@ def hybrid_index_search_batch(spark, docs: DataFrame, index_path: str,
         pool_rows.withColumn("bm25_rank", F.row_number().over(wq))
         .select("query_id", "doc_id", "bm25_rank")
     )
-    kind = _index_manifest(spark, index_path).get("kind", "sq8")
-    q_emb = queries.select("query_id", "embedding")
-    batchers = {
-        "sq8": lambda: sq8_index_topk_batch(
-            spark, index_path, q_emb, vectors, k=pool,
-            allowed=allowed, where=where),
-        "pq": lambda: pq_index_topk_batch(
-            spark, index_path, q_emb, vectors, k=pool,
-            allowed=allowed, where=where),
-        "bq": lambda: bq_index_topk_batch(
-            spark, index_path, q_emb, vectors, k=pool,
-            allowed=allowed, where=where),
-        "ivf_sq8": lambda: ivf_sq8_index_topk_batch(
-            spark, index_path, q_emb, vectors, k=pool,
-            nprobe=nprobe, allowed=allowed, where=where),
-        "ivf_pq": lambda: ivf_pq_index_topk_batch(
-            spark, index_path, q_emb, vectors, k=pool,
-            nprobe=nprobe, allowed=allowed, where=where),
-        "ivf_bq": lambda: ivf_bq_index_topk_batch(
-            spark, index_path, q_emb, vectors, k=pool,
-            nprobe=nprobe, allowed=allowed, where=where),
-    }
-    dense_ranked = batchers[kind]().select(
+    dense_ranked = index_topk_batch(
+        spark, index_path, queries.select("query_id", "embedding"),
+        vectors, k=pool, nprobe=nprobe, allowed=allowed,
+        where=where).select(
         "query_id", F.col("neighbor_id").alias("doc_id"),
         F.col("rank").alias("dense_rank"))
     rrf = (

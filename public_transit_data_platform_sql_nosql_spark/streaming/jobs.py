@@ -625,7 +625,7 @@ def stream_vector_index_upsert(emb_stream: DataFrame, index_path: str,
     ``write_bq_index`` or ``write_ivf_bq_index``
     — the layout kind AND dim are read from the index's own manifest,
     never trusted from the caller) from a live feed — the streaming
-    twin of the ``*_index_upsert`` operators, closing the
+    twin of :func:`~..pipeline.similarity.index_upsert`, closing the
     vector-serving loop the way stream_incremental_dedup closes the
     dedup one.
 
@@ -680,14 +680,10 @@ def stream_vector_index_upsert(emb_stream: DataFrame, index_path: str,
     """
     from ..jobs.versioned import commit_version
     from ..pipeline.similarity import (
+        INDEX_KINDS,
         SQ_DRIFT_TOL,
         _index_manifest,
-        bq_index_upsert,
-        ivf_bq_index_upsert,
-        ivf_pq_index_upsert,
-        ivf_sq8_index_upsert,
-        pq_index_upsert,
-        sq8_index_upsert,
+        index_upsert,
     )
 
     t = SQ_DRIFT_TOL if tol is None else tol
@@ -714,19 +710,7 @@ def stream_vector_index_upsert(emb_stream: DataFrame, index_path: str,
         if not batch.head(1):
             return
         kind = _index_manifest(spark, index_path).get("kind", "sq8")
-        if kind == "pq":
-            st = pq_index_upsert(spark, index_path, batch)
-        elif kind == "bq":
-            st = bq_index_upsert(spark, index_path, batch)
-        elif kind == "ivf_bq":
-            st = ivf_bq_index_upsert(spark, index_path, batch)
-        elif kind == "ivf_pq":
-            st = ivf_pq_index_upsert(spark, index_path, batch)
-        elif kind == "ivf_sq8":
-            st = ivf_sq8_index_upsert(spark, index_path, batch, tol=t)
-        else:
-            st = sq8_index_upsert(spark, index_path, batch,
-                                  dim=dim, tol=t)
+        st = index_upsert(spark, index_path, batch, dim=dim, tol=t)
         n_drifted = len(st.get("drifted_dims", []))
         rows = [(int(batch_id), st["decision"], int(st.get("n_new", 0)),
                  int(st.get("n_replaced", 0)), n_drifted)]
@@ -753,7 +737,7 @@ def stream_vector_index_upsert(emb_stream: DataFrame, index_path: str,
         # imbalance permille) pointing the operator at
         # rebalance_index's O(hot cluster) split
         if rebalance_hint_permille is not None and \
-                kind.startswith("ivf_"):
+                INDEX_KINDS[kind].ivf:
             from ..pipeline.similarity import _manifest_codes
 
             m_now = _index_manifest(spark, index_path)
@@ -820,8 +804,8 @@ def stream_vector_search(query_stream: DataFrame, index_path: str,
     cos_sim)`` — atomically published per batch, so a results reader
     never sees a half-served batch.
 
-    Kind-dispatched from the index manifest (ivf_sq8/ivf_pq probe +
-    prune; sq8/pq scan their codes once per batch).  Duplicate query_ids
+    Kind-dispatched from the index manifest (the IVF kinds probe +
+    prune; the flat kinds scan their codes once per batch).  Duplicate query_ids
     within a batch collapse first (replay handling, as in the upsert
     stream).  Because the manifest is re-resolved per batch, a
     concurrent upsert/compaction/rebuild is picked up at the next
@@ -847,15 +831,7 @@ def stream_vector_search(query_stream: DataFrame, index_path: str,
     from pyspark.sql import functions as F
 
     from ..jobs.versioned import commit_version
-    from ..pipeline.similarity import (
-        _index_manifest,
-        bq_index_topk_batch,
-        ivf_bq_index_topk_batch,
-        ivf_pq_index_topk_batch,
-        ivf_sq8_index_topk_batch,
-        pq_index_topk_batch,
-        sq8_index_topk_batch,
-    )
+    from ..pipeline.similarity import index_topk_batch
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -871,35 +847,12 @@ def stream_vector_search(query_stream: DataFrame, index_path: str,
             return
         allowed = (spark.read.parquet(allowed_path).select("vec_id")
                    if allowed_path is not None else None)
-        kind = _index_manifest(spark, index_path).get("kind", "sq8")
-        if kind == "ivf_sq8":
-            # `where` = stored-attribute pushdown (every kind since
-            # r12): the predicate lands on every micro-batch's codes
-            # scan as a parquet filter; the IVF kinds add adaptive
-            # probe widening under it
-            res = ivf_sq8_index_topk_batch(
-                spark, index_path, queries, vectors, k=k,
-                nprobe=nprobe, allowed=allowed, where=where)
-        elif kind == "ivf_pq":
-            res = ivf_pq_index_topk_batch(
-                spark, index_path, queries, vectors, k=k,
-                nprobe=nprobe, allowed=allowed, where=where)
-        elif kind == "pq":
-            res = pq_index_topk_batch(
-                spark, index_path, queries, vectors, k=k,
-                allowed=allowed, where=where)
-        elif kind == "bq":
-            res = bq_index_topk_batch(
-                spark, index_path, queries, vectors, k=k,
-                allowed=allowed, where=where)
-        elif kind == "ivf_bq":
-            res = ivf_bq_index_topk_batch(
-                spark, index_path, queries, vectors, k=k,
-                nprobe=nprobe, allowed=allowed, where=where)
-        else:
-            res = sq8_index_topk_batch(
-                spark, index_path, queries, vectors, k=k,
-                allowed=allowed, where=where)
+        # `where` = stored-attribute pushdown: the predicate lands on
+        # every micro-batch's codes scan as a parquet filter; the IVF
+        # kinds add adaptive probe widening under it
+        res = index_topk_batch(
+            spark, index_path, queries, vectors, k=k,
+            nprobe=nprobe, allowed=allowed, where=where)
         commit_version(
             res.select(F.lit(int(batch_id)).alias("batch_id"),
                        "query_id", "rank", "neighbor_id", "cos_sim"),

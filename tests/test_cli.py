@@ -8,11 +8,20 @@ import json
 
 import pytest
 
+import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.__main__ import (
     build_serve_app,
     main,
 )
+from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
+    _index_manifest,
+)
 from tests.conftest import SF_DIR
+
+
+@pytest.fixture(scope="module")
+def emb(spark):
+    return E._emb(spark, SF_DIR)
 
 
 def test_cli_denormalize_and_compact(spark, tmp_path, capsys):
@@ -406,6 +415,260 @@ def test_cli_vector_index_maintain_pq(spark, tmp_path, capsys):
     capsys.readouterr()
     assert main(["vector-index", "maintain", "--path", sq8,
                  "--batch", batch_path, "--emb", merged_path]) == 2
+
+
+def test_cli_upsert_dispatches_ivf_sq8(spark, emb, tmp_path, capsys):
+    """The CLI ops loop is kind-true end to end: upsert into an
+    ivf_sq8 index routes to the partition-aware maintainer, keeps the
+    manifest kind, and the upserted vector serves through the CLI
+    query path."""
+    from pyspark.sql import functions as F
+
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+
+    emb_path = str(tmp_path / "emb")
+    emb.select("vec_id", "embedding").write.parquet(emb_path)
+    idx = str(tmp_path / "ivf")
+    assert main(["vector-index", "build", "--path", idx,
+                 "--emb", emb_path, "--ivf"]) == 0
+    capsys.readouterr()
+
+    batch_path = str(tmp_path / "batch")
+    (emb.limit(4)
+     .select((F.col("vec_id") + 10_000).alias("vec_id"), "embedding")
+     .write.parquet(batch_path))
+    assert main(["vector-index", "upsert", "--path", idx,
+                 "--batch", batch_path]) == 0
+    up = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert up["kind"] == "ivf_sq8"
+    assert up["decision"] == "appended" and up["n_new"] == 4
+
+    m = _index_manifest(spark, idx)
+    assert m["kind"] == "ivf_sq8" and "centroids" in m
+
+    assert main(["vector-index", "query", "--path", idx,
+                 "--emb", emb_path, "--vec-id", "0", "--k", "3"]) == 0
+    q = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert q["kind"] == "ivf_sq8" and len(q["topk"]) == 3
+
+
+def test_cli_maintain_dispatches_ivf_sq8(spark, emb, tmp_path, capsys):
+    from pyspark.sql import functions as F
+
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+
+    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
+    emb_path = str(tmp_path / "emb")
+    base.write.parquet(emb_path)
+    idx = str(tmp_path / "ivf")
+    assert main(["vector-index", "build", "--path", idx,
+                 "--emb", emb_path, "--ivf"]) == 0
+    capsys.readouterr()
+
+    batch_path = str(tmp_path / "batch")
+    (base.limit(3)
+     .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
+     .write.parquet(batch_path))
+    merged_path = str(tmp_path / "merged")
+    base.unionByName(spark.read.parquet(batch_path)) \
+        .write.parquet(merged_path)
+    rc = main(["vector-index", "maintain", "--path", idx,
+               "--batch", batch_path, "--emb", merged_path,
+               "--k", "5", "--recall-floor", "400"])
+    st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert st["kind"] == "ivf_sq8"
+    assert (rc == 0) == (st["decision"] in ("ok", "bump_nprobe"))
+    assert st["decision"] in ("ok", "bump_nprobe")
+
+
+def test_cli_query_batch(spark, emb, tmp_path, capsys):
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+
+    emb_path = str(tmp_path / "emb")
+    emb.select("vec_id", "embedding").write.parquet(emb_path)
+    idx = str(tmp_path / "pq")
+    assert main(["vector-index", "build", "--path", idx,
+                 "--emb", emb_path, "--pq"]) == 0
+    capsys.readouterr()
+    qpath = str(tmp_path / "queries")
+    (emb.filter("vec_id < 3")
+     .select(emb.vec_id.alias("query_id"), "embedding")
+     .write.parquet(qpath))
+    out = str(tmp_path / "results")
+    assert main(["vector-index", "query-batch", "--path", idx,
+                 "--emb", emb_path, "--queries", qpath,
+                 "--out", out, "--k", "5"]) == 0
+    st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert st["kind"] == "pq" and st["n_queries"] == 3
+    assert st["n_results"] == 15
+    res = spark.read.parquet(out)
+    assert res.count() == 15
+    assert set(res.columns) == {"query_id", "rank", "neighbor_id",
+                                "cos_sim"}
+
+
+def test_cli_vector_pipeline_end_to_end(spark, tmp_path, capsys):
+    """The one-command serving demo: JSONL in (with a corrupt line and
+    an exact duplicate) -> quarantine + dedup + hash embeddings +
+    ivf_sq8 index + batch ANN results on disk; every query's rank-1
+    neighbor is itself at cos 1.0."""
+    import json as _json
+
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+
+    src = tmp_path / "in.jsonl"
+    lines = [
+        _json.dumps({"doc_id": i, "text": t, "lang": "en",
+                     "source": "s0", "n_chars": len(t)})
+        for i, t in enumerate(
+            ["spark batch window merge", "filter scan join order",
+             "vector table stream hash", "group agg sort key value",
+             "filter scan join order",          # exact dup of doc 1
+             "broadcast shuffle skew plan"])
+    ]
+    lines.insert(3, "{not json at all")          # quarantined
+    src.write_text("\n".join(lines) + "\n")
+
+    wd = str(tmp_path / "wd")
+    # --nprobe 8 probes every cluster: at 5 docs each k-means cluster
+    # holds ~1 vector, so the default nprobe=2 would (correctly) serve
+    # fewer than k
+    assert main(["vector-pipeline", "--docs", str(src),
+                 "--workdir", wd, "--k", "3", "--n-queries", "2",
+                 "--nprobe", "8"]) == 0
+    st = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert st["n_quarantined"] == 1
+    assert st["n_docs"] == 5                     # 6 clean - 1 exact dup
+    assert st["n_queries"] == 2 and st["n_results"] == 6
+
+    docs = spark.read.parquet(f"{wd}/docs")
+    assert docs.count() == 5
+    assert docs.filter("doc_id = 4").count() == 0    # the dup dropped
+    res = spark.read.parquet(f"{wd}/results").collect()
+    by_q = {}
+    for r in res:
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert set(by_q) == {0, 1}
+    for qid, rows in by_q.items():
+        top = min(rows, key=lambda r: r["rank"])
+        assert top["neighbor_id"] == qid and top["cos_sim"] == 1.0
+
+
+def test_cli_vector_pipeline_tune_step(spark, tmp_path, capsys):
+    """--target-recall closes the loop inside the one-command demo:
+    the build is followed by tune_index, the committed default_nprobe
+    serves the results pass (no explicit --nprobe), and the status
+    line carries the tune decision."""
+    import json as _json
+
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+    from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
+        _index_manifest,
+    )
+
+    src = tmp_path / "in.jsonl"
+    src.write_text("\n".join(
+        _json.dumps({"doc_id": i, "text": t, "lang": "en",
+                     "source": "s0", "n_chars": len(t)})
+        for i, t in enumerate(
+            ["spark batch window merge", "filter scan join order",
+             "vector table stream hash", "group agg sort key value",
+             "broadcast shuffle skew plan"])) + "\n")
+
+    wd = str(tmp_path / "wd")
+    # target 1 permille is met at the smallest measured depth, so the
+    # tune outcome is deterministic: nprobe=1 commits (or noop if 1
+    # were already the default — it is not; DEFAULT_NPROBE is 2)
+    assert main(["vector-pipeline", "--docs", str(src),
+                 "--workdir", wd, "--k", "2", "--n-queries", "1",
+                 "--target-recall", "1"]) == 0
+    st = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert st["tune"]["decision"] == "tuned"
+    assert st["tune"]["nprobe"] == 1
+    assert "curve" not in st["tune"]            # status line stays slim
+    assert _index_manifest(spark, f"{wd}/index")["default_nprobe"] == 1
+    assert st["n_results"] >= 1
+
+
+def _write_jsonl(path, n=40):
+    with open(path, "w") as f:
+        for i in range(n):
+            f.write(json.dumps({
+                "doc_id": i, "text": f"transit doc {i} alpha beta "
+                                     f"{'gamma ' * (i % 5)}",
+                "lang": "en", "source": "t", "n_chars": 20}) + "\n")
+
+
+@pytest.mark.parametrize("kind", ["bq", "ivf_pq"])
+def test_vector_pipeline_kind_switch(spark, tmp_path, capsys, kind):
+    from public_transit_data_platform_sql_nosql_spark.__main__ import main
+
+    docs = str(tmp_path / "docs.jsonl")
+    _write_jsonl(docs)
+    wd = str(tmp_path / f"wd_{kind}")
+    assert main(["vector-pipeline", "--docs", docs, "--workdir", wd,
+                 "--kind", kind, "--k", "3", "--n-queries", "2"]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["index_kind"] == kind
+    assert out["n_results"] == 6          # 2 queries x k=3
+    assert _index_manifest(spark, f"{wd}/index")["kind"] == kind
+    res = spark.read.parquet(f"{wd}/results")
+    assert res.columns == ["query_id", "rank", "neighbor_id",
+                           "cos_sim"]
+    # the self-query serves itself at rank 1
+    top = res.filter("rank = 1").collect()
+    assert all(r["query_id"] == r["neighbor_id"] and
+               r["cos_sim"] == 1.0 for r in top)
+
+
+def test_cli_maintain_bump_rerank_exits_zero(spark, tmp_path, capsys):
+    """A bump_rerank decision is a manifest-only commit of an operating
+    point that meets the floor — a successful recovery, exit 0 (only a
+    rebuild exits 3).  Corpus: one sign bucket Hamming cannot rank
+    (identical sign bits; vec 0's true neighbors carry the highest
+    ids), so probing is maxed at k=2 and only a deeper exact rerank
+    clears the floor."""
+    from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
+        BQ_RERANK_MULT,
+        write_ivf_bq_index,
+    )
+
+    def bucket(n, base, axes):
+        vals = ([0.9] + [0.1 + 0.0001 * j for j in range(1, n - 4)]
+                + [0.89, 0.88, 0.87, 0.86])
+        rows = []
+        for j, a in enumerate(vals):
+            v = [0.0] * 64
+            v[axes[0]], v[axes[1]] = 1.0, a
+            rows.append((base + j, v))
+        return spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>")
+
+    corpus = bucket(120, 0, (0, 1)).unionByName(bucket(24, 200, (2, 3)))
+    emb_path = str(tmp_path / "emb")
+    corpus.write.parquet(emb_path)
+    corpus = spark.read.parquet(emb_path)
+    batch_path = str(tmp_path / "batch")
+    corpus.orderBy("vec_id").limit(3).write.parquet(batch_path)
+    idx = str(tmp_path / "ivfbq")
+    write_ivf_bq_index(corpus, idx, k=2)
+    assert main(["vector-index", "maintain", "--path", idx,
+                 "--batch", batch_path, "--emb", emb_path,
+                 "--recall-floor", "950"]) == 0
+    st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert st["kind"] == "ivf_bq"
+    assert st["decision"] == "bump_rerank", st
+    assert st["rerank_mult"] == 2 * BQ_RERANK_MULT
 
 
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --

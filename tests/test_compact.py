@@ -4,12 +4,39 @@ no-op), and composes with the streaming incremental sink."""
 
 from __future__ import annotations
 
+import json
+
+import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.jobs.compact import (
     compact_parquet_dir,
     parquet_dir_stats,
 )
+from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
+    INDEX_KINDS,
+    _index_manifest,
+    compact_index,
+    index_topk,
+    index_upsert,
+    ivf_sq8_index_topk,
+    ivf_sq8_index_upsert,
+    read_index_codes,
+    write_index,
+    write_ivf_sq8_index,
+)
+from tests.conftest import SF_DIR
+
+
+@pytest.fixture(scope="module")
+def emb(spark):
+    return E._emb(spark, SF_DIR)
+
+
+def _qvec(emb, vid):
+    return [float(x)
+            for x in emb.filter(f"vec_id = {vid}").head()["embedding"]]
 
 
 def _fragmented_sink(spark, path: str, appends: int = 3,
@@ -201,9 +228,104 @@ def test_compact_preserves_stringy_partition_values(spark, tmp_path):
     assert spark.read.parquet(sink).count() == 1500
 
 
+def test_compact_index_folds_appended_dirs(spark, emb, tmp_path,
+                                           capsys):
+    """Append-fragmented indexes fold back to ONE codes dir with
+    identical content; ivf_sq8 keeps its cluster partitioning (and the
+    serving plan keeps pruning); vacuum then collects the old dirs."""
+    from pyspark.sql import functions as F
+
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+    from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
+        compact_index,
+    )
+    from public_transit_data_platform_sql_nosql_spark.plans import (
+        executed_plan,
+    )
+
+    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
+    path = str(tmp_path / "ivfsq8")
+    write_ivf_sq8_index(base, path)
+    for lo in (0, 3):   # two appended batches -> three dirs
+        batch = emb.filter(f"vec_id >= {lo + 10} AND vec_id < {lo + 13}") \
+            .select((F.col("vec_id") + 50_000 + lo * 1000).alias("vec_id"),
+                    "embedding")
+        assert ivf_sq8_index_upsert(spark, path, batch)["decision"] \
+            == "appended"
+    m0 = _index_manifest(spark, path)
+    assert len(m0["codes"]) == 3
+    before = sorted(map(tuple, read_index_codes(spark, path)
+                        .select("vec_id", "cluster_id", "codes")
+                        .collect()))
+
+    st = compact_index(spark, path)
+    assert st == {"decision": "compacted", "dirs_before": 3,
+                  "version": st["version"]}
+    m1 = _index_manifest(spark, path)
+    assert m1["kind"] == "ivf_sq8" and len(m1["codes"]) == 1
+    assert m1["centroids"] == m0["centroids"]
+    after = sorted(map(tuple, read_index_codes(spark, path)
+                       .select("vec_id", "cluster_id", "codes")
+                       .collect()))
+    assert after == before
+    qvec = _qvec(emb, 10)
+    plan = executed_plan(
+        ivf_sq8_index_topk(spark, path, qvec, emb, k=3, nprobe=1))
+    assert "PartitionFilters" in plan
+
+    # idempotent: a single-dir manifest is a noop
+    assert compact_index(spark, path)["decision"] == "noop"
+
+    # CLI wiring + vacuum collects the superseded dirs
+    assert main(["vector-index", "compact", "--path", path]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["decision"] == "noop"
+    assert main(["vector-index", "vacuum", "--path", path,
+                 "--keep-last", "1"]) == 0
+    vac = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert vac["removed_dirs"]            # the folded-away append dirs
+    assert sorted(map(tuple, read_index_codes(spark, path)
+                      .select("vec_id", "cluster_id", "codes")
+                      .collect())) == before
+
+
+@pytest.mark.parametrize(
+    "kind", sorted(k for k, s in INDEX_KINDS.items() if not s.ivf))
+def test_compact_flat_kind(spark, emb, tmp_path, kind):
+    """compact_index's flat branch: an append-fragmented flat index
+    folds to ONE dir with identical codes, keeps its trained
+    artifacts, stays servable, and a single-dir manifest is a noop."""
+    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
+    path = str(tmp_path / kind)
+    write_index(base, path, kind)
+    for i in range(2):
+        batch = emb.filter(f"vec_id >= {10 + 3 * i} "
+                           f"AND vec_id < {13 + 3 * i}").select(
+            (F.col("vec_id") + 50_000 + i * 1000).alias("vec_id"),
+            "embedding")
+        assert index_upsert(spark, path, batch)["decision"] == "appended"
+    m0 = _index_manifest(spark, path)
+    assert m0["kind"] == kind and len(m0["codes"]) == 3
+    before = sorted(map(tuple, read_index_codes(spark, path).collect()))
+
+    st = compact_index(spark, path)
+    assert st["decision"] == "compacted" and st["dirs_before"] == 3
+    m1 = _index_manifest(spark, path)
+    assert m1["kind"] == kind and len(m1["codes"]) == 1
+    for art in INDEX_KINDS[kind].codec.artifacts:
+        assert m1[art] == m0[art]
+    after = sorted(map(tuple, read_index_codes(spark, path).collect()))
+    assert after == before
+    assert compact_index(spark, path)["decision"] == "noop"
+    top = sorted(index_topk(spark, path, _qvec(emb, 10), base,
+                            k=3).collect(), key=lambda r: r["rank"])
+    assert len(top) == 3 and top[0]["cos_sim"] == 1.0
+
+
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --
 # excluded from the driver's default gate; run with -m slow after
 # touching this family (see the verify skill).
-import pytest  # noqa: E402
 
 pytestmark = pytest.mark.slow

@@ -127,7 +127,7 @@ def test_maintain_ivf_bq_combined_rung_decision(spark, tmp_path,
         f"{path}/{man['centroids']}").count()
     assert n_clusters >= 2                   # bump headroom exists
 
-    real = sim.ivf_bq_index_topk_batch
+    real = sim.index_topk_batch
     cur_rm = sim._resolve_rerank(man, None)
 
     def gated(spark_, path_, qdf, vectors, k=10, nprobe=None,
@@ -147,7 +147,7 @@ def test_maintain_ivf_bq_combined_rung_decision(spark, tmp_path,
                 (F.col("id") + 1_000_000).alias("neighbor_id"),
                 F.lit(0.0).alias("cos_sim")))
 
-    monkeypatch.setattr(sim, "ivf_bq_index_topk_batch", gated)
+    monkeypatch.setattr(sim, "index_topk_batch", gated)
     batch = corpus.orderBy("vec_id").limit(2)
     out = sim.maintain_ivf_bq_index(spark, path, batch, corpus,
                                     nprobe=1,

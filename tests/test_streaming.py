@@ -3,8 +3,24 @@ with its batch twin (same window math, same measures)."""
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
+from public_transit_data_platform_sql_nosql_spark.jobs.versioned import (
+    list_versions,
+    read_version,
+)
+from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
+    _index_manifest,
+    compact_index,
+    ivf_sq8_index_topk,
+    ivf_sq8_index_upsert,
+    read_index_codes,
+    write_ivf_sq8_index,
+)
 from public_transit_data_platform_sql_nosql_spark.queries.events import (
     windowed_counts,
 )
@@ -14,9 +30,20 @@ from public_transit_data_platform_sql_nosql_spark.sources.tpch_adapter import (
 from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (
     read_events_stream,
     run_to_memory,
+    stream_vector_search,
     stream_windowed_counts,
 )
 from tests.conftest import SF_DIR
+
+
+@pytest.fixture(scope="module")
+def emb(spark):
+    return E._emb(spark, SF_DIR)
+
+
+def _qvec(emb, vid):
+    return [float(x)
+            for x in emb.filter(f"vec_id = {vid}").head()["embedding"]]
 
 
 def test_stream_matches_batch(spark):
@@ -571,9 +598,389 @@ def test_stream_vector_index_upsert_dispatches_pq(spark, tmp_path):
     assert decisions[0]["n_drifted_dims"] == 0
 
 
+def test_streaming_upsert_dispatches_ivf_sq8(spark, emb, tmp_path):
+    """The streaming maintainer routes an ivf_sq8 index to the
+    kind-true upsert: the manifest keeps kind + centroids, the batch
+    lands cluster-partitioned, and the decision row is recorded."""
+    from pyspark.sql import functions as F
+
+    from public_transit_data_platform_sql_nosql_spark.jobs.versioned import (  # noqa: E501
+        read_version,
+    )
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_index_upsert,
+    )
+
+    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
+    idx = str(tmp_path / "idx")
+    write_ivf_sq8_index(base, idx)
+    n0 = read_index_codes(spark, idx).count()
+
+    src = str(tmp_path / "src")
+    (emb.filter("vec_id >= 10 AND vec_id < 15")
+     .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
+     .coalesce(1).write.parquet(f"{src}/a.parquet"))
+    stream = (
+        spark.readStream.schema("vec_id long, embedding array<float>")
+        .parquet(f"{src}/*.parquet")
+    )
+    q = stream_vector_index_upsert(stream, idx, str(tmp_path / "chk"))
+    q.awaitTermination()
+
+    m = _index_manifest(spark, idx)
+    assert m["kind"] == "ivf_sq8" and "centroids" in m
+    codes = read_index_codes(spark, idx)
+    assert codes.count() == n0 + 5
+    assert codes.filter("vec_id >= 50000 AND cluster_id IS NULL") \
+        .count() == 0
+    decisions = read_version(spark, f"{idx}/_state/decisions").collect()
+    assert [d["decision"] for d in decisions] == ["appended"]
+
+
+def test_stream_vector_search_serves_batches(spark, emb, tmp_path):
+    """The retrieval twin of the upsert stream: micro-batches of query
+    vectors run through the index's batch serving path against the
+    newest committed snapshot; ranked results publish atomically per
+    batch and equal the single-query path."""
+    from pyspark.sql import functions as F  # noqa: F401
+
+    from public_transit_data_platform_sql_nosql_spark.jobs.versioned import (  # noqa: E501
+        read_version,
+    )
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_search,
+    )
+
+    idx = str(tmp_path / "ivfsq8")
+    write_ivf_sq8_index(emb, idx)
+    src = str(tmp_path / "src")
+    (emb.filter("vec_id < 2")
+     .select(emb.vec_id.alias("query_id"), "embedding")
+     .coalesce(1).write.parquet(f"{src}/a.parquet"))
+    (emb.filter("vec_id >= 2 AND vec_id < 4")
+     .select(emb.vec_id.alias("query_id"), "embedding")
+     .coalesce(1).write.parquet(f"{src}/b.parquet"))
+
+    stream = (
+        spark.readStream
+        .schema("query_id long, embedding array<float>")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{src}/*.parquet")
+    )
+    results = str(tmp_path / "results")
+    q = stream_vector_search(stream, idx, emb, results,
+                             str(tmp_path / "chk"), k=5, nprobe=2)
+    q.awaitTermination()
+
+    rows = read_version(spark, results).collect()
+    served = {}
+    for r in rows:
+        served.setdefault(r["query_id"], []).append(
+            (r["rank"], r["neighbor_id"], r["cos_sim"]))
+    assert set(served) == {0, 1, 2, 3}
+    for qid in range(4):
+        single = sorted(
+            (r["rank"], r["neighbor_id"], r["cos_sim"])
+            for r in ivf_sq8_index_topk(
+                spark, idx, _qvec(emb, qid), emb, k=5,
+                nprobe=2).collect())
+        assert sorted(served[qid]) == single, qid
+    # per-batch atomic publication: two micro-batches, two batch ids
+    assert len({r["batch_id"] for r in rows}) == 2
+
+
+def _write_query_file(emb, lo, hi, dest):
+    (emb.filter(f"vec_id >= {lo} AND vec_id < {hi}")
+     .select(emb.vec_id.alias("query_id"), "embedding")
+     .coalesce(1).write.parquet(dest))
+
+
+def _query_stream(spark, src):
+    return (spark.readStream
+            .schema("query_id long, embedding array<float>")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(f"{src}/*.parquet"))
+
+
+def test_stream_vector_search_replay_idempotent(spark, emb, tmp_path):
+    """The exactly-once guard: a replayed micro-batch (fresh checkpoint
+    over the same source → batch_id 0 re-delivered) is skipped — the
+    results store gains no version and no duplicate rows."""
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_search,
+    )
+
+    idx = str(tmp_path / "idx")
+    write_ivf_sq8_index(emb, idx)
+    src = str(tmp_path / "src")
+    _write_query_file(emb, 0, 2, f"{src}/a.parquet")
+    results = str(tmp_path / "results")
+
+    chk1 = str(tmp_path / "chk1")
+    stream_vector_search(_query_stream(spark, src), idx, emb, results,
+                         chk1, k=5, nprobe=2).awaitTermination()
+    v0 = list_versions(spark, results)
+    rows0 = sorted(map(tuple, read_version(spark, results).collect()))
+    assert v0 and rows0
+
+    # simulate the crash-after-commit replay: same source, batch_id 0
+    # again (a wiped checkpoint restarts batch numbering)
+    chk2 = str(tmp_path / "chk2")
+    stream_vector_search(_query_stream(spark, src), idx, emb, results,
+                         chk2, k=5, nprobe=2).awaitTermination()
+    assert list_versions(spark, results) == v0
+    assert sorted(map(tuple,
+                      read_version(spark, results).collect())) == rows0
+
+
+def test_stream_upsert_replay_idempotent(spark, emb, tmp_path):
+    """Replay of an already-recorded maintenance batch is skipped: the
+    decisions store keeps ONE row and the index gains no version."""
+    from pyspark.sql import functions as F
+
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_index_upsert,
+    )
+
+    idx = str(tmp_path / "idx")
+    write_ivf_sq8_index(emb.filter("vec_id >= 10")
+                        .select("vec_id", "embedding"), idx)
+    src = str(tmp_path / "src")
+    (emb.filter("vec_id < 4")
+     .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
+     .coalesce(1).write.parquet(f"{src}/a.parquet"))
+
+    def _stream():
+        return (spark.readStream
+                .schema("vec_id long, embedding array<float>")
+                .parquet(f"{src}/*.parquet"))
+
+    stream_vector_index_upsert(
+        _stream(), idx, str(tmp_path / "chk1")).awaitTermination()
+    iv = list_versions(spark, idx)
+    dec0 = read_version(spark, f"{idx}/_state/decisions").collect()
+    assert [d["decision"] for d in dec0] == ["appended"]
+    n0 = read_index_codes(spark, idx).count()
+
+    stream_vector_index_upsert(
+        _stream(), idx, str(tmp_path / "chk2")).awaitTermination()
+    assert list_versions(spark, idx) == iv
+    assert read_index_codes(spark, idx).count() == n0
+    dec1 = read_version(spark, f"{idx}/_state/decisions").collect()
+    assert [d["decision"] for d in dec1] == ["appended"]
+
+
+def test_stream_vector_search_picks_up_maintenance(spark, emb,
+                                                   tmp_path):
+    """The per-batch manifest re-resolution claim, interleaved: batch 1
+    serves against the initial snapshot; an ivf_sq8 upsert AND a
+    compaction land; batch 2 (same checkpoint — the next micro-batch
+    boundary) serves the upserted vectors from the compacted
+    manifest."""
+    from pyspark.sql import functions as F
+
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_search,
+    )
+
+    idx = str(tmp_path / "idx")
+    base = emb.select("vec_id", "embedding")
+    write_ivf_sq8_index(base, idx)
+    src = str(tmp_path / "src")
+    _write_query_file(emb, 0, 2, f"{src}/a.parquet")
+    results = str(tmp_path / "results")
+    chk = str(tmp_path / "chk")
+
+    stream_vector_search(_query_stream(spark, src), idx, emb, results,
+                         chk, k=3, nprobe=2).awaitTermination()
+    served0 = {r["query_id"]
+               for r in read_version(spark, results).collect()}
+    assert served0 == {0, 1}
+
+    # maintenance between micro-batch boundaries: upsert + compact
+    batch = emb.filter("vec_id < 4").select(
+        (F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
+    assert ivf_sq8_index_upsert(spark, idx, batch)["decision"] \
+        == "appended"
+    assert compact_index(spark, idx)["decision"] == "compacted"
+    vectors = base.unionByName(batch)
+
+    # batch 2: queries whose exact twins exist ONLY in the upsert
+    (batch.limit(2)
+     .select(F.col("vec_id").alias("query_id"), "embedding")
+     .coalesce(1).write.parquet(f"{src}/b.parquet"))
+    stream_vector_search(_query_stream(spark, src), idx, vectors,
+                         results, chk, k=3, nprobe=2).awaitTermination()
+
+    rows = read_version(spark, results).collect()
+    new_served = {r["query_id"] for r in rows} - served0
+    assert len(new_served) == 2 and all(q >= 50_000 for q in new_served)
+    for qid in new_served:
+        top = sorted((r for r in rows if r["query_id"] == qid),
+                     key=lambda r: r["rank"])
+        # the upserted twin is served at cos 1.0 (rank 1 or tied with
+        # its original — both at 1.0)
+        assert top[0]["cos_sim"] == 1.0
+        assert qid in {t["neighbor_id"] for t in top if
+                       t["cos_sim"] == 1.0}
+
+
+def test_stream_upsert_emits_compact_hint(spark, emb, tmp_path):
+    """Once the post-upsert manifest crosses the dir threshold, the
+    maintainer appends a `compact` decision row carrying the dir count
+    — the ops signal that closes the fragmentation loop."""
+    from pyspark.sql import functions as F
+
+    idx = str(tmp_path / "idx")
+    write_ivf_sq8_index(emb.filter("vec_id >= 10")
+                        .select("vec_id", "embedding"), idx)
+    src = str(tmp_path / "src")
+    (emb.filter("vec_id < 3")
+     .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
+     .coalesce(1).write.parquet(f"{src}/a.parquet"))
+
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_index_upsert,
+    )
+
+    stream = (spark.readStream
+              .schema("vec_id long, embedding array<float>")
+              .parquet(f"{src}/*.parquet"))
+    stream_vector_index_upsert(stream, idx, str(tmp_path / "chk"),
+                               compact_hint_dirs=2).awaitTermination()
+    dec = sorted(read_version(spark, f"{idx}/_state/decisions")
+                 .collect(), key=lambda r: r["decision"])
+    assert [d["decision"] for d in dec] == ["appended", "compact"]
+    hint = dec[1]
+    assert hint["n_new"] == 2          # the manifest's codes-dir count
+    # acting on the hint compacts back to one dir
+    assert compact_index(spark, idx)["decision"] == "compacted"
+    assert len(_index_manifest(spark, idx)["codes"]) == 1
+
+
+def test_checkpoint_resume_skips_served_batches(spark, emb, tmp_path):
+    """Sanity: resuming with the SAME checkpoint re-serves nothing
+    (source offsets) — together with the replay guard, the results
+    store holds exactly one copy of every batch under any crash
+    topology."""
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_search,
+    )
+
+    idx = str(tmp_path / "idx")
+    write_ivf_sq8_index(emb, idx)
+    src = str(tmp_path / "src")
+    _write_query_file(emb, 0, 2, f"{src}/a.parquet")
+    results = str(tmp_path / "results")
+    chk = str(tmp_path / "chk")
+    stream_vector_search(_query_stream(spark, src), idx, emb, results,
+                         chk, k=3).awaitTermination()
+    v0 = list_versions(spark, results)
+    stream_vector_search(_query_stream(spark, src), idx, emb, results,
+                         chk, k=3).awaitTermination()
+    assert list_versions(spark, results) == v0
+
+
+def test_wiped_results_store_reserves(spark, emb, tmp_path):
+    """The guard keys on the RESULTS store, not wall-clock state: if
+    the store is wiped but the checkpoint survives, nothing re-serves
+    (offsets); if both are wiped, the batch re-serves cleanly."""
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_search,
+    )
+
+    idx = str(tmp_path / "idx")
+    write_ivf_sq8_index(emb, idx)
+    src = str(tmp_path / "src")
+    _write_query_file(emb, 0, 2, f"{src}/a.parquet")
+    results = str(tmp_path / "results")
+    stream_vector_search(_query_stream(spark, src), idx, emb, results,
+                         str(tmp_path / "chk1"), k=3).awaitTermination()
+    rows0 = sorted(map(tuple, read_version(spark, results).collect()))
+    shutil.rmtree(results)
+    stream_vector_search(_query_stream(spark, src), idx, emb, results,
+                         str(tmp_path / "chk2"), k=3).awaitTermination()
+    assert sorted(map(tuple,
+                      read_version(spark, results).collect())) == rows0
+
+
+def test_stream_upsert_auto_compact(spark, emb, tmp_path):
+    """auto_compact=True: the maintainer acts on its own hint inside
+    the micro-batch — the manifest folds back to one codes dir, a
+    `compacted` decision row is recorded, and content survives."""
+    from pyspark.sql import functions as F
+
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_index_upsert,
+    )
+
+    idx = str(tmp_path / "idx")
+    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
+    write_ivf_sq8_index(base, idx)
+    src = str(tmp_path / "src")
+    (emb.filter("vec_id < 3")
+     .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
+     .coalesce(1).write.parquet(f"{src}/a.parquet"))
+
+    stream = (spark.readStream
+              .schema("vec_id long, embedding array<float>")
+              .parquet(f"{src}/*.parquet"))
+    stream_vector_index_upsert(stream, idx, str(tmp_path / "chk"),
+                               compact_hint_dirs=2,
+                               auto_compact=True).awaitTermination()
+
+    m = _index_manifest(spark, idx)
+    assert m["kind"] == "ivf_sq8" and len(m["codes"]) == 1
+    dec = sorted(read_version(spark, f"{idx}/_state/decisions")
+                 .collect(), key=lambda r: r["decision"])
+    assert [d["decision"] for d in dec] == ["appended", "compacted"]
+    codes = read_index_codes(spark, idx)
+    assert codes.count() == base.count() + 3
+    assert codes.filter("vec_id >= 50000").count() == 3
+
+
+def test_stream_vector_search_filtered(spark, emb, tmp_path):
+    """allowed_path restricts every served batch to the allow-list —
+    and matches the batch-path answer under the same filter (the
+    widening contract, through the streaming edge)."""
+    path = str(tmp_path / "idx")
+    write_ivf_sq8_index(emb, path)
+    allow_ids = [r["vec_id"] for r in
+                 emb.orderBy(F.desc("vec_id")).limit(6).collect()]
+    allowed_path = str(tmp_path / "allowed")
+    emb.filter(F.col("vec_id").isin(allow_ids)).select("vec_id") \
+        .write.parquet(allowed_path)
+    qsrc = str(tmp_path / "qsrc")
+    emb.filter(F.col("vec_id").isin([3, 7])).select(
+        F.col("vec_id").alias("query_id"), "embedding") \
+        .write.parquet(qsrc)
+    results = str(tmp_path / "results")
+    q = stream_vector_search(
+        spark.readStream.schema("query_id long, embedding "
+                                "array<double>").parquet(qsrc),
+        path, emb, results, str(tmp_path / "ck"), k=5, nprobe=1,
+        allowed_path=allowed_path)
+    q.awaitTermination(120)
+    served = read_version(spark, results)
+    rows = served.collect()
+    assert len(rows) == 10                 # both queries fill k=5
+    assert {r["neighbor_id"] for r in rows} <= set(allow_ids)
+    allowed = emb.filter(F.col("vec_id").isin(allow_ids)) \
+        .select("vec_id")
+    single = [(r["rank"], r["neighbor_id"]) for r in
+              ivf_sq8_index_topk(
+                  spark, path,
+                  [float(x) for x in emb.filter("vec_id = 3")
+                   .head()["embedding"]],
+                  emb, k=5, nprobe=1, allowed=allowed).collect()]
+    got = [(r["rank"], r["neighbor_id"]) for r in
+           served.filter(F.col("query_id") == 3)
+           .orderBy("rank").collect()]
+    assert got == single
+
+
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --
 # excluded from the driver's default gate; run with -m slow after
 # touching this family (see the verify skill).
-import pytest  # noqa: E402
 
 pytestmark = pytest.mark.slow

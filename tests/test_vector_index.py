@@ -1,27 +1,41 @@
-"""Round-10 vector-index hardening: kind-true upserts (the ivf_sq8
-corruption hole), manifest-resolved dim, filtered ANN on the composed
-layout with adaptive probe widening, vacuum retention floor, and the
-maintain_pq_index primary-store contract."""
+"""The stored vector-index core (pipeline/similarity.py): one
+write / serve / batch-serve / upsert / maintain path over the
+codec x partition-layer registry.  Covers kind-true upserts and the
+operating-point carry, manifest-resolved dim, filtered search with
+adaptive probe widening, dangling-manifest detection, vacuum
+retention, sampled training, the maintenance ladders' primary-store
+contract, and batch == single-query serving for every kind."""
 
 from __future__ import annotations
 
-import json
+import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.jobs.versioned import (
     list_versions,
 )
 from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
+    INDEX_KINDS,
+    IndexCorruptError,
     _index_manifest,
+    _persist_operating_point,
+    _train_sample,
+    index_stats,
+    index_topk,
+    index_topk_batch,
+    index_upsert,
     ivf_sq8_index_topk,
+    ivf_sq8_index_topk_batch,
     ivf_sq8_index_upsert,
     pq_index_upsert,
     read_index_codes,
     sq8_index_topk,
     sq8_index_upsert,
     vacuum_index,
+    write_index,
     write_ivf_sq8_index,
     write_pq_index,
     write_sq8_index,
@@ -160,82 +174,6 @@ def test_upsert_kind_guards_refuse_foreign_layouts(spark, emb,
     assert pq_index_upsert(spark, flat, batch)["decision"] \
         == "wrong_kind"
     assert len(list_versions(spark, flat)) == 1
-
-
-def test_cli_upsert_dispatches_ivf_sq8(spark, emb, tmp_path, capsys):
-    """The CLI ops loop is kind-true end to end: upsert into an
-    ivf_sq8 index routes to the partition-aware maintainer, keeps the
-    manifest kind, and the upserted vector serves through the CLI
-    query path."""
-    from pyspark.sql import functions as F
-
-    from public_transit_data_platform_sql_nosql_spark.__main__ import (
-        main,
-    )
-
-    emb_path = str(tmp_path / "emb")
-    emb.select("vec_id", "embedding").write.parquet(emb_path)
-    idx = str(tmp_path / "ivf")
-    assert main(["vector-index", "build", "--path", idx,
-                 "--emb", emb_path, "--ivf"]) == 0
-    capsys.readouterr()
-
-    batch_path = str(tmp_path / "batch")
-    (emb.limit(4)
-     .select((F.col("vec_id") + 10_000).alias("vec_id"), "embedding")
-     .write.parquet(batch_path))
-    assert main(["vector-index", "upsert", "--path", idx,
-                 "--batch", batch_path]) == 0
-    up = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert up["kind"] == "ivf_sq8"
-    assert up["decision"] == "appended" and up["n_new"] == 4
-
-    m = _index_manifest(spark, idx)
-    assert m["kind"] == "ivf_sq8" and "centroids" in m
-
-    assert main(["vector-index", "query", "--path", idx,
-                 "--emb", emb_path, "--vec-id", "0", "--k", "3"]) == 0
-    q = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert q["kind"] == "ivf_sq8" and len(q["topk"]) == 3
-
-
-def test_streaming_upsert_dispatches_ivf_sq8(spark, emb, tmp_path):
-    """The streaming maintainer routes an ivf_sq8 index to the
-    kind-true upsert: the manifest keeps kind + centroids, the batch
-    lands cluster-partitioned, and the decision row is recorded."""
-    from pyspark.sql import functions as F
-
-    from public_transit_data_platform_sql_nosql_spark.jobs.versioned import (  # noqa: E501
-        read_version,
-    )
-    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
-        stream_vector_index_upsert,
-    )
-
-    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
-    idx = str(tmp_path / "idx")
-    write_ivf_sq8_index(base, idx)
-    n0 = read_index_codes(spark, idx).count()
-
-    src = str(tmp_path / "src")
-    (emb.filter("vec_id >= 10 AND vec_id < 15")
-     .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
-     .coalesce(1).write.parquet(f"{src}/a.parquet"))
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .parquet(f"{src}/*.parquet")
-    )
-    q = stream_vector_index_upsert(stream, idx, str(tmp_path / "chk"))
-    q.awaitTermination()
-
-    m = _index_manifest(spark, idx)
-    assert m["kind"] == "ivf_sq8" and "centroids" in m
-    codes = read_index_codes(spark, idx)
-    assert codes.count() == n0 + 5
-    assert codes.filter("vec_id >= 50000 AND cluster_id IS NULL") \
-        .count() == 0
-    decisions = read_version(spark, f"{idx}/_state/decisions").collect()
-    assert [d["decision"] for d in decisions] == ["appended"]
 
 
 def test_ivf_sq8_filtered_search(spark, emb, tmp_path):
@@ -485,37 +423,6 @@ def test_maintain_ivf_sq8_closed_loop(spark, emb, tmp_path):
     assert top[0]["neighbor_id"] == 90_000
 
 
-def test_cli_maintain_dispatches_ivf_sq8(spark, emb, tmp_path, capsys):
-    from pyspark.sql import functions as F
-
-    from public_transit_data_platform_sql_nosql_spark.__main__ import (
-        main,
-    )
-
-    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
-    emb_path = str(tmp_path / "emb")
-    base.write.parquet(emb_path)
-    idx = str(tmp_path / "ivf")
-    assert main(["vector-index", "build", "--path", idx,
-                 "--emb", emb_path, "--ivf"]) == 0
-    capsys.readouterr()
-
-    batch_path = str(tmp_path / "batch")
-    (base.limit(3)
-     .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
-     .write.parquet(batch_path))
-    merged_path = str(tmp_path / "merged")
-    base.unionByName(spark.read.parquet(batch_path)) \
-        .write.parquet(merged_path)
-    rc = main(["vector-index", "maintain", "--path", idx,
-               "--batch", batch_path, "--emb", merged_path,
-               "--k", "5", "--recall-floor", "400"])
-    st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert st["kind"] == "ivf_sq8"
-    assert (rc == 0) == (st["decision"] in ("ok", "bump_nprobe"))
-    assert st["decision"] in ("ok", "bump_nprobe")
-
-
 def test_legacy_ivf_filtered_search(spark, emb, tmp_path):
     """allowed= on the classic full-precision IVF layout: same
     semi-join + adaptive-widening contract as the composed layout, so
@@ -536,231 +443,200 @@ def test_legacy_ivf_filtered_search(spark, emb, tmp_path):
     assert all(r["vec_id"] % 3 == 0 for r in got)
 
 
-def test_compact_index_folds_appended_dirs(spark, emb, tmp_path,
-                                           capsys):
-    """Append-fragmented indexes fold back to ONE codes dir with
-    identical content; ivf_sq8 keeps its cluster partitioning (and the
-    serving plan keeps pruning); vacuum then collects the old dirs."""
-    from pyspark.sql import functions as F
+def test_train_fraction_range_validated_first(spark, emb):
+    """A typo like 25 (meant 0.25) or 1.5 must raise, not silently
+    train on the full corpus — the range check runs BEFORE the
+    full-corpus fast path."""
+    for bad in (25, 1.5, 0.0, -0.25):
+        with pytest.raises(ValueError, match="train_fraction"):
+            _train_sample(emb, bad)
+    assert _train_sample(emb, 1.0) is emb          # fast path intact
+    n = emb.count()
+    assert 0 < _train_sample(emb, 0.5).count() < n
 
-    from public_transit_data_platform_sql_nosql_spark.__main__ import (
-        main,
-    )
+
+def test_filtered_widening_terminates_nprobe_zero(spark, emb, tmp_path):
+    """nprobe <= 0 with allowed= must terminate (the doubling step is
+    floored at +1), on both IVF layouts — and still fill k."""
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
-        compact_index,
-    )
-    from public_transit_data_platform_sql_nosql_spark.plans import (
-        executed_plan,
+        ivf_index_topk,
+        write_ivf_index,
     )
 
-    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
-    path = str(tmp_path / "ivfsq8")
-    write_ivf_sq8_index(base, path)
-    for lo in (0, 3):   # two appended batches -> three dirs
-        batch = emb.filter(f"vec_id >= {lo + 10} AND vec_id < {lo + 13}") \
-            .select((F.col("vec_id") + 50_000 + lo * 1000).alias("vec_id"),
-                    "embedding")
-        assert ivf_sq8_index_upsert(spark, path, batch)["decision"] \
-            == "appended"
-    m0 = _index_manifest(spark, path)
-    assert len(m0["codes"]) == 3
-    before = sorted(map(tuple, read_index_codes(spark, path)
-                        .select("vec_id", "cluster_id", "codes")
-                        .collect()))
-
-    st = compact_index(spark, path)
-    assert st == {"decision": "compacted", "dirs_before": 3,
-                  "version": st["version"]}
-    m1 = _index_manifest(spark, path)
-    assert m1["kind"] == "ivf_sq8" and len(m1["codes"]) == 1
-    assert m1["centroids"] == m0["centroids"]
-    after = sorted(map(tuple, read_index_codes(spark, path)
-                       .select("vec_id", "cluster_id", "codes")
-                       .collect()))
-    assert after == before
-    qvec = _qvec(emb, 10)
-    plan = executed_plan(
-        ivf_sq8_index_topk(spark, path, qvec, emb, k=3, nprobe=1))
-    assert "PartitionFilters" in plan
-
-    # idempotent: a single-dir manifest is a noop
-    assert compact_index(spark, path)["decision"] == "noop"
-
-    # CLI wiring + vacuum collects the superseded dirs
-    assert main(["vector-index", "compact", "--path", path]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["decision"] == "noop"
-    assert main(["vector-index", "vacuum", "--path", path,
-                 "--keep-last", "1"]) == 0
-    vac = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert vac["removed_dirs"]            # the folded-away append dirs
-    assert sorted(map(tuple, read_index_codes(spark, path)
-                      .select("vec_id", "cluster_id", "codes")
-                      .collect())) == before
-
-
-def test_batch_serving_matches_single_query_path(spark, emb, tmp_path):
-    """ivf_sq8_index_topk_batch is ONE distributed plan whose per-query
-    results equal the single-query serving path's, the codes scan still
-    partition-prunes, and allowed= restricts every query's candidates."""
-    from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
-        ivf_sq8_index_topk_batch,
-    )
-    from public_transit_data_platform_sql_nosql_spark.plans import (
-        executed_plan,
-    )
+    allowed = emb.filter("vec_id % 3 = 0").select("vec_id")
+    qvec = _qvec(emb, 1)
 
     path = str(tmp_path / "ivfsq8")
     write_ivf_sq8_index(emb, path)
-    queries = emb.filter("vec_id < 4").select(
+    got = ivf_sq8_index_topk(spark, path, qvec, emb, k=5, nprobe=0,
+                             allowed=allowed).collect()
+    assert len(got) == 5
+    assert all(r["neighbor_id"] % 3 == 0 for r in got)
+
+    legacy = str(tmp_path / "ivf")
+    write_ivf_index(emb.select("vec_id", "embedding"), legacy)
+    got2 = ivf_index_topk(spark, legacy, qvec, k=5, nprobe=0,
+                          allowed=allowed).collect()
+    assert len(got2) == 5
+
+
+def test_batch_filtered_widening_matches_single_query(spark, emb,
+                                                      tmp_path):
+    """The batch twin of the r10 starvation test: every allowed vector
+    lives OUTSIDE the default probed clusters, so a fixed nprobe=1
+    would starve the whole batch — per-query widening fills k for
+    every query and reproduces the single-query path's rows exactly
+    (identical widening sequence → identical candidate sets)."""
+    path = str(tmp_path / "ivfsq8")
+    write_ivf_sq8_index(emb, path)
+    queries = emb.filter("vec_id < 3").select(
         emb.vec_id.alias("query_id"), "embedding")
 
-    batch = ivf_sq8_index_topk_batch(spark, path, queries, emb, k=5,
-                                     nprobe=2)
+    # clusters the UNFILTERED nprobe=1 probe would pick, per query
+    codes = read_index_codes(spark, path)
+    probed_set = set()
+    for qid in range(3):
+        ids = {r["neighbor_id"] for r in ivf_sq8_index_topk(
+            spark, path, _qvec(emb, qid), emb, k=10, nprobe=1).collect()}
+        probed_set |= {r["cluster_id"] for r in codes.filter(
+            codes.vec_id.isin(*[int(i) for i in ids]))
+            .select("cluster_id").distinct().collect()}
+    allowed = (codes.filter(
+        ~codes.cluster_id.isin(*[int(c) for c in probed_set]))
+        .select("vec_id"))
+    assert allowed.count() >= 5
+
     got = {}
-    for r in batch.collect():
+    for r in ivf_sq8_index_topk_batch(spark, path, queries, emb, k=5,
+                                      nprobe=1,
+                                      allowed=allowed).collect():
+        got.setdefault(r["query_id"], []).append(
+            (r["rank"], r["neighbor_id"], r["cos_sim"]))
+    assert set(got) == {0, 1, 2}
+    allowed_ids = {r["vec_id"] for r in allowed.collect()}
+    for qid in range(3):
+        assert len(got[qid]) == 5
+        assert all(n in allowed_ids for _, n, _ in got[qid])
+        single = sorted(
+            (r["rank"], r["neighbor_id"], r["cos_sim"])
+            for r in ivf_sq8_index_topk(
+                spark, path, _qvec(emb, qid), emb, k=5, nprobe=1,
+                allowed=allowed).collect())
+        assert sorted(got[qid]) == single, qid
+
+
+def test_index_upsert_reclaims_orphan_dir(spark, emb, tmp_path):
+    """Same crash protocol for the index writers: an orphan data/v<N>
+    from a torn upsert is reclaimed by the replayed upsert."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "sq8")
+    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
+    write_sq8_index(base, path)
+    # torn previous upsert: codes landed, manifest did not
+    spark.range(5).select(
+        F.col("id").alias("vec_id"),
+        F.lit(b"junk").alias("codes")).write.parquet(
+        f"{path}/data/v000001/codes")
+
+    batch = emb.filter("vec_id < 3").select(
+        (F.col("vec_id") + 70_000).alias("vec_id"), "embedding")
+    st = sq8_index_upsert(spark, path, batch)
+    assert st["decision"] == "appended" and st["n_new"] == 3
+    codes = read_index_codes(spark, path)
+    assert codes.count() == base.count() + 3
+    assert codes.filter("vec_id >= 70000").count() == 3
+    assert codes.filter("vec_id < 10").count() == 0   # no junk rows
+
+
+@pytest.mark.parametrize("kind", sorted(INDEX_KINDS))
+def test_batch_serving_matches_single_query_path(spark, emb, tmp_path,
+                                                 kind):
+    """Every kind's batch path is ONE distributed plan whose per-query
+    results equal the single-query path's; allowed= restricts every
+    query's candidates, and the IVF kinds' codes scan still
+    partition-prunes."""
+    from public_transit_data_platform_sql_nosql_spark.plans import (
+        executed_plan,
+    )
+
+    path = str(tmp_path / kind)
+    write_index(emb, path, kind)
+    queries = emb.filter("vec_id < 4").select(
+        emb.vec_id.alias("query_id"), "embedding")
+    got = {}
+    for r in index_topk_batch(spark, path, queries, emb, k=5,
+                              nprobe=2).collect():
         got.setdefault(r["query_id"], []).append(
             (r["rank"], r["neighbor_id"], r["cos_sim"]))
     assert set(got) == {0, 1, 2, 3}
     for qid in range(4):
         single = sorted(
             (r["rank"], r["neighbor_id"], r["cos_sim"])
-            for r in ivf_sq8_index_topk(
-                spark, path, _qvec(emb, qid), emb, k=5,
-                nprobe=2).collect())
+            for r in index_topk(spark, path, _qvec(emb, qid), emb, k=5,
+                                nprobe=2).collect())
         assert sorted(got[qid]) == single, qid
 
-    plan = executed_plan(
-        ivf_sq8_index_topk_batch(spark, path, queries, emb, k=5,
-                                 nprobe=1))
-    assert "PartitionFilters" in plan
-
+    if INDEX_KINDS[kind].ivf:
+        plan = executed_plan(index_topk_batch(spark, path, queries, emb,
+                                              k=5, nprobe=1))
+        assert "PartitionFilters" in plan
     allowed = emb.filter("vec_id % 3 = 0").select("vec_id")
-    filt = ivf_sq8_index_topk_batch(spark, path, queries, emb, k=5,
-                                    nprobe=4, allowed=allowed).collect()
+    filt = index_topk_batch(spark, path, queries, emb, k=5, nprobe=4,
+                            allowed=allowed).collect()
     assert filt and all(r["neighbor_id"] % 3 == 0 for r in filt)
 
 
-def test_flat_batch_paths_match_single_query(spark, emb, tmp_path):
-    """sq8/pq batch retrieval: per-query results equal the
-    single-query serving paths (one scan, per-query windows)."""
-    from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
-        pq_index_topk,
-        pq_index_topk_batch,
-        sq8_index_topk_batch,
-        write_pq_index,
-    )
+@pytest.mark.parametrize("kind", sorted(INDEX_KINDS))
+def test_upsert_keeps_committed_operating_point(spark, emb, tmp_path,
+                                                kind):
+    """An upsert moves only the version and the codes list: the
+    operating point tune_index or a maintainer's bump rung committed
+    (default_rerank_mult, and default_nprobe on IVF kinds) still
+    serves after an append AND after a keyed replace."""
+    ivf = INDEX_KINDS[kind].ivf
+    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
+    path = str(tmp_path / kind)
+    write_index(base, path, kind, k=4, ksub=16)
+    _persist_operating_point(spark, path, rerank_mult=13,
+                             nprobe=3 if ivf else None)
+    batch = emb.filter("vec_id < 3").select(
+        (F.col("vec_id") + 90_000).alias("vec_id"), "embedding")
+    for want in ("appended", "replaced"):
+        assert index_upsert(spark, path, batch)["decision"] == want
+        st = index_stats(spark, path)
+        assert st["default_rerank_mult"] == 13, (want, st)
+        assert st["rerank_tuned"] is True, (want, st)
+        if ivf:
+            assert st["default_nprobe"] == 3, (want, st)
+            assert st["tuned"] is True, (want, st)
 
-    queries = emb.filter("vec_id < 3").select(
+
+def test_deleted_codes_dir_is_index_corrupt_error(spark, emb, tmp_path):
+    """A committed manifest whose codes dir is gone is a typed
+    IndexCorruptError naming the path and saying "rebuild" at every
+    entry point — never PATH_NOT_FOUND deep in a plan, and never a
+    probed read that silently skips the missing candidates."""
+    base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
+    path = str(tmp_path / "ivfsq8")
+    write_ivf_sq8_index(base, path, k=4)
+    batch = emb.filter("vec_id < 3").select(
+        (F.col("vec_id") + 90_000).alias("vec_id"), "embedding")
+    assert index_upsert(spark, path, batch)["decision"] == "appended"
+    gone = _index_manifest(spark, path)["codes"][-1]
+    shutil.rmtree(f"{path}/{gone}")
+    queries = emb.filter("vec_id < 2").select(
         emb.vec_id.alias("query_id"), "embedding")
-
-    sq8 = str(tmp_path / "sq8")
-    write_sq8_index(emb, sq8)
-    got = {}
-    for r in sq8_index_topk_batch(spark, sq8, queries, emb,
-                                  k=5).collect():
-        got.setdefault(r["query_id"], []).append(
-            (r["rank"], r["neighbor_id"], r["cos_sim"]))
-    for qid in range(3):
-        single = sorted(
-            (r["rank"], r["neighbor_id"], r["cos_sim"])
-            for r in sq8_index_topk(spark, sq8, _qvec(emb, qid), emb,
-                                    k=5).collect())
-        assert sorted(got[qid]) == single, qid
-
-    pq = str(tmp_path / "pq")
-    write_pq_index(emb, pq)
-    gotp = {}
-    for r in pq_index_topk_batch(spark, pq, queries, emb,
-                                 k=5).collect():
-        gotp.setdefault(r["query_id"], []).append(
-            (r["rank"], r["neighbor_id"], r["cos_sim"]))
-    for qid in range(3):
-        single = sorted(
-            (r["rank"], r["neighbor_id"], r["cos_sim"])
-            for r in pq_index_topk(spark, pq, _qvec(emb, qid), emb,
-                                   k=5).collect())
-        assert sorted(gotp[qid]) == single, qid
-
-
-def test_stream_vector_search_serves_batches(spark, emb, tmp_path):
-    """The retrieval twin of the upsert stream: micro-batches of query
-    vectors run through the index's batch serving path against the
-    newest committed snapshot; ranked results publish atomically per
-    batch and equal the single-query path."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from public_transit_data_platform_sql_nosql_spark.jobs.versioned import (  # noqa: E501
-        read_version,
-    )
-    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
-        stream_vector_search,
-    )
-
-    idx = str(tmp_path / "ivfsq8")
-    write_ivf_sq8_index(emb, idx)
-    src = str(tmp_path / "src")
-    (emb.filter("vec_id < 2")
-     .select(emb.vec_id.alias("query_id"), "embedding")
-     .coalesce(1).write.parquet(f"{src}/a.parquet"))
-    (emb.filter("vec_id >= 2 AND vec_id < 4")
-     .select(emb.vec_id.alias("query_id"), "embedding")
-     .coalesce(1).write.parquet(f"{src}/b.parquet"))
-
-    stream = (
-        spark.readStream
-        .schema("query_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/*.parquet")
-    )
-    results = str(tmp_path / "results")
-    q = stream_vector_search(stream, idx, emb, results,
-                             str(tmp_path / "chk"), k=5, nprobe=2)
-    q.awaitTermination()
-
-    rows = read_version(spark, results).collect()
-    served = {}
-    for r in rows:
-        served.setdefault(r["query_id"], []).append(
-            (r["rank"], r["neighbor_id"], r["cos_sim"]))
-    assert set(served) == {0, 1, 2, 3}
-    for qid in range(4):
-        single = sorted(
-            (r["rank"], r["neighbor_id"], r["cos_sim"])
-            for r in ivf_sq8_index_topk(
-                spark, idx, _qvec(emb, qid), emb, k=5,
-                nprobe=2).collect())
-        assert sorted(served[qid]) == single, qid
-    # per-batch atomic publication: two micro-batches, two batch ids
-    assert len({r["batch_id"] for r in rows}) == 2
-
-
-def test_cli_query_batch(spark, emb, tmp_path, capsys):
-    from public_transit_data_platform_sql_nosql_spark.__main__ import (
-        main,
-    )
-
-    emb_path = str(tmp_path / "emb")
-    emb.select("vec_id", "embedding").write.parquet(emb_path)
-    idx = str(tmp_path / "pq")
-    assert main(["vector-index", "build", "--path", idx,
-                 "--emb", emb_path, "--pq"]) == 0
-    capsys.readouterr()
-    qpath = str(tmp_path / "queries")
-    (emb.filter("vec_id < 3")
-     .select(emb.vec_id.alias("query_id"), "embedding")
-     .write.parquet(qpath))
-    out = str(tmp_path / "results")
-    assert main(["vector-index", "query-batch", "--path", idx,
-                 "--emb", emb_path, "--queries", qpath,
-                 "--out", out, "--k", "5"]) == 0
-    st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert st["kind"] == "pq" and st["n_queries"] == 3
-    assert st["n_results"] == 15
-    res = spark.read.parquet(out)
-    assert res.count() == 15
-    assert set(res.columns) == {"query_id", "rank", "neighbor_id",
-                                "cos_sim"}
+    calls = [
+        lambda: index_topk(spark, path, _qvec(emb, 10), emb, k=3),
+        lambda: index_topk_batch(spark, path, queries, emb, k=3),
+        lambda: index_upsert(spark, path, batch),
+        lambda: index_stats(spark, path),
+    ]
+    for call in calls:
+        with pytest.raises(IndexCorruptError, match="rebuild") as err:
+            call()
+        assert path in str(err.value) and gone in str(err.value)
 
 
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --

@@ -120,6 +120,23 @@ def test_snapshot_diff_between_versions(spark, tmp_path):
     assert summ == {"unchanged": 1, "changed": 1, "removed": 1, "added": 1}
 
 
+def test_commit_version_reclaims_orphan_dir(spark, tmp_path):
+    """A crash between the data write and the manifest rename leaves an
+    orphan data/v<N> dir; the next commit at that version reclaims it
+    instead of wedging on the mode('error') write."""
+    store = str(tmp_path / "store")
+    commit_version(spark.range(3).toDF("n"), store)
+    # orphan from a crashed second commit (manifest never landed)
+    spark.range(100, 103).toDF("n").write.parquet(
+        f"{store}/data/v000001")
+    assert list_versions(spark, store) == [0]
+
+    commit_version(spark.range(10, 13).toDF("n"), store, mode="append")
+    assert list_versions(spark, store) == [0, 1]
+    got = sorted(r["n"] for r in read_version(spark, store).collect())
+    assert got == [0, 1, 2, 10, 11, 12]    # orphan rows are GONE
+
+
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --
 # excluded from the driver's default gate; run with -m slow after
 # touching this family (see the verify skill).
