@@ -73,6 +73,7 @@ import re
 import statistics
 import sys
 import time
+import traceback
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -213,7 +214,27 @@ def main() -> None:
     sf10 = _sf10_section(spark, qs)
     if sf10:
         out["sf10"] = sf10
-    vecserve = _vector_serving_section(spark, SF_DIR)
+    _finish_record(spark, out)
+    spark.stop()
+
+
+def _guarded_section(label: str, *args, **kwargs) -> dict | None:
+    """One ``_vector_serving_section`` call that cannot lose the record:
+    a raising section (r15: the sf10 one took the whole 32-core record
+    with it) logs ``# <label> FAILED: <exc>`` to stderr and yields None,
+    so the headline record still prints."""
+    try:
+        return _vector_serving_section(*args, **kwargs)
+    except Exception as exc:  # noqa: BLE001 — any failure, same handling
+        print(f"# {label} FAILED: {exc!r}", file=sys.stderr)
+        traceback.print_exc(file=sys.stderr)
+        return None
+
+
+def _finish_record(spark, out: dict) -> None:
+    """Add the vector-serving sections to ``out`` and print the record as
+    the last stdout line."""
+    vecserve = _guarded_section("vector_serving", spark, SF_DIR)
     # the corpus where pruning can WIN: 20k vectors (sf1 fixture) —
     # the sf0.1 section's 2,000 vectors are ~100x too small for probe
     # savings to beat per-probe overhead, so the pruned kinds' trend
@@ -222,7 +243,7 @@ def main() -> None:
     vs1 = None
     if (os.environ.get("SPARK_GRAFT_VECSERVE_SF1", "1") != "0"
             and os.path.exists(f"{sf1_dir}/embeddings.parquet")):
-        vs1 = _vector_serving_section(spark, sf1_dir)
+        vs1 = _guarded_section("vector_serving_sf1", spark, sf1_dir)
     # r14: the IVF-vs-flat CROSSOVER point — 200k vectors (sf10), the
     # corpus the r13 README claimed pruning "pays at 100x" without a
     # measurement.  Only the no-training/coarse-only kinds run here
@@ -233,8 +254,9 @@ def main() -> None:
     vs10 = None
     if (os.environ.get("SPARK_GRAFT_VECSERVE_SF10", "1") != "0"
             and os.path.exists(f"{sf10_dir}/embeddings.parquet")):
-        vs10 = _vector_serving_section(
-            spark, sf10_dir, kinds=("bq", "ivf_bq", "sq8", "ivf_sq8"))
+        vs10 = _guarded_section(
+            "vector_serving_sf10", spark, sf10_dir,
+            kinds=("bq", "ivf_bq", "sq8", "ivf_sq8"))
     # the RECORD carries ONE vector section — the LARGEST fixture's
     # (sf10 crossover > sf1 frontier > headline SF): the final stdout
     # line must fit the driver's tail capture (the BENCH_r12 lesson —
@@ -263,7 +285,6 @@ def main() -> None:
         with open(full_out, "w", encoding="utf-8") as fh:
             json.dump(full, fh, indent=1)
     print(json.dumps(compact_record(out)))
-    spark.stop()
 
 
 def compact_record(out: dict) -> dict:

@@ -33,17 +33,22 @@ reference's edge behaviors:
   'null' would collide with that key: the handler merges the groups'
   time lists instead of letting one silently clobber the other.
 
-Scale/serving notes: every timetable endpoint is a point lookup on
-``stop_id`` — pass a ``.persist()``-ed (or bucketed-by-stop_id) denorm
-frame so lookups hit cached partitions instead of re-running the ETL; the
-analytics endpoints collect only ranked top-N results (see api/app.py).
+Scale/serving notes: each stop-lookup endpoint is ONE document fetch
+(``queries.timetable.stop_services``: one narrow Spark job, the
+reference's ``find_one``) and then pure-Python shaping of that stop's
+services (the ``*_body`` shapers beside it) — the Spark ``get_*``
+operators in queries/timetable.py are the set-oriented batch path and
+the reference the shapers are tested against.  Pass a ``.persist()``-ed
+(or bucketed-by-stop_id) denorm frame so the fetch hits cached
+partitions instead of re-running the ETL.  ``/get_stops`` and the
+unknown-stop checks answer from the stop list collected at app build
+(zero Spark jobs); the analytics endpoints collect only ranked top-N
+results (see api/app.py).
 Flask itself is optional: the module import-gates it so the engine stays
 usable where Flask isn't installed.
 """
 
 from __future__ import annotations
-
-from typing import Any, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,19 +62,6 @@ except ImportError:  # pragma: no cover
     Flask = None
 
 
-def wrap_clock_time(t: Optional[str]) -> str:
-    """GTFS '25:30:00' -> '01:30:00' — the edge twin of the reference's
-    ``simplify_time`` (`Mongo/app.py:177-181`), which strips the pandas
-    Timedelta day part from the stored string."""
-    if not t:
-        return ""
-    try:
-        h = int(str(t).split(":", 1)[0])
-    except ValueError:
-        return str(t)
-    return f"{h % 24:02d}:" + str(t).split(":", 1)[1]
-
-
 def create_app(analytics: TransitAPI, denorm: DataFrame):
     """Build the Flask app over a ``TransitAPI`` (live or fast backend)
     and the denormalized stop table (`jobs/denormalize.py`)."""
@@ -79,27 +71,33 @@ def create_app(analytics: TransitAPI, denorm: DataFrame):
                           "directly")
     app = Flask("public_transit_data_platform_sql_nosql_spark")
 
-    # find_one-existence analog, serving-path shape: collect the stop-id
-    # SET once at app build (bounded: one short string per physical stop
-    # — a few MB even for a national feed) so the 404 check is a Python
-    # set probe instead of a per-request Spark filter job.  Keeps every
-    # endpoint at ONE Spark job per request; `refresh_stops` re-reads the
-    # set after a denorm reload.
-    # one-element holder so refresh swaps the WHOLE set atomically —
+    # find_one-existence analog, serving-path shape: collect the stop
+    # list once at app build (bounded: three short strings per physical
+    # stop — a few MB even for a national feed) so the 404 check is a
+    # Python set probe and /get_stops a prebuilt list, neither a
+    # per-request Spark job; `refresh_stops` re-reads both after a denorm
+    # reload.  The list keeps tt.get_stops' order: (stop_name, stop_id)
+    # ascending, nulls first.
+    # one-element holder so refresh swaps id set AND list atomically —
     # clear()-then-update would 404 valid stops for concurrent requests
     # during the (potentially seconds-long, disk-backed) rebuild window
-    known_stops: list[frozenset[str]] = [frozenset()]
+    stops: list[tuple[frozenset[str], list[dict]]] = [(frozenset(), [])]
+
+    def _nulls_first(v):
+        return (v is not None, v or "")
 
     def refresh_stops() -> None:
-        known_stops[0] = frozenset(
-            r["stop_id"] for r in denorm.select("stop_id").collect()
-        )
+        rows = denorm.select("stop_id", "stop_name", "stop_code").collect()
+        rows.sort(key=lambda r: (_nulls_first(r["stop_name"]),
+                                 _nulls_first(r["stop_id"])))
+        stops[0] = (frozenset(r["stop_id"] for r in rows),
+                    [r.asDict() for r in rows])
 
     refresh_stops()
     app.refresh_stops = refresh_stops
 
     def _stop_exists(stop_id: str) -> bool:
-        return stop_id in known_stops[0]
+        return stop_id in stops[0][0]
 
     # -- analytics (SQL/app.py:81-126) ----------------------------------
 
@@ -127,10 +125,7 @@ def create_app(analytics: TransitAPI, denorm: DataFrame):
 
     @app.get("/get_stops")
     def get_stops():
-        rows = tt.get_stops(denorm).collect()
-        return jsonify([{"stop_id": r["stop_id"],
-                         "stop_name": r["stop_name"],
-                         "stop_code": r["stop_code"]} for r in rows])
+        return jsonify(stops[0][1])
 
     @app.get("/get_timetable")
     def get_timetable():
@@ -139,26 +134,7 @@ def create_app(analytics: TransitAPI, denorm: DataFrame):
             return jsonify({"error": "Missing 'stop_id' parameter"}), 400
         if not _stop_exists(stop_id):
             return jsonify({"error": f"Stop ID not found: {stop_id}"}), 404
-        # Null group keys become the literal "null" key — what plain
-        # json.dumps emits for a None dict key.  DELIBERATE deviation:
-        # Flask's sort_keys jsonify raises on a dict mixing None and str
-        # keys, so the reference app 500s on a stop whose services mix
-        # null and named routes; emitting the unsorted-dumps key shape
-        # keeps the endpoint total without inventing new labels.
-        sched: dict[str, dict[str, list[str]]] = {}
-        for r in tt.get_timetable(denorm, stop_id).collect():
-            route = ("null" if r["route_long_name"] is None
-                     else r["route_long_name"])
-            head = ("null" if r["trip_headsign"] is None
-                    else r["trip_headsign"])
-            by_head = sched.setdefault(route, {})
-            if head in by_head:
-                # a group genuinely named 'null' aliasing the None key:
-                # merge (re-sorted) rather than clobber
-                by_head[head] = sorted(by_head[head] + list(r["times"]))
-            else:
-                by_head[head] = list(r["times"])
-        return jsonify(sched)
+        return jsonify(tt.timetable_body(tt.stop_services(denorm, stop_id)))
 
     @app.get("/get_routes_for_stop")
     def get_routes_for_stop():
@@ -167,16 +143,9 @@ def create_app(analytics: TransitAPI, denorm: DataFrame):
             return jsonify({"error": "Missing 'stop_id' parameter"}), 400
         if not _stop_exists(stop_id):
             return jsonify([])
-        rows = tt.get_routes_for_stop(
-            denorm, stop_id, request.args.get("service_id")).collect()
-        # the reference drops null short names and str-casts
-        # (`Mongo/app.py:140-145`)
-        pairs = sorted(
-            {(str(r["route_short_name"]), str(r["trip_headsign"]))
-             for r in rows if r["route_short_name"] is not None}
-        )
-        return jsonify([{"route_short_name": s, "trip_headsign": h}
-                        for s, h in pairs])
+        return jsonify(tt.routes_for_stop_body(
+            tt.stop_services(denorm, stop_id),
+            request.args.get("service_id")))
 
     @app.get("/get_arrivals")
     def get_arrivals():
@@ -189,32 +158,11 @@ def create_app(analytics: TransitAPI, denorm: DataFrame):
         if not _stop_exists(stop_id):
             # flat empty shape even for grouped requests — reference quirk
             return jsonify({"times": [], "count": 0})
+        services = tt.stop_services(denorm, stop_id)
         if rsn is not None and headsign is not None:
-            rows = tt.get_arrivals_flat(
-                denorm, stop_id, rsn, headsign, sid).collect()
-            times = sorted(t for t in
-                           (wrap_clock_time(r["departure_time"])
-                            for r in rows) if t)
-            return jsonify({"times": times, "count": len(times)})
-        groups = []
-        total = 0
-        for r in tt.get_arrivals_grouped(denorm, stop_id,
-                                         service_id=sid).collect():
-            times = sorted(t for t in
-                           (wrap_clock_time(x) for x in r["times"]) if t)
-            total += len(times)
-            groups.append({
-                "route_id": r["route_id"] or "",
-                "route_short_name": (str(r["route_short_name"])
-                                     if r["route_short_name"] is not None
-                                     else ""),
-                "trip_headsign": r["trip_headsign"],
-                "times": times,
-                "count": len(times),
-            })
-        groups.sort(key=lambda g: (g["route_short_name"],
-                                   g["trip_headsign"]))
-        return jsonify({"groups": groups, "total_count": total})
+            return jsonify(tt.arrivals_flat_body(services, rsn, headsign,
+                                                 sid))
+        return jsonify(tt.arrivals_grouped_body(services, sid))
 
     # -- geo extension (the reference renders stops on a Leaflet map but
     #    never serves a spatial QUERY; this is the "stops near me" lookup

@@ -22,6 +22,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# a well-formed GTFS time; the timetable's Python display path
+# (queries/timetable.py) matches the same pattern
+GTFS_TIME_PATTERN = r"^\d{1,3}:\d{2}:\d{2}$"
+
 
 def time_to_secs(col: Column | str) -> Column:
     """``"HH:MM:SS"`` (H may exceed 24 and be 1-3 digits) -> seconds since
@@ -33,7 +37,7 @@ def time_to_secs(col: Column | str) -> Column:
         + parts.getItem(1).cast("int") * 60
         + parts.getItem(2).cast("int")
     )
-    return F.when(c.rlike(r"^\d{1,3}:\d{2}:\d{2}$"), secs).cast("int")
+    return F.when(c.rlike(GTFS_TIME_PATTERN), secs).cast("int")
 
 
 def secs_to_time(col: Column | str) -> Column:

@@ -98,3 +98,24 @@ def test_compact_record_is_single_parseable_line():
     line = json.dumps(compact_record(_worst_case_record()))
     assert "\n" not in line
     assert json.loads(line)["metric"] == "headline_query_wall_time_total"
+
+
+def test_raising_section_still_prints_record(monkeypatch, capsys):
+    """A vector-serving section that raises is logged to stderr and the
+    headline record still prints as the last, parseable stdout line."""
+    import bench
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("section exploded")
+
+    monkeypatch.setattr(bench, "_vector_serving_section", boom)
+    monkeypatch.delenv("SPARK_GRAFT_RECORD_OUT", raising=False)
+    out = {"metric": "headline_query_wall_time_total", "value": 12.5,
+           "unit": "sec", "queries": {"q1_busiest_stops": 12.5}}
+    bench._finish_record(None, out)
+    captured = capsys.readouterr()
+    rec = json.loads(captured.out.strip().splitlines()[-1])
+    assert rec["value"] == 12.5
+    assert not any(k.startswith("vector_serving") for k in rec)
+    assert "# vector_serving FAILED: RuntimeError('section exploded')" \
+        in captured.err

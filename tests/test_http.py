@@ -9,15 +9,19 @@ import pytest
 
 flask = pytest.importorskip("flask")
 
+from pyspark.sql import functions as F
+
 from public_transit_data_platform_sql_nosql_spark.api import TransitAPI
-from public_transit_data_platform_sql_nosql_spark.api.http import (
-    create_app,
-    wrap_clock_time,
-)
+from public_transit_data_platform_sql_nosql_spark.api.http import create_app
 from public_transit_data_platform_sql_nosql_spark.jobs.denormalize import (
     denormalize_stop_timetables,
+    write_stop_timetables,
 )
+from public_transit_data_platform_sql_nosql_spark.plans.inspect import jobs_run
 from public_transit_data_platform_sql_nosql_spark.queries import timetable as tt
+from public_transit_data_platform_sql_nosql_spark.queries.timetable import (
+    wrap_clock_time,
+)
 from public_transit_data_platform_sql_nosql_spark.sources.tpch_adapter import (
     register_gtfs_views,
 )
@@ -52,13 +56,17 @@ def test_analytics_routes_match_transit_api(web):
     assert all(r["service_id"] == "all" for r in p["routes"])
 
 
-def test_get_stops_sorted(web):
+def test_get_stops_sorted(web, spark):
     client, _, denorm = web
     rows = client.get("/get_stops").get_json()
     assert rows and set(rows[0]) == {"stop_id", "stop_name", "stop_code"}
     names = [r["stop_name"] for r in rows]
     assert names == sorted(names)
     assert len(rows) == denorm.count()
+    # served from the list collected at app build: no Spark job, and the
+    # Spark operator's rows, in its order
+    assert jobs_run(spark, lambda: client.get("/get_stops")) == 0
+    assert rows == [r.asDict() for r in tt.get_stops(denorm).collect()]
 
 
 def test_get_timetable_shape_and_errors(web):
@@ -210,24 +218,25 @@ def test_get_timetable_null_group_keys_serialize(web):
     assert "null" in {h for route in sched.values() for h in route}
 
 
-def test_one_spark_job_per_timetable_request(web, spark):
-    """The 404 existence check is a driver-side set probe, not a Spark
-    job: an endpoint call runs exactly as many jobs as its underlying
-    query collect does alone (AQE may split one action into several
-    jobs, so compare — don't assert a literal 1)."""
-    from public_transit_data_platform_sql_nosql_spark.plans.inspect import (
-        jobs_run,
-    )
+LOOKUPS = {
+    "timetable": "/get_timetable?stop_id={}",
+    "routes": "/get_routes_for_stop?stop_id={}",
+    "arrivals": "/get_arrivals?stop_id={}",
+    "arrivals_flat": ("/get_arrivals?stop_id={}&route_short_name=NATION_3"
+                      "&trip_headsign=4-NOT%20SPECIFIED"),
+}
 
-    client, _, denorm = web
-    baseline = jobs_run(
-        spark, lambda: tt.get_timetable(denorm, STOP).collect())
-    via_http = jobs_run(
-        spark, lambda: client.get(f"/get_timetable?stop_id={STOP}"))
-    assert via_http == baseline
-    # and the unknown-stop 404 itself costs zero Spark jobs
-    assert jobs_run(
-        spark, lambda: client.get("/get_timetable?stop_id=nope")) == 0
+
+@pytest.mark.parametrize("endpoint", sorted(LOOKUPS))
+def test_one_spark_job_per_timetable_request(web, spark, endpoint):
+    """A stop lookup is one document fetch (one narrow Spark job) shaped
+    in Python; the unknown-stop answer is a Python set probe that
+    costs zero jobs."""
+    client, _, _ = web
+    url = LOOKUPS[endpoint]
+    assert client.get(url.format(STOP)).status_code == 200
+    assert jobs_run(spark, lambda: client.get(url.format(STOP))) == 1
+    assert jobs_run(spark, lambda: client.get(url.format("nope"))) == 0
 
 
 def test_wrap_clock_time():
@@ -280,3 +289,168 @@ def test_stops_nearby_validation(web):
         "/api/stops_nearby?lat=43.5&lon=abc").status_code == 400
     assert client.get(
         "/api/stops_nearby?lat=43.5&lon=-79.5&radius=-1").status_code == 400
+
+
+# -- parity of the served bodies with the Spark reference operators --------
+
+
+def _services(denorm):
+    return denorm.select("stop_id", F.explode("upcoming_services").alias("s"))
+
+
+def _public_valid():
+    return (F.col("s.service_id").isin("1", "2", "3")
+            & F.col("s.trip_headsign").isNotNull()
+            & (F.col("s.trip_headsign") != "NOT IN SERVICE"))
+
+
+def _shared_null_short_name_stop(denorm) -> str:
+    """A stop where two routes with a null short name share a headsign:
+    their grouped /get_arrivals groups tie on (route_short_name,
+    trip_headsign) and only route_id orders them."""
+    probe = (
+        _services(denorm)
+        .filter(_public_valid() & F.col("s.route_short_name").isNull())
+        .groupBy("stop_id", "s.trip_headsign")
+        .agg(F.countDistinct("s.route_id").alias("routes"))
+        .filter(F.col("routes") > 1)
+        .orderBy("stop_id").limit(1).collect()
+    )
+    assert probe, "fixture should have null-short-name routes sharing a " \
+                  "headsign at some stop"
+    return probe[0]["stop_id"]
+
+
+def _parity_stops(denorm) -> list[str]:
+    """STOP plus one stop per edge case the shapers must reproduce: a null
+    departure time, mixed null and named headsigns, a public NOT IN
+    SERVICE headsign, and null-short-name routes sharing a headsign."""
+    svc = _services(denorm)
+    first = lambda df: df.select("stop_id").orderBy("stop_id").first()[0]
+    null_time = first(svc.filter(F.col("s.departure_time").isNull()))
+    mixed = first(
+        svc.groupBy("stop_id")
+        .agg(F.sum(F.col("s.trip_headsign").isNull().cast("int"))
+             .alias("nulls"),
+             F.sum(F.col("s.trip_headsign").isNotNull().cast("int"))
+             .alias("named"))
+        .filter((F.col("nulls") > 0) & (F.col("named") > 0)))
+    nis = first(svc.filter(
+        (F.col("s.trip_headsign") == "NOT IN SERVICE")
+        & F.col("s.service_id").isin("1", "2", "3")
+        & F.col("s.route_short_name").isNotNull()))
+    return list(dict.fromkeys(
+        [STOP, null_time, mixed, nis, _shared_null_short_name_stop(denorm)]))
+
+
+def _reference_bodies(denorm, stop: str) -> dict[str, object]:
+    """url -> the JSON body built from the Spark operators' collects: the
+    grouped, flat and timetable shaping the HTTP layer applied to them
+    before lookups became one document fetch."""
+    from urllib.parse import quote
+
+    out = {}
+    sched: dict = {}
+    for r in tt.get_timetable(denorm, stop).collect():
+        by_head = sched.setdefault(
+            "null" if r["route_long_name"] is None else r["route_long_name"],
+            {})
+        head = "null" if r["trip_headsign"] is None else r["trip_headsign"]
+        by_head[head] = sorted(by_head.get(head, []) + list(r["times"]))
+    out[f"/get_timetable?stop_id={stop}"] = sched
+    drills = set()
+    for sid in (None, "1", "2", "3", "9"):
+        q = f"stop_id={stop}" + ("" if sid is None else f"&service_id={sid}")
+        rows = tt.get_routes_for_stop(denorm, stop, sid).collect()
+        out[f"/get_routes_for_stop?{q}"] = [
+            {"route_short_name": s, "trip_headsign": h}
+            for s, h in sorted({(str(r["route_short_name"]),
+                                 str(r["trip_headsign"]))
+                                for r in rows
+                                if r["route_short_name"] is not None})]
+        groups = []
+        for r in tt.get_arrivals_grouped(denorm, stop,
+                                         service_id=sid).collect():
+            times = sorted(t for t in map(wrap_clock_time, r["times"]) if t)
+            groups.append({"route_id": r["route_id"] or "",
+                           "route_short_name": (
+                               "" if r["route_short_name"] is None
+                               else str(r["route_short_name"])),
+                           "trip_headsign": r["trip_headsign"],
+                           "times": times, "count": len(times)})
+            if sid is None and r["route_short_name"] is not None:
+                drills.add((r["route_short_name"], r["trip_headsign"]))
+        groups.sort(key=lambda g: (g["route_short_name"], g["trip_headsign"],
+                                   g["route_id"]))
+        out[f"/get_arrivals?{q}"] = {
+            "groups": groups, "total_count": sum(g["count"] for g in groups)}
+    for r in (_services(denorm).filter(f"stop_id = '{stop}'")
+              .filter("s.trip_headsign = 'NOT IN SERVICE'")
+              .select("s.route_short_name").distinct().collect()):
+        if r[0] is not None:
+            drills.add((r[0], "NOT IN SERVICE"))
+    # drill-downs: every NOT IN SERVICE pair, plus the first two named
+    # groups (with and without a service_id) to bound the test's jobs
+    named = sorted(d for d in drills if d[1] != "NOT IN SERVICE")[:2]
+    for rsn, head in sorted(d for d in drills
+                            if d[1] == "NOT IN SERVICE" or d in named):
+        for sid in (None, "1"):
+            times = sorted(
+                t for t in (wrap_clock_time(r["departure_time"]) for r in
+                            tt.get_arrivals_flat(denorm, stop, rsn, head,
+                                                 sid).collect()) if t)
+            url = (f"/get_arrivals?stop_id={stop}"
+                   f"&route_short_name={quote(rsn)}"
+                   f"&trip_headsign={quote(head)}"
+                   + ("" if sid is None else f"&service_id={sid}"))
+            out[url] = {"times": times, "count": len(times)}
+    return out
+
+
+def test_lookup_bodies_match_spark_operators(web):
+    """Every stop-lookup body equals the one built from the Spark
+    reference operators (tt.get_*), over stops that hit each edge case
+    and every service_id mode, flat drill-downs included."""
+    client, _, denorm = web
+    for stop in _parity_stops(denorm):
+        for url, want in _reference_bodies(denorm, stop).items():
+            resp = client.get(url)
+            assert resp.status_code == 200, url
+            assert resp.get_json() == want, url
+
+
+def test_lookup_bodies_from_bucketed_store(web, spark, tmp_path):
+    """A bucketed on-disk doc store serves the same bodies: the document
+    fetch prunes to one stop_bucket directory and is still one job."""
+    client, api, denorm = web
+    store = str(tmp_path / "doc_store")
+    write_stop_timetables(denorm, store, bucket_stops=True)
+    stored = spark.read.parquet(store)
+    disk = create_app(api, stored).test_client()
+    urls = [u.format(STOP) for u in LOOKUPS.values()]
+    urls += [u + "&service_id=2" for u in urls[1:]]
+    for url in urls:
+        assert disk.get(url).get_json() == client.get(url).get_json(), url
+    assert jobs_run(spark, lambda: disk.get(
+        f"/get_timetable?stop_id={STOP}")) == 1
+    assert disk.get("/get_stops").get_json() == \
+        client.get("/get_stops").get_json()
+
+
+def test_grouped_arrivals_full_key_order(web):
+    """Groups that tie on (route_short_name, trip_headsign) — routes with
+    a null short name rendered as "" — come back ordered by route_id, in
+    the HTTP body and in the Spark operator alike."""
+    client, _, denorm = web
+    stop = _shared_null_short_name_stop(denorm)
+    groups = client.get(f"/get_arrivals?stop_id={stop}").get_json()["groups"]
+    keys = [(g["route_short_name"], g["trip_headsign"], g["route_id"])
+            for g in groups]
+    assert keys == sorted(keys)
+    ties = [k[:2] for k in keys]
+    assert any(ties.count(t) > 1 for t in ties)
+    rows = tt.get_arrivals_grouped(denorm, stop).collect()
+    spark_keys = [(r["route_short_name"] is not None,
+                   r["route_short_name"] or "", r["trip_headsign"],
+                   r["route_id"]) for r in rows]
+    assert spark_keys == sorted(spark_keys)
