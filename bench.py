@@ -208,23 +208,30 @@ def main() -> None:
         "queries": times,
         "sf": sf,
     }
-    sf1 = _sf1_section(spark, qs)
-    if sf1:
-        out["sf1"] = sf1
-    sf10 = _sf10_section(spark, qs)
-    if sf10:
-        out["sf10"] = sf10
-    _finish_record(spark, out)
+    # the headline record goes out BEFORE any auxiliary section: a section
+    # that takes the process down (r15: the sf10 one lost the 32-core
+    # record) still leaves a parseable record line on stdout
+    print(json.dumps(compact_record(out)), flush=True)
+    _auxiliary_sections(spark, qs, out)
     spark.stop()
 
 
-def _guarded_section(label: str, *args, **kwargs) -> dict | None:
-    """One ``_vector_serving_section`` call that cannot lose the record:
-    a raising section (r15: the sf10 one took the whole 32-core record
-    with it) logs ``# <label> FAILED: <exc>`` to stderr and yields None,
-    so the headline record still prints."""
+def _auxiliary_sections(spark, qs, out: dict) -> None:
+    """Add the sf1 and sf10 points to ``out``, each guarded, then finish
+    the record (vector serving, the final record line)."""
+    for key, section in (("sf1", _sf1_section), ("sf10", _sf10_section)):
+        rec = _guarded_section(key, section, spark, qs)
+        if rec:
+            out[key] = rec
+    _finish_record(spark, out)
+
+
+def _guarded_section(label: str, section, *args, **kwargs) -> dict | None:
+    """One auxiliary ``section(*args, **kwargs)`` call that cannot lose
+    the record: a raising section logs ``# <label> FAILED: <exc>`` and its
+    traceback to stderr and yields None, so the record still prints."""
     try:
-        return _vector_serving_section(*args, **kwargs)
+        return section(*args, **kwargs)
     except Exception as exc:  # noqa: BLE001 — any failure, same handling
         print(f"# {label} FAILED: {exc!r}", file=sys.stderr)
         traceback.print_exc(file=sys.stderr)
@@ -234,7 +241,8 @@ def _guarded_section(label: str, *args, **kwargs) -> dict | None:
 def _finish_record(spark, out: dict) -> None:
     """Add the vector-serving sections to ``out`` and print the record as
     the last stdout line."""
-    vecserve = _guarded_section("vector_serving", spark, SF_DIR)
+    vecserve = _guarded_section("vector_serving", _vector_serving_section,
+                                spark, SF_DIR)
     # the corpus where pruning can WIN: 20k vectors (sf1 fixture) —
     # the sf0.1 section's 2,000 vectors are ~100x too small for probe
     # savings to beat per-probe overhead, so the pruned kinds' trend
@@ -243,7 +251,8 @@ def _finish_record(spark, out: dict) -> None:
     vs1 = None
     if (os.environ.get("SPARK_GRAFT_VECSERVE_SF1", "1") != "0"
             and os.path.exists(f"{sf1_dir}/embeddings.parquet")):
-        vs1 = _guarded_section("vector_serving_sf1", spark, sf1_dir)
+        vs1 = _guarded_section("vector_serving_sf1",
+                               _vector_serving_section, spark, sf1_dir)
     # r14: the IVF-vs-flat CROSSOVER point — 200k vectors (sf10), the
     # corpus the r13 README claimed pruning "pays at 100x" without a
     # measurement.  Only the no-training/coarse-only kinds run here
@@ -255,7 +264,7 @@ def _finish_record(spark, out: dict) -> None:
     if (os.environ.get("SPARK_GRAFT_VECSERVE_SF10", "1") != "0"
             and os.path.exists(f"{sf10_dir}/embeddings.parquet")):
         vs10 = _guarded_section(
-            "vector_serving_sf10", spark, sf10_dir,
+            "vector_serving_sf10", _vector_serving_section, spark, sf10_dir,
             kinds=("bq", "ivf_bq", "sq8", "ivf_sq8"))
     # the RECORD carries ONE vector section — the LARGEST fixture's
     # (sf10 crossover > sf1 frontier > headline SF): the final stdout

@@ -16,43 +16,77 @@ whole-week rows ``service_id='4'``, while the SQL backend keys by long
 name only and labels them ``'all'`` (`csv_backend.py:100-103,175-191` vs
 `sql_utils.py:190,390`).
 
-Scale notes (beyond the reference, which collects everything):
+Serving notes (beyond the reference, which collects everything):
 
-- Q4 live mode computes ``max_hour`` as a 1-row aggregate and restricts
-  detail rows to the ranked routes with a broadcast left-semi join BEFORE
-  collecting — the reference ships every route's rows to Python and drops
-  them there (`sql_utils.py:341-369`).
+- Each live request runs ONE Spark job.  Like the reference's app-start
+  view (`SQL/app.py:73`, `sql_utils.py:46-70`), ``TransitAPI`` keeps a
+  service-unfiltered partial aggregate per query, built and persisted on
+  the first request that needs it and dropped by ``refresh()``: stop
+  events per (stop, route, service) for Q1 and Q3, hash-partitioned by
+  stop_id; per-trip stats for Q2 and the hourly view for Q4, each in one
+  partition.  A request is one plan over its partial (queries/q*), with
+  no exchange, so a ranked request is one job (``limit='all'`` on Q1/Q3
+  adds the global sort's sampling and shuffle).
+- Q4's ``max_hour`` and route ranking, and Q2's whole-week rows, are
+  window aggregates in that one plan, and only the ranked routes' rows
+  are collected -- the reference ships every route's rows to Python and
+  drops them there (`sql_utils.py:341-369`).
 - Where the reference's loose MySQL ``GROUP BY`` picks an arbitrary
-  route_short_name per collapsed long name, we pick ``min()`` —
+  route_short_name per collapsed long name, we pick ``min()`` --
   deterministic under retries/partitioning (documented deviation).
 """
 
 from __future__ import annotations
 
 import threading
-from typing import Any, Optional
+from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..jobs.precompute import precomputed_available, read_precomputed
-from ..operators.params import (
-    apply_limit,
-    normalize_service_id,
-)
-from ..queries.common import hourly_frequency
-from ..queries.q1_busiest_stops import q1_busiest_stops
+from ..operators.params import apply_limit, normalize_service_id
+from ..queries.q1_busiest_stops import q1_from_counts, stop_route_counts
 from ..queries.q2_duration_speed import (
-    q2_per_service_breakdown,
     q2_route_stats,
-    trip_stats_joined,
+    q2_stats_partial,
+    q2_whole_week_ranked,
 )
-from ..queries.q3_transfer_points import q3_transfer_points
+from ..queries.q3_transfer_points import q3_from_counts
+from ..queries.q4_hourly_frequency import hourly_named, q4_detail_ranked
 from . import shapes
 
 
 def _dicts(df: DataFrame) -> list[dict]:
     return [r.asDict(recursive=True) for r in df.collect()]
+
+
+class _SessionCache:
+    """Persisted frames built on first use and dropped together.  The
+    lock serializes first builds: under a threaded server, two
+    concurrent first calls would otherwise both persist a frame and
+    orphan one cached copy for the session."""
+
+    def __init__(self) -> None:
+        self._frames: dict[str, DataFrame] = {}
+        self._lock = threading.Lock()
+
+    def get(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """The frame ``name``, (re)built and persisted unless still
+        cached.  Spark's CacheManager keys cached data by plan, so APIs
+        over the same feed share one copy, and another API's
+        ``refresh()`` may have dropped it."""
+        with self._lock:
+            df = self._frames.get(name)
+            if df is None or not df.storageLevel.useMemory:
+                df = self._frames[name] = build().persist()
+            return df
+
+    def clear(self) -> None:
+        with self._lock:
+            for df in self._frames.values():
+                df.unpersist()
+            self._frames.clear()
 
 
 class TransitAPI:
@@ -61,65 +95,34 @@ class TransitAPI:
         self.spark = spark
         self.gtfs = gtfs
         self.precompute_dir = precompute_dir
-        # session-scoped Q4 hourly / Q2 trip-stats caches (built lazily
-        # on first live call); the lock serializes the first build —
-        # under a threaded Flask server, two concurrent first calls would
-        # otherwise both persist the frame and orphan one cached copy for
-        # the session
-        self._q4_joined: Optional[DataFrame] = None
-        self._q4_lock = threading.Lock()
-        self._q2_joined: Optional[DataFrame] = None
-        self._q2_lock = threading.Lock()
+        # the live path's session-scoped partial aggregates (module notes)
+        self._cache = _SessionCache()
 
     def _fast(self, name: str) -> bool:
         return (self.precompute_dir is not None
                 and precomputed_available(self.precompute_dir, name))
 
-    def _hourly_joined(self) -> DataFrame:
-        """The reference creates ``vw_hourly_frequency`` ONCE at app start
-        and reuses it across requests (`sql_utils.py:46-70`, `SQL/app.py:73`).
-        Spark analog: build hourly ⋈ routes once per ``TransitAPI``
-        lifetime, UNfiltered by service, and keep it persisted — every
-        q4() call (any service mode) then plans as an InMemoryTableScan
-        plus a filter instead of re-aggregating stop_times.  Call
-        ``refresh()`` after the underlying GTFS frames change."""
-        with self._q4_lock:
-            if self._q4_joined is None:
-                hourly = hourly_frequency(self.gtfs["stop_times"],
-                                          self.gtfs["trips"])
-                self._q4_joined = hourly.join(
-                    F.broadcast(self.gtfs["routes"].select(
-                        "route_id", "route_short_name", "route_long_name")),
-                    "route_id",
-                ).persist()
-            return self._q4_joined
+    def _stop_route_counts(self) -> DataFrame:
+        g = self.gtfs
+        return self._cache.get("stop_route_counts", lambda: stop_route_counts(
+            g["stop_times"], g["trips"], g["stops"]))
 
     def _q2_stats_joined(self) -> DataFrame:
-        """Session-scoped per-trip stats ⋈ routes — the Q2 analog of
-        ``_hourly_joined`` (the reference builds its Q2 CTE's source view
-        once at app start and reuses it across requests, `SQL/app.py:73`).
-        Q2 is the heaviest live endpoint; caching the service-UNfiltered
-        per-trip aggregation means every q2() mode (weekday, whole-week,
-        breakdown) re-aggregates an InMemoryTableScan of ~|trips| rows
-        instead of re-scanning stop_times per request."""
-        with self._q2_lock:
-            if self._q2_joined is None:
-                self._q2_joined = trip_stats_joined(
-                    self.gtfs["stop_times"], self.gtfs["trips"],
-                    self.gtfs["routes"]).persist()
-            return self._q2_joined
+        g = self.gtfs
+        return self._cache.get("q2_stats", lambda: q2_stats_partial(
+            g["stop_times"], g["trips"], g["routes"]))
+
+    def _hourly_joined(self) -> DataFrame:
+        g = self.gtfs
+        return self._cache.get("hourly", lambda: hourly_named(
+            g["stop_times"], g["trips"], g["routes"]))
 
     def refresh(self) -> None:
-        """Invalidate session-scoped caches (the reference's equivalent is
-        restarting the app / re-running ensure_view)."""
-        with self._q4_lock:
-            if self._q4_joined is not None:
-                self._q4_joined.unpersist()
-                self._q4_joined = None
-        with self._q2_lock:
-            if self._q2_joined is not None:
-                self._q2_joined.unpersist()
-                self._q2_joined = None
+        """Drop the session-scoped partials (the reference's equivalent
+        is restarting the app / re-running ensure_view); the next live
+        request rebuilds the one it needs.  Call after the underlying
+        GTFS frames change."""
+        self._cache.clear()
 
     # -- Q1 ---------------------------------------------------------------
 
@@ -134,9 +137,7 @@ class TransitAPI:
                 limit,
             ).drop("service_id")
         else:
-            df = q1_busiest_stops(self.gtfs["stop_times"],
-                                  self.gtfs["trips"], self.gtfs["stops"],
-                                  service_id, limit)
+            df = q1_from_counts(self._stop_route_counts(), service_id, limit)
         return shapes.to_json_safe(shapes.shape_q1_rows(_dicts(df)))
 
     # -- Q3 ---------------------------------------------------------------
@@ -152,9 +153,7 @@ class TransitAPI:
                 limit,
             ).drop("service_id")
         else:
-            df = q3_transfer_points(self.gtfs["stop_times"],
-                                    self.gtfs["trips"], self.gtfs["stops"],
-                                    service_id, limit)
+            df = q3_from_counts(self._stop_route_counts(), service_id, limit)
         return shapes.to_json_safe(shapes.shape_q3_rows(_dicts(df)))
 
     # -- Q2 ---------------------------------------------------------------
@@ -165,36 +164,13 @@ class TransitAPI:
         if self._fast("q2_duration_speed"):
             return shapes.to_json_safe(self._q2_fast(sid, limit))
         if sid is None:
-            # the ranked frame feeds TWO actions (the global-rows collect
-            # and the per-service breakdown's semi-join side): persist for
-            # the call span so the trip_stats aggregation runs once, and
-            # keep the plan closed — the breakdown semi-joins the ranked
-            # DataFrame directly instead of round-tripping route names
-            # through the driver (collect -> createDataFrame is the
-            # pattern this repo's docstrings warn against).
-            ranked = q2_route_stats(self.gtfs["stop_times"],
-                                    self.gtfs["trips"], self.gtfs["routes"],
-                                    None, limit, whole_week=True,
-                                    stats_joined=self._q2_stats_joined()
-                                    ).persist()
-            try:
-                rep_short = (
-                    self.gtfs["routes"]
-                    .groupBy("route_long_name")
-                    .agg(F.min("route_short_name").alias("route_short_name"))
-                )
-                global_rows = _dicts(
-                    ranked.join(F.broadcast(rep_short), "route_long_name",
-                                "left")
-                )
-                service_rows = _dicts(q2_per_service_breakdown(
-                    self.gtfs["stop_times"], self.gtfs["trips"],
-                    self.gtfs["routes"],
-                    ranked.select("route_long_name"),
-                    stats_joined=self._q2_stats_joined(),
-                ))
-            finally:
-                ranked.unpersist()
+            rows = _dicts(q2_whole_week_ranked(self._q2_stats_joined(),
+                                               limit))
+            global_rows = list({r["rank"]: r["route"] for r in rows}.values())
+            # a null long name gets no drill-down rows (the reference's
+            # membership join never matches it)
+            service_rows = [r for r in rows
+                            if r["route_long_name"] is not None]
             payload = shapes.shape_q2_whole_week(global_rows, service_rows)
         else:
             rows = _dicts(q2_route_stats(
@@ -221,9 +197,9 @@ class TransitAPI:
         if sid is not None:
             return shapes.shape_q2_single_service(rows)
         key = ("route_long_name", "route_short_name")
-        # semi-join the ranked frame DIRECTLY (closed plan, same shape as
-        # the live q2 path) — the collected rows above are for JSON
-        # shaping only, never round-tripped back into a DataFrame
+        # semi-join the ranked frame DIRECTLY (closed plan) — the
+        # collected rows above are for JSON shaping only, never
+        # round-tripped back into a DataFrame
         sel = ranked.select("route_long_name", "route_short_name")
         # svc is the partition key: the isin prunes to 3 directories
         per_service = self.spark.read.parquet(
@@ -248,34 +224,13 @@ class TransitAPI:
         sid = normalize_service_id(service_id)
         if self._fast("q4_hourly_frequency"):
             return shapes.to_json_safe(self._q4_fast(sid, limit))
-        # one q4() call fires THREE actions over the hourly frame (ranked
-        # collect, max_hour agg, detail collect) — all three read the
-        # SESSION-scoped persisted hourly ⋈ routes frame (built once per
-        # TransitAPI lifetime, see _hourly_joined), so repeat calls never
-        # re-aggregate stop_times.
-        joined = self._hourly_joined()
-        if sid is not None:
-            joined = joined.filter(F.col("service_id") == sid)
-        ranked = apply_limit(
-            joined.groupBy("route_long_name")
-            .agg(F.sum("trips_per_hour").alias("total_daily_trips"))
-            .orderBy(F.desc("total_daily_trips"),
-                     F.asc("route_long_name")),
-            limit,
-        )
-        selected = {r["route_long_name"] for r in ranked.collect()}
-        # max_hour over ALL service-filtered rows (reference
-        # semantics), as a 1-row agg instead of a full collect
-        max_hour_row = joined.agg(F.max("hour_of_day")).first()[0]
-        detail = _dicts(
-            joined.join(
-                F.broadcast(ranked.select("route_long_name")),
-                "route_long_name", "left_semi",
-            ).orderBy("route_long_name", "service_id", "hour_of_day",
-                      F.coalesce("route_short_name", F.lit("")))
-        )
-        payload = shapes.shape_q4(detail, selected, sid)
-        payload["max_hour"] = int(max_hour_row or 0)
+        rows = _dicts(q4_detail_ranked(self._hourly_joined(), sid, limit))
+        # a null long name takes a rank but serves no rows (the
+        # reference's membership join never matches it)
+        detail = [r for r in rows if r["route_long_name"] is not None]
+        payload = shapes.shape_q4(
+            detail, {r["route_long_name"] for r in detail}, sid)
+        payload["max_hour"] = int(rows[0]["max_hour"] or 0) if rows else 0
         return shapes.to_json_safe(payload)
 
     def _q4_fast(self, sid: Optional[str], limit: object) -> dict[str, Any]:

@@ -42,8 +42,9 @@ the reference the shapers are tested against.  Pass a ``.persist()``-ed
 (or bucketed-by-stop_id) denorm frame so the fetch hits cached
 partitions instead of re-running the ETL.  ``/get_stops`` and the
 unknown-stop checks answer from the stop list collected at app build
-(zero Spark jobs); the analytics endpoints collect only ranked top-N
-results (see api/app.py).
+(zero Spark jobs).  Each analytics endpoint is ONE Spark job over a
+session-scoped partial aggregate that ``TransitAPI`` builds on first use,
+collecting only the ranked top-N results (see api/app.py).
 Flask itself is optional: the module import-gates it so the engine stays
 usable where Flask isn't installed.
 """

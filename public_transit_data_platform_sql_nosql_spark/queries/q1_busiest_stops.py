@@ -11,6 +11,12 @@ and are broadcast so the only shuffle is the final aggregation on stop_id.
 COUNT(DISTINCT) is exact (golden-matched output -- SURVEY.md A2 forbids
 approx_count_distinct).  Ordering adds a stop_id tiebreak so top-k is
 deterministic across engines (MySQL's was arbitrary under ties).
+
+Serving: ``q1_busiest_stops`` is the batch operator (the DuckDB-oracle
+query).  The live API answers from ``stop_route_counts`` -- a
+service-unfiltered partial aggregate it persists once per session and
+shares with Q3 -- through ``q1_from_counts``, one Spark job per ranked
+request.
 """
 
 from __future__ import annotations
@@ -20,6 +26,8 @@ from pyspark.sql import functions as F
 
 from ..operators.hints import broadcast_if_small
 from ..operators.params import apply_limit, apply_service_filter
+
+STOP_ATTRS = ("stop_id", "stop_code", "stop_name", "stop_lat", "stop_lon")
 
 
 def q1_busiest_stops(
@@ -63,15 +71,55 @@ def q1_busiest_stops(
             F.size(F.collect_set("route_id")).cast("long")
             .alias("num_unique_routes"),
         )
-        .join(
-            F.broadcast(
-                stops.select("stop_id", "stop_code", "stop_name",
-                             "stop_lat", "stop_lon")
-            ),
-            "stop_id",
+        .join(F.broadcast(stops.select(*STOP_ATTRS)), "stop_id")
+        .select(*STOP_ATTRS, "total_trip_events", "num_unique_routes")
+        .orderBy(F.desc("total_trip_events"), F.asc("stop_id"))
+    )
+    return apply_limit(agg, limit)
+
+
+def stop_route_counts(
+    stop_times: DataFrame,
+    trips: DataFrame,
+    stops: DataFrame,
+) -> DataFrame:
+    """Stop events per (stop_id, route_id, service_id) as ``n``, with the
+    stop attributes attached: the partial aggregate the live Q1 and Q3
+    endpoints share (the reference builds its analytics view once at app
+    start, `SQL/app.py:73`).  Any service filter is a filter on these
+    rows, and the whole week is their sum, so one copy serves every
+    mode.
+
+    Hash-partitioned by stop_id: a per-request ``groupBy(stop_id,
+    attrs...)`` over it, its distinct route count included, then plans
+    with no exchange, and ``orderBy`` + ``limit`` runs as
+    TakeOrderedAndProject -- one Spark job per request.  The inner stops
+    join drops stop_ids absent from stops, as the batch operators do."""
+    return (
+        stop_times.select("trip_id", "stop_id")
+        .join(broadcast_if_small(
+            trips.select("trip_id", "route_id", "service_id")), "trip_id")
+        .groupBy("stop_id", "route_id", "service_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .join(F.broadcast(stops.select(*STOP_ATTRS)), "stop_id")
+        .repartition("stop_id")
+    )
+
+
+def q1_from_counts(
+    counts: DataFrame,
+    service_id: object = None,
+    limit: object = 20,
+) -> DataFrame:
+    """Q1 over :func:`stop_route_counts`: the same rows and order as
+    :func:`q1_busiest_stops` (summed events, distinct routes)."""
+    agg = (
+        apply_service_filter(counts, service_id)
+        .groupBy(*STOP_ATTRS)
+        .agg(
+            F.sum("n").alias("total_trip_events"),
+            F.countDistinct("route_id").alias("num_unique_routes"),
         )
-        .select("stop_id", "stop_code", "stop_name", "stop_lat", "stop_lon",
-                "total_trip_events", "num_unique_routes")
         .orderBy(F.desc("total_trip_events"), F.asc("stop_id"))
     )
     return apply_limit(agg, limit)
@@ -104,14 +152,8 @@ def q1_busiest_stops_approx(
     agg = (
         stop_times.select("trip_id", "stop_id")
         .join(broadcast_if_small(t), "trip_id")
-        .join(
-            F.broadcast(
-                stops.select("stop_id", "stop_code", "stop_name",
-                             "stop_lat", "stop_lon")
-            ),
-            "stop_id",
-        )
-        .groupBy("stop_id", "stop_code", "stop_name", "stop_lat", "stop_lon")
+        .join(F.broadcast(stops.select(*STOP_ATTRS)), "stop_id")
+        .groupBy(*STOP_ATTRS)
         .agg(
             F.count(F.lit(1)).alias("total_trip_events"),
             F.approx_count_distinct("route_id", rsd)

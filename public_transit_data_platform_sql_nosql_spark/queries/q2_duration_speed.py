@@ -14,20 +14,36 @@ Semantics preserved exactly (SURVEY.md A5-A8, A12):
 - the overall headline numbers are trip-count-weighted means over the
   selected routes with a ``greatest(sum,1)`` zero guard
   (`sql_utils.py:246-254,284-290`).
+
+Serving: the live API persists ``q2_stats_partial`` once per session and
+answers each request with one plan over it -- ``q2_route_stats`` for one
+service, ``q2_whole_week_ranked`` for the whole week.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.params import apply_limit, apply_service_filter
+from ..operators.params import apply_limit, apply_service_filter, sanitize_limit
 from .common import trip_stats
 
 
 def _speed_kmh() -> F.Column:
     dur = F.col("trip_duration_seconds")
     return F.col("trip_distance") / F.nullif(dur, F.lit(0)) * 3600
+
+
+def _route_measures() -> list[Column]:
+    """Q2's measures over a group of per-trip rows."""
+    dur = F.col("trip_duration_seconds")
+    return [
+        F.count(F.lit(1)).alias("total_trips"),
+        F.avg("trip_distance").alias("avg_trip_distance_km"),
+        (F.avg(dur) / 60.0).alias("avg_duration_min"),
+        (F.stddev_pop(dur) / 60.0).alias("duration_stddev_min"),
+        F.avg(_speed_kmh()).alias("avg_speed_kmh"),
+    ]
 
 
 def route_trip_stats(
@@ -41,16 +57,83 @@ def route_trip_stats(
 def trip_stats_joined(stop_times: DataFrame, trips: DataFrame,
                       routes: DataFrame) -> DataFrame:
     """The service-UNfiltered per-trip stats frame joined to route names —
-    the shared upstream of every Q2 variant.  ``TransitAPI`` persists one
-    of these per session (the analog of the reference's app-start view,
-    `sql_utils.py:46-70`) and passes it back in via ``stats_joined`` so
-    repeat q2 requests re-aggregate an InMemoryTableScan instead of
-    stop_times."""
+    the shared upstream of every batch Q2 variant (the live API's
+    session copy is :func:`q2_stats_partial`)."""
     return trip_stats(stop_times, trips).join(
         F.broadcast(routes.select("route_id", "route_short_name",
                                   "route_long_name")),
         "route_id",
     )
+
+
+def q2_stats_partial(stop_times: DataFrame, trips: DataFrame,
+                     routes: DataFrame) -> DataFrame:
+    """:func:`trip_stats_joined` plus ``rep_short_name`` -- the
+    ``min(route_short_name)`` over the routes sharing a long name, the
+    whole-week payload's route label (deterministic where the
+    reference's loose MySQL ``GROUP BY`` picks any) -- in ONE partition.
+
+    ``TransitAPI`` persists one per session (the analog of the
+    reference's app-start view, `sql_utils.py:46-70`).  The frame holds
+    one row per trip, and in one partition every per-request aggregate,
+    window and global rank over it plans with no exchange: one Spark job
+    per request.  ``repartition(1)`` rather than ``coalesce(1)``: the
+    shuffle keeps the per-trip aggregation beneath it parallel."""
+    rep = routes.groupBy("route_long_name").agg(
+        F.min("route_short_name").alias("rep_short_name"))
+    named = routes.select("route_id", "route_short_name",
+                          "route_long_name").join(rep, "route_long_name",
+                                                  "left")
+    return trip_stats(stop_times, trips).join(
+        F.broadcast(named), "route_id").repartition(1)
+
+
+def q2_whole_week_ranked(stats: DataFrame, limit: object = 20) -> DataFrame:
+    """Whole-week Q2 as one plan over :func:`q2_stats_partial`: one row
+    per (route_long_name, service_id) of the top ``limit`` long names,
+    ordered by ``rank`` then service_id.
+
+    Each row carries the per-service aggregates (the drill-down,
+    :func:`q2_per_service_breakdown`'s columns) and, in the struct
+    ``route``, its long name's whole-week row (:func:`q2_route_stats`
+    with ``whole_week=True``, labelled ``rep_short_name``).  The
+    whole-week means are window sums of the per-service partial sums
+    and counts; ``rank`` is the dense rank over (avg_duration_min desc,
+    route_long_name) -- the batch ranking, so rank <= n keeps the same
+    long names as its limit.  Null long names rank like any name; their
+    drill-down rows are the caller's to drop (the batch breakdown's
+    equi-join never matches them)."""
+    dur, dist, speed = (F.col("trip_duration_seconds"),
+                        F.col("trip_distance"), _speed_kmh())
+    per_service = stats.groupBy("route_long_name", "service_id").agg(
+        *_route_measures(),
+        F.sum(dist).alias("dist_sum"), F.count(dist).alias("dist_n"),
+        F.sum(dur).alias("dur_sum"),
+        F.sum(speed).alias("speed_sum"), F.count(speed).alias("speed_n"),
+        F.min("rep_short_name").alias("rep_short_name"),
+    )
+    by_name = Window.partitionBy("route_long_name")
+
+    def total(c: str) -> Column:
+        return F.sum(c).over(by_name)
+
+    # avg = sum / count, as Spark's Average computes it; a null sum is a
+    # zero count, and null / 0 is null
+    trips = total("total_trips")
+    weekly = per_service.select("*", F.struct(
+        F.col("route_long_name"),
+        F.col("rep_short_name").alias("route_short_name"),
+        trips.alias("total_trips"),
+        (total("dist_sum") / total("dist_n")).alias("avg_trip_distance_km"),
+        (total("dur_sum") / trips / 60.0).alias("avg_duration_min"),
+        (total("speed_sum") / total("speed_n")).alias("avg_speed_kmh"),
+    ).alias("route"))
+    ranked = weekly.withColumn("rank", F.dense_rank().over(Window.orderBy(
+        F.desc("route.avg_duration_min"), F.asc("route_long_name"))))
+    n = sanitize_limit(limit)
+    if n is not None:
+        ranked = ranked.filter(F.col("rank") <= n)
+    return ranked.orderBy("rank", "service_id")
 
 
 def q2_route_stats(
@@ -66,8 +149,9 @@ def q2_route_stats(
 
     ``whole_week`` defaults to True iff no service filter is active, like the
     reference's mode switch (`sql_utils.py:177-178`).  ``stats_joined``
-    (if given) replaces the stop_times re-aggregation — see
-    :func:`trip_stats_joined`; the service filter still applies on top.
+    (if given) replaces the stop_times re-aggregation — a
+    :func:`trip_stats_joined` or :func:`q2_stats_partial` frame; the
+    service filter still applies on top.
     """
     if stats_joined is None:
         stats_joined = trip_stats_joined(stop_times, trips, routes)
@@ -78,14 +162,7 @@ def q2_route_stats(
                   else ["route_long_name", "route_short_name"])
     agg = (
         joined.groupBy(*group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("total_trips"),
-            F.avg("trip_distance").alias("avg_trip_distance_km"),
-            (F.avg("trip_duration_seconds") / 60.0).alias("avg_duration_min"),
-            (F.stddev_pop("trip_duration_seconds") / 60.0)
-            .alias("duration_stddev_min"),
-            F.avg(_speed_kmh()).alias("avg_speed_kmh"),
-        )
+        .agg(*_route_measures())
         .orderBy(F.desc("avg_duration_min"), F.asc("route_long_name"))
     )
     return apply_limit(agg, limit)
@@ -154,26 +231,16 @@ def q2_per_service_breakdown(
     trips: DataFrame,
     routes: DataFrame,
     top_routes: DataFrame,
-    stats_joined: DataFrame | None = None,
 ) -> DataFrame:
     """Whole-week drill-down: per-service rows restricted to the ranked
     routes -- the reference's membership-set semi join J5
-    (`sql_utils.py:196,231-232`).  ``stats_joined`` as in
-    :func:`q2_route_stats`."""
-    stats = (stats_joined if stats_joined is not None
-             else trip_stats_joined(stop_times, trips, routes))
+    (`sql_utils.py:196,231-232`)."""
     return (
-        stats.join(F.broadcast(top_routes.select("route_long_name")),
-                   "route_long_name", "left_semi")
+        trip_stats_joined(stop_times, trips, routes)
+        .join(F.broadcast(top_routes.select("route_long_name")),
+              "route_long_name", "left_semi")
         .groupBy("route_long_name", "service_id")
-        .agg(
-            F.count(F.lit(1)).alias("total_trips"),
-            F.avg("trip_distance").alias("avg_trip_distance_km"),
-            (F.avg("trip_duration_seconds") / 60.0).alias("avg_duration_min"),
-            (F.stddev_pop("trip_duration_seconds") / 60.0)
-            .alias("duration_stddev_min"),
-            F.avg(_speed_kmh()).alias("avg_speed_kmh"),
-        )
+        .agg(*_route_measures())
         .orderBy("route_long_name", "service_id")
     )
 

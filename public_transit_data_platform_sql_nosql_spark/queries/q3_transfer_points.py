@@ -11,6 +11,10 @@ collect_set aggregation: duplicates collapse before the shuffle exactly
 as the explicit distinct did, but the dedup and the per-stop route count
 share ONE stop_id-keyed exchange instead of two (r15; see the in-code
 note for the measured A/B).
+
+Serving: the live API answers from Q1's session-persisted
+``stop_route_counts`` partial through ``q3_from_counts`` (one Spark job
+per ranked request); ``q3_transfer_points`` is the batch operator.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators.hints import broadcast_if_small
 from ..operators.params import apply_limit, apply_service_filter
+from .q1_busiest_stops import STOP_ATTRS
 
 
 def q3_transfer_points(
@@ -56,13 +61,25 @@ def q3_transfer_points(
         .agg(F.size(F.collect_set("route_id")).cast("long")
              .alias("num_unique_routes"))
         .filter(F.col("num_unique_routes") >= min_routes)
-        .join(
-            F.broadcast(stops.select("stop_id", "stop_code", "stop_name",
-                                     "stop_lat", "stop_lon")),
-            "stop_id",
-        )
-        .select("stop_id", "stop_code", "stop_name", "stop_lat", "stop_lon",
-                "num_unique_routes")
+        .join(F.broadcast(stops.select(*STOP_ATTRS)), "stop_id")
+        .select(*STOP_ATTRS, "num_unique_routes")
+        .orderBy(F.desc("num_unique_routes"), F.asc("stop_id"))
+    )
+    return apply_limit(agg, limit)
+
+
+def q3_from_counts(
+    counts: DataFrame,
+    service_id: object = None,
+    limit: object = 20,
+) -> DataFrame:
+    """Q3 over :func:`.q1_busiest_stops.stop_route_counts`: the same rows
+    and order as :func:`q3_transfer_points`."""
+    agg = (
+        apply_service_filter(counts, service_id)
+        .groupBy(*STOP_ATTRS)
+        .agg(F.countDistinct("route_id").alias("num_unique_routes"))
+        .filter(F.col("num_unique_routes") >= 2)
         .orderBy(F.desc("num_unique_routes"), F.asc("stop_id"))
     )
     return apply_limit(agg, limit)

@@ -12,14 +12,19 @@ Built on the shared hourly-frequency view (queries/common.py).  Pieces:
 - ``totals_by_service``: pivot to per-service day totals plus the
   fixed-divisor /3.0 weekly average (A15, `sql_utils.py:386-401` -- divides
   by 3 even when a service is absent; quirk preserved).
+- ``hourly_named`` / ``q4_detail_ranked``: the live API's session-scoped
+  partial (the hourly view with route names, persisted once, like the
+  reference's app-start ``ensure_view``, `sql_utils.py:46-70`) and the
+  one plan each request runs over it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.params import apply_limit, apply_service_filter
+from ..operators.params import apply_limit, apply_service_filter, sanitize_limit
+from .common import hourly_frequency
 
 
 def route_daily_totals(
@@ -161,3 +166,45 @@ def hourly_profile(
             F.sum("trips_per_hour").alias("total_daily_trips"),
         )
     )
+
+
+def hourly_named(stop_times: DataFrame, trips: DataFrame,
+                 routes: DataFrame) -> DataFrame:
+    """The service-unfiltered hourly view joined to route names, in ONE
+    partition: at most |routes| x services x ~30 hours rows, so every
+    per-request window and global rank over it plans with no exchange
+    (``repartition(1)``, so the hourly aggregation beneath it stays
+    parallel)."""
+    return hourly_frequency(stop_times, trips).join(
+        F.broadcast(routes.select("route_id", "route_short_name",
+                                  "route_long_name")),
+        "route_id",
+    ).repartition(1)
+
+
+def q4_detail_ranked(named: DataFrame, service_id: object = None,
+                     limit: object = 20) -> DataFrame:
+    """Live Q4 as one plan over :func:`hourly_named`: the service-filtered
+    hourly rows of the top ``limit`` long names by summed trips_per_hour
+    (dense rank over (total desc, long name) -- rank <= n is the batch
+    ranking's limit), ordered by (long name, service, hour, short name).
+    ``max_hour`` is the maximum hour over ALL service-filtered rows,
+    taken before the rank filter (`sql_utils.py:360-369`).  A null long
+    name ranks like any name; its rows are the caller's to drop (the
+    reference's membership join never matches them)."""
+    h = apply_service_filter(named, service_id).select(
+        "*",
+        F.max("hour_of_day").over(Window.partitionBy()).alias("max_hour"),
+        F.sum("trips_per_hour").over(Window.partitionBy("route_long_name"))
+        .alias("total_daily_trips"),
+    )
+    ranked = h.withColumn("rank", F.dense_rank().over(Window.orderBy(
+        F.desc("total_daily_trips"), F.asc("route_long_name"))))
+    n = sanitize_limit(limit)
+    if n is not None:
+        ranked = ranked.filter(F.col("rank") <= n)
+    # route_id last: same-named routes' rows for one hour then arrive in
+    # a fixed order, so the payload's overwrite quirk is deterministic
+    return ranked.orderBy("route_long_name", "service_id", "hour_of_day",
+                          F.coalesce("route_short_name", F.lit("")),
+                          "route_id")

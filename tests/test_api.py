@@ -6,10 +6,29 @@ precomputed-Parquet fast path, plus shape/quirk invariants."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-from public_transit_data_platform_sql_nosql_spark.api import TransitAPI
+from public_transit_data_platform_sql_nosql_spark.api import TransitAPI, shapes
 from public_transit_data_platform_sql_nosql_spark.jobs.precompute import (
     materialize_all,
+)
+from public_transit_data_platform_sql_nosql_spark.operators.params import (
+    normalize_service_id,
+    sanitize_limit,
+)
+from public_transit_data_platform_sql_nosql_spark.plans import jobs_run
+from public_transit_data_platform_sql_nosql_spark.queries.common import (
+    hourly_frequency,
+)
+from public_transit_data_platform_sql_nosql_spark.queries.q1_busiest_stops import (
+    q1_busiest_stops,
+)
+from public_transit_data_platform_sql_nosql_spark.queries.q2_duration_speed import (
+    q2_per_service_breakdown,
+    q2_route_stats,
+)
+from public_transit_data_platform_sql_nosql_spark.queries.q3_transfer_points import (
+    q3_transfer_points,
 )
 from public_transit_data_platform_sql_nosql_spark.sources.tpch_adapter import (
     register_gtfs_views,
@@ -183,7 +202,7 @@ def test_q4_session_scoped_cache(apis):
     # second call returns identical payload off the cache
     assert live.q4("1", 5) == first
     live.refresh()
-    assert live._q4_joined is None
+    assert not cached.storageLevel.useMemory
     # cache rebuilds transparently after invalidation
     assert live.q4("1", 5) == first
 
@@ -233,11 +252,6 @@ _MATRIX = [(sid, lim) for sid in ("1", "2", "3", "4", None)
 @pytest.mark.parametrize("sid,lim", _MATRIX)
 def test_golden_json_matrix(apis, sid, lim):
     import json
-
-    from public_transit_data_platform_sql_nosql_spark.operators.params import (
-        normalize_service_id,
-        sanitize_limit,
-    )
 
     live, fast = apis
     n = sanitize_limit(lim)
@@ -317,5 +331,154 @@ def test_q2_session_scoped_cache(apis):
     assert live.q2("1", 5) == first
     assert live.q2(None, 5) == week
     live.refresh()
-    assert live._q2_joined is None
+    assert not cached.storageLevel.useMemory
     assert live.q2("1", 5) == first
+
+
+# ---------------------------------------------------------------------------
+# live analytics over session-scoped partial aggregates: one Spark job per
+# request, bodies equal to the batch operators', partials released by
+# refresh()
+
+
+@pytest.mark.parametrize("endpoint", ["q1", "q2", "q3", "q4"])
+def test_live_analytics_one_job_per_request(apis, endpoint):
+    """After one warm call has built its partial, every live analytics
+    request in every service mode is exactly one Spark job."""
+    live, _ = apis
+    call = getattr(live, endpoint)
+    call(None, 5)
+    counts = {(sid, lim): jobs_run(live.spark, lambda: call(sid, lim))
+              for sid in (None, "1", "2", "3") for lim in (5, 50)}
+    assert counts == dict.fromkeys(counts, 1)
+
+
+def _dicts(df):
+    return [r.asDict(recursive=True) for r in df.collect()]
+
+
+def _batch_bodies(gtfs, sid):
+    """endpoint -> limit -> the body the batch operators give: each
+    ranking collected once with limit 'all' and cut per limit (every
+    ranking has a total order), shaped through api/shapes.py."""
+    st, trips, stops, routes = (gtfs[t] for t in
+                                ("stop_times", "trips", "stops", "routes"))
+    nsid = normalize_service_id(sid)
+
+    def cut(rows, lim):
+        n = sanitize_limit(lim)
+        return rows if n is None else rows[:n]
+
+    q1_rows = _dicts(q1_busiest_stops(st, trips, stops, sid, "all"))
+    q3_rows = _dicts(q3_transfer_points(st, trips, stops, sid, "all"))
+    if nsid is None:
+        ranked = q2_route_stats(st, trips, routes, None, "all",
+                                whole_week=True)
+        ranked_rows = _dicts(ranked)
+        rep = {r["route_long_name"]: r["s"] for r in _dicts(
+            routes.groupBy("route_long_name")
+            .agg(F.min("route_short_name").alias("s")))}
+        service_rows = _dicts(q2_per_service_breakdown(
+            st, trips, routes, ranked))
+
+        def q2(lim):
+            return shapes.shape_q2_whole_week(
+                [{**r, "route_short_name": rep.get(r["route_long_name"])
+                  if r["route_long_name"] is not None else None}
+                 for r in cut(ranked_rows, lim)], service_rows)
+    else:
+        q2_rows = _dicts(q2_route_stats(st, trips, routes, nsid, "all",
+                                        whole_week=False))
+
+        def q2(lim):
+            return shapes.shape_q2_single_service(
+                [{**r, "service_id": nsid} for r in cut(q2_rows, lim)])
+
+    hourly = hourly_frequency(st, trips).join(
+        routes.select("route_id", "route_short_name", "route_long_name"),
+        "route_id")
+    if nsid is not None:
+        hourly = hourly.filter(F.col("service_id") == nsid)
+    totals = _dicts(hourly.groupBy("route_long_name")
+                    .agg(F.sum("trips_per_hour").alias("t"))
+                    .orderBy(F.desc("t"), F.asc("route_long_name")))
+    max_hour = hourly.agg(F.max("hour_of_day")).first()[0]
+    detail = _dicts(hourly.orderBy(
+        "route_long_name", "service_id", "hour_of_day",
+        F.coalesce("route_short_name", F.lit(""))))
+
+    def q4(lim):
+        selected = {t["route_long_name"] for t in cut(totals, lim)}
+        payload = shapes.shape_q4(
+            [r for r in detail if r["route_long_name"] is not None
+             and r["route_long_name"] in selected], selected, nsid)
+        payload["max_hour"] = int(max_hour or 0)
+        return payload
+
+    return {
+        "q1": lambda lim: shapes.shape_q1_rows(cut(q1_rows, lim)),
+        "q3": lambda lim: shapes.shape_q3_rows(cut(q3_rows, lim)),
+        "q2": q2,
+        "q4": q4,
+    }
+
+
+@pytest.mark.parametrize("sid", [None, "1", "2", "3", "4"])
+def test_live_bodies_match_batch_operators(apis, sid):
+    """Every live body -- whole-week q2 and q4 on colliding long names
+    included -- equals the one the batch operators
+    (q1_busiest_stops, q3_transfer_points, q2_route_stats +
+    q2_per_service_breakdown, hourly_frequency + a max_hour aggregate)
+    give through api/shapes.py."""
+    live, _ = apis
+    want = _batch_bodies(live.gtfs, sid)
+    for lim in (1, 5, 20, "all", "junk"):
+        for ep, body in want.items():
+            assert getattr(live, ep)(sid, lim) == shapes.to_json_safe(
+                body(lim)), (ep, lim)
+
+
+def test_refresh_releases_every_partial(spark, apis):
+    """Serving every endpoint in every service mode persists the live
+    partials; refresh() releases all of them (the persistent-RDD count
+    returns to its value before the API was built), and the next
+    requests rebuild them and serve the same bodies."""
+    live, _ = apis
+    # partials with the same plan are one cached copy: start this API's
+    # from an empty slate
+    live.refresh()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    api = TransitAPI(spark, live.gtfs, precompute_dir=None)
+    calls = [(ep, sid) for ep in ("q1", "q2", "q3", "q4")
+             for sid in (None, "1", "2", "3")]
+    bodies = {c: getattr(api, c[0])(c[1], 5) for c in calls}
+    assert jsc.getPersistentRDDs().size() > before
+    api.refresh()
+    assert jsc.getPersistentRDDs().size() == before
+    for c in calls:
+        assert getattr(api, c[0])(c[1], 5) == bodies[c], c
+    api.refresh()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_partial_recached_after_another_api_refresh(spark, apis):
+    """APIs over the same feed share one cached copy of each partial
+    (the CacheManager keys by plan).  When one API's refresh() drops
+    it, the other re-persists it on its next request instead of
+    recomputing the partial inside every later request."""
+    live, _ = apis
+    a = TransitAPI(spark, live.gtfs, precompute_dir=None)
+    b = TransitAPI(spark, live.gtfs, precompute_dir=None)
+    try:
+        for api in (a, b):
+            api.q1(None, 5)
+            api.q2(None, 5)
+        a.refresh()
+        b.q1(None, 5)
+        b.q2(None, 5)
+        assert jobs_run(spark, lambda: b.q1(None, 5)) == 1
+        assert jobs_run(spark, lambda: b.q2(None, 5)) == 1
+    finally:
+        a.refresh()
+        b.refresh()

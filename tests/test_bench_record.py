@@ -119,3 +119,28 @@ def test_raising_section_still_prints_record(monkeypatch, capsys):
     assert not any(k.startswith("vector_serving") for k in rec)
     assert "# vector_serving FAILED: RuntimeError('section exploded')" \
         in captured.err
+
+
+def test_raising_sf1_section_keeps_headline_record(monkeypatch, capsys):
+    """A raising sf1 section is logged to stderr and skipped; the sf10
+    section and the record still run, and the last stdout line parses
+    with the headline value."""
+    import bench
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("sf1 exploded")
+
+    monkeypatch.setattr(bench, "_sf1_section", boom)
+    monkeypatch.setattr(bench, "_sf10_section",
+                        lambda spark, qs: {"q1": 1.5})
+    monkeypatch.setattr(bench, "_vector_serving_section",
+                        lambda *a, **k: None)
+    monkeypatch.delenv("SPARK_GRAFT_RECORD_OUT", raising=False)
+    out = {"metric": "headline_query_wall_time_total", "value": 12.5,
+           "unit": "sec", "queries": {"q1_busiest_stops": 12.5}}
+    bench._auxiliary_sections(None, {}, out)
+    captured = capsys.readouterr()
+    rec = json.loads(captured.out.strip().splitlines()[-1])
+    assert rec["value"] == 12.5
+    assert "sf1" not in rec and rec["sf10"] == {"q1": 1.5}
+    assert "# sf1 FAILED: RuntimeError('sf1 exploded')" in captured.err
