@@ -657,7 +657,7 @@ def _is_headline_extra(name: str) -> bool:
         # (ivf_pq adds the coarse chain) — a ~20 s FIXED training cost
         # that is flat across these SFs and would swamp the headline
         # total without adding scan signal; serving cost lives in the
-        # (pytest-covered) pq_index_topk / ivf_pq_index_topk paths
+        # (pytest-covered) index_topk paths of the pq / ivf_pq kinds
         return False
     return name.startswith((
         "dedup_minhash", "dedup_clusters", "ann_", "text_profile",

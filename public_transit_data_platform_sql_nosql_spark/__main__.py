@@ -442,8 +442,7 @@ def cmd_vector_index(args: argparse.Namespace) -> int:
         # the closed maintenance loop: upsert + sampled-recall monitor
         # + the kind's rungs (bump_nprobe on IVF, bump_rerank on bq) +
         # rebuild-in-place.  Flat sq8's guard lives in its upsert and
-        # flat bq trains nothing, so they have no ladder; classic IVF's
-        # is maintain_ivf_index
+        # flat bq trains nothing, so they have no ladder
         kind = sim._index_manifest(spark, args.path).get("kind", "sq8")
         if not sim.INDEX_KINDS[kind].maintainable:
             ladders = sorted(n for n, s in sim.INDEX_KINDS.items()
@@ -696,6 +695,8 @@ def cmd_serve(args: argparse.Namespace) -> int:  # pragma: no cover
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .pipeline.similarity import INDEX_KINDS
+
     p = argparse.ArgumentParser(
         prog="python -m public_transit_data_platform_sql_nosql_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -815,7 +816,7 @@ def main(argv: list[str] | None = None) -> int:
         "vector-index",
         help="build/query/upsert/maintain/tune/stats/recall-curve/"
              "vacuum a manifest-committed "
-             "ANN index (sq8 / ivf_sq8 / pq / ivf_pq / bq / ivf_bq "
+             "ANN index (sq8 / ivf_sq8 / pq / ivf_pq / bq / ivf_bq / ivf "
              "— ops dispatch by the manifest's kind)")
     pv.add_argument("action",
                     choices=("build", "query", "query-batch", "upsert",
@@ -916,8 +917,7 @@ def main(argv: list[str] | None = None) -> int:
     pvp.add_argument("--n-queries", type=int, default=3)
     pvp.add_argument("--train-fraction", type=float, default=1.0)
     pvp.add_argument("--kind", default="ivf_sq8",
-                     choices=("sq8", "ivf_sq8", "pq", "ivf_pq", "bq",
-                              "ivf_bq"),
+                     choices=sorted(INDEX_KINDS),
                      help="index layout for the end-to-end pipeline")
     pvp.set_defaults(fn=cmd_vector_pipeline)
 

@@ -228,10 +228,9 @@ class TransitAPI:
         # a null long name takes a rank but serves no rows (the
         # reference's membership join never matches it)
         detail = [r for r in rows if r["route_long_name"] is not None]
-        payload = shapes.shape_q4(
-            detail, {r["route_long_name"] for r in detail}, sid)
-        payload["max_hour"] = int(rows[0]["max_hour"] or 0) if rows else 0
-        return shapes.to_json_safe(payload)
+        return shapes.to_json_safe(shapes.shape_q4(
+            detail, {r["route_long_name"] for r in detail}, sid,
+            int(rows[0]["max_hour"] or 0) if rows else 0))
 
     def _q4_fast(self, sid: Optional[str], limit: object) -> dict[str, Any]:
         """CSV-backend semantics (`csv_backend.py:172-214`): keyed by

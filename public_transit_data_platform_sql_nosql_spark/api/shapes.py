@@ -173,20 +173,21 @@ def shape_q2_single_service(rows: list[dict]) -> dict:
 
 def shape_q4(detail_rows: list[dict],
              selected_routes: set[str],
-             service_filter: Optional[str]) -> dict:
+             service_filter: Optional[str],
+             max_hour: int) -> dict:
     """Q4 payload (`sql_utils.py:354-422`): per-route hourly series;
-    whole-week mode adds totals_by_service + the /3.0 average."""
+    whole-week mode adds totals_by_service + the /3.0 average.
+    ``max_hour`` is the caller's: the reference takes it over every
+    service-filtered row, not just the ranked detail rows here."""
     route_hours: dict[str, dict[str, dict[int, int]]] = defaultdict(
         lambda: defaultdict(dict))
     route_short: dict[str, Optional[str]] = {}
-    max_hour = 0
     for r in detail_rows:
         route = r["route_long_name"]
         sid = str(r["service_id"])
         hour = int(r["hour_of_day"]) if r["hour_of_day"] is not None else 0
         trips = (int(r["trips_per_hour"])
                  if r["trips_per_hour"] is not None else 0)
-        max_hour = max(max_hour, hour)
         route_hours[route][sid][hour] = trips
         if route not in route_short:
             route_short[route] = r.get("route_short_name")

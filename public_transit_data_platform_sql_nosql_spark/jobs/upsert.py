@@ -20,7 +20,9 @@ scope bounded by the data actually touched.
   directories present in ``updates`` are read (partition pruning does
   the bounding — the anti-join never sees untouched partitions), and
   only those directories are swapped.  An upsert touching 3 of 10 000
-  partitions reads and rewrites 3.
+  partitions reads and rewrites 3.  The partition column must be stable
+  per key: a key whose partition value changes leaves its old copy in
+  the untouched partition.
 
 Updates must be key-unique (the merge would otherwise be ambiguous);
 violations raise before anything is written.  Concurrent writers must be
@@ -156,8 +158,7 @@ def _swap(fs, jvm, target: str, tmp: str) -> None:
 
 def upsert_parquet_dir(spark: SparkSession, path: str, updates: DataFrame,
                        key_cols: list[str],
-                       partition_col: str | None = None,
-                       extra_partition_values: list | None = None) -> dict:
+                       partition_col: str | None = None) -> dict:
     """MERGE ``updates`` into the parquet directory ``path`` on
     ``key_cols``: matching keys replaced, new keys appended, all other
     rows untouched.  Returns a stats dict.
@@ -168,32 +169,7 @@ def upsert_parquet_dir(spark: SparkSession, path: str, updates: DataFrame,
     The column must functionally determine the row's partition (a key
     whose partition value CHANGES between versions would leave the old
     copy stranded in the untouched partition; merge on a stable
-    partition column such as ingest date or bucket) — OR the caller
-    must name the keys' PREVIOUS partition values via
-    ``extra_partition_values``: those partitions join the scoped
-    read/rewrite so moved keys' stale copies are dropped, and a
-    partition emptied by its only key moving away is deleted, not left
-    stranded (``ivf_index_upsert`` is the caller with this shape — a
-    re-submitted vector can legitimately re-assign to a different
-    cluster once the stored centroids have drifted from the write-time
-    assignment).
-
-    MOVED-KEY CRASH WINDOW (documented, not atomic): per-partition
-    swaps commit independently, and the touched partitions (carrying a
-    moved key's NEW copy) swap before the extra partitions (dropping
-    its STALE copy) — a crash between the two leaves BOTH copies
-    visible until the batch is REPLAYED (the repair: the merge is
-    idempotent by key, so re-running the same batch re-scopes both
-    partitions and drops the stale copy; this is the same
-    replay-to-repair contract every crash shape here resolves to).
-    This ordering is chosen deliberately: the reverse order would make
-    a mid-crash key transiently DISAPPEAR — a lost row masquerading as
-    clean data — while a transient duplicate is at least visible to
-    downstream dedup.  The empty-partition ``fs.delete`` is likewise
-    outside the ``._upsert_old`` strand protocol on purpose: a
-    rename-then-delete strand would be indistinguishable from an
-    interrupted swap and the recovery sweep would RESURRECT the stale
-    copy; replay closes that window too.
+    partition column such as ingest date or bucket).
     """
     _check_key_unique(updates, key_cols)
     fs, hpath, jvm = _fs(spark, path)
@@ -221,15 +197,11 @@ def upsert_parquet_dir(spark: SparkSession, path: str, updates: DataFrame,
     # touched partition values: a bounded collect (one row per touched
     # partition, not per updated row)
     touched = _touched_values(updates, partition_col)
-    extra = [v for v in (extra_partition_values or [])
-             if v not in set(touched)]
-    if not touched and not extra:
+    if not touched:
         return {"created": False, "rows_upserted": 0, "partitions": []}
 
     _recover_all_strands(fs, jvm, path)
     sink_exists = fs.exists(hpath) and _has_data(fs, hpath)
-    if not sink_exists:
-        extra = []                 # nothing stored to drop moved keys from
 
     tmp = path + _TMP_SUFFIX
     htmp = jvm.org.apache.hadoop.fs.Path(tmp)
@@ -241,7 +213,7 @@ def upsert_parquet_dir(spark: SparkSession, path: str, updates: DataFrame,
         # prunes directories at plan time — untouched partitions are
         # never opened
         store = spark.read.parquet(path).filter(
-            F.col(partition_col).isin(*touched, *extra))
+            F.col(partition_col).isin(*touched))
         survivors = store.join(
             updates.select(*key_cols).distinct(), key_cols, "left_anti")
         merged = survivors.unionByName(
@@ -260,22 +232,6 @@ def upsert_parquet_dir(spark: SparkSession, path: str, updates: DataFrame,
             continue  # updates had the value but wrote no rows (empty df)
         _swap(fs, jvm, f"{path}/{part_dir}", src)
         swapped.append(v)
-    for v in extra:
-        # a moved key's PREVIOUS partition: swap in its rewritten
-        # survivors — or, when the move emptied it (no dir in tmp),
-        # delete the live dir instead of leaving the stale copy.
-        # Runs AFTER the touched swaps by design — see the moved-key
-        # crash-window note in the docstring (crash here => transient
-        # duplicate, repaired by replaying the batch)
-        part_dir = f"{partition_col}={v}"
-        src = f"{tmp}/{part_dir}"
-        live = jvm.org.apache.hadoop.fs.Path(f"{path}/{part_dir}")
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(src)):
-            _swap(fs, jvm, f"{path}/{part_dir}", src)
-            swapped.append(v)
-        elif fs.exists(live):
-            fs.delete(live, True)
-            swapped.append(v)
     fs.delete(htmp, True)
     return {"created": not sink_exists, "rows_upserted": n_up,
             "partitions": swapped}

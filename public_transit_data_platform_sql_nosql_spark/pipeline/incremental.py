@@ -3,10 +3,10 @@ plus a batch-dedup step that reads only the buckets a new batch touches.
 
 The one-shot ``dedup.minhash_lsh_pairs`` recomputes the whole corpus's
 signatures every run; a production ingest loop cannot (100 TB of history
-per daily batch).  This module is the dedup twin of the ANN serving
-layout (`similarity.write_ivf_index` / `ivf_index_upsert`): pay the
-corpus pass ONCE, persist the sketch, and let every subsequent batch
-cost O(batch + touched buckets).
+per daily batch).  This module is the dedup twin of the stored ANN
+indexes (`similarity.write_index` / `index_upsert`): pay the corpus
+pass ONCE, persist the sketch, and let every subsequent batch cost
+O(batch + touched buckets).
 
 On-disk layout (all plain parquet):
 

@@ -15,20 +15,20 @@ two axes (the end of this module):
 - a CODEC turns a vector into scannable code and scores a candidate's
   code against a query: ``sq8`` (a byte per dimension against a trained
   [min, max] quantizer), ``pq`` (a byte per subspace against trained
-  codebooks, ADC-scored) or ``bq`` (a sign bit per dimension,
-  Hamming-scored, nothing trained);
+  codebooks, ADC-scored), ``bq`` (a sign bit per dimension,
+  Hamming-scored, nothing trained) or the identity codec (the
+  full-precision vector, scored by exact cosine, nothing trained);
 - a PARTITION LAYER is flat (the codes table is scanned whole) or IVF
   (codes hive-partitioned by k-means cluster; a query ranks the centroid
   table and reads only its ``nprobe`` best cluster directories).
 
-``INDEX_KINDS`` registers the six combinations (``sq8``, ``ivf_sq8``,
-``pq``, ``ivf_pq``, ``bq``, ``ivf_bq``).  ``write_index``, ``index_topk``,
-``index_topk_batch``, ``index_upsert`` and ``maintain_index`` serve every
-kind, reading it from the manifest (except on write); the per-kind names
-(``write_ivf_sq8_index``, ``ivf_sq8_index_topk_batch``, ...) pin the kind
-on the same core.  Every stored read shortlists ``k * rerank_mult`` rows
-on code scores and exact-cosine re-ranks them against the caller's
-full-precision primary store.
+``INDEX_KINDS`` registers seven kinds (``sq8``, ``ivf_sq8``, ``pq``,
+``ivf_pq``, ``bq``, ``ivf_bq`` and the full-precision ``ivf``).
+``write_index``, ``index_topk``, ``index_topk_batch``, ``index_upsert``
+and ``maintain_index`` serve every kind, reading it from the manifest
+(except on write; ``kind=`` refuses any other kind).  Every stored read
+shortlists ``k * rerank_mult`` rows on code scores and exact-cosine
+re-ranks them against the caller's full-precision primary store.
 """
 
 from __future__ import annotations
@@ -946,124 +946,6 @@ def _trained_centroids(emb: DataFrame, k: int, n_iter: int,
     return _quantized_centroids(sasg)
 
 
-def write_ivf_index(emb: DataFrame, path: str, k: int | None = None,
-                    n_iter: int = KMEANS_ITERS,
-                    train_fraction: float = 1.0) -> None:
-    """Persist an IVF layout: vectors written hive-partitioned by their
-    k-means cluster (``cluster_id=NN/`` directories) plus the final
-    centroid table at ``<path>/_centroids`` — the on-disk twin of
-    ``ivf_topk``'s in-memory probe.  At 100 TB this is THE vector
-    serving layout: a query reads the tiny centroid table, ranks
-    clusters, and scans only the ``nprobe`` probed directories —
-    partition pruning turns ANN from a full corpus scan into a few
-    directory reads (same trick as the bucketed doc store,
-    jobs/denormalize.py).
-
-    ``_centroids`` holds the INTEGER milli-quantized sums driving the
-    final assignment, so query-side ranking reproduces the clustering's
-    own geometry exactly.
-
-    Consistency note (vs the manifest-committed SQ8 family): this
-    layout stays a plain in-place directory because ``ivf_index_upsert``
-    merges through jobs/upsert's file-granular copy-on-write swap,
-    which owns its own crash protocol.  A crash between the vector
-    write and ``_centroids`` here degrades only RECALL (full-precision
-    vectors re-ranked by exact cosine stay correct under stale
-    centroids); in the SQ8 layouts a torn quantizer corrupts VALUES,
-    which is why those commit through ``_versions`` manifests.
-
-    ``train_fraction < 1`` trains the k-means chains on a
-    deterministic hash-sample (``_train_sample``) and then assigns the
-    FULL corpus against the learned centroids — at 100 TB the
-    n_iter full passes of centroid training are the dominant build
-    cost and a sample preserves the geometry; 1.0 (default) keeps the
-    exact full-corpus oracle behavior.
-
-    ``k=None`` (default) derives the cluster count from the corpus
-    size (:func:`_default_ivf_k` — ~sqrt(N)); pass an explicit ``k``
-    to pin a geometry.
-    """
-    if k is None:
-        k = _default_ivf_k(emb)
-    if train_fraction >= 1.0:
-        assigned = emb.join(
-            embedding_kmeans(emb, k, n_iter)
-            .select("vec_id", "cluster_id"), "vec_id")
-    else:
-        cents_t = _trained_centroids(emb, k, n_iter, train_fraction)
-        assigned = emb.join(
-            _assign(emb.select("vec_id", "embedding"), cents_t)
-            .select("vec_id", F.col("cid").alias("cluster_id")),
-            "vec_id")
-    (
-        assigned.repartition("cluster_id")
-        .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-    )
-    cents = _quantized_centroids(
-        assigned.withColumnRenamed("cluster_id", "cid"))
-    cents.select(F.col("cid").alias("cluster_id"), "centroid") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids")
-
-
-def ivf_index_topk(spark, path: str, query_vec: list[float], k: int = 10,
-                   nprobe: int = 2,
-                   allowed: DataFrame | None = None) -> DataFrame:
-    """ANN over a ``write_ivf_index`` layout: rank the stored centroids
-    against ``query_vec`` (driver-side — the centroid table is k rows by
-    construction), then exact cosine top-k over ONLY the ``nprobe`` best
-    clusters' directories.  The cluster_id IN-filter prunes partitions
-    at plan time (PartitionFilters — plan-asserted in tests), so the
-    scan cost is |probed clusters|, independent of corpus size.
-
-    ``allowed`` (a ``vec_id`` DataFrame) makes this a FILTERED search
-    with the same semi-join-before-top-k contract and adaptive probe
-    widening as :func:`ivf_sq8_index_topk` — the probe set doubles
-    until it holds >= ``k`` allowed candidates or every cluster is
-    probed, so a restrictive filter cannot starve the result.
-    """
-    import math
-
-    cents = spark.read.parquet(f"{path}/_centroids").collect()
-    qn = math.sqrt(sum(x * x for x in query_vec))
-
-    def cos(c):
-        d = sum(a * b for a, b in zip(query_vec, c))
-        n = math.sqrt(sum(x * x for x in c))
-        return d / n / qn if n else -1.0
-
-    ranked = sorted(
-        ((round(cos(r["centroid"]), 6), r["cluster_id"]) for r in cents),
-        key=lambda t: (-t[0], t[1]))
-    stored = spark.read.parquet(path)
-    if allowed is not None:
-        allow_ids = allowed.select("vec_id")
-        while nprobe < len(ranked):
-            probe = [cid for _, cid in ranked[:nprobe]]
-            n_reachable = (
-                stored.filter(F.col("cluster_id").isin(probe))
-                .join(allow_ids, "vec_id", "left_semi").count())
-            if n_reachable >= k:
-                break
-            # max(..., nprobe + 1) keeps the step positive when a caller
-            # passes nprobe <= 0 (doubling 0 would spin count jobs
-            # forever — the maintain_ivf_sq8_index widening pattern)
-            nprobe = min(max(nprobe * 2, nprobe + 1), len(ranked))
-    probe = [cid for _, cid in ranked[:nprobe]]
-
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    cand = stored.filter(F.col("cluster_id").isin(probe))
-    if allowed is not None:
-        cand = cand.join(allowed.select("vec_id"), "vec_id", "left_semi")
-    return (
-        cand
-        .select(
-            "vec_id", "cluster_id",
-            F.round(cosine(F.col("embedding"), qcol), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
 SQ_DRIFT_TOL = 0.05   # tolerated out-of-range drift, fraction of range
 
 
@@ -1171,8 +1053,7 @@ def _widen_filtered_probes(codes_all: DataFrame,
         if n_reachable >= k:
             break
         # max(..., nprobe + 1) keeps the step positive when a caller
-        # passes nprobe <= 0 (doubling 0 would spin count jobs
-        # forever — the maintain_ivf_sq8_index widening pattern)
+        # passes nprobe <= 0 (doubling 0 would spin count jobs forever)
         nprobe = min(max(nprobe * 2, nprobe + 1), len(ranked))
     return [cid for _, cid in ranked[:nprobe]]
 
@@ -1426,7 +1307,7 @@ def _pq_books_trained(emb: DataFrame, m: int, k: int, dim: int,
     its own sequential driver-blocking job, and the writers then
     re-execute all of them through the checkpoint — m+1 chain
     evaluations where one suffices (measured r14 at sf1/20k vectors:
-    write_pq_index 48.5 s with the codebook training roughly half).
+    the pq writer 48.5 s with the codebook training roughly half).
     Here the guard runs AFTER the single materialization: missing
     subspaces are read off the checkpointed table driver-side and
     their pinned zero codewords appended (same semantics — the byte
@@ -1517,7 +1398,7 @@ def pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
             n_iter: int = KMEANS_ITERS,
             rerank_mult: int = PQ_RERANK_MULT) -> DataFrame:
     """In-flight product-quantization ANN — the operator twin of the
-    ``write_pq_index`` serving layout, fully oracle-checkable: train
+    stored ``pq`` serving layout, fully oracle-checkable: train
     the m per-subspace codebooks on the corpus in-pass, score every
     candidate by its PQ RECONSTRUCTION against the full-precision
     queries (asymmetric scoring, like ``sq8_topk``), shortlist
@@ -1805,57 +1686,6 @@ def embedding_kmeans_iterate(emb: DataFrame, k: int = KMEANS_K,
         "vec_id", F.col("cid").alias("cluster_id"), "cos_sim")
 
 
-def ivf_index_upsert(spark, path: str, new_emb: DataFrame) -> dict:
-    """Incremental IVF maintenance: assign ``new_emb`` vectors to the
-    STORED centroids (one broadcast of the k-row table — the index's
-    geometry is not recomputed) and MERGE them into the partitioned
-    layout via jobs/upsert — the receiving cluster directories plus any
-    re-submitted key's PREVIOUS directory are read and rewritten, so
-    adding a daily batch of vectors costs the touched partitions, not
-    an index rebuild.  Re-cluster periodically (write_ivf_index) when
-    drift accumulates.
-
-    Moved-key contract: the stored rows' cluster_id came from the
-    WRITE's assignment, which is one centroid-update step STALER than
-    the stored ``_centroids`` table (the writer persists the refined
-    centroids — see write_ivf_index), so a re-submitted identical
-    vector CAN legitimately re-assign to a different cluster.  The
-    batch keys' current locations are looked up first (one
-    column-pruned scan of (vec_id, cluster_id) + a broadcast
-    semi-join) and passed as ``extra_partition_values`` — the merge
-    then drops the stale copy from the old directory (deleting the
-    directory outright if the move emptied it) instead of leaving a
-    duplicate vec_id behind."""
-    from ..jobs.upsert import upsert_parquet_dir
-
-    cents = (
-        spark.read.parquet(f"{path}/_centroids")
-        .withColumnRenamed("cluster_id", "cid")
-    )
-    assigned = (
-        _assign(new_emb, cents)
-        .select("vec_id", "embedding",
-                F.col("cid").alias("cluster_id"))
-    )
-    stored = spark.read.parquet(path)
-    stored_cols = stored.columns
-    old_parts = [
-        r["cluster_id"] for r in
-        stored.select("vec_id", "cluster_id")
-        .join(F.broadcast(new_emb.select("vec_id")), "vec_id",
-              "left_semi")
-        .select("cluster_id").distinct().collect()
-    ]
-    extra = new_emb.drop("vec_id", "embedding")
-    if extra.columns:
-        assigned = assigned.join(
-            new_emb.drop("embedding"), "vec_id")
-    return upsert_parquet_dir(
-        spark, path, assigned.select(*stored_cols), ["vec_id"],
-        partition_col="cluster_id",
-        extra_partition_values=old_parts)
-
-
 def ann_recall(approx: DataFrame, exact: DataFrame) -> DataFrame:
     """Index-quality monitor: per-query recall of an approximate ANN
     result against the exact one — the metric a serving deployment
@@ -1890,148 +1720,6 @@ def ann_recall(approx: DataFrame, exact: DataFrame) -> DataFrame:
     )
 
 
-def _sampled_recall(spark, path: str, queries: list, k: int,
-                    nprobe: int) -> int:
-    """MIN per-query recall (integer permille) of the nprobe-pruned
-    serving path against brute force, over the sampled query vectors.
-    Min, not mean: one drifted region is exactly what the monitor must
-    not average away.
-
-    Batched (r13 verdict finding #3): per-query probe lists resolve
-    driver-side from ONE centroid read (``ivf_index_topk``'s exact
-    ranking math, so decisions cannot change), then one
-    partition-pruned scan of the probed-cluster union — a static
-    ``isin`` filter, fanned out to the probing queries by a broadcast
-    (query_id, cluster_id) pairs join — and one full scan for the
-    exact arm, each topped per query by a bounded window.  Two plans
-    per probe instead of 2 x ``len(queries)``."""
-    import math
-
-    cents = spark.read.parquet(f"{path}/_centroids").collect()
-    pairs = []
-    for qid, qv in queries:
-        qn = math.sqrt(sum(x * x for x in qv))
-
-        def cos(c):
-            d = sum(a * b for a, b in zip(qv, c))
-            n = math.sqrt(sum(x * x for x in c))
-            return d / n / qn if n else -1.0
-
-        ranked = sorted(
-            ((round(cos(r["centroid"]), 6), r["cluster_id"])
-             for r in cents),
-            key=lambda t: (-t[0], t[1]))
-        pairs += [(int(qid), int(cid)) for _, cid in ranked[:nprobe]]
-    qdf = spark.createDataFrame(
-        [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
-        "query_id long, embedding array<double>")
-    qe = qdf.select("query_id", F.col("embedding").alias("qe"))
-    probe_df = spark.createDataFrame(
-        pairs, "query_id long, cluster_id int")
-    stored = spark.read.parquet(path)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id"))
-
-    def topk(cand):
-        return (cand.join(F.broadcast(qe), "query_id")
-                .select("query_id",
-                        F.col("vec_id").alias("neighbor_id"),
-                        F.round(cosine(F.col("qe"),
-                                       F.col("embedding")), 6)
-                        .alias("cos_sim"))
-                .withColumn("rn", F.row_number().over(ws))
-                .filter(F.col("rn") <= k)
-                .select("query_id", "neighbor_id"))
-
-    probed_cids = sorted({cid for _, cid in pairs})
-    approx = topk(
-        stored.filter(F.col("cluster_id").isin(probed_cids))
-        .join(F.broadcast(probe_df.withColumnRenamed(
-            "cluster_id", "cluster_id_p")),
-            F.col("cluster_id") == F.col("cluster_id_p")))
-    exact = topk(stored.join(F.broadcast(qdf.select("query_id"))))
-    row = (ann_recall(approx, exact)
-           .agg(F.min("recall_permille").alias("r")).collect()[0])
-    return int(row["r"])
-
-
-def maintain_ivf_index(spark, path: str, new_emb: DataFrame, *,
-                       k: int = 10, nprobe: int = 2,
-                       recall_floor_permille: int = 900,
-                       max_nprobe: int | None = None,
-                       sample_queries: int = 8,
-                       rebuild: bool = True,
-                       train_fraction: float = 1.0) -> dict:
-    """The closed IVF maintenance loop: merge a vector batch
-    (``ivf_index_upsert``), measure serving recall on a deterministic
-    sample of the batch (``ann_recall`` of the nprobe-pruned path vs
-    brute force), and return the operational decision AS DATA:
-
-    - ``"ok"``           — min sampled recall >= the floor; no action.
-    - ``"bump_nprobe"``  — recall recovered by probing more clusters
-                           (doubled, capped at ``max_nprobe`` / the
-                           cluster count); ``nprobe`` in the result is
-                           the new setting to serve with.
-    - ``"rebuild"``      — recall stays under the floor even at the
-                           probe cap: the batch drifted past what the
-                           stored centroids partition well (vectors
-                           straddling stale cluster boundaries).  With
-                           ``rebuild=True`` the index is re-clustered
-                           in place from its own stored vectors
-                           (eagerly materialized first — a lazy
-                           read-then-overwrite of the same path would
-                           corrupt it) and recall is re-measured.
-
-    Scale: the upsert touches only receiving cluster directories; the
-    recall probe is TWO batched plans per rung (one partition-pruned
-    scan of the probed-cluster union + one full scan for ground truth,
-    :func:`_sampled_recall` — the monitor's honest cost, run on a
-    SAMPLE precisely so it stays O(sample), and amortized per
-    maintenance batch, not per query).
-    """
-    st = ivf_index_upsert(spark, path, new_emb)
-    queries = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in new_emb.select("vec_id", "embedding")
-        .orderBy("vec_id").limit(sample_queries).collect()
-    ]
-    n_clusters = spark.read.parquet(f"{path}/_centroids").count()
-    cap = min(max_nprobe or n_clusters, n_clusters)
-    out = {"rows_upserted": st.get("rows_upserted"),
-           "n_queries": len(queries), "nprobe": nprobe,
-           "recall_floor_permille": recall_floor_permille}
-    if not queries:
-        out.update(decision="ok", recall_permille=None)
-        return out
-
-    r0 = _sampled_recall(spark, path, queries, k, nprobe)
-    out["recall_permille"] = r0
-    if r0 >= recall_floor_permille:
-        out["decision"] = "ok"
-        return out
-
-    bumped = min(max(nprobe * 2, nprobe + 1), cap)
-    if bumped > nprobe:
-        r1 = _sampled_recall(spark, path, queries, k, bumped)
-        out["recall_after_bump_permille"] = r1
-        if r1 >= recall_floor_permille:
-            out.update(decision="bump_nprobe", nprobe=bumped)
-            return out
-
-    out["decision"] = "rebuild"
-    if rebuild:
-        stored = (
-            spark.read.parquet(path)
-            .select("vec_id", "embedding")
-            .localCheckpoint(eager=True)
-        )
-        write_ivf_index(stored, path, k=n_clusters,
-                        train_fraction=train_fraction)
-        out["recall_after_rebuild_permille"] = _sampled_recall(
-            spark, path, queries, k, nprobe)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # IVF x PQ — coarse partition pruning over product-quantized codes (FAISS's
 # IVFPQ).  Codebooks quantize the RAW vectors, not residuals: every scorer
@@ -2044,8 +1732,8 @@ def ivf_pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
                 ksub: int = PQ_K, dim: int = 64,
                 n_iter: int = KMEANS_ITERS,
                 rerank_mult: int = PQ_RERANK_MULT) -> DataFrame:
-    """In-flight IVF x PQ ANN — the operator twin of the
-    ``write_ivf_pq_index`` serving layout, fully oracle-checkable:
+    """In-flight IVF x PQ ANN — the operator twin of the stored
+    ``ivf_pq`` serving layout, fully oracle-checkable:
     coarse-cluster the corpus (``embedding_kmeans`` — hash-seeded,
     integer-quantized, engine-deterministic), probe each query's
     ``nprobe`` best clusters by round-6 centroid cosine, score ONLY the
@@ -2056,12 +1744,12 @@ def ivf_pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
 
     Probing uses the centroids of the FINAL assignment (one update step
     fresher, ``_quantized_centroids(assigned)``) — the same centroid
-    table ``write_ivf_pq_index`` stores.  Cluster MEMBERSHIP here is
+    table the ``ivf_pq`` writer stores.  Cluster MEMBERSHIP here is
     the trainer's own final assignment (the ``pq_topk`` convention:
     codes/membership one step staler than the serving geometry), while
     the stored layout re-assigns against the stored centroids — so the
     two agree on geometry but can differ on boundary vectors, exactly
-    like ``pq_topk`` vs ``pq_index_topk``.
+    like ``pq_topk`` vs the stored ``pq`` kind's ``index_topk``.
 
     Scale: candidate volume is nprobe/kc of ``pq_topk``'s — the probe
     table is (queries x nprobe) rows riding broadcast, and with the
@@ -2147,7 +1835,7 @@ def bq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
             dim: int = 64,
             rerank_mult: int = BQ_RERANK_MULT) -> DataFrame:
     """In-flight binary-quantization ANN — the operator twin of the
-    ``write_bq_index`` serving layout, fully oracle-checkable: every
+    stored ``bq`` serving layout, fully oracle-checkable: every
     vector collapses to dim sign bits, candidates rank by Hamming
     distance to the query's bits (ASC, neighbor_id tie-break), the
     ``k * rerank_mult`` shortlist exact-cosine re-ranks.  Output
@@ -2636,7 +2324,7 @@ def rebalance_index(spark, path: str, vectors: DataFrame, *,
 # candidate's code scores against a query) times a PARTITION LAYER (flat:
 # the codes table is scanned whole; IVF: codes hive-partitioned by k-means
 # cluster, a query reads only its nprobe best clusters).  INDEX_KINDS is
-# the registry of the six kinds; write / serve / batch-serve / upsert /
+# the registry of the seven kinds; write / serve / batch-serve / upsert /
 # maintain are one function each, reading the kind from the manifest.
 
 
@@ -2842,6 +2530,38 @@ class _PQ(_Codec):
         return {"m": int(man["m"]), "ksub": new_ksub}
 
 
+class _Identity(_Codec):
+    """Full precision: the code column IS the vector (``embedding``, held
+    as doubles so every codes dir shares one schema) and a candidate
+    scores by its exact round-6 cosine, so a ``k``-row shortlist is
+    already the answer (``rerank_default = 1``).  Trains nothing and has
+    no drift screen; with scores exact, a maintenance ladder has no
+    rerank rung — ok, bump_nprobe, then rebuild."""
+
+    code_cols = ("embedding",)
+    rerank_default = 1
+
+    def encode(self, arts, emb, geom):
+        return emb.select(
+            "vec_id", F.col("embedding").cast("array<double>")
+            .alias("embedding"))
+
+    def code_bytes(self, man):
+        return 8 * int(man["dim"])
+
+    def single_score(self, spark, path, man, cand, query_vec, ivf):
+        q = F.array(*[F.lit(float(x)) for x in query_vec])
+        return cand.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(cosine(F.col("embedding"), q), 6).alias("approx_sim"))
+
+    def batch_score(self, spark, path, man, cand, queries, q, ivf):
+        return (cand.join(F.broadcast(q), "query_id" if ivf else None)
+                .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                        F.round(cosine(F.col("embedding"), F.col("qe")), 6)
+                        .alias("approx_sim")))
+
+
 class _BQ(_Codec):
     """One SIGN BIT per dimension packed into two 32-bit halves;
     candidates rank by integer Hamming distance (xor + popcount).
@@ -2888,9 +2608,9 @@ class _BQ(_Codec):
 @dataclass(frozen=True)
 class IndexKind:
     """One registry entry: a codec on a partition layer.
-    ``refit_centroids`` (ivf_sq8) stores the centroids re-fit to the
-    final assignment — the ``write_ivf_index`` geometry — where the
-    other IVF kinds store the centroids the assignment ran against."""
+    ``refit_centroids`` (ivf_sq8, ivf) stores the centroids re-fit to the
+    final assignment, where the other IVF kinds store the centroids the
+    assignment ran against."""
 
     name: str
     codec: _Codec
@@ -2913,6 +2633,7 @@ INDEX_KINDS = {
     "ivf_pq": IndexKind("ivf_pq", _PQ_CODEC, ivf=True),
     "bq": IndexKind("bq", _BQ_CODEC, ivf=False),
     "ivf_bq": IndexKind("ivf_bq", _BQ_CODEC, ivf=True),
+    "ivf": IndexKind("ivf", _Identity(), ivf=True, refit_centroids=True),
 }
 
 
@@ -2981,13 +2702,13 @@ def write_index(emb: DataFrame, path: str, kind: str, *,
                 ksub: int = PQ_INDEX_KSUB, n_iter: int = KMEANS_ITERS,
                 train_fraction: float = 1.0,
                 attrs: DataFrame | None = None) -> None:
-    """Persist a compressed serving layout of ``kind`` (a key of
+    """Persist a serving layout of ``kind`` (a key of
     :data:`INDEX_KINDS`): ``(vec_id, <codes>)`` encoded by the kind's
-    codec, its trained artifact (sq8 quantizer, pq codebooks; bq trains
-    nothing) and, on the IVF kinds, codes hive-partitioned by k-means
-    cluster with the centroid table beside them.  The ANN scan reads
-    these small codes; full-precision vectors stay in the caller's
-    primary store and are read only for the exact re-rank shortlist.
+    codec, its trained artifact (sq8 quantizer, pq codebooks; bq and ivf
+    train nothing) and, on the IVF kinds, codes hive-partitioned by
+    k-means cluster with the centroid table beside them.  The ANN scan
+    reads these codes; the caller's primary store is read only for the
+    exact re-rank shortlist.
 
     Commit protocol (jobs/versioned.py): data lands under
     ``<path>/data/v<N>/`` FIRST, then ONE manifest at
@@ -3384,114 +3105,10 @@ def maintain_index(spark, path: str, new_emb: DataFrame,
     return out
 
 
-# The per-kind public names: the kind pinned on the generic core.
-def write_sq8_index(emb, path, **kw):
-    return write_index(emb, path, "sq8", **kw)
-
-
+# Kept only because perfbench/workloads.py calls them; all else uses kind=.
 def write_ivf_sq8_index(emb, path, k=None, **kw):
     return write_index(emb, path, "ivf_sq8", k=k, **kw)
 
 
-def write_pq_index(emb, path, m=PQ_M, k=PQ_INDEX_KSUB, **kw):
-    return write_index(emb, path, "pq", m=m, ksub=k, **kw)
-
-
-def write_ivf_pq_index(emb, path, k=None, **kw):
-    return write_index(emb, path, "ivf_pq", k=k, **kw)
-
-
-def write_bq_index(emb, path, **kw):
-    return write_index(emb, path, "bq", **kw)
-
-
-def write_ivf_bq_index(emb, path, k=None, **kw):
-    return write_index(emb, path, "ivf_bq", k=k, **kw)
-
-
-def sq8_index_topk(*a, **kw):
-    return index_topk(*a, kind="sq8", **kw)
-
-
-def ivf_sq8_index_topk(*a, **kw):
-    return index_topk(*a, kind="ivf_sq8", **kw)
-
-
-def pq_index_topk(*a, **kw):
-    return index_topk(*a, kind="pq", **kw)
-
-
-def ivf_pq_index_topk(*a, **kw):
-    return index_topk(*a, kind="ivf_pq", **kw)
-
-
-def bq_index_topk(*a, **kw):
-    return index_topk(*a, kind="bq", **kw)
-
-
-def ivf_bq_index_topk(*a, **kw):
-    return index_topk(*a, kind="ivf_bq", **kw)
-
-
-def sq8_index_topk_batch(*a, **kw):
-    return index_topk_batch(*a, kind="sq8", **kw)
-
-
 def ivf_sq8_index_topk_batch(*a, **kw):
     return index_topk_batch(*a, kind="ivf_sq8", **kw)
-
-
-def pq_index_topk_batch(*a, **kw):
-    return index_topk_batch(*a, kind="pq", **kw)
-
-
-def ivf_pq_index_topk_batch(*a, **kw):
-    return index_topk_batch(*a, kind="ivf_pq", **kw)
-
-
-def bq_index_topk_batch(*a, **kw):
-    return index_topk_batch(*a, kind="bq", **kw)
-
-
-def ivf_bq_index_topk_batch(*a, **kw):
-    return index_topk_batch(*a, kind="ivf_bq", **kw)
-
-
-def sq8_index_upsert(*a, **kw):
-    return index_upsert(*a, kind="sq8", **kw)
-
-
-def ivf_sq8_index_upsert(*a, **kw):
-    return index_upsert(*a, kind="ivf_sq8", **kw)
-
-
-def pq_index_upsert(*a, **kw):
-    return index_upsert(*a, kind="pq", **kw)
-
-
-def ivf_pq_index_upsert(*a, **kw):
-    return index_upsert(*a, kind="ivf_pq", **kw)
-
-
-def bq_index_upsert(*a, **kw):
-    return index_upsert(*a, kind="bq", **kw)
-
-
-def ivf_bq_index_upsert(*a, **kw):
-    return index_upsert(*a, kind="ivf_bq", **kw)
-
-
-def maintain_pq_index(*a, **kw):
-    return maintain_index(*a, kind="pq", **kw)
-
-
-def maintain_ivf_sq8_index(*a, **kw):
-    return maintain_index(*a, kind="ivf_sq8", **kw)
-
-
-def maintain_ivf_pq_index(*a, **kw):
-    return maintain_index(*a, kind="ivf_pq", **kw)
-
-
-def maintain_ivf_bq_index(*a, **kw):
-    return maintain_index(*a, kind="ivf_bq", **kw)

@@ -212,7 +212,7 @@ def write_stops_cell_layout(stops: DataFrame, path: str,
     ``stops_nearby`` was designed against (its docstring promises the
     integer-cell filter is "partition-prunable under a cell-partitioned
     layout"; this is the writer that makes that true — the geo twin of
-    ``write_ivf_index``, pipeline/similarity.py).
+    the IVF index kinds' cluster-partitioned codes, pipeline/similarity.py).
 
     Layout: ``cx=NN/cy=MM/`` directories keyed by the same floor-divide
     cell ids the query side computes, plus a one-row ``_meta`` table

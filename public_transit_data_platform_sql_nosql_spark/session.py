@@ -13,6 +13,37 @@ import os
 from pyspark.sql import SparkSession
 
 
+_DRIVER_MEMORY_CAP_MB = 16 * 1024
+
+
+def driver_memory_default(meminfo: str, cgroup_max: str | None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    min(16g, 0.6 x the memory limit).  The limit is the cgroup v2
+    ``memory.max`` when one is set (``"max"`` means unset), capped by
+    ``MemTotal`` from ``meminfo`` (``/proc/meminfo`` text).  A flat 16g
+    heap on a 16 GB host lets the driver JVM grow past physical memory
+    and be OOM-killed; the 0.4 left over holds the JVM's off-heap, the
+    Python workers and the OS."""
+    limits = []
+    if cgroup_max is not None and cgroup_max.strip().isdigit():
+        limits.append(int(cgroup_max.strip()))
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            limits.append(int(line.split()[1]) * 1024)    # kB
+    if not limits:
+        return f"{_DRIVER_MEMORY_CAP_MB}m"
+    mb = int(0.6 * min(limits)) // (1024 * 1024)
+    return f"{min(_DRIVER_MEMORY_CAP_MB, mb)}m"
+
+
+def _read_text(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
 def get_spark(
     app_name: str = "transit-analytics-engine",
     master: str | None = None,
@@ -50,7 +81,11 @@ def get_spark(
         # (nanos since epoch) and convert explicitly where needed
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY")
+                or driver_memory_default(
+                    _read_text("/proc/meminfo") or "",
+                    _read_text("/sys/fs/cgroup/memory.max")))
     )
     if files_max_partition_bytes is not None:
         builder = (

@@ -620,12 +620,10 @@ def stream_vector_index_upsert(emb_stream: DataFrame, index_path: str,
                                vectors_path: str | None = None,
                                max_rebalance_splits: int = 4):
     """foreachBatch maintenance of a manifest-committed vector index
-    (any of the six layout kinds — ``write_sq8_index``,
-    ``write_ivf_sq8_index``, ``write_pq_index``, ``write_ivf_pq_index``,
-    ``write_bq_index`` or ``write_ivf_bq_index``
-    — the layout kind AND dim are read from the index's own manifest,
-    never trusted from the caller) from a live feed — the streaming
-    twin of :func:`~..pipeline.similarity.index_upsert`, closing the
+    (any kind ``write_index`` builds — the layout kind AND dim are read
+    from the index's own manifest, never trusted from the caller) from a
+    live feed — the streaming twin of
+    :func:`~..pipeline.similarity.index_upsert`, closing the
     vector-serving loop the way stream_incremental_dedup closes the
     dedup one.
 
@@ -633,11 +631,11 @@ def stream_vector_index_upsert(emb_stream: DataFrame, index_path: str,
     (at-least-once delivery can replay rows; the upsert's key-unique
     contract is a correctness guard, not a replay handler), then the
     kind's OWN upsert runs — all-new ids append a codes dir
-    (cluster-partitioned for ivf_sq8, so probed reads keep pruning),
+    (cluster-partitioned on the IVF kinds, so probed reads keep pruning),
     re-submitted ids are keyed-replaced, and an SQ8-family batch whose
     values drift past the trained quantizer range writes NOTHING (PQ
     batches always encode — codebook staleness surfaces through the
-    recall monitor, ``maintain_pq_index``, not a range guard).  Every
+    recall monitor, ``maintain_index``, not a range guard).  Every
     decision is committed as a row to the versioned store at
     ``<index_path>/_state/decisions`` (batch_id, decision, n_new,
     n_replaced, n_drifted_dims) — the rebuild signal an operator

@@ -409,11 +409,10 @@ def _batch_bodies(gtfs, sid):
 
     def q4(lim):
         selected = {t["route_long_name"] for t in cut(totals, lim)}
-        payload = shapes.shape_q4(
+        return shapes.shape_q4(
             [r for r in detail if r["route_long_name"] is not None
-             and r["route_long_name"] in selected], selected, nsid)
-        payload["max_hour"] = int(max_hour or 0)
-        return payload
+             and r["route_long_name"] in selected], selected, nsid,
+            int(max_hour or 0))
 
     return {
         "q1": lambda lim: shapes.shape_q1_rows(cut(q1_rows, lim)),

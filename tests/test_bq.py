@@ -15,15 +15,14 @@ import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
     _bq_query_bits,
     _index_manifest,
-    bq_index_topk,
-    bq_index_topk_batch,
-    bq_index_upsert,
     bq_topk,
     brute_force_topk,
     compact_index,
+    index_topk,
+    index_topk_batch,
+    index_upsert,
     read_index_codes,
-    sq8_index_upsert,
-    write_bq_index,
+    write_index,
 )
 from tests.conftest import SF_DIR
 
@@ -36,7 +35,7 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def idx(spark, emb, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("bq") / "idx")
-    write_bq_index(emb, path)
+    write_index(emb, path, "bq")
     return path
 
 
@@ -70,7 +69,7 @@ def test_packing_matches_driver_side_bits(spark, emb, idx):
 
 
 def test_topk_self_hit_and_recall(spark, emb, idx):
-    res = bq_index_topk(spark, idx, _qvec(emb, 3), emb, k=5)
+    res = index_topk(spark, idx, _qvec(emb, 3), emb, k=5, kind="bq")
     rows = res.collect()
     assert rows[0]["neighbor_id"] == 3 and rows[0]["cos_sim"] == 1.0
     assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
@@ -79,7 +78,7 @@ def test_topk_self_hit_and_recall(spark, emb, idx):
     for qid in range(4):
         e_ids = {r["neighbor_id"] for r in
                  exact.filter(F.col("query_id") == qid).collect()}
-        a = bq_index_topk(spark, idx, _qvec(emb, qid), emb, k=11)
+        a = index_topk(spark, idx, _qvec(emb, qid), emb, k=11, kind="bq")
         a_ids = {r["neighbor_id"] for r in a.collect()} - {qid}
         hits += len(e_ids & a_ids)
         total += len(e_ids)
@@ -90,11 +89,12 @@ def test_batch_matches_single_query(spark, emb, idx):
     qids = [3, 7, 11]
     queries = emb.filter(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    batch = bq_index_topk_batch(spark, idx, queries, emb, k=5)
+    batch = index_topk_batch(spark, idx, queries, emb, k=5, kind="bq")
     for qid in qids:
         single = [(r["rank"], r["neighbor_id"], r["cos_sim"])
-                  for r in bq_index_topk(
-                      spark, idx, _qvec(emb, qid), emb, k=5).collect()]
+                  for r in index_topk(
+                      spark, idx, _qvec(emb, qid), emb, k=5,
+                      kind="bq").collect()]
         got = [(r["rank"], r["neighbor_id"], r["cos_sim"])
                for r in batch.filter(F.col("query_id") == qid)
                .orderBy("rank").collect()]
@@ -106,8 +106,8 @@ def test_filtered_search(spark, emb, idx):
                  emb.orderBy(F.desc("vec_id")).limit(6).collect()]
     allowed = emb.filter(F.col("vec_id").isin(allow_ids)) \
         .select("vec_id")
-    res = bq_index_topk(spark, idx, _qvec(emb, 3), emb, k=5,
-                        allowed=allowed)
+    res = index_topk(spark, idx, _qvec(emb, 3), emb, k=5,
+                     allowed=allowed, kind="bq")
     rows = res.collect()
     assert len(rows) == 5
     assert {r["neighbor_id"] for r in rows} <= set(allow_ids)
@@ -115,34 +115,34 @@ def test_filtered_search(spark, emb, idx):
 
 def test_upsert_append_replace_refusals_compact(spark, emb, tmp_path):
     path = str(tmp_path / "idx")
-    write_bq_index(emb, path)
+    write_index(emb, path, "bq")
     qv = _qvec(emb, 3)
     new = spark.createDataFrame([(940000, qv)],
                                 "vec_id long, embedding array<double>")
-    st = bq_index_upsert(spark, path, new)
+    st = index_upsert(spark, path, new, kind="bq")
     assert st["decision"] == "appended" and st["n_new"] == 1
     merged = emb.select("vec_id", "embedding").unionByName(new)
     ids = {r["neighbor_id"] for r in
-           bq_index_topk(spark, path, qv, merged, k=3).collect()}
+           index_topk(spark, path, qv, merged, k=3, kind="bq").collect()}
     assert 940000 in ids
     # identical vector -> identical halves as its source
     halves = {r["vec_id"]: (r["lo"], r["hi"])
               for r in read_index_codes(spark, path)
               .filter(F.col("vec_id").isin([3, 940000])).collect()}
     assert halves[3] == halves[940000]
-    st2 = bq_index_upsert(spark, path, new)
+    st2 = index_upsert(spark, path, new, kind="bq")
     assert st2["decision"] == "replaced" and st2["n_replaced"] == 1
     assert len(_index_manifest(spark, path)["codes"]) == 1
     # foreign kinds refused both directions
-    assert sq8_index_upsert(spark, path, new)["decision"] \
+    assert index_upsert(spark, path, new, kind="sq8")["decision"] \
         == "wrong_kind"
     # append-fragment then compact (flat branch)
     for i in range(2):
-        bq_index_upsert(
+        index_upsert(
             spark, path,
             spark.createDataFrame([(950000 + i, qv)],
                                   "vec_id long, embedding "
-                                  "array<double>"))
+                                  "array<double>"), kind="bq")
     assert len(_index_manifest(spark, path)["codes"]) == 3
     before = sorted((r["vec_id"], r["lo"], r["hi"])
                     for r in read_index_codes(spark, path).collect())
@@ -165,7 +165,7 @@ def test_streaming_serving_and_upsert_dispatch_bq(spark, emb,
     )
 
     path = str(tmp_path / "idx")
-    write_bq_index(emb, path)
+    write_index(emb, path, "bq")
     qsrc = str(tmp_path / "qsrc")
     emb.filter(F.col("vec_id").isin([3, 7])).select(
         F.col("vec_id").alias("query_id"), "embedding") \
@@ -179,8 +179,8 @@ def test_streaming_serving_and_upsert_dispatch_bq(spark, emb,
     served = read_version(spark, results)
     assert served.count() == 10
     single = [(r["rank"], r["neighbor_id"]) for r in
-              bq_index_topk(spark, path, _qvec(emb, 3), emb,
-                            k=5).collect()]
+              index_topk(spark, path, _qvec(emb, 3), emb,
+                         k=5, kind="bq").collect()]
     got = [(r["rank"], r["neighbor_id"]) for r in
            served.filter(F.col("query_id") == 3)
            .orderBy("rank").collect()]
@@ -248,7 +248,7 @@ def test_inflight_matches_oracle_shape(spark, emb):
 
 def test_dim_guard(spark, emb, tmp_path):
     with pytest.raises(ValueError, match="64 sign bits"):
-        write_bq_index(emb, str(tmp_path / "x"), dim=32)
+        write_index(emb, str(tmp_path / "x"), "bq", dim=32)
     with pytest.raises(ValueError, match="64 sign bits"):
         bq_topk(emb, dim=128)
 

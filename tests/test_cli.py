@@ -7,16 +7,23 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.__main__ import (
+    _parse_grid,
     build_serve_app,
     main,
 )
 from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
     _index_manifest,
 )
+from public_transit_data_platform_sql_nosql_spark.pipeline import (
+    similarity as sim,
+)
 from tests.conftest import SF_DIR
+from tests.test_tune import _hamming_blind_bucket
+from tests.test_vector_index import _qvec
 
 
 @pytest.fixture(scope="module")
@@ -609,7 +616,7 @@ def _write_jsonl(path, n=40):
                 "lang": "en", "source": "t", "n_chars": 20}) + "\n")
 
 
-@pytest.mark.parametrize("kind", ["bq", "ivf_pq"])
+@pytest.mark.parametrize("kind", ["bq", "ivf", "ivf_pq"])
 def test_vector_pipeline_kind_switch(spark, tmp_path, capsys, kind):
     from public_transit_data_platform_sql_nosql_spark.__main__ import main
 
@@ -640,7 +647,7 @@ def test_cli_maintain_bump_rerank_exits_zero(spark, tmp_path, capsys):
     clears the floor."""
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
         BQ_RERANK_MULT,
-        write_ivf_bq_index,
+        write_index,
     )
 
     def bucket(n, base, axes):
@@ -661,7 +668,7 @@ def test_cli_maintain_bump_rerank_exits_zero(spark, tmp_path, capsys):
     batch_path = str(tmp_path / "batch")
     corpus.orderBy("vec_id").limit(3).write.parquet(batch_path)
     idx = str(tmp_path / "ivfbq")
-    write_ivf_bq_index(corpus, idx, k=2)
+    write_index(corpus, idx, "ivf_bq", k=2)
     assert main(["vector-index", "maintain", "--path", idx,
                  "--batch", batch_path, "--emb", emb_path,
                  "--recall-floor", "950"]) == 0
@@ -669,6 +676,166 @@ def test_cli_maintain_bump_rerank_exits_zero(spark, tmp_path, capsys):
     assert st["kind"] == "ivf_bq"
     assert st["decision"] == "bump_rerank", st
     assert st["rerank_mult"] == 2 * BQ_RERANK_MULT
+
+
+def test_cli_hybrid_search(spark, emb, tmp_path, capsys):
+    import json as _json
+
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+
+    docs_p = str(tmp_path / "docs")
+    E._aug(spark, SF_DIR).write.parquet(docs_p)
+    emb_p = str(tmp_path / "emb")
+    emb.write.parquet(emb_p)
+    idx = str(tmp_path / "idx")
+    sim.write_index(emb, idx, "ivf_sq8")
+    q_p = str(tmp_path / "queries")
+    spark.createDataFrame(
+        [(1, ["spark", "window"],
+          [float(x) for x in emb.filter("vec_id = 1")
+           .head()["embedding"]])],
+        "query_id long, terms array<string>, embedding array<double>"
+    ).write.parquet(q_p)
+    out = str(tmp_path / "res")
+    assert main(["hybrid-search", "--docs", docs_p, "--emb", emb_p,
+                 "--path", idx, "--queries", q_p, "--out", out,
+                 "--k", "5"]) == 0
+    st = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert st["kind"] == "ivf_sq8" and st["n_queries"] == 1
+    assert spark.read.parquet(out).count() == st["n_results"] == 5
+
+
+# ---------------------------------------------------------------------------
+# CLI --where refusal on attr-less indexes
+
+
+def test_cli_where_refused_without_attrs(spark, emb, tmp_path, capsys):
+    import json as _json
+
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+
+    emb_p = str(tmp_path / "emb")
+    emb.write.parquet(emb_p)
+    idx = str(tmp_path / "idx")
+    sim.write_index(emb, idx, "sq8")               # flat, NO attrs
+    rc = main(["vector-index", "query", "--path", idx, "--emb", emb_p,
+               "--vec-id", "1", "--where", "tenant = 'a'"])
+    st = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 2 and "no attribute columns" in st["error"]
+
+
+def test_cli_tune_rerank_grid(spark, tmp_path, capsys):
+    """CLI tune on a flat kind commits default_rerank_mult from a
+    caller-pinned --rerank-mults grid; stats reports the committed
+    rerank operating point."""
+    import json as _json
+
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+
+    corpus = _hamming_blind_bucket(spark).localCheckpoint(eager=True)
+    emb_p = str(tmp_path / "emb")
+    corpus.write.parquet(emb_p)
+    idx = str(tmp_path / "idx")
+    sim.write_index(corpus, idx, "bq")
+    rc = main(["vector-index", "tune", "--path", idx, "--emb", emb_p,
+               "--k", "5", "--rerank-mults", "1,2,4,8"])
+    st = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0 and st["decision"] == "tuned"
+    assert st["rerank_mult"] == 8
+    assert main(["vector-index", "stats", "--path", idx]) == 0
+    ix = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert ix["default_rerank_mult"] == 8 and ix["rerank_tuned"] is True
+
+
+def test_cli_hybrid_where(spark, emb, tmp_path, capsys):
+    import json as _json
+
+    from public_transit_data_platform_sql_nosql_spark.__main__ import (
+        main,
+    )
+
+    docs_p = str(tmp_path / "docs")
+    E._aug(spark, SF_DIR).write.parquet(docs_p)
+    emb_p = str(tmp_path / "emb")
+    emb.write.parquet(emb_p)
+    attrs = emb.select(
+        "vec_id",
+        F.when(F.col("vec_id") % 2 == 0, "a").otherwise("b")
+        .alias("lang"))
+    idx = str(tmp_path / "idx")
+    sim.write_index(emb, idx, "sq8", attrs=attrs)
+    q_p = str(tmp_path / "queries")
+    spark.createDataFrame(
+        [(1, ["spark", "window"], _qvec(emb, 1))],
+        "query_id long, terms array<string>, embedding array<double>"
+    ).write.parquet(q_p)
+    out = str(tmp_path / "res")
+    assert main(["hybrid-search", "--docs", docs_p, "--emb", emb_p,
+                 "--path", idx, "--queries", q_p, "--out", out,
+                 "--k", "5", "--where", "lang = 'a'"]) == 0
+    st = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert st["n_results"] == 5
+    rows = spark.read.parquet(out).collect()
+    assert rows and all(int(r["doc_id"]) % 2 == 0 for r in rows)
+
+    # attr-less index: refused with rc=2, not silently unfiltered
+    bare = str(tmp_path / "bare")
+    sim.write_index(emb, bare, "sq8")
+    rc = main(["hybrid-search", "--docs", docs_p, "--emb", emb_p,
+               "--path", bare, "--queries", q_p, "--out", out,
+               "--where", "lang = 'a'"])
+    st2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 2 and "no attribute columns" in st2["error"]
+
+
+# ---------------------------------------------------------------------------
+# CLI --rerank-mults hardening
+
+
+def test_parse_grid_shapes():
+    assert _parse_grid(None) == (None, None)
+    assert _parse_grid("1,2,4") == ((1, 2, 4), None)
+    # empty grid on an IVF kind: legal (pins the second rung off)
+    assert _parse_grid("", kind="ivf_sq8") == ((), None)
+    # empty grid on a FLAT kind: the rerank grid is its ONLY ladder
+    grid, err = _parse_grid("", kind="bq")
+    assert grid is None and "only" in err and "bq" in err
+    # non-numeric: refused with the input quoted, not a traceback
+    grid, err = _parse_grid("8,x", kind="ivf_sq8")
+    assert grid is None and "'8,x'" in err
+
+
+def test_cli_tune_empty_grid_on_flat_kind_rc2(spark, emb, tmp_path,
+                                              capsys):
+    """An empty --rerank-mults against a flat index used to yield an
+    empty curve and decision=target_unreachable (rc 3) — a recall miss
+    that measured nothing.  Now rc 2 with the reason on stdout."""
+    emb_p = str(tmp_path / "emb")
+    emb.write.parquet(emb_p)
+    idx = str(tmp_path / "idx")
+    sim.write_index(emb, idx, "sq8")
+    rc = main(["vector-index", "tune", "--path", idx, "--emb", emb_p,
+               "--rerank-mults", ""])
+    st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 2 and "error" in st
+    assert "sq8" in st["error"]
+
+
+def test_cli_recall_curve_bad_grid_rc2(spark, emb, tmp_path, capsys):
+    emb_p = str(tmp_path / "emb")
+    emb.write.parquet(emb_p)
+    idx = str(tmp_path / "idx")
+    sim.write_index(emb, idx, "sq8")
+    rc = main(["vector-index", "recall-curve", "--path", idx,
+               "--emb", emb_p, "--rerank-mults", "8,x"])
+    st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 2 and "integers" in st["error"]
 
 
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --

@@ -20,11 +20,8 @@ from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
     compact_index,
     index_topk,
     index_upsert,
-    ivf_sq8_index_topk,
-    ivf_sq8_index_upsert,
     read_index_codes,
     write_index,
-    write_ivf_sq8_index,
 )
 from tests.conftest import SF_DIR
 
@@ -247,12 +244,12 @@ def test_compact_index_folds_appended_dirs(spark, emb, tmp_path,
 
     base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
     path = str(tmp_path / "ivfsq8")
-    write_ivf_sq8_index(base, path)
+    write_index(base, path, "ivf_sq8")
     for lo in (0, 3):   # two appended batches -> three dirs
         batch = emb.filter(f"vec_id >= {lo + 10} AND vec_id < {lo + 13}") \
             .select((F.col("vec_id") + 50_000 + lo * 1000).alias("vec_id"),
                     "embedding")
-        assert ivf_sq8_index_upsert(spark, path, batch)["decision"] \
+        assert index_upsert(spark, path, batch, kind="ivf_sq8")["decision"] \
             == "appended"
     m0 = _index_manifest(spark, path)
     assert len(m0["codes"]) == 3
@@ -272,7 +269,7 @@ def test_compact_index_folds_appended_dirs(spark, emb, tmp_path,
     assert after == before
     qvec = _qvec(emb, 10)
     plan = executed_plan(
-        ivf_sq8_index_topk(spark, path, qvec, emb, k=3, nprobe=1))
+        index_topk(spark, path, qvec, emb, k=3, nprobe=1, kind="ivf_sq8"))
     assert "PartitionFilters" in plan
 
     # idempotent: a single-dir manifest is a noop

@@ -12,11 +12,13 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
-    bq_index_upsert,
     index_recall_curve,
     index_stats,
-    write_bq_index,
-    write_ivf_sq8_index,
+    index_upsert,
+    write_index,
+)
+from public_transit_data_platform_sql_nosql_spark.pipeline import (
+    similarity as sim,
 )
 from tests.conftest import SF_DIR
 
@@ -28,7 +30,7 @@ def emb(spark):
 
 def test_stats_flat_and_fragmentation(spark, emb, tmp_path):
     path = str(tmp_path / "bq")
-    write_bq_index(emb, path)
+    write_index(emb, path, "bq")
     st = index_stats(spark, path)
     assert st["kind"] == "bq" and st["dim"] == 64
     assert st["n_vectors"] == emb.count()
@@ -37,8 +39,8 @@ def test_stats_flat_and_fragmentation(spark, emb, tmp_path):
     assert "n_clusters" not in st
     qv = [float(x) for x in emb.filter("vec_id = 3")
           .head()["embedding"]]
-    bq_index_upsert(spark, path, spark.createDataFrame(
-        [(980000, qv)], "vec_id long, embedding array<double>"))
+    index_upsert(spark, path, spark.createDataFrame(
+        [(980000, qv)], "vec_id long, embedding array<double>"), kind="bq")
     st2 = index_stats(spark, path)
     assert st2["n_codes_dirs"] == 2            # the compaction signal
     assert st2["n_vectors"] == emb.count() + 1
@@ -46,7 +48,7 @@ def test_stats_flat_and_fragmentation(spark, emb, tmp_path):
 
 def test_stats_cluster_balance(spark, emb, tmp_path):
     path = str(tmp_path / "ivfsq8")
-    write_ivf_sq8_index(emb, path)
+    write_index(emb, path, "ivf_sq8")
     st = index_stats(spark, path)
     assert st["kind"] == "ivf_sq8"
     assert st["code_bytes_per_vector"] == 64
@@ -63,7 +65,7 @@ def test_recall_curve_monotone_in_nprobe(spark, emb, tmp_path):
     )
 
     path = str(tmp_path / "ivfsq8")
-    write_ivf_sq8_index(emb, path)
+    write_index(emb, path, "ivf_sq8")
     # full probe = the DERIVED cluster count (k ~ sqrt(N) since r12)
     n_clusters = spark.read.parquet(
         f"{path}/{_index_manifest(spark, path)['centroids']}").count()
@@ -86,7 +88,7 @@ def test_recall_curve_flat_kind_rerank_ladder(spark, emb, tmp_path):
     whose shortlist covers the corpus (recall 1000 by construction),
     instead of the single constant-depth point it measured before."""
     path = str(tmp_path / "bq")
-    write_bq_index(emb, path)
+    write_index(emb, path, "bq")
     vectors = emb.select("vec_id", "embedding")
     curve = index_recall_curve(spark, path, vectors, num_queries=2,
                                k=5)
@@ -127,37 +129,28 @@ def test_vacuum_new_kinds_round_trip(spark, emb, tmp_path):
     codebooks refs, bq manifests carry codes only — after upserts
     push old versions out of the retention window, vacuum must
     collect the superseded dirs and the index must still serve."""
-    from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
-        bq_index_topk,
-        bq_index_upsert,
-        ivf_pq_index_topk,
-        ivf_pq_index_upsert,
+    from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
+        index_topk,
         vacuum_index,
-        write_bq_index,
-        write_ivf_pq_index,
     )
 
     qv = [float(x) for x in emb.filter("vec_id = 3")
           .head()["embedding"]]
-    for kind, writer, upsert, topk, kw in (
-            ("ivf_pq", write_ivf_pq_index, ivf_pq_index_upsert,
-             ivf_pq_index_topk, {"nprobe": 8}),
-            ("bq", write_bq_index, bq_index_upsert,
-             bq_index_topk, {})):
+    for kind, kw in (("ivf_pq", {"nprobe": 8}), ("bq", {})):
         path = str(tmp_path / kind)
-        writer(emb.select("vec_id", "embedding"), path)
+        write_index(emb.select("vec_id", "embedding"), path, kind)
         new = spark.createDataFrame(
             [(990000, qv)], "vec_id long, embedding array<double>")
-        upsert(spark, path, new)               # append (v1)
-        upsert(spark, path, new)               # replace (v2)
+        index_upsert(spark, path, new, kind=kind)      # append (v1)
+        index_upsert(spark, path, new, kind=kind)      # replace (v2)
         st = vacuum_index(spark, path, keep_last=1)
         assert st["kept_versions"] == [2]
         assert st["removed_manifests"] == [0, 1]
         # superseded codes dirs are gone; referenced artifacts remain
         assert len(st["removed_dirs"]) >= 1
-        res = topk(spark, path, qv,
-                   emb.select("vec_id", "embedding").unionByName(new),
-                   k=3, **kw)
+        res = index_topk(spark, path, qv,
+                         emb.select("vec_id", "embedding").unionByName(new),
+                         k=3, kind=kind, **kw)
         ids = {r["neighbor_id"] for r in res.collect()}
         assert 990000 in ids or 3 in ids
 
@@ -169,15 +162,14 @@ def test_cli_upsert_auto_compact(spark, emb, tmp_path, capsys):
     import json as _json
 
     from public_transit_data_platform_sql_nosql_spark.__main__ import main
-    from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
+    from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
         _index_manifest,
-        write_bq_index,
     )
 
     emb_path = str(tmp_path / "emb")
     emb.select("vec_id", "embedding").write.parquet(emb_path)
     path = str(tmp_path / "idx")
-    write_bq_index(spark.read.parquet(emb_path), path)
+    write_index(spark.read.parquet(emb_path), path, "bq")
     qv = [float(x) for x in emb.filter("vec_id = 3")
           .head()["embedding"]]
     for i, thresh_hit in ((0, False), (1, True)):
@@ -194,6 +186,28 @@ def test_cli_upsert_auto_compact(spark, emb, tmp_path, capsys):
         assert ("compact" in out) == thresh_hit, out
     m = _index_manifest(spark, path)
     assert len(m["codes"]) == 1            # folded back to one dir
+
+
+# ---------------------------------------------------------------------------
+# index_stats reports the operating point for IVF kinds ONLY
+
+
+def test_index_stats_operating_point_ivf_only(spark, emb, tmp_path):
+    flat = str(tmp_path / "flat")
+    sim.write_index(emb, flat, "sq8")
+    st = sim.index_stats(spark, flat)
+    assert "default_nprobe" not in st and "tuned" not in st
+    # ... but the RERANK operating point is every kind's knob
+    assert st["default_rerank_mult"] == sim.SQ_RERANK_MULT
+    assert st["rerank_tuned"] is False
+
+    ivf = str(tmp_path / "ivf")
+    sim.write_index(emb, ivf, "ivf_sq8", k=4)
+    st2 = sim.index_stats(spark, ivf)
+    assert st2["default_nprobe"] == sim.DEFAULT_NPROBE
+    assert st2["tuned"] is False
+    assert st2["default_rerank_mult"] == sim.SQ_RERANK_MULT
+    assert st2["rerank_tuned"] is False
 
 
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --

@@ -19,16 +19,16 @@ from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
     _index_manifest,
     brute_force_topk,
     compact_index,
-    ivf_pq_index_topk,
-    ivf_pq_index_topk_batch,
-    ivf_pq_index_upsert,
+    index_topk,
+    index_topk_batch,
+    index_upsert,
     ivf_pq_topk,
-    maintain_ivf_pq_index,
-    pq_index_upsert,
+    maintain_index,
     read_index_codes,
-    sq8_index_upsert,
-    write_ivf_pq_index,
-    write_pq_index,
+    write_index,
+)
+from public_transit_data_platform_sql_nosql_spark.pipeline import (
+    similarity as sim,
 )
 from tests.conftest import SF_DIR
 
@@ -43,7 +43,7 @@ def idx(spark, emb, tmp_path_factory):
     """One module-scoped read-only index over the sf embeddings —
     the mutation tests build their own under tmp_path."""
     path = str(tmp_path_factory.mktemp("ivfpq") / "idx")
-    write_ivf_pq_index(emb, path)
+    write_index(emb, path, "ivf_pq")
     return path
 
 
@@ -74,8 +74,8 @@ def test_layout_and_manifest(spark, emb, idx):
 def test_topk_partition_prunes(spark, emb, idx):
     """The probed scan must read only the nprobe cluster directories —
     partition filters in the plan, not a post-scan filter."""
-    res = ivf_pq_index_topk(spark, idx, _qvec(emb, 3), emb, k=5,
-                            nprobe=2)
+    res = index_topk(spark, idx, _qvec(emb, 3), emb, k=5,
+                     nprobe=2, kind="ivf_pq")
     rows = res.collect()
     assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
     assert rows[0]["neighbor_id"] == 3 and rows[0]["cos_sim"] == 1.0
@@ -95,8 +95,8 @@ def test_recall_beats_floor_vs_bruteforce(spark, emb, idx):
     for qid in range(4):
         e_ids = {r["neighbor_id"] for r in
                  exact.filter(F.col("query_id") == qid).collect()}
-        a = ivf_pq_index_topk(spark, idx, _qvec(emb, qid), emb, k=11,
-                              nprobe=8)
+        a = index_topk(spark, idx, _qvec(emb, qid), emb, k=11,
+                       nprobe=8, kind="ivf_pq")
         a_ids = {r["neighbor_id"] for r in a.collect()} - {qid}
         hits += len(e_ids & a_ids)
         total += len(e_ids)
@@ -107,13 +107,13 @@ def test_batch_matches_single_query(spark, emb, idx):
     qids = [3, 7, 11]
     queries = emb.filter(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    batch = ivf_pq_index_topk_batch(spark, idx, queries, emb, k=5,
-                                    nprobe=2)
+    batch = index_topk_batch(spark, idx, queries, emb, k=5,
+                             nprobe=2, kind="ivf_pq")
     for qid in qids:
         single = [(r["rank"], r["neighbor_id"], r["cos_sim"])
-                  for r in ivf_pq_index_topk(
+                  for r in index_topk(
                       spark, idx, _qvec(emb, qid), emb, k=5,
-                      nprobe=2).collect()]
+                      nprobe=2, kind="ivf_pq").collect()]
         got = [(r["rank"], r["neighbor_id"], r["cos_sim"])
                for r in batch.filter(F.col("query_id") == qid)
                .orderBy("rank").collect()]
@@ -130,14 +130,14 @@ def test_filtered_search_widens_probes(spark, emb, idx):
     allowed = emb.filter(F.col("vec_id").isin(allow_ids)) \
         .select("vec_id")
     qv = _qvec(emb, 3)
-    res = ivf_pq_index_topk(spark, idx, qv, emb, k=5, nprobe=1,
-                            allowed=allowed)
+    res = index_topk(spark, idx, qv, emb, k=5, nprobe=1,
+                     allowed=allowed, kind="ivf_pq")
     rows = res.collect()
     assert len(rows) == 5
     assert {r["neighbor_id"] for r in rows} <= set(allow_ids)
     # nprobe<=0 terminates too (the widening-step floor)
-    res0 = ivf_pq_index_topk(spark, idx, qv, emb, k=3, nprobe=0,
-                             allowed=allowed)
+    res0 = index_topk(spark, idx, qv, emb, k=3, nprobe=0,
+                      allowed=allowed, kind="ivf_pq")
     assert res0.count() == 3
 
 
@@ -149,13 +149,13 @@ def test_batch_filtered_matches_single(spark, emb, idx):
     qids = [3, 7]
     queries = emb.filter(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    batch = ivf_pq_index_topk_batch(spark, idx, queries, emb, k=5,
-                                    nprobe=1, allowed=allowed)
+    batch = index_topk_batch(spark, idx, queries, emb, k=5,
+                             nprobe=1, allowed=allowed, kind="ivf_pq")
     for qid in qids:
         single = [(r["rank"], r["neighbor_id"]) for r in
-                  ivf_pq_index_topk(spark, idx, _qvec(emb, qid), emb,
-                                    k=5, nprobe=1,
-                                    allowed=allowed).collect()]
+                  index_topk(spark, idx, _qvec(emb, qid), emb,
+                             k=5, nprobe=1,
+                             allowed=allowed, kind="ivf_pq").collect()]
         got = [(r["rank"], r["neighbor_id"]) for r in
                batch.filter(F.col("query_id") == qid)
                .orderBy("rank").collect()]
@@ -164,20 +164,20 @@ def test_batch_filtered_matches_single(spark, emb, idx):
 
 def test_upsert_append_replace_and_refusals(spark, emb, tmp_path):
     path = str(tmp_path / "idx")
-    write_ivf_pq_index(emb, path)
+    write_index(emb, path, "ivf_pq")
     qv = _qvec(emb, 3)
     new = _batch([(900001, qv)], spark)
-    st = ivf_pq_index_upsert(spark, path, new)
+    st = index_upsert(spark, path, new, kind="ivf_pq")
     assert st["decision"] == "appended" and st["n_new"] == 1
     m = _index_manifest(spark, path)
     assert len(m["codes"]) == 2            # append = one more dir
     # the appended vector is served (probe wide to be deterministic)
     merged = emb.select("vec_id", "embedding").unionByName(new)
-    res = ivf_pq_index_topk(spark, path, qv, merged, k=3, nprobe=8)
+    res = index_topk(spark, path, qv, merged, k=3, nprobe=8, kind="ivf_pq")
     ids = {r["neighbor_id"] for r in res.collect()}
     assert 900001 in ids
     # re-submit = keyed replace, back to ONE dir
-    st2 = ivf_pq_index_upsert(spark, path, new)
+    st2 = index_upsert(spark, path, new, kind="ivf_pq")
     assert st2["decision"] == "replaced" and st2["n_replaced"] == 1
     m2 = _index_manifest(spark, path)
     assert len(m2["codes"]) == 1
@@ -189,29 +189,29 @@ def test_upsert_append_replace_and_refusals(spark, emb, tmp_path):
         .filter("vec_id = 3").head()["codes"]
     assert bytes(codes_a) == bytes(codes_b)
     # foreign kinds are refused as data, both directions
-    assert sq8_index_upsert(spark, path, new)["decision"] \
+    assert index_upsert(spark, path, new, kind="sq8")["decision"] \
         == "wrong_kind"
-    assert pq_index_upsert(spark, path, new)["decision"] \
+    assert index_upsert(spark, path, new, kind="pq")["decision"] \
         == "wrong_kind"
     pq_path = str(tmp_path / "pq")
-    write_pq_index(emb, pq_path)
-    assert ivf_pq_index_upsert(spark, pq_path, new)["decision"] \
+    write_index(emb, pq_path, "pq")
+    assert index_upsert(spark, pq_path, new, kind="ivf_pq")["decision"] \
         == "wrong_kind"
 
 
 def test_maintain_ladder_ok(spark, emb, tmp_path):
     path = str(tmp_path / "idx")
-    write_ivf_pq_index(emb, path)
+    write_index(emb, path, "ivf_pq")
     qv = _qvec(emb, 5)
     new = _batch([(900002, qv)], spark)
     merged = emb.select("vec_id", "embedding").unionByName(new)
     # contract: vectors must already contain the batch
     with pytest.raises(ValueError, match="POST-merge"):
-        maintain_ivf_pq_index(spark, path, new,
-                              emb.select("vec_id", "embedding"))
-    st = maintain_ivf_pq_index(spark, path, new, merged, k=5,
-                               nprobe=8, sample_queries=1,
-                               rebuild=False)
+        maintain_index(spark, path, new,
+                       emb.select("vec_id", "embedding"), kind="ivf_pq")
+    st = maintain_index(spark, path, new, merged, k=5,
+                        nprobe=8, sample_queries=1,
+                        rebuild=False, kind="ivf_pq")
     # probing everything, the batch vector is its own nearest
     # neighbor: the sampled recall must clear the floor
     assert st["decision"] == "ok", st
@@ -220,11 +220,11 @@ def test_maintain_ladder_ok(spark, emb, tmp_path):
 
 def test_compact_folds_and_keeps_pruning(spark, emb, tmp_path):
     path = str(tmp_path / "idx")
-    write_ivf_pq_index(emb, path)
+    write_index(emb, path, "ivf_pq")
     qv = _qvec(emb, 3)
     for i in range(3):
-        ivf_pq_index_upsert(
-            spark, path, _batch([(910000 + i, qv)], spark))
+        index_upsert(
+            spark, path, _batch([(910000 + i, qv)], spark), kind="ivf_pq")
     m = _index_manifest(spark, path)
     assert len(m["codes"]) == 4
     before = read_index_codes(spark, path).orderBy("vec_id").collect()
@@ -249,7 +249,7 @@ def test_compact_folds_and_keeps_pruning(spark, emb, tmp_path):
 def test_inflight_operator_agrees_with_stored_layout(spark, emb, idx):
     """ivf_pq_topk (in-flight, oracle-checkable) and the stored layout
     share geometry (same centroid table, same codebook trainer) but
-    differ by one assignment/encode step (the pq_topk vs pq_index_topk
+    differ by one assignment/encode step (the pq_topk vs stored-pq index_topk
     convention) — at a full probe their top-5 sets must still be
     mostly the same vectors."""
     inflight = ivf_pq_topk(emb, num_queries=2, k=5, nprobe=8)
@@ -258,8 +258,8 @@ def test_inflight_operator_agrees_with_stored_layout(spark, emb, idx):
         flight_ids = {r["neighbor_id"] for r in
                       inflight.filter(F.col("query_id") == qid)
                       .collect()}
-        stored = ivf_pq_index_topk(spark, idx, _qvec(emb, qid), emb,
-                                   k=6, nprobe=8)
+        stored = index_topk(spark, idx, _qvec(emb, qid), emb,
+                            k=6, nprobe=8, kind="ivf_pq")
         stored_ids = {r["neighbor_id"]
                       for r in stored.collect()} - {qid}
         hits += len(flight_ids & stored_ids)
@@ -276,7 +276,7 @@ def test_streaming_serving_dispatches_ivf_pq(spark, emb, tmp_path):
     )
 
     path = str(tmp_path / "idx")
-    write_ivf_pq_index(emb, path)
+    write_index(emb, path, "ivf_pq")
     src = str(tmp_path / "qsrc")
     emb.filter(F.col("vec_id").isin([3, 7])).select(
         F.col("vec_id").alias("query_id"), "embedding") \
@@ -290,8 +290,8 @@ def test_streaming_serving_dispatches_ivf_pq(spark, emb, tmp_path):
     served = read_version(spark, results)
     assert served.count() == 10
     single = [(r["rank"], r["neighbor_id"]) for r in
-              ivf_pq_index_topk(spark, path, _qvec(emb, 3), emb, k=5,
-                                nprobe=2).collect()]
+              index_topk(spark, path, _qvec(emb, 3), emb, k=5,
+                         nprobe=2, kind="ivf_pq").collect()]
     got = [(r["rank"], r["neighbor_id"]) for r in
            served.filter(F.col("query_id") == 3)
            .orderBy("rank").collect()]
@@ -307,7 +307,7 @@ def test_streaming_upsert_dispatches_ivf_pq(spark, emb, tmp_path):
     )
 
     path = str(tmp_path / "idx")
-    write_ivf_pq_index(emb, path)
+    write_index(emb, path, "ivf_pq")
     src = str(tmp_path / "bsrc")
     _batch([(920000, _qvec(emb, 3))], spark).write.parquet(src)
     stream = (spark.readStream.schema(
@@ -362,6 +362,55 @@ def test_cli_build_query_upsert_maintain(spark, emb, tmp_path, capsys):
                  "--nprobe", "8", "--k", "5"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["kind"] == "ivf_pq" and out["decision"] == "ok"
+
+
+def test_ivf_pq_batch_matches_single_at_default_ksub(spark, emb,
+                                                     tmp_path):
+    path = str(tmp_path / "ivfpqb")
+    sim.write_index(emb, path, "ivf_pq")
+    ids = [3, 7, 11]
+    queries = spark.createDataFrame(
+        [(i, _qvec(emb, i)) for i in ids],
+        "query_id long, embedding array<double>")
+    batch = sim.index_topk_batch(
+        spark, path, queries, emb, k=5, nprobe=3, kind="ivf_pq").collect()
+    by_q: dict[int, list] = {}
+    for r in sorted(batch, key=lambda r: (r["query_id"], r["rank"])):
+        by_q.setdefault(int(r["query_id"]), []).append(
+            (int(r["rank"]), int(r["neighbor_id"]),
+             float(r["cos_sim"])))
+    for i in ids:
+        single = [(int(r["rank"]), int(r["neighbor_id"]),
+                   float(r["cos_sim"]))
+                  for r in sim.index_topk(
+                      spark, path, _qvec(emb, i), emb, k=5,
+                      nprobe=3, kind="ivf_pq").collect()]
+        assert by_q[i] == single
+
+
+def test_maintain_ivf_pq_escalates_ksub(spark, emb, tmp_path):
+    """Same rung on the composed layout: bump_nprobe cannot recover a
+    code-resolution floor (probing deeper re-ranks the same coarse
+    codes), so the ladder falls through to the escalating rebuild."""
+    path = str(tmp_path / "ivfesc")
+    sim.write_index(emb, path, "ivf_pq", ksub=2)
+    man0 = sim._index_manifest(spark, path)
+    n_cents = spark.read.parquet(
+        f"{path}/{man0['centroids']}").count()
+    batch = emb.orderBy("vec_id").limit(3)
+    # probe at FULL depth so the floor isolates code resolution: the
+    # bump rung is already maxed (bumped == nprobe == n_clusters), so
+    # only the escalating rebuild can recover — and after it, the same
+    # full-depth probe must clear the floor (a default-nprobe probe
+    # would stay probe-limited and prove nothing about ksub)
+    out = sim.maintain_index(spark, path, batch, emb,
+                             nprobe=n_cents,
+                             recall_floor_permille=950, kind="ivf_pq")
+    assert out["decision"] == "rebuild"
+    assert out["ksub_escalated"] is True
+    man = sim._index_manifest(spark, path)
+    assert int(man["k"]) == sim.PQ_INDEX_KSUB
+    assert out["recall_after_rebuild_permille"] >= 950
 
 
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --

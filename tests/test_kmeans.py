@@ -1,10 +1,12 @@
 """embedding_kmeans: exact numpy mirror of the deterministic Lloyd's
 iterations, clustering-quality sanity, DuckDB differential, and the
-broadcast-only plan shape."""
+broadcast-only plan shape; plus the full-precision ``ivf`` index kind
+that stores its clustering (probe pruning, upsert, maintenance rungs)."""
 
 from __future__ import annotations
 
 import hashlib
+import re
 
 import numpy as np
 
@@ -135,27 +137,28 @@ def test_semantic_dedup_plan_has_no_cartesian(spark):
 
 
 def test_ivf_index_write_query_roundtrip(spark, tmp_path):
-    """Persisted IVF layout: query scans ONLY the probed cluster
-    directories (PartitionFilters plan-asserted), matches a brute-force
-    recompute within those clusters, and with nprobe = k equals the
-    global exact top-k."""
-    import numpy as np
-
+    """The full-precision ivf kind: a query reads ONLY the probed
+    cluster directories (no other cluster's file is an input),
+    matches a brute-force recompute within those clusters, and with
+    nprobe = every cluster equals the global exact top-k."""
     emb = _emb(spark)
     path = str(tmp_path / "ivf")
-    sim.write_ivf_index(emb, path)
+    sim.write_index(emb, path, "ivf")
 
     qvec = [float(x) for x in
             emb.filter("vec_id = 0").collect()[0]["embedding"]]
-    res = sim.ivf_index_topk(spark, path, qvec, k=5, nprobe=2)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cluster_id" in plan, plan
+    m = sim._index_manifest(spark, path)
+    probe = [cid for _, cid in sim._rank_centroids(
+        qvec, sim._centroid_rows(spark, path, m))[:2]]
+    res = sim.index_topk(spark, path, qvec, emb, k=5, nprobe=2, kind="ivf")
+    scanned = {int(re.search(r"cluster_id=(\d+)", f).group(1))
+               for f in res.inputFiles() if "cluster_id=" in f}
+    assert scanned == set(probe)
     rows = res.collect()
     assert len(rows) == 5
 
     # brute-force mirror within the probed clusters
-    stored = spark.read.parquet(path).collect()
-    probed = {r["cluster_id"] for r in rows}
+    stored = sim.read_index_codes(spark, path).collect()
     qa = np.array(qvec)
 
     def cos(v):
@@ -165,18 +168,18 @@ def test_ivf_index_write_query_roundtrip(spark, tmp_path):
 
     cand = sorted(
         ((cos(r["embedding"]), r["vec_id"]) for r in stored
-         if r["cluster_id"] in probed),
+         if r["cluster_id"] in probe),
         key=lambda t: (-t[0], t[1]))[:5]
-    assert [(r["cos_sim"], r["vec_id"]) for r in rows] == cand
+    assert [(r["cos_sim"], r["neighbor_id"]) for r in rows] == cand
 
     # probing every cluster recovers the global exact top-k ("every" =
-    # the DERIVED cluster count, k ~ sqrt(N) since r12)
-    n_clusters = spark.read.parquet(f"{path}/_centroids").count()
-    full = sim.ivf_index_topk(spark, path, qvec, k=5,
-                              nprobe=n_clusters).collect()
+    # the DERIVED cluster count, k ~ sqrt(N))
+    n_clusters = sim.index_stats(spark, path)["n_clusters"]
+    full = sim.index_topk(spark, path, qvec, emb, k=5, nprobe=n_clusters,
+                          kind="ivf").collect()
     allc = sorted(((cos(r["embedding"]), r["vec_id"]) for r in stored),
                   key=lambda t: (-t[0], t[1]))[:5]
-    assert [(r["cos_sim"], r["vec_id"]) for r in full] == allc
+    assert [(r["cos_sim"], r["neighbor_id"]) for r in full] == allc
 
 
 def test_kmeans_iterate_matches_unrolled(spark):
@@ -192,19 +195,15 @@ def test_kmeans_iterate_matches_unrolled(spark):
         assert unrolled == looped
 
 
-def test_ivf_index_upsert_touches_only_receiving_partitions(spark,
-                                                            tmp_path):
-    """New vectors merge into the stored IVF layout through the
-    partition-scoped upsert: assignments use the STORED centroids,
-    only receiving (and moved-from) cluster dirs rewrite, and queries
-    see the new vectors.  Re-submitted keys may legitimately MOVE
-    cluster: the stored rows carry the write-time assignment, one
-    centroid-update step staler than the stored centroids the upsert
-    assigns against — the moved-key contract drops the stale copy."""
+def test_ivf_kind_upsert_colocates_and_serves(spark, tmp_path):
+    """New vectors merge into the stored ivf kind assigned against the
+    STORED centroids; re-submitted keys are replaced (each vec_id stays
+    unique, whichever cluster it lands in), identical embeddings
+    upserted together colocate, and queries see the new vectors."""
     emb = _emb(spark)
     path = str(tmp_path / "ivf")
-    sim.write_ivf_index(emb, path)
-    n0 = spark.read.parquet(path).count()
+    sim.write_index(emb, path, "ivf")
+    n0 = sim.read_index_codes(spark, path).count()
 
     # re-insert three existing vectors (update path, vec 0 included) +
     # one new vector duplicating vec 0's embedding — identical
@@ -217,21 +216,21 @@ def test_ivf_index_upsert_touches_only_receiving_partitions(spark,
          (1, base[1]["embedding"], base[1]["label"]),
          (2, base[2]["embedding"], base[2]["label"])] + newbie,
         emb.schema)
-    st = sim.ivf_index_upsert(spark, path, updates)
-    assert st["rows_upserted"] == 4
+    st = sim.index_upsert(spark, path, updates, kind="ivf")
+    assert (st["decision"], st["n_new"], st["n_replaced"]) \
+        == ("replaced", 4, 3)
 
-    after = spark.read.parquet(path)
+    after = sim.read_index_codes(spark, path)
     assert after.count() == n0 + 1
-    # every re-submitted key appears exactly once (a moved key's stale
-    # copy is dropped from its previous directory)
     assert after.select("vec_id").distinct().count() == n0 + 1
     got = {r["vec_id"]: r["cluster_id"] for r in after.collect()
            if r["vec_id"] in (0, 999999)}
     assert got[999999] == got[0]
     # the duplicate embedding ranks at the top of a query for v0
-    top = sim.ivf_index_topk(spark, path, [float(x) for x in v0],
-                             k=2, nprobe=2).collect()
-    assert {r["vec_id"] for r in top} == {0, 999999}
+    vectors = emb.unionByName(spark.createDataFrame(newbie, emb.schema))
+    top = sim.index_topk(spark, path, [float(x) for x in v0], vectors,
+                         k=2, nprobe=2, kind="ivf").collect()
+    assert {r["neighbor_id"] for r in top} == {0, 999999}
     assert all(r["cos_sim"] == 1.0 for r in top)
 
 
@@ -272,13 +271,15 @@ def test_maintain_ok_when_batch_matches_geometry(spark, tmp_path):
     """A batch from the SAME distribution as a stored cluster keeps
     recall at the floor -> decision 'ok', index untouched."""
     path = str(tmp_path / "ivf_ok")
-    sim.write_ivf_index(_two_group_base(spark), path, k=2)
+    base = _two_group_base(spark)
+    sim.write_index(base, path, "ivf", k=2, dim=8)
     batch = _mk_emb(spark, [
         (2000 + i, [1.0, 0.002 * i + 0.0005] + [0.0] * 6)
         for i in range(6)
     ])
-    st = sim.maintain_ivf_index(spark, path, batch, k=5, nprobe=1,
-                                sample_queries=4)
+    st = sim.maintain_index(spark, path, batch, base.unionByName(batch),
+                            k=5, nprobe=1, recall_floor_permille=900,
+                            sample_queries=4, kind="ivf")
     assert st["decision"] == "ok"
     assert st["recall_permille"] >= 900
     assert st["nprobe"] == 1
@@ -288,13 +289,17 @@ def test_maintain_planted_drift_flips_to_bump(spark, tmp_path):
     """Boundary-straddling drift tanks nprobe=1 recall; doubling the
     probes recovers it -> decision 'bump_nprobe' with the new setting."""
     path = str(tmp_path / "ivf_bump")
-    sim.write_ivf_index(_two_group_base(spark), path, k=2)
-    st = sim.maintain_ivf_index(spark, path, _straddle_batch(spark),
-                                k=10, nprobe=1, sample_queries=4)
+    base, batch = _two_group_base(spark), _straddle_batch(spark)
+    sim.write_index(base, path, "ivf", k=2, dim=8)
+    st = sim.maintain_index(spark, path, batch, base.unionByName(batch),
+                            k=10, nprobe=1, recall_floor_permille=900,
+                            sample_queries=4, kind="ivf")
     assert st["recall_permille"] < 900
     assert st["decision"] == "bump_nprobe"
     assert st["nprobe"] == 2
     assert st["recall_after_bump_permille"] >= 900
+    # no rerank rung: the full-precision scores are already exact
+    assert "recall_after_rerank_permille" not in st
 
 
 def test_maintain_planted_drift_rebuilds_at_probe_cap(spark, tmp_path):
@@ -303,25 +308,30 @@ def test_maintain_planted_drift_rebuilds_at_probe_cap(spark, tmp_path):
     the re-measured recall improves (the drift group now has its own
     centroid geometry)."""
     path = str(tmp_path / "ivf_rebuild")
-    sim.write_ivf_index(_two_group_base(spark), path, k=2)
-    st = sim.maintain_ivf_index(spark, path, _straddle_batch(spark),
-                                k=10, nprobe=1, max_nprobe=1,
-                                sample_queries=4)
+    base, batch = _two_group_base(spark), _straddle_batch(spark)
+    vectors = base.unionByName(batch)
+    sim.write_index(base, path, "ivf", k=2, dim=8)
+    st = sim.maintain_index(spark, path, batch, vectors, k=10, nprobe=1,
+                            max_nprobe=1, recall_floor_permille=900,
+                            sample_queries=4, kind="ivf")
     assert st["decision"] == "rebuild"
     assert "recall_after_bump_permille" not in st
+    assert "recall_after_rerank_permille" not in st
     assert st["recall_after_rebuild_permille"] > st["recall_permille"]
     # the index still serves and holds base + batch
-    assert spark.read.parquet(path).count() == 40 + 16
-    q = sim.ivf_index_topk(
-        spark, path, [1.05, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0],
-        k=3, nprobe=2)
+    assert sim.read_index_codes(spark, path).count() == 40 + 16
+    q = sim.index_topk(
+        spark, path, [1.05, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0], vectors,
+        k=3, nprobe=2, kind="ivf")
     assert len(q.collect()) == 3
 
 
 def test_maintain_empty_batch_is_ok(spark, tmp_path):
     path = str(tmp_path / "ivf_empty")
-    sim.write_ivf_index(_two_group_base(spark), path, k=2)
+    base = _two_group_base(spark)
+    sim.write_index(base, path, "ivf", k=2, dim=8)
     empty = _mk_emb(spark, [])
-    st = sim.maintain_ivf_index(spark, path, empty, k=5, nprobe=1)
+    st = sim.maintain_index(spark, path, empty, base, k=5, nprobe=1,
+                            recall_floor_permille=900, kind="ivf")
     assert st["decision"] == "ok"
     assert st["recall_permille"] is None

@@ -68,7 +68,7 @@ def test_wav8_roundtrip(samples, junk):
         _make_wav(samples, bits=8, chunks_before=junk)) == samples
 
 
-# --- filtered-ANN probe widening (mirrors ivf_sq8_index_topk) --------------
+# --- filtered-ANN probe widening (mirrors index_topk on IVF kinds) ----------
 
 
 def _widen(per_cluster_allowed, nprobe, k):

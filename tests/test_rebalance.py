@@ -9,6 +9,7 @@ sitting between the bump rung (probe more) and a full rebuild
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -66,13 +67,13 @@ def _sizes(spark, path):
 
 def test_rebalance_splits_hot_cluster_ivf_sq8(spark, corpus, tmp_path):
     path = str(tmp_path / "ivfsq8")
-    sim.write_ivf_sq8_index(corpus, path, k=2, dim=8)
+    sim.write_index(corpus, path, "ivf_sq8", k=2, dim=8)
     before = _sizes(spark, path)
     assert sorted(before.values()) == [4, 40]
     hot_cid = max(before, key=lambda c: before[c])
     qv = [1.0, 0.015] + [0.0] * 6
-    served_before = sim.ivf_sq8_index_topk(
-        spark, path, qv, corpus, k=8, nprobe=4).collect()
+    served_before = sim.index_topk(
+        spark, path, qv, corpus, k=8, nprobe=4, kind="ivf_sq8").collect()
 
     st = sim.rebalance_index(spark, path, corpus,
                              max_imbalance_permille=1500)
@@ -93,8 +94,8 @@ def test_rebalance_splits_hot_cluster_ivf_sq8(spark, corpus, tmp_path):
 
     # serving parity: same candidates -> identical results at a probe
     # depth covering every cluster
-    served_after = sim.ivf_sq8_index_topk(
-        spark, path, qv, corpus, k=8, nprobe=4).collect()
+    served_after = sim.index_topk(
+        spark, path, qv, corpus, k=8, nprobe=4, kind="ivf_sq8").collect()
     assert [tuple(r) for r in served_after] == \
         [tuple(r) for r in served_before]
 
@@ -109,7 +110,7 @@ def test_rebalance_splits_hot_cluster_ivf_sq8(spark, corpus, tmp_path):
 def test_rebalance_balanced_and_flat_are_noops(spark, corpus,
                                                tmp_path):
     path = str(tmp_path / "ivfsq8_bal")
-    sim.write_ivf_sq8_index(corpus, path, k=2, dim=8)
+    sim.write_index(corpus, path, "ivf_sq8", k=2, dim=8)
     v0 = list_versions(spark, path)[-1]
     st = sim.rebalance_index(spark, path, corpus,
                              max_imbalance_permille=1900)
@@ -118,14 +119,14 @@ def test_rebalance_balanced_and_flat_are_noops(spark, corpus,
     assert list_versions(spark, path)[-1] == v0
 
     flat = str(tmp_path / "sq8")
-    sim.write_sq8_index(corpus, flat, dim=8)
+    sim.write_index(corpus, flat, "sq8", dim=8)
     st2 = sim.rebalance_index(spark, flat, corpus)
     assert st2 == {"decision": "flat_kind", "kind": "sq8"}
 
 
 def test_rebalance_primary_store_contract(spark, corpus, tmp_path):
     path = str(tmp_path / "ivfsq8_contract")
-    sim.write_ivf_sq8_index(corpus, path, k=2, dim=8)
+    sim.write_index(corpus, path, "ivf_sq8", k=2, dim=8)
     with pytest.raises(ValueError, match="primary store"):
         sim.rebalance_index(spark, path,
                             corpus.filter("vec_id % 2 = 0"),
@@ -139,7 +140,7 @@ def test_rebalance_survives_upsert_and_compact(spark, corpus,
     rows physically and clears the mask — counts stay exact
     throughout and the tuned default_nprobe rides along."""
     path = str(tmp_path / "ivfsq8_cycle")
-    sim.write_ivf_sq8_index(corpus, path, k=2, dim=8)
+    sim.write_index(corpus, path, "ivf_sq8", k=2, dim=8)
     assert sim.tune_index(spark, path, corpus,
                           target_recall_permille=100,
                           nprobes=(1,))["decision"] == "tuned"
@@ -149,7 +150,7 @@ def test_rebalance_survives_upsert_and_compact(spark, corpus,
     assert sim._index_manifest(spark, path)["default_nprobe"] == 1
 
     batch = _mk_emb(spark, [(900001, [1.0, 0.02] + [0.0] * 6)])
-    up = sim.ivf_sq8_index_upsert(spark, path, batch)
+    up = sim.index_upsert(spark, path, batch, kind="ivf_sq8")
     assert up["decision"] == "appended"
     m = sim._index_manifest(spark, path)
     assert m["excluded_clusters"] == [st["cluster_id"]]
@@ -179,15 +180,14 @@ def test_rebalance_other_ivf_kinds(spark, corpus, tmp_path, kind):
     path = str(tmp_path / kind)
     if kind == "ivf_pq":
         emb, qv = corpus, [1.0, 0.015] + [0.0] * 6
-        sim.write_ivf_pq_index(emb, path, k=2, dim=8)
+        sim.write_index(emb, path, "ivf_pq", k=2, dim=8)
     else:
         # bq packs exactly 64 sign bits — same skew, zero-padded
         emb = _skewed_corpus(spark, dim=64).localCheckpoint(eager=True)
         qv = [1.0, 0.015] + [0.0] * 62
-        sim.write_ivf_bq_index(emb, path, k=2, dim=64)
+        sim.write_index(emb, path, "ivf_bq", k=2, dim=64)
     corpus = emb
-    serve = (sim.ivf_pq_index_topk if kind == "ivf_pq"
-             else sim.ivf_bq_index_topk)
+    serve = partial(sim.index_topk, kind=kind)
     before = serve(spark, path, qv, corpus, k=8, nprobe=4).collect()
     st = sim.rebalance_index(spark, path, corpus,
                              max_imbalance_permille=1500)
@@ -209,7 +209,7 @@ def test_streaming_maintainer_emits_rebalance_hint(spark, corpus,
     )
 
     idx = str(tmp_path / "idx")
-    sim.write_ivf_sq8_index(corpus, idx, k=2, dim=8)
+    sim.write_index(corpus, idx, "ivf_sq8", k=2, dim=8)
     src = str(tmp_path / "src")
     _mk_emb(spark, [(800000 + i, [1.0, 0.03 + 0.001 * i] + [0.0] * 6)
                     for i in range(4)]) \
@@ -237,7 +237,7 @@ def test_rebalance_hot_read_partition_prunes(spark, corpus, tmp_path):
     )
 
     path = str(tmp_path / "ivfsq8_plan")
-    sim.write_ivf_sq8_index(corpus, path, k=2, dim=8)
+    sim.write_index(corpus, path, "ivf_sq8", k=2, dim=8)
     m = sim._index_manifest(spark, path)
     codes = sim._manifest_codes(spark, path, m)
     plan = executed_plan(
@@ -258,6 +258,42 @@ def test_rebalance_hot_read_partition_prunes(spark, corpus, tmp_path):
     masked = [ln for ln in pf2
               if "cluster_id" in ln.split("PartitionFilters:")[1]]
     assert masked, plan2
+
+
+# ---------------------------------------------------------------------------
+# rebalance_index: degenerate hot list refuses as data
+
+
+def _degenerate_corpus(spark):
+    """The _skewed_corpus shape, but the hot group is ONE repeated
+    embedding — 2-means over it collapses to a single sub-cluster."""
+    from tests.test_rebalance import _h, _mk_emb
+
+    ids = sorted(range(200),
+                 key=lambda i: (_h(f"{sim.KMEANS_SALT}{i}"), i))
+    seed_hot, seed_cold = ids[0], ids[1]
+    rest = [i for i in range(200) if i not in (seed_hot, seed_cold)]
+    hot_ids = [seed_hot] + rest[:39]
+    cold_ids = [seed_cold] + rest[39:42]
+    rows = [(i, [1.0, 0.0] + [0.0] * 6) for i in hot_ids]
+    rows += [(i, [0.001 * j, 1.0] + [0.0] * 6)
+             for j, i in enumerate(cold_ids)]
+    return _mk_emb(spark, rows)
+
+
+def test_rebalance_unsplittable_commits_nothing(spark, tmp_path):
+    corpus = _degenerate_corpus(spark).localCheckpoint(eager=True)
+    path = str(tmp_path / "degen")
+    sim.write_index(corpus, path, "ivf_sq8", k=2, dim=8)
+    v0 = sim._index_manifest(spark, path)["version"]
+    st = sim.rebalance_index(spark, path, corpus,
+                             max_imbalance_permille=1500)
+    assert st["decision"] == "unsplittable"
+    assert st["n_sub_clusters"] == 1
+    assert "new_cluster_ids" not in st
+    m = sim._index_manifest(spark, path)
+    assert m["version"] == v0                   # nothing committed
+    assert "excluded_clusters" not in m
 
 
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --

@@ -76,23 +76,23 @@ def test_partitioning_invariance(spark, emb):
 
 
 def test_index_roundtrip_and_compression(spark, emb, tmp_path):
-    """write_sq8_index -> sq8_index_topk serves the same neighbors the
+    """write_index -> index_topk on the sq8 kind serves the same neighbors the
     in-flight operator finds for the same query, the packed codes table
     on disk is a small fraction of the vectors it stands in for, and
     the served ranks are exact-cosine ordered."""
     import os
 
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
-        sq8_index_topk,
-        write_sq8_index,
+        index_topk,
+        write_index,
     )
 
     path = str(tmp_path / "sq8")
-    write_sq8_index(emb, path)
+    write_index(emb, path, "sq8")
 
     qvec = [float(x) for x in
             emb.filter("vec_id = 0").head()["embedding"]]
-    got = sq8_index_topk(spark, path, qvec, emb, k=5).collect()
+    got = index_topk(spark, path, qvec, emb, k=5, kind="sq8").collect()
     assert [r["rank"] for r in sorted(got, key=lambda r: r["rank"])] \
         == [1, 2, 3, 4, 5]
     sims = [r["cos_sim"] for r in sorted(got, key=lambda r: r["rank"])]
@@ -122,17 +122,17 @@ def test_index_agrees_with_inflight_operator(spark, emb, tmp_path):
     vec 3 equals the in-flight sq8_topk row set for that query (modulo
     the self-exclusion the in-flight operator applies)."""
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
-        sq8_index_topk,
-        write_sq8_index,
+        index_topk,
+        write_index,
     )
 
     path = str(tmp_path / "sq8")
-    write_sq8_index(emb, path)
+    write_index(emb, path, "sq8")
     qvec = [float(x) for x in
             emb.filter("vec_id = 3").head()["embedding"]]
     served = {r["neighbor_id"]
-              for r in sq8_index_topk(spark, path, qvec, emb,
-                                      k=6).collect()}
+              for r in index_topk(spark, path, qvec, emb,
+                                  k=6, kind="sq8").collect()}
     inflight = {r.neighbor_id for r in sq8_topk(
         emb, num_queries=4, k=5).collect() if r.query_id == 3}
     # served includes the self row; drop it before comparing
@@ -146,21 +146,19 @@ def test_ivf_sq8_composed_layout(spark, emb, tmp_path):
     agrees with the flat SQ8 index for the same query."""
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
         _index_manifest,
-        ivf_sq8_index_topk,
-        sq8_index_topk,
-        write_ivf_sq8_index,
-        write_sq8_index,
+        index_topk,
+        write_index,
     )
     from public_transit_data_platform_sql_nosql_spark.plans import (
         executed_plan,
     )
 
     path = str(tmp_path / "ivfsq8")
-    write_ivf_sq8_index(emb, path)
+    write_index(emb, path, "ivf_sq8")
     qvec = [float(x) for x in
             emb.filter("vec_id = 0").head()["embedding"]]
 
-    got = ivf_sq8_index_topk(spark, path, qvec, emb, k=5, nprobe=2)
+    got = index_topk(spark, path, qvec, emb, k=5, nprobe=2, kind="ivf_sq8")
     rows = sorted(got.collect(), key=lambda r: r["rank"])
     assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
     assert rows[0]["neighbor_id"] == 0  # the query's own vector
@@ -169,19 +167,20 @@ def test_ivf_sq8_composed_layout(spark, emb, tmp_path):
 
     # partition pruning is visible in the scan, not a post-filter
     probe_plan = executed_plan(
-        ivf_sq8_index_topk(spark, path, qvec, emb, k=5, nprobe=1))
+        index_topk(spark, path, qvec, emb, k=5, nprobe=1, kind="ivf_sq8"))
     assert "PartitionFilters" in probe_plan
 
     # full probe == flat SQ8 index (same quantizer, same arithmetic);
     # "full" = the DERIVED cluster count (k ~ sqrt(N) since r12)
     flat = str(tmp_path / "flat")
-    write_sq8_index(emb, flat)
+    write_index(emb, flat, "sq8")
     n_clusters = spark.read.parquet(
         f"{path}/{_index_manifest(spark, path)['centroids']}").count()
-    a = sorted(map(tuple, ivf_sq8_index_topk(
-        spark, path, qvec, emb, k=5, nprobe=n_clusters).collect()))
-    b = sorted(map(tuple, sq8_index_topk(
-        spark, flat, qvec, emb, k=5).collect()))
+    a = sorted(map(tuple, index_topk(
+        spark, path, qvec, emb, k=5, nprobe=n_clusters,
+        kind="ivf_sq8").collect()))
+    b = sorted(map(tuple, index_topk(
+        spark, flat, qvec, emb, k=5, kind="sq8").collect()))
     assert a == b
 
 
@@ -192,15 +191,15 @@ def test_index_upsert_decision_loop(spark, emb, tmp_path):
     from pyspark.sql import functions as F
 
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
+        index_topk,
+        index_upsert,
         read_index_codes,
-        sq8_index_topk,
-        sq8_index_upsert,
-        write_sq8_index,
+        write_index,
     )
 
     base = emb.filter("vec_id >= 10")
     path = str(tmp_path / "sq8")
-    write_sq8_index(base, path)
+    write_index(base, path, "sq8")
     n0 = read_index_codes(spark, path).count()
 
     # copies of base vectors under new ids are in-range by
@@ -209,16 +208,16 @@ def test_index_upsert_decision_loop(spark, emb, tmp_path):
     batch = emb.filter("vec_id >= 10 AND vec_id < 20").select(
         (F.col("vec_id") + 50_000).alias("vec_id"), "embedding",
         "label")
-    st = sq8_index_upsert(spark, path, batch)
+    st = index_upsert(spark, path, batch, kind="sq8")
     assert st == {"decision": "appended", "n_new": 10,
                   "n_replaced": 0, "drifted_dims": []}
     assert read_index_codes(spark, path).count() == n0 + 10
     # the appended copy is servable: identical vector, cos_sim 1.0
     qvec = [float(x) for x in
             emb.filter("vec_id = 10").head()["embedding"]]
-    served = sq8_index_topk(
+    served = index_topk(
         spark, path, qvec,
-        base.unionByName(batch), k=3).collect()
+        base.unionByName(batch), k=3, kind="sq8").collect()
     by_rank = sorted(served, key=lambda r: r["rank"])
     assert {by_rank[0]["neighbor_id"], by_rank[1]["neighbor_id"]} \
         == {10, 50_010}
@@ -230,7 +229,7 @@ def test_index_upsert_decision_loop(spark, emb, tmp_path):
         F.transform("embedding",
                     lambda x: x * F.lit(100.0)).alias("embedding"))
     n1 = read_index_codes(spark, path).count()
-    st2 = sq8_index_upsert(spark, path, wild)
+    st2 = index_upsert(spark, path, wild, kind="sq8")
     assert st2["decision"] == "rebuild" and st2["drifted_dims"]
     assert read_index_codes(spark, path).count() == n1
 
@@ -242,15 +241,15 @@ def test_upsert_replaces_resubmitted_vec_ids(spark, emb, tmp_path):
     from pyspark.sql import functions as F
 
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
+        index_topk,
+        index_upsert,
         read_index_codes,
-        sq8_index_topk,
-        sq8_index_upsert,
-        write_sq8_index,
+        write_index,
     )
 
     base = emb.filter("vec_id >= 10")
     path = str(tmp_path / "sq8")
-    write_sq8_index(base, path)
+    write_index(base, path, "sq8")
     n0 = read_index_codes(spark, path).count()
 
     # re-submit vec 10 carrying vec 11's embedding, plus one new id
@@ -258,7 +257,7 @@ def test_upsert_replaces_resubmitted_vec_ids(spark, emb, tmp_path):
         F.lit(10).cast("long").alias("vec_id"), "embedding")
     new = emb.filter("vec_id = 12").select(
         (F.col("vec_id") + 70_000).alias("vec_id"), "embedding")
-    st = sq8_index_upsert(spark, path, e11.unionByName(new))
+    st = index_upsert(spark, path, e11.unionByName(new), kind="sq8")
     assert st["decision"] == "replaced"
     assert st["n_replaced"] == 1 and st["n_new"] == 2
 
@@ -274,8 +273,8 @@ def test_upsert_replaces_resubmitted_vec_ids(spark, emb, tmp_path):
         .select(*base.columns)).unionByName(
         new.withColumn("label", F.lit(None).cast("string"))
         .select(*base.columns))
-    served = sorted(sq8_index_topk(spark, path, qvec, vectors,
-                                   k=3).collect(),
+    served = sorted(index_topk(spark, path, qvec, vectors,
+                               k=3, kind="sq8").collect(),
                     key=lambda r: r["rank"])
     top2 = {served[0]["neighbor_id"], served[1]["neighbor_id"]}
     assert {10, 11} == top2
@@ -285,7 +284,7 @@ def test_upsert_replaces_resubmitted_vec_ids(spark, emb, tmp_path):
     import pytest as _pytest
     dup = e11.unionByName(e11)
     with _pytest.raises(ValueError):
-        sq8_index_upsert(spark, path, dup)
+        index_upsert(spark, path, dup, kind="sq8")
 
 
 def test_pack_unpack_round_trips_every_byte(spark):
@@ -316,17 +315,17 @@ def test_crash_between_data_and_manifest_is_invisible(spark, emb,
     import os
 
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
+        index_topk,
+        index_upsert,
         read_index_codes,
-        sq8_index_topk,
-        sq8_index_upsert,
         vacuum_index,
-        write_sq8_index,
+        write_index,
     )
     from pyspark.sql import functions as F
 
     base = emb.filter("vec_id >= 10")
     path = str(tmp_path / "sq8")
-    write_sq8_index(base, path)
+    write_index(base, path, "sq8")
     n0 = read_index_codes(spark, path).count()
 
     # simulate a crashed v1 commit: codes dir written, no manifest
@@ -339,7 +338,8 @@ def test_crash_between_data_and_manifest_is_invisible(spark, emb,
     assert read_index_codes(spark, path).count() == n0
     qvec = [float(x) for x in
             emb.filter("vec_id = 10").head()["embedding"]]
-    top = sorted(sq8_index_topk(spark, path, qvec, base, k=1).collect(),
+    top = sorted(index_topk(spark, path, qvec, base, k=1,
+                            kind="sq8").collect(),
                  key=lambda r: r["rank"])
     assert top[0]["neighbor_id"] == 10
 
@@ -350,7 +350,7 @@ def test_crash_between_data_and_manifest_is_invisible(spark, emb,
     # ...and the next commit lands cleanly as v1
     batch = emb.filter("vec_id >= 10 AND vec_id < 12").select(
         (F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
-    st2 = sq8_index_upsert(spark, path, batch)
+    st2 = index_upsert(spark, path, batch, kind="sq8")
     assert st2["decision"] == "appended"
     assert read_index_codes(spark, path).count() == n0 + 2
 
@@ -361,15 +361,15 @@ def test_index_scan_reads_only_codes_columns(spark, emb, tmp_path):
     full-precision embeddings never appear in its ReadSchema (they are
     read separately for the bounded rerank join)."""
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
-        sq8_index_topk,
-        write_sq8_index,
+        index_topk,
+        write_index,
     )
     from public_transit_data_platform_sql_nosql_spark.plans import (
         executed_plan,
     )
 
     path = str(tmp_path / "sq8")
-    write_sq8_index(emb, path)
+    write_index(emb, path, "sq8")
     qvec = [float(x) for x in
             emb.filter("vec_id = 0").head()["embedding"]]
     # Location strings truncate at spark.sql.maxMetadataStringLength
@@ -380,7 +380,7 @@ def test_index_scan_reads_only_codes_columns(spark, emb, tmp_path):
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     try:
         plan = executed_plan(
-            sq8_index_topk(spark, path, qvec, emb, k=5))
+            index_topk(spark, path, qvec, emb, k=5, kind="sq8"))
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", prev)
     # No scan under the index path may read a full-precision embedding

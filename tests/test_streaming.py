@@ -16,10 +16,10 @@ from public_transit_data_platform_sql_nosql_spark.jobs.versioned import (
 from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
     _index_manifest,
     compact_index,
-    ivf_sq8_index_topk,
-    ivf_sq8_index_upsert,
+    index_topk,
+    index_upsert,
     read_index_codes,
-    write_ivf_sq8_index,
+    write_index,
 )
 from public_transit_data_platform_sql_nosql_spark.queries.events import (
     windowed_counts,
@@ -33,7 +33,11 @@ from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (
     stream_vector_search,
     stream_windowed_counts,
 )
+from public_transit_data_platform_sql_nosql_spark.pipeline import (
+    similarity as sim,
+)
 from tests.conftest import SF_DIR
+from tests.test_rebalance import _skewed_corpus
 
 
 @pytest.fixture(scope="module")
@@ -482,8 +486,6 @@ def test_stream_vector_index_upsert(spark, tmp_path):
     )
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
         read_index_codes,
-        sq8_index_topk,
-        write_sq8_index,
     )
     from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (
         stream_vector_index_upsert,
@@ -492,7 +494,7 @@ def test_stream_vector_index_upsert(spark, tmp_path):
     emb = E._emb(spark, SF_DIR)
     base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
     idx = str(tmp_path / "idx")
-    write_sq8_index(base, idx)
+    write_index(base, idx, "sq8")
     n0 = read_index_codes(spark, idx).count()
 
     src = str(tmp_path / "src")
@@ -543,14 +545,15 @@ def test_stream_vector_index_upsert(spark, tmp_path):
             emb.filter("vec_id = 21").select("embedding")))
     qvec = [float(x)
             for x in emb.filter("vec_id = 21").head()["embedding"]]
-    top = sorted(sq8_index_topk(spark, idx, qvec, vectors, k=2).collect(),
+    top = sorted(index_topk(spark, idx, qvec, vectors, k=2,
+                            kind="sq8").collect(),
                  key=lambda r: r["rank"])
     assert {top[0]["neighbor_id"], top[1]["neighbor_id"]} >= {20}
 
 
 def test_stream_vector_index_upsert_dispatches_pq(spark, tmp_path):
     """The streaming maintainer reads the layout kind from the index
-    manifest: over a write_pq_index layout the same job encodes batches
+    manifest: over a stored pq layout the same job encodes batches
     against the stored codebooks (no SQ8 drift guard) and records the
     decision rows identically."""
     import __spark_entry__ as E
@@ -561,7 +564,6 @@ def test_stream_vector_index_upsert_dispatches_pq(spark, tmp_path):
     )
     from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (  # noqa: E501
         read_index_codes,
-        write_pq_index,
     )
     from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (
         stream_vector_index_upsert,
@@ -570,7 +572,7 @@ def test_stream_vector_index_upsert_dispatches_pq(spark, tmp_path):
     emb = E._emb(spark, SF_DIR)
     base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
     idx = str(tmp_path / "pq")
-    write_pq_index(base, idx)
+    write_index(base, idx, "pq")
     n0 = read_index_codes(spark, idx).count()
 
     src = str(tmp_path / "src")
@@ -613,7 +615,7 @@ def test_streaming_upsert_dispatches_ivf_sq8(spark, emb, tmp_path):
 
     base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
     idx = str(tmp_path / "idx")
-    write_ivf_sq8_index(base, idx)
+    write_index(base, idx, "ivf_sq8")
     n0 = read_index_codes(spark, idx).count()
 
     src = str(tmp_path / "src")
@@ -652,7 +654,7 @@ def test_stream_vector_search_serves_batches(spark, emb, tmp_path):
     )
 
     idx = str(tmp_path / "ivfsq8")
-    write_ivf_sq8_index(emb, idx)
+    write_index(emb, idx, "ivf_sq8")
     src = str(tmp_path / "src")
     (emb.filter("vec_id < 2")
      .select(emb.vec_id.alias("query_id"), "embedding")
@@ -681,9 +683,9 @@ def test_stream_vector_search_serves_batches(spark, emb, tmp_path):
     for qid in range(4):
         single = sorted(
             (r["rank"], r["neighbor_id"], r["cos_sim"])
-            for r in ivf_sq8_index_topk(
+            for r in index_topk(
                 spark, idx, _qvec(emb, qid), emb, k=5,
-                nprobe=2).collect())
+                nprobe=2, kind="ivf_sq8").collect())
         assert sorted(served[qid]) == single, qid
     # per-batch atomic publication: two micro-batches, two batch ids
     assert len({r["batch_id"] for r in rows}) == 2
@@ -711,7 +713,7 @@ def test_stream_vector_search_replay_idempotent(spark, emb, tmp_path):
     )
 
     idx = str(tmp_path / "idx")
-    write_ivf_sq8_index(emb, idx)
+    write_index(emb, idx, "ivf_sq8")
     src = str(tmp_path / "src")
     _write_query_file(emb, 0, 2, f"{src}/a.parquet")
     results = str(tmp_path / "results")
@@ -743,8 +745,8 @@ def test_stream_upsert_replay_idempotent(spark, emb, tmp_path):
     )
 
     idx = str(tmp_path / "idx")
-    write_ivf_sq8_index(emb.filter("vec_id >= 10")
-                        .select("vec_id", "embedding"), idx)
+    write_index(emb.filter("vec_id >= 10")
+                        .select("vec_id", "embedding"), idx, "ivf_sq8")
     src = str(tmp_path / "src")
     (emb.filter("vec_id < 4")
      .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
@@ -785,7 +787,7 @@ def test_stream_vector_search_picks_up_maintenance(spark, emb,
 
     idx = str(tmp_path / "idx")
     base = emb.select("vec_id", "embedding")
-    write_ivf_sq8_index(base, idx)
+    write_index(base, idx, "ivf_sq8")
     src = str(tmp_path / "src")
     _write_query_file(emb, 0, 2, f"{src}/a.parquet")
     results = str(tmp_path / "results")
@@ -800,7 +802,7 @@ def test_stream_vector_search_picks_up_maintenance(spark, emb,
     # maintenance between micro-batch boundaries: upsert + compact
     batch = emb.filter("vec_id < 4").select(
         (F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
-    assert ivf_sq8_index_upsert(spark, idx, batch)["decision"] \
+    assert index_upsert(spark, idx, batch, kind="ivf_sq8")["decision"] \
         == "appended"
     assert compact_index(spark, idx)["decision"] == "compacted"
     vectors = base.unionByName(batch)
@@ -832,8 +834,8 @@ def test_stream_upsert_emits_compact_hint(spark, emb, tmp_path):
     from pyspark.sql import functions as F
 
     idx = str(tmp_path / "idx")
-    write_ivf_sq8_index(emb.filter("vec_id >= 10")
-                        .select("vec_id", "embedding"), idx)
+    write_index(emb.filter("vec_id >= 10")
+                        .select("vec_id", "embedding"), idx, "ivf_sq8")
     src = str(tmp_path / "src")
     (emb.filter("vec_id < 3")
      .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
@@ -868,7 +870,7 @@ def test_checkpoint_resume_skips_served_batches(spark, emb, tmp_path):
     )
 
     idx = str(tmp_path / "idx")
-    write_ivf_sq8_index(emb, idx)
+    write_index(emb, idx, "ivf_sq8")
     src = str(tmp_path / "src")
     _write_query_file(emb, 0, 2, f"{src}/a.parquet")
     results = str(tmp_path / "results")
@@ -890,7 +892,7 @@ def test_wiped_results_store_reserves(spark, emb, tmp_path):
     )
 
     idx = str(tmp_path / "idx")
-    write_ivf_sq8_index(emb, idx)
+    write_index(emb, idx, "ivf_sq8")
     src = str(tmp_path / "src")
     _write_query_file(emb, 0, 2, f"{src}/a.parquet")
     results = str(tmp_path / "results")
@@ -916,7 +918,7 @@ def test_stream_upsert_auto_compact(spark, emb, tmp_path):
 
     idx = str(tmp_path / "idx")
     base = emb.filter("vec_id >= 10").select("vec_id", "embedding")
-    write_ivf_sq8_index(base, idx)
+    write_index(base, idx, "ivf_sq8")
     src = str(tmp_path / "src")
     (emb.filter("vec_id < 3")
      .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
@@ -944,7 +946,7 @@ def test_stream_vector_search_filtered(spark, emb, tmp_path):
     and matches the batch-path answer under the same filter (the
     widening contract, through the streaming edge)."""
     path = str(tmp_path / "idx")
-    write_ivf_sq8_index(emb, path)
+    write_index(emb, path, "ivf_sq8")
     allow_ids = [r["vec_id"] for r in
                  emb.orderBy(F.desc("vec_id")).limit(6).collect()]
     allowed_path = str(tmp_path / "allowed")
@@ -968,15 +970,171 @@ def test_stream_vector_search_filtered(spark, emb, tmp_path):
     allowed = emb.filter(F.col("vec_id").isin(allow_ids)) \
         .select("vec_id")
     single = [(r["rank"], r["neighbor_id"]) for r in
-              ivf_sq8_index_topk(
+              index_topk(
                   spark, path,
                   [float(x) for x in emb.filter("vec_id = 3")
                    .head()["embedding"]],
-                  emb, k=5, nprobe=1, allowed=allowed).collect()]
+                  emb, k=5, nprobe=1, allowed=allowed,
+                  kind="ivf_sq8").collect()]
     got = [(r["rank"], r["neighbor_id"]) for r in
            served.filter(F.col("query_id") == 3)
            .orderBy("rank").collect()]
     assert got == single
+
+
+# ---------------------------------------------------------------------------
+# streaming auto_rebalance
+
+
+def test_stream_auto_rebalance_acts_on_skew(spark, tmp_path):
+    from public_transit_data_platform_sql_nosql_spark.jobs.versioned import (  # noqa: E501
+        read_version,
+    )
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_index_upsert,
+    )
+
+    corpus = _skewed_corpus(spark).localCheckpoint(eager=True)
+    idx = str(tmp_path / "idx")
+    sim.write_index(corpus, idx, "ivf_sq8", k=2, dim=8)   # 40/4 skew
+    batch = spark.createDataFrame(
+        [(970001, [1.0, 0.02] + [0.0] * 6)],
+        "vec_id long, embedding array<double>")
+    src = str(tmp_path / "src")
+    batch.coalesce(1).write.parquet(f"{src}/a.parquet")
+    vec_p = str(tmp_path / "vectors")
+    corpus.unionByName(batch).write.parquet(vec_p)
+
+    stream = (spark.readStream
+              .schema("vec_id long, embedding array<double>")
+              .parquet(f"{src}/*.parquet"))
+    stream_vector_index_upsert(
+        stream, idx, str(tmp_path / "chk"),
+        rebalance_hint_permille=1500, auto_rebalance=True,
+        vectors_path=vec_p).awaitTermination()
+
+    dec = read_version(spark, f"{idx}/_state/decisions").collect()
+    by_kind = {r["decision"] for r in dec}
+    assert "rebalanced" in by_kind              # the maintainer ACTED
+    assert "rebalance" not in by_kind           # no hint-only rows
+    # skew actually repaired: post-split imbalance under the threshold
+    m = sim._index_manifest(spark, idx)
+    sizes = [int(r["n"]) for r in
+             sim._manifest_codes(spark, idx, m)
+             .groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
+             .collect()]
+    assert 1000 * max(sizes) / (sum(sizes) / len(sizes)) <= 1500
+    # serving survives the splits: a cold-group query finds cold rows
+    vectors = spark.read.parquet(vec_p)
+    got = sim.index_topk(spark, idx, [0.001, 1.0] + [0.0] * 6,
+                         vectors, k=3, nprobe=2, kind="ivf_sq8").collect()
+    assert len(got) == 3
+    cold = {int(r["vec_id"]) for r in corpus.collect()
+            if r["embedding"][1] == 1.0}
+    assert all(int(r["neighbor_id"]) in cold for r in got)
+
+
+def test_stream_auto_rebalance_requires_inputs(spark, tmp_path):
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_index_upsert,
+    )
+
+    stream = (spark.readStream
+              .schema("vec_id long, embedding array<double>")
+              .parquet(str(tmp_path / "nope") + "/*.parquet"))
+    with pytest.raises(ValueError, match="vectors_path"):
+        stream_vector_index_upsert(
+            stream, str(tmp_path / "idx"), str(tmp_path / "chk"),
+            auto_rebalance=True)
+
+
+# ---------------------------------------------------------------------------
+# streaming end-to-end: the BQ rerank bump reaches a live serving
+# stream at the next micro-batch boundary
+
+
+def test_stream_picks_up_bump_rerank_without_restart(spark, tmp_path):
+    """The closed ops loop across the streaming surface: a streamed
+    upsert records its decision row, the operator's
+    maintain_index on ivf_bq lands on ``bump_rerank`` (the committed
+    ``default_rerank_mult`` doubles), and a live ``stream_vector_search``
+    serves the NEXT micro-batch at the committed depth with no stream
+    restart and no caller threading — the manifest re-resolve per
+    batch is the pickup point.  Before the bump the same query's batch
+    missed the Hamming-blind true neighbors; after it they surface."""
+    from public_transit_data_platform_sql_nosql_spark.jobs.versioned import (  # noqa: E501
+        read_version,
+    )
+    from public_transit_data_platform_sql_nosql_spark.streaming.jobs import (  # noqa: E501
+        stream_vector_index_upsert,
+        stream_vector_search,
+    )
+    from tests.test_tune import _hamming_blind_bucket
+
+    a = _hamming_blind_bucket(spark, n=120)
+    b = _hamming_blind_bucket(spark, n=24, base=200).select(
+        "vec_id",
+        F.expr("transform(sequence(1, 64), i -> CASE WHEN i = 3 THEN "
+               "element_at(embedding, 1) WHEN i = 4 THEN "
+               "element_at(embedding, 2) ELSE 0.0D END)")
+        .alias("embedding"))
+    corpus = a.unionByName(b).localCheckpoint(eager=True)
+    path = str(tmp_path / "ivfbq")
+    sim.write_index(corpus, path, "ivf_bq", k=2)
+    truth = {0, 116, 117, 118, 119}
+    qvec = [1.0, 0.9] + [0.0] * 62
+
+    # streamed upsert (a re-submit batch): one auditable decision row
+    bsrc = str(tmp_path / "bsrc")
+    corpus.orderBy("vec_id").limit(3).coalesce(1).write.parquet(bsrc)
+    q = stream_vector_index_upsert(
+        spark.readStream.schema("vec_id long, embedding "
+                                "array<double>").parquet(bsrc),
+        path, str(tmp_path / "ck_up"))
+    q.awaitTermination(120)
+    dec = read_version(spark, f"{path}/_state/decisions").collect()
+    assert [(r["decision"], r["n_replaced"]) for r in dec] == \
+        [("replaced", 3)]
+
+    # serving stream, micro-batch 1: the untuned depth (8x over a
+    # 144-row corpus at k=10 shortlists 80 Hamming-tied low ids) —
+    # the true high-id neighbors are missed
+    qsrc = str(tmp_path / "qsrc")
+    results = str(tmp_path / "results")
+    ck = str(tmp_path / "ck_serve")
+    spark.createDataFrame([(1, qvec)],
+                          "query_id long, embedding array<double>") \
+        .coalesce(1).write.mode("append").parquet(qsrc)
+    stream_vector_search(
+        spark.readStream.schema("query_id long, embedding "
+                                "array<double>").parquet(qsrc),
+        path, corpus, results, ck, k=10).awaitTermination(120)
+    before = {int(r["neighbor_id"]) for r in
+              read_version(spark, results)
+              .filter("query_id = 1").collect()}
+    assert not truth.issubset(before)
+
+    # the maintainer's rung: probing is maxed (cap=2), a BQ rebuild
+    # cannot raise code resolution -> bump_rerank commits 2x depth
+    out = sim.maintain_index(
+        spark, path, corpus.orderBy("vec_id").limit(3), corpus,
+        recall_floor_permille=950, kind="ivf_bq")
+    assert out["decision"] == "bump_rerank"
+    assert out["rerank_mult"] == 2 * sim.BQ_RERANK_MULT
+
+    # micro-batch 2, SAME stream config, no restart-side plumbing: the
+    # committed operating point is re-resolved at the batch boundary
+    spark.createDataFrame([(2, qvec)],
+                          "query_id long, embedding array<double>") \
+        .coalesce(1).write.mode("append").parquet(qsrc)
+    stream_vector_search(
+        spark.readStream.schema("query_id long, embedding "
+                                "array<double>").parquet(qsrc),
+        path, corpus, results, ck, k=10).awaitTermination(120)
+    after = {int(r["neighbor_id"]) for r in
+             read_version(spark, results)
+             .filter("query_id = 2").collect()}
+    assert truth.issubset(after)
 
 
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --
