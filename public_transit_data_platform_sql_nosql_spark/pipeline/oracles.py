@@ -252,8 +252,7 @@ def _pq_hat_ctes(src: str, m: int, ksub: int, dim: int) -> str:
     (one per contiguous array slice), unit-normalized codewords (exact
     left-fold norm, same op order as core.dot), and ``hat`` =
     subspace-ordered codeword concatenation per vector — the mirror of
-    pipeline/similarity._pq_books_and_assignments +
-    _pq_reconstructions."""
+    pipeline/similarity._pq_train + _pq_reconstructions."""
     sub = dim // m
     chains, books, asgs = [], [], []
     for j in range(m):
@@ -265,7 +264,7 @@ def _pq_hat_ctes(src: str, m: int, ksub: int, dim: int) -> str:
                                   prefix=f"p{j}_"))
         # codewords are the centroids of the FINAL assignment (c2 — one
         # update step fresher than the a2-producing c1, matching
-        # _pq_books_and_assignments' _quantized_centroids(assigned))
+        # _pq_train's _quantized_centroids(assigned))
         chains.append(
             f"""p{j}_comp2 AS (
   SELECT cid, u.pos AS pos, CAST(SUM(u.q) AS BIGINT) AS s

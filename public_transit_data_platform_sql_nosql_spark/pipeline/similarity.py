@@ -7,7 +7,11 @@ bounded query set broadcast against every vector), ``lsh_topk`` /
 ``sq8_topk``, ``pq_topk``, ``ivf_pq_topk`` and ``bq_topk``.  Hyperplane
 components and k-means updates are deterministic integer arithmetic and
 dot/cosine are left-fold doubles, so the oracle reproduces every bit
-(pipeline/core.py).
+(pipeline/core.py).  They are built from the pieces the stored core
+uses: one query side (``_query_side``), one per-query probe step
+(``_probe``), the IVF writers' coarse trainer (``_ivf_train``), the one
+PQ trainer (``_pq_train``) and the one shortlist-and-rerank
+tail (``_shortlist_rerank``) the stored batch server ends in too.
 
 STORED indexes — manifest-committed serving layouts — are one core over
 two axes (the end of this module):
@@ -43,40 +47,82 @@ from .core import bounded_rank, cosine, dot
 NUM_HYPERPLANES = 8
 
 
-def _ranked(pairs: DataFrame, k: int) -> DataFrame:
+def _ranked(joined: DataFrame, k: int) -> DataFrame:
+    """Each query's top ``k`` of ``joined`` (``query_id``, ``qe``,
+    ``neighbor_id``, ``ne``) by exact round-6 cosine DESC, neighbor_id
+    ASC — the ANN contract ``(query_id, rank, neighbor_id, cos_sim)``."""
     w = (
         Window.partitionBy("query_id")
         .orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     )
     return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
+        joined.select("query_id", "neighbor_id",
+                      F.round(cosine(F.col("qe"), F.col("ne")), 6)
+                      .alias("cos_sim"))
+        .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "cos_sim")
     )
 
 
+def _query_side(emb: DataFrame, num_queries: int,
+                *extra: F.Column) -> DataFrame:
+    """The in-flight operators' bounded query set: the ``num_queries``
+    lowest vec_ids as ``(query_id, qe, *extra)``."""
+    return emb.filter(F.col("vec_id") < num_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"),
+        *extra)
+
+
+def _shortlist_rerank(scored: DataFrame, score_col: str, desc: bool,
+                      depth: int, q: DataFrame, vectors: DataFrame,
+                      k: int) -> DataFrame:
+    """THE shortlist-and-rerank tail every code-scored path shares (the
+    in-flight sq8/pq/ivf_pq/bq operators and the stored batch server):
+    keep each query's ``depth`` best rows of ``scored`` (``(query_id,
+    neighbor_id, <score_col>)``, nearest-first by ``score_col`` in the
+    given direction, neighbor_id ASC tie-break), join the broadcast
+    query side ``q`` (``query_id``, ``qe``) and the full-precision
+    ``vectors``, and rank by exact round-6 cosine."""
+    order = F.desc if desc else F.asc
+    w = Window.partitionBy("query_id").orderBy(
+        order(score_col), F.asc("neighbor_id"))
+    shortlist = (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= depth)
+        .select("query_id", "neighbor_id")
+    )
+    return _ranked(
+        shortlist.join(F.broadcast(q), "query_id")
+        .join(vectors.select(F.col("vec_id").alias("neighbor_id"),
+                             F.col("embedding").alias("ne")),
+              "neighbor_id"), k)
+
+
 def brute_force_topk(emb: DataFrame, num_queries: int = 8,
                      k: int = 10) -> DataFrame:
     """Exact cosine top-k for queries = the ``num_queries`` lowest vec_ids."""
-    q = (
-        emb.filter(F.col("vec_id") < num_queries)
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qe"))
-    )
+    q = _query_side(emb, num_queries)
     cand = emb.select(F.col("vec_id").alias("neighbor_id"),
                       F.col("embedding").alias("ne"))
-    pairs = (
-        cand.join(F.broadcast(q),
-                  F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
+    return _ranked(cand.join(F.broadcast(q),
+                             F.col("query_id") != F.col("neighbor_id")), k)
 
 
 SQ_LEVELS = 255       # codes 0..255: one byte per dimension
 SQ_RERANK_MULT = 4    # shortlist size = k * this, exact-reranked
+
+
+def _sq8_code(x: F.Column, mn: F.Column, mx: F.Column) -> F.Column:
+    """One component's 0..255 code against its [min, max]:
+    clamp(floor((x-mn)*255/(mx-mn)), 0, 255); a constant dim (mx = mn)
+    codes to 0 via the NULL guard."""
+    return F.coalesce(
+        F.least(F.lit(SQ_LEVELS), F.greatest(F.lit(0), F.floor(
+            (x - mn) * F.lit(float(SQ_LEVELS))
+            / F.nullif(mx - mn, F.lit(0.0))))),
+        F.lit(0),
+    )
 
 
 def _sq8_dequantized(embedding: F.Column, mns: F.Column,
@@ -86,7 +132,13 @@ def _sq8_dequantized(embedding: F.Column, mns: F.Column,
     and x_hat = mn + (code+0.5)*(mx-mn)/256 — the reconstruction SQ8
     scoring actually sees.  Pure double arithmetic in a fixed op order,
     so the DuckDB oracle reproduces every bit (a constant dim collapses
-    to mn via the NULL guard)."""
+    to mn via the NULL guard).
+
+    Kept as ONE per-dimension lambda rather than
+    ``_sq8_reconstruct(_sq8_codes(...))`` (bit-identical values):
+    without a projection barrier CollapseProject inlines the codes
+    transform into the reconstruction's per-dimension lambda, which
+    re-derives every code dim times per row."""
     def _hat(d):
         # explicit double casts: the parquet column is float32, and the
         # two engines promote float arithmetic differently — anchoring
@@ -94,12 +146,7 @@ def _sq8_dequantized(embedding: F.Column, mns: F.Column,
         x = F.element_at(embedding, d).cast("double")
         mn = F.element_at(mns, d)
         mx = F.element_at(mxs, d)
-        code = F.coalesce(
-            F.least(F.lit(SQ_LEVELS), F.greatest(F.lit(0), F.floor(
-                (x - mn) * F.lit(float(SQ_LEVELS))
-                / F.nullif(mx - mn, F.lit(0.0))))),
-            F.lit(0),
-        )
+        code = _sq8_code(x, mn, mx)
         return mn + (code + F.lit(0.5)) * (mx - mn) / F.lit(256.0)
 
     return F.transform(F.sequence(F.lit(1), F.lit(dim)), _hat)
@@ -125,17 +172,14 @@ def sq8_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
     contract matches the other ANN paths; pytest pins shortlist recall
     against ``brute_force_topk``.
     """
-    # persist the 1-row quantizer stats: ``hat`` is consumed by BOTH the
-    # query side and the candidate side, and without materialization the
-    # optimizer duplicates the training subtree (a full corpus scan +
-    # 128-aggregate pass) under each consumer — the r14 plan shows the
-    # HashAggregate-over-scan pair TWICE (plans/r14/ann_sq8_topk_*.txt).
-    # One cached row makes the second consumer read the InMemoryRelation
-    # instead of re-training (opt guide §5 cache-when-reused; same
-    # discipline as curated_corpus' id-set persist).  The bench's
-    # per-query clearCache() bounds the footprint; long-lived sessions
-    # clear it with spark.catalog.clearCache() like the curation caches.
-    stats = _sq8_stats(emb, dim).persist()
+    # the 1-row quantizer is collected ONCE and re-enters the plan as a
+    # local relation: ``hat`` is consumed by BOTH the query side and the
+    # candidate side, and a lazy stats subtree is duplicated under each
+    # consumer (the r14 plan shows the HashAggregate-over-scan pair
+    # TWICE, plans/r14/ann_sq8_topk_*.txt).  Collecting the row, unlike
+    # persisting it, leaves no cached block behind in the session.
+    stats = _sq8_stats(emb, dim)
+    stats = emb.sparkSession.createDataFrame([stats.first()], stats.schema)
     hat = emb.join(F.broadcast(stats)).select(
         "vec_id",
         _sq8_dequantized(F.col("embedding"), F.col("mns"),
@@ -151,25 +195,8 @@ def sq8_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
         .select("query_id", "neighbor_id",
                 cosine(F.col("qhat"), F.col("nhat")).alias("approx_sim"))
     )
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("approx_sim"), F.asc("neighbor_id")))
-    shortlist = (
-        approx.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    qe = (emb.filter(F.col("vec_id") < num_queries)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("qe")))
-    ne = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("ne"))
-    pairs = (
-        shortlist.join(F.broadcast(qe), "query_id").join(ne, "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
+    return _shortlist_rerank(approx, "approx_sim", True, k * rerank_mult,
+                             _query_side(emb, num_queries), emb, k)
 
 
 def _sq8_stats(emb: DataFrame, dim: int) -> DataFrame:
@@ -191,18 +218,11 @@ def _sq8_codes(embedding: F.Column, mns: F.Column, mxs: F.Column,
                dim: int) -> F.Column:
     """array of 0..255 integer codes, one per dimension (the logical
     form; ``_sq8_pack`` turns it into the stored one-blob-per-row)."""
-    def _code(d):
-        x = F.element_at(embedding, d).cast("double")
-        mn = F.element_at(mns, d)
-        mx = F.element_at(mxs, d)
-        return F.coalesce(
-            F.least(F.lit(SQ_LEVELS), F.greatest(F.lit(0), F.floor(
-                (x - mn) * F.lit(float(SQ_LEVELS))
-                / F.nullif(mx - mn, F.lit(0.0))))),
-            F.lit(0),
-        ).cast("smallint")
-
-    return F.transform(F.sequence(F.lit(1), F.lit(dim)), _code)
+    return F.transform(
+        F.sequence(F.lit(1), F.lit(dim)),
+        lambda d: _sq8_code(F.element_at(embedding, d).cast("double"),
+                            F.element_at(mns, d),
+                            F.element_at(mxs, d)).cast("smallint"))
 
 
 def _sq8_pack(codes: F.Column) -> F.Column:
@@ -591,24 +611,14 @@ def with_lsh_bucket(emb: DataFrame,
 def lsh_topk(emb: DataFrame, num_queries: int = 8, k: int = 10) -> DataFrame:
     """ANN top-k restricted to the query's LSH bucket."""
     tagged = with_lsh_bucket(emb)
-    q = (
-        tagged.filter(F.col("vec_id") < num_queries)
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("bucket").alias("qb"),
-                F.col("embedding").alias("qe"))
-    )
+    q = _query_side(tagged, num_queries, F.col("bucket").alias("qb"))
     cand = tagged.select(F.col("vec_id").alias("neighbor_id"),
                          F.col("bucket").alias("nb"),
                          F.col("embedding").alias("ne"))
-    pairs = (
-        cand.join(F.broadcast(q),
-                  (F.col("qb") == F.col("nb"))
-                  & (F.col("query_id") != F.col("neighbor_id")))
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
+    return _ranked(cand.join(F.broadcast(q),
+                             (F.col("qb") == F.col("nb"))
+                             & (F.col("query_id") != F.col("neighbor_id"))),
+                   k)
 
 
 def knn_join_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
@@ -654,82 +664,51 @@ def knn_join_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
         F.col("embedding").alias("ne"),
         F.col("bucket").alias("nb"),
     )
-    pairs = (
-        probes.join(ct, (F.col("pb") == F.col("nb"))
-                    & (F.col("query_id") != F.col("neighbor_id")))
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
+    return _ranked(probes.join(ct, (F.col("pb") == F.col("nb"))
+                               & (F.col("query_id") != F.col("neighbor_id"))),
+                   k)
 
 
-def cell_centroids(emb: DataFrame) -> DataFrame:
-    """IVF coarse cells from the ``label`` column (the upstream cluster
-    assignment = the coarse quantizer); centroid = ELEMENT-WISE INTEGER SUM
-    of milli-quantized components.
-
-    Integer sums are associative/commutative exactly, so Spark's partial
-    aggregation and DuckDB's row-order scan produce bit-identical
-    centroids (a float mean would differ in the last ulp by sum order);
-    cosine only needs the direction, so sum vs mean is immaterial.
-
-    Scale: one narrow shuffle of (label, pos, q) with full map-side
-    combine — 64·|cells| rows out regardless of corpus size.
-    """
-    comp = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "c"))
-        .groupBy("label", "pos")
-        .agg(F.sum(F.expr("cast(round(c * 1000) AS bigint)")).alias("s"))
-    )
+def _probe(q: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """THE in-flight per-query probe step: each query's ``nprobe`` best
+    cells of ``cents`` (``(cluster_id, centroid)``, one broadcast k-row
+    table) by round-6 centroid cosine DESC, cluster_id ASC — returns
+    ``(query_id, qe, cluster_id)``, (queries x nprobe) rows."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("c_sim"), F.asc("cluster_id"))
     return (
-        comp.groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "s"))).alias("ps"))
-        .select(
-            "label",
-            F.expr("transform(ps, x -> cast(x.s AS double))")
-            .alias("centroid"),
-        )
+        q.join(F.broadcast(cents))
+        .select("query_id", "qe", "cluster_id",
+                F.round(cosine(F.col("qe"), F.col("centroid")), 6)
+                .alias("c_sim"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= nprobe)
+        .select("query_id", "qe", "cluster_id")
     )
 
 
 def ivf_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
              nprobe: int = 2) -> DataFrame:
     """IVF ANN: coarse-quantize -> probe the ``nprobe`` best cells ->
-    exact cosine re-rank inside the probed cells.
+    exact cosine re-rank inside the probed cells.  The coarse cells come
+    from the ``label`` column (the upstream cluster assignment = the
+    coarse quantizer), their centroids from :func:`_quantized_centroids`.
 
     Scale path: the probe table is (queries x nprobe) rows — broadcast —
     and the candidate join hits only probed cells' vectors (with cell-
     partitioned storage, partition pruning skips the rest of 100 TB).
     """
-    cents = cell_centroids(emb)
-    q = (
-        emb.filter(F.col("vec_id") < num_queries)
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qe"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("cell_sim"), F.asc("label"))
-    probe = (
-        q.join(F.broadcast(cents))
-        .select("query_id", "qe", "label",
-                F.round(cosine(F.col("qe"), F.col("centroid")), 6)
-                .alias("cell_sim"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qe", "label")
-    )
-    cand = emb.select(F.col("vec_id").alias("neighbor_id"), "label",
+    cents = _quantized_centroids(
+        emb.select(F.col("label").alias("cid"), "embedding")
+    ).select(F.col("cid").alias("cluster_id"), "centroid")
+    probe = _probe(_query_side(emb, num_queries), cents, nprobe)
+    cand = emb.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("label").alias("cluster_id"),
                       F.col("embedding").alias("ne"))
-    pairs = (
-        cand.join(F.broadcast(probe),
-                  (cand["label"] == probe["label"])
-                  & (F.col("query_id") != F.col("neighbor_id")))
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
+    return _ranked(cand.join(F.broadcast(probe),
+                             (cand["cluster_id"] == probe["cluster_id"])
+                             & (F.col("query_id") != F.col("neighbor_id"))),
+                   k)
 
 
 KMEANS_SALT = "km-v1"
@@ -760,10 +739,13 @@ def _default_ivf_k(emb: DataFrame) -> int:
 
 def _quantized_centroids(assigned: DataFrame) -> DataFrame:
     """(cid, centroid) from an assignment table carrying ``embedding`` —
-    ELEMENT-WISE INTEGER SUM of milli-quantized components, the same
-    exact-across-engines trick as ``cell_centroids`` (integer addition
-    is associative, so partial aggregation order can't change the
-    result; cosine only needs the direction, so sum ~ mean)."""
+    ELEMENT-WISE INTEGER SUM of milli-quantized components.  Integer
+    sums are associative/commutative exactly, so Spark's partial
+    aggregation and DuckDB's row-order scan produce bit-identical
+    centroids (a float mean would differ in the last ulp by sum order);
+    cosine only needs the direction, so sum ~ mean.  One narrow
+    shuffle of (cid, pos, q) with full map-side combine — dim*|cells|
+    rows out regardless of corpus size."""
     comp = (
         assigned.select("cid", F.posexplode("embedding").alias("pos", "c"))
         .groupBy("cid", "pos")
@@ -805,6 +787,27 @@ def _assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
+def _kmeans_seeds(emb: DataFrame, k: int) -> DataFrame:
+    """The k-means seed centroids ``(cid, centroid)``: the ``k`` vectors
+    with the smallest ``md5(salt||vec_id)`` (a TakeOrdered top-k, not a
+    random init), numbered 0..k-1 in that order."""
+    from .core import md5_hash64
+
+    h = md5_hash64(F.concat(F.lit(KMEANS_SALT),
+                            F.col("vec_id").cast("string")))
+    seeds = (
+        emb.select("vec_id", "embedding", h.alias("h"))
+        .orderBy("h", "vec_id")
+        .limit(k)
+    )
+    # number the k seed rows via bounded_rank (sorted-array posexplode),
+    # not a partition-less Window — same order, no WindowExec WARN
+    return (
+        bounded_rank(seeds, [F.col("h"), F.col("vec_id")], "cid", start=0)
+        .select("cid", F.col("embedding").alias("centroid"))
+    )
+
+
 def embedding_kmeans(emb: DataFrame, k: int = KMEANS_K,
                      n_iter: int = KMEANS_ITERS) -> DataFrame:
     """Deterministic k-means over the embedding column — the corpus
@@ -827,22 +830,7 @@ def embedding_kmeans(emb: DataFrame, k: int = KMEANS_K,
     no checkpointing, no driver round-trips); for the tens-of-iterations
     regime, re-persist assignments per round instead.
     """
-    from .core import md5_hash64
-
-    h = md5_hash64(F.concat(F.lit(KMEANS_SALT),
-                            F.col("vec_id").cast("string")))
-    seeds = (
-        emb.select("vec_id", "embedding", h.alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(k)
-    )
-    # number the k seed rows via bounded_rank (sorted-array posexplode),
-    # not a partition-less Window — same order, no WindowExec WARN
-    cents = (
-        bounded_rank(seeds, [F.col("h"), F.col("vec_id")], "cid", start=0)
-        .select("cid", F.col("embedding").alias("centroid"))
-    )
-    assigned = _assign(emb, cents)
+    assigned = _assign(emb, _kmeans_seeds(emb, k))
     for _ in range(n_iter - 1):
         cents = _quantized_centroids(assigned)
         assigned = _assign(emb, cents)
@@ -1213,19 +1201,12 @@ def _exact_topk(qdf: DataFrame, vectors: DataFrame, k: int) -> DataFrame:
     """Exact ``(query_id, neighbor_id)`` top-k by round-6 cosine (DESC,
     vec_id ASC) — brute force over the primary store, one windowed
     plan for the whole query batch."""
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
+    return _ranked(
         vectors.select(F.col("vec_id").alias("neighbor_id"),
                        F.col("embedding").alias("ne"))
         .join(F.broadcast(qdf.select(
-            "query_id", F.col("embedding").alias("qe"))))
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-        .withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id"))
+            "query_id", F.col("embedding").alias("qe")))), k,
+    ).select("query_id", "neighbor_id")
 
 
 PQ_M = 8           # subspaces (dim must divide evenly)
@@ -1253,22 +1234,39 @@ PQ_RERANK_MULT = 8  # PQ quantizes coarser than SQ8 (m bytes vs dim), so
 #                     the sf embeddings, still scanning only m bytes/row
 
 
-def _pq_subspace_book_plans(emb: DataFrame, m: int, k: int,
-                            dim: int, n_iter: int):
-    """Per-subspace codebook PLANS (no actions): yields ``(j, sub_emb,
-    zero, book_j)`` for each of the ``m`` subspaces — the raw
-    unit-normalized codeword table before the degenerate-subspace
-    guard.  SPARSE corpora (e.g. hash embeddings of short texts) have
-    all-zero slices in most subspaces; cosine against them is
-    undefined (ANSI division by zero), so the k-means chain trains on
-    the NON-ZERO slices only and zero slices take the lowest code
-    deterministically — exactly the argmax ``_pq_encode`` resolves for
-    them (every score -1, cid-ASC tie-break), so trainer assignment
-    and encoder agree.  Dense corpora take the unchanged path (the
-    filter keeps every row), so the oracle mirror is unaffected."""
+def _pq_train(emb: DataFrame, m: int, k: int, dim: int, n_iter: int):
+    """THE PQ trainer (stored writers and in-flight operators): per-subspace
+    deterministic k-means.  Returns ``(books, asg_all)`` — the
+    UNIT-normalized codeword table ``(subspace, code, centroid)`` and the
+    trainer's OWN assignment stream ``(vec_id, subspace, cid)`` (each
+    vector's final k-means cluster per subspace: the membership the
+    in-flight oracles hash; the stored writers use only the books and
+    re-encode against them).  Normalization divides by the exact
+    left-fold norm (``core.dot`` order), so the DuckDB oracle reproduces
+    every double.
+
+    The books: all ``m`` chains evaluated in ONE job and collected — m*k
+    rows — back into a local relation, so the m encode/score branches
+    above them never re-run a chain and no cached block outlives the
+    call.  The assignment stream is a lazy plan over the same chains.
+
+    SPARSE corpora (e.g. hash embeddings of short texts) have all-zero
+    slices in most subspaces; cosine against them is undefined (ANSI
+    division by zero), so each chain trains on the NON-ZERO slices only
+    and zero slices take the lowest code deterministically — exactly
+    the argmax ``_pq_encode`` resolves for them (every score -1, cid-ASC
+    tie-break), so trainer assignment and encoder agree.  Dense corpora
+    take the unchanged path (the filter keeps every row), so the oracle
+    mirror is unaffected.  An ENTIRELY-zero training subspace trains NO
+    codewords at all — without a book the encoder would drop the
+    subspace and pack SHORT codes that the serving hat later indexes
+    past (element_at out of bounds) — so it gets ONE pinned zero
+    codeword at code 0: the byte layout stays m-wide and the degenerate
+    subspace reconstructs to its true (zero) slice."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
+    books, chains = None, []
     for j in range(m):
         sub_emb = emb.select(
             "vec_id",
@@ -1289,84 +1287,25 @@ def _pq_subspace_book_plans(emb: DataFrame, m: int, k: int,
                         lambda x: x / F.nullif(norm, F.lit(0.0)))
                     .alias("centroid"))
         )
-        yield j, sub_emb, zero, assigned, book_j
-
-
-def _pq_books_trained(emb: DataFrame, m: int, k: int, dim: int,
-                      n_iter: int) -> DataFrame:
-    """WRITER-path trainer: the final unit-normalized codebook table,
-    all ``m`` per-subspace k-means chains materialized in ONE
-    lineage-truncated job.  Bit-identical to the books half of
-    :func:`_pq_books_and_assignments` (pinned by
-    tests/test_r14.py::test_pq_books_trained_equals_loop_books): the
-    centroid updates are exact integer milli-quantized sums, so
-    branch evaluation order cannot change a double.
-
-    Why it exists: the in-flight trainer's per-subspace
-    degenerate-zero guard (``book_j.head(1)``) EXECUTES each chain as
-    its own sequential driver-blocking job, and the writers then
-    re-execute all of them through the checkpoint — m+1 chain
-    evaluations where one suffices (measured r14 at sf1/20k vectors:
-    the pq writer 48.5 s with the codebook training roughly half).
-    Here the guard runs AFTER the single materialization: missing
-    subspaces are read off the checkpointed table driver-side and
-    their pinned zero codewords appended (same semantics — the byte
-    layout stays m-wide, the degenerate subspace reconstructs to its
-    true zero slice)."""
-    spark = emb.sparkSession
-    books = None
-    for _, _, _, _, book_j in _pq_subspace_book_plans(emb, m, k, dim,
-                                                      n_iter):
         books = book_j if books is None else books.unionByName(book_j)
-    books = books.localCheckpoint(eager=True)
-    present = {int(r["subspace"])
-               for r in books.select("subspace").distinct().collect()}
-    missing = [j for j in range(m) if j not in present]
-    if missing:
-        sub = dim // m
-        books = books.unionByName(spark.createDataFrame(
-            [(j, 0, [0.0] * sub) for j in missing], books.schema))
-    return books
-
-
-def _pq_books_and_assignments(emb: DataFrame, m: int, k: int,
-                              dim: int, n_iter: int):
-    """Shared PQ trainer core: per-subspace deterministic k-means.
-    Returns ``(books, asg_all)`` — the UNIT-normalized codeword table
-    ``(subspace, code, centroid)`` and the assignment stream
-    ``(vec_id, subspace, cid)``.  Normalization divides by the exact
-    left-fold norm (``core.dot`` order), so the DuckDB oracle
-    reproduces every double.  (The in-flight ops' path; the stored
-    writers train via :func:`_pq_books_trained`, which evaluates the
-    same plans once instead of m+1 times.)"""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    books = None
+        chains.append((j, sub_emb.filter(zero), assigned))
+    rows = books.collect()
+    present = {int(r["subspace"]) for r in rows}
+    rows += [(j, 0, [0.0] * sub) for j in range(m) if j not in present]
+    books = emb.sparkSession.createDataFrame(rows, books.schema)
     asg_all = None
-    for j, sub_emb, zero, assigned, book_j in _pq_subspace_book_plans(
-            emb, m, k, dim, n_iter):
-        # an ENTIRELY-zero training subspace (every slice filtered by
-        # the sparse guard above) trains NO codewords at all — without
-        # a book the encoder would drop the subspace and pack SHORT
-        # codes that the serving hat later indexes past
-        # (element_at out of bounds).  Pin ONE zero codeword at code 0:
-        # the byte layout stays m-wide and the reconstruction of the
-        # degenerate subspace is exactly its true (zero) slice.
-        if not book_j.head(1):
-            book_j = emb.sparkSession.createDataFrame(
-                [(j, 0, [0.0] * sub)], book_j.schema)
-        books = book_j if books is None else books.unionByName(book_j)
+    for j, zero_emb, assigned in chains:
         # zero slices take the LOWEST code the subspace's book carries
         # (a 1-row broadcast aggregate) — the same argmax _pq_encode
         # resolves for them, so trainer assignment and encoder agree
-        zero_asg = (sub_emb.filter(zero).select("vec_id")
-                    .join(F.broadcast(
-                        book_j.agg(F.min("code").alias("cid")))))
+        lowest = (books.filter(F.col("subspace") == j)
+                  .agg(F.min("code").alias("cid")))
         asg_j = assigned.select(
             "vec_id", F.lit(j).alias("subspace"), "cid") \
-            .unionByName(zero_asg.select(
-                "vec_id", F.lit(j).alias("subspace"), "cid"))
+            .unionByName(zero_emb.select("vec_id")
+                         .join(F.broadcast(lowest))
+                         .select("vec_id", F.lit(j).alias("subspace"),
+                                 "cid"))
         asg_all = asg_j if asg_all is None else asg_all.unionByName(asg_j)
     return books, asg_all
 
@@ -1412,11 +1351,8 @@ def pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
     scoring doubles follow the shared ``cosine`` op order — so the
     generated DuckDB oracle (m unrolled k-means chains over array
     slices) hash-compares the full result."""
-    books, asg_all = _pq_books_and_assignments(emb, m, ksub, dim, n_iter)
-    hat = _pq_reconstructions(books, asg_all)
-    q = (emb.filter(F.col("vec_id") < num_queries)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qe")))
+    hat = _pq_reconstructions(*_pq_train(emb, m, ksub, dim, n_iter))
+    q = _query_side(emb, num_queries)
     approx = (
         hat.select(F.col("vec_id").alias("neighbor_id"),
                    F.col("hat").alias("nhat"))
@@ -1424,22 +1360,8 @@ def pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
         .select("query_id", "neighbor_id",
                 cosine(F.col("qe"), F.col("nhat")).alias("approx_sim"))
     )
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("approx_sim"), F.asc("neighbor_id")))
-    shortlist = (
-        approx.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    ne = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("ne"))
-    pairs = (
-        shortlist.join(F.broadcast(q), "query_id").join(ne, "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
+    return _shortlist_rerank(approx, "approx_sim", True, k * rerank_mult,
+                             q, emb, k)
 
 
 def _pq_encode(emb: DataFrame, books: DataFrame, m: int,
@@ -1663,20 +1585,8 @@ def embedding_kmeans_iterate(emb: DataFrame, k: int = KMEANS_K,
     Per-iteration cost is unchanged: one k-row centroid broadcast + one
     map-side-combined argmax groupBy + one 64*k-row aggregation.
     """
-    from .core import md5_hash64
-
-    h = md5_hash64(F.concat(F.lit(KMEANS_SALT),
-                            F.col("vec_id").cast("string")))
-    seeds = (
-        emb.select("vec_id", "embedding", h.alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(k)
-    )
-    cents = (
-        bounded_rank(seeds, [F.col("h"), F.col("vec_id")], "cid", start=0)
-        .select("cid", F.col("embedding").alias("centroid"))
-    )
-    assigned = _assign(emb, cents).localCheckpoint(eager=True)
+    assigned = _assign(emb, _kmeans_seeds(emb, k)) \
+        .localCheckpoint(eager=True)
     for _ in range(n_iter - 1):
         cents = _quantized_centroids(assigned)
         nxt = _assign(emb, cents).localCheckpoint(eager=True)
@@ -1743,8 +1653,9 @@ def ivf_pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
     contract: ``(query_id, rank, neighbor_id, cos_sim)``.
 
     Probing uses the centroids of the FINAL assignment (one update step
-    fresher, ``_quantized_centroids(assigned)``) — the same centroid
-    table the ``ivf_pq`` writer stores.  Cluster MEMBERSHIP here is
+    fresher: the refit centroids of the IVF writers' own trainer,
+    :func:`_ivf_train`) — the same centroid table the ``ivf_pq`` writer
+    stores.  Cluster MEMBERSHIP here is
     the trainer's own final assignment (the ``pq_topk`` convention:
     codes/membership one step staler than the serving geometry), while
     the stored layout re-assigns against the stored centroids — so the
@@ -1755,28 +1666,11 @@ def ivf_pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
     table is (queries x nprobe) rows riding broadcast, and with the
     stored layout's cluster-partitioned codes the unprobed clusters are
     never read at all."""
-    assigned = embedding_kmeans(emb, kc, n_iter).select(
-        "vec_id", "cluster_id")
-    cents = _quantized_centroids(
-        emb.select("vec_id", "embedding")
-        .join(assigned, "vec_id")
-        .withColumnRenamed("cluster_id", "cid"))
-    q = (emb.filter(F.col("vec_id") < num_queries)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qe")))
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("c_sim"), F.asc("cluster_id"))
-    probe = (
-        q.join(F.broadcast(cents))
-        .select("query_id", "qe", F.col("cid").alias("cluster_id"),
-                F.round(cosine(F.col("qe"), F.col("centroid")), 6)
-                .alias("c_sim"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qe", "cluster_id")
-    )
-    books, asg_all = _pq_books_and_assignments(emb, m, ksub, dim, n_iter)
-    hat = _pq_reconstructions(books, asg_all)
+    assigned, cents = _ivf_train(emb.select("vec_id", "embedding"), kc,
+                                 n_iter, 1.0, refit=True)
+    q = _query_side(emb, num_queries)
+    probe = _probe(q, cents, nprobe)
+    hat = _pq_reconstructions(*_pq_train(emb, m, ksub, dim, n_iter))
     cand = hat.join(assigned, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"), "cluster_id", "hat")
     approx = (
@@ -1786,22 +1680,8 @@ def ivf_pq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
         .select("query_id", "neighbor_id",
                 cosine(F.col("qe"), F.col("hat")).alias("approx_sim"))
     )
-    ws = (Window.partitionBy("query_id")
-          .orderBy(F.desc("approx_sim"), F.asc("neighbor_id")))
-    shortlist = (
-        approx.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    ne = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("ne"))
-    pairs = (
-        shortlist.join(F.broadcast(q), "query_id").join(ne, "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
+    return _shortlist_rerank(approx, "approx_sim", True, k * rerank_mult,
+                             q, emb, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1850,49 +1730,17 @@ def bq_topk(emb: DataFrame, num_queries: int = 8, k: int = 10,
     and the scoring is two xors + two popcounts per pair — the
     cheapest possible first-pass filter; at 100 TB this is the layout
     you put IN FRONT of sq8/pq when even byte codes are too much scan."""
-    if dim != 64:
-        raise ValueError(
-            f"bq packs exactly 64 sign bits into two 32-bit halves "
-            f"(got dim={dim}); rebuild with 64-dim vectors or extend "
-            f"the packing")
-    bits = emb.select(
-        "vec_id",
-        _bq_half("embedding", 0).alias("lo"),
-        _bq_half("embedding", 32).alias("hi"))
-    # the query side computes its sign bits directly from the embedding
-    # column — packing is a deterministic per-row expression, so joining
-    # back against ``bits`` on vec_id bought nothing but an extra join
-    # (and a second scan feeding it) in the plan (opt guide §2.4)
-    q = (emb.filter(F.col("vec_id") < num_queries)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qe"),
-                 _bq_half("embedding", 0).alias("qlo"),
-                 _bq_half("embedding", 32).alias("qhi")))
-    approx = (
-        bits.join(F.broadcast(q),
-                  F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                _bq_hamming(F.col("lo"), F.col("hi"),
-                            F.col("qlo"), F.col("qhi")).alias("ham"))
-    )
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.asc("ham"), F.asc("neighbor_id")))
-    shortlist = (
-        approx.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    ne = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("ne"))
-    pairs = (
-        shortlist.join(F.broadcast(q.select("query_id", "qe")),
-                       "query_id")
-        .join(ne, "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
+    # the stored bq codec's own encode and batch score over the
+    # in-memory frame; only the self-pair exclusion is the operator's
+    _BQ_CODEC.check_dim(dim)
+    q = _query_side(emb, num_queries)
+    approx = _BQ_CODEC.batch_score(
+        None, None, None, _BQ_CODEC.encode(None, emb, None),
+        q.withColumnRenamed("qe", "embedding"), None, False,
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
+    return _shortlist_rerank(approx, _BQ_CODEC.score_col,
+                             _BQ_CODEC.score_desc, k * rerank_mult, q,
+                             emb, k)
 
 
 def _bq_query_bits(query_vec: list[float]) -> tuple[int, int]:
@@ -2222,8 +2070,9 @@ def rebalance_index(spark, path: str, vectors: DataFrame, *,
     rows physically and clears the list.  Serving never probes the
     retired id anyway (it is gone from the centroid table), the tuned
     ``default_nprobe`` survives (cluster GEOMETRY is refined, not
-    retrained), and the same crash protocol holds: an interrupted
-    split leaves the previous version fully served.
+    retrained; a full probe moves to the new cluster count so it stays
+    full), and the same crash protocol holds: an interrupted split
+    leaves the previous version fully served.
 
     Decisions as data: ``flat_kind`` (nothing is cluster-partitioned),
     ``balanced`` (max/mean size <= the threshold — nothing to split),
@@ -2295,9 +2144,7 @@ def rebalance_index(spark, path: str, vectors: DataFrame, *,
               "vec_id")
         .select(*code_cols, "cluster_id")
     )
-    (moved.repartition("cluster_id")
-     .write.mode("error").partitionBy("cluster_id")
-     .parquet(f"{path}/{base}/codes"))
+    _write_codes(moved, f"{path}/{base}/codes", True)
     sub_cents = _quantized_centroids(asg.select("cid", "embedding"))
     (stored_cents.filter(F.col("cluster_id") != hot_cid)
      .unionByName(sub_cents.select(
@@ -2306,12 +2153,15 @@ def rebalance_index(spark, path: str, vectors: DataFrame, *,
      .parquet(f"{path}/{base}/centroids"))
     excluded = sorted(set(m.get("excluded_clusters", []))
                       | {int(hot_cid)})
-    _write_manifest(spark, path, version, {
-        **m, "version": version,
-        "codes": m["codes"] + [f"{base}/codes"],
-        "centroids": f"{base}/centroids",
-        "excluded_clusters": excluded,
-    })
+    nxt = {**m, "version": version,
+           "codes": m["codes"] + [f"{base}/codes"],
+           "centroids": f"{base}/centroids",
+           "excluded_clusters": excluded}
+    n_cents = stored_cents.count()
+    if int(m.get("default_nprobe", -1)) == n_cents:
+        # a tuned FULL probe stays full: the split adds one cluster
+        nxt["default_nprobe"] = n_cents + 1
+    _write_manifest(spark, path, version, nxt)
     out.update(decision="split", version=version,
                new_cluster_ids=sub_ids,
                n_vectors_moved=n_found)
@@ -2465,9 +2315,9 @@ class _PQ(_Codec):
         # trainer lineage-truncates them once; train_fraction < 1
         # hash-samples the TRAINING corpus only — encoding still covers
         # every vector
-        return {"codebooks": _pq_books_trained(
+        return {"codebooks": _pq_train(
             _train_sample(emb, train_fraction), int(geom["m"]),
-            int(geom["k"]), int(geom["dim"]), n_iter)}
+            int(geom["k"]), int(geom["dim"]), n_iter)[0]}
 
     def encode(self, arts, emb, geom):
         m = int(geom["m"])
@@ -2869,25 +2719,9 @@ def index_topk_batch(spark, path: str, queries: DataFrame,
             widen=allowed is not None or where is not None)
     else:
         cand = _filtered(_manifest_codes(spark, path, m), allowed, where)
-    order = F.desc if codec.score_desc else F.asc
-    ws = Window.partitionBy("query_id").orderBy(
-        order(codec.score_col), F.asc("neighbor_id"))
-    shortlist = (
-        codec.batch_score(spark, path, m, cand, queries, q, spec.ivf)
-        .withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    pairs = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(vectors.select(F.col("vec_id").alias("neighbor_id"),
-                             F.col("embedding").alias("ne")),
-              "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qe"), F.col("ne")), 6)
-                .alias("cos_sim"))
-    )
-    return _ranked(pairs, k)
+    return _shortlist_rerank(
+        codec.batch_score(spark, path, m, cand, queries, q, spec.ivf),
+        codec.score_col, codec.score_desc, k * rerank_mult, q, vectors, k)
 
 
 def index_upsert(spark, path: str, new_emb: DataFrame, *,
@@ -2905,7 +2739,8 @@ def index_upsert(spark, path: str, new_emb: DataFrame, *,
     - all-new vec_ids land as ONE new codes dir the manifest appends
       (``"appended"``);
     - any re-submitted vec_id is keyed-REPLACED: survivors plus the batch
-      rewrite one fresh dir the manifest points at alone (``"replaced"``).
+      rewrite one fresh dir the manifest points at alone (``"replaced"``);
+    - an empty batch writes nothing and commits no version (``"noop"``).
 
     The next manifest is the current one with only the version and codes
     list moved, so a committed operating point (``default_nprobe`` /
@@ -2927,9 +2762,11 @@ def index_upsert(spark, path: str, new_emb: DataFrame, *,
     codec = spec.codec
     dim = _manifest_dim(m, dim, path)
     m_attrs, attr_rows = _upsert_attr_rows(m, new_emb, attrs, path)
+    n_new = new_emb.count()
+    if n_new == 0:
+        return {"decision": "noop", "n_new": 0, "n_replaced": 0}
     arts = codec.stored(spark, path, m)
     drifted = codec.drift(arts, new_emb, dim, tol)
-    n_new = new_emb.count()
     if drifted:
         return {"decision": "rebuild", "n_new": n_new,
                 "drifted_dims": drifted}

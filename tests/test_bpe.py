@@ -1,18 +1,28 @@
 """BPE subword tokenizer: Spark-expression vs Python-mirror differential,
-merge-table validation, and the budget semantics of BPE-mode chunking /
-packing (chunk budgets mean MODEL tokens when tokenizer='bpe')."""
+merge-table validation, the budget semantics of BPE-mode chunking /
+packing (chunk budgets mean MODEL tokens when tokenizer='bpe'), and
+hypothesis properties of the pure-Python cores (fold invariants,
+greedy-batch soundness, learned-table validity)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.pipeline.bpe import (
+    BPE_REGEX,
     MERGES,
+    _greedy_batch,
+    _table_is_sequential_safe,
     bpe_encode,
     bpe_tokens,
+    learn_merges_py,
 )
 from public_transit_data_platform_sql_nosql_spark.pipeline.curation import (
     chunk_tokens,
@@ -355,3 +365,62 @@ def test_spark_trainer_matches_mirror_at_1k_merges(spark):
     assert len(got) == 1100
     assert stats["rounds"] <= (1100 + 7) // 8
     assert got == learn_merges_py(corpus, 1100, batch=16)
+
+
+# --- properties of the pure-Python cores (hypothesis) ---------------------
+
+texts = st.text(
+    alphabet=st.sampled_from("abcdefghij012 .?!-"), max_size=80)
+
+
+@given(texts)
+def test_bpe_concat_invariant(t):
+    """Merging never loses or invents characters: the concatenation of
+    the subword tokens equals the concatenation of the pre-split
+    pieces of lower(t)."""
+    assert "".join(bpe_encode(t)) == "".join(
+        re.findall(BPE_REGEX, t.lower()))
+
+
+@given(texts)
+def test_bpe_tokens_are_nonempty_and_covered(t):
+    for tok in bpe_encode(t):
+        assert tok != ""
+
+
+@given(texts, st.integers(min_value=1, max_value=8),
+       st.integers(min_value=1, max_value=6))
+@settings(max_examples=40, deadline=None)
+def test_learned_tables_are_valid_and_sequential_safe(t, n, batch):
+    """Whatever the trainer learns (any batch size) is a VALID table —
+    every multi-char side formed by an earlier merge — and
+    sequential-safe, so the scaled encoder's fast path applies."""
+    merges = [(a, b) for _, a, b, _, _ in
+              learn_merges_py([t, t + " extra pad"], n, batch=batch)]
+    formed = set()
+    for a, b in merges:
+        for side in (a, b):
+            assert len(side) == 1 or side in formed, (merges, side)
+        formed.add(a + b)
+    assert _table_is_sequential_safe(merges)
+
+
+@given(st.lists(st.tuples(st.text("abc", min_size=1, max_size=3),
+                          st.text("abc", min_size=1, max_size=3),
+                          st.integers(min_value=1, max_value=99)),
+                max_size=20),
+       st.integers(min_value=1, max_value=5))
+def test_greedy_batch_is_disjoint_prefix_respecting(rows, batch):
+    taken = _greedy_batch(rows, batch)
+    assert len(taken) <= batch
+    seen: set = set()
+    for a, b, _ in taken:
+        assert not ({a, b, a + b} & seen)
+        seen |= {a, b, a + b}
+    # order preserved: taken is a subsequence of rows
+    it = iter([(a, b) for a, b, _ in rows])
+    assert all(any((a, b) == x for x in it) for a, b, _ in taken)
+
+
+def test_shipped_table_is_sequential_safe():
+    assert _table_is_sequential_safe(MERGES)

@@ -1,7 +1,9 @@
 """embedding_kmeans: exact numpy mirror of the deterministic Lloyd's
 iterations, clustering-quality sanity, DuckDB differential, and the
 broadcast-only plan shape; plus the full-precision ``ivf`` index kind
-that stores its clustering (probe pruning, upsert, maintenance rungs)."""
+that stores its clustering (probe pruning, upsert, maintenance rungs)
+and hypothesis properties of the IVF trainer's hash-sample and the
+filtered probe-widening loop."""
 
 from __future__ import annotations
 
@@ -9,6 +11,8 @@ import hashlib
 import re
 
 import numpy as np
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.pipeline import (
@@ -335,3 +339,62 @@ def test_maintain_empty_batch_is_ok(spark, tmp_path):
                             recall_floor_permille=900, kind="ivf")
     assert st["decision"] == "ok"
     assert st["recall_permille"] is None
+
+
+# --- filtered-ANN probe widening (mirrors index_topk on IVF kinds) ----------
+
+
+def _widen(per_cluster_allowed, nprobe, k):
+    """Python mirror of the widening loop: probe the ranked clusters,
+    doubling nprobe until the probed set holds >= k allowed candidates
+    or every cluster is probed.  Returns (final_nprobe, reachable,
+    steps)."""
+    n = len(per_cluster_allowed)
+    steps = 0
+    while nprobe < n:
+        reachable = sum(per_cluster_allowed[:nprobe])
+        if reachable >= k:
+            break
+        nprobe = min(nprobe * 2, n)
+        steps += 1
+    return nprobe, sum(per_cluster_allowed[:nprobe]), steps
+
+
+@given(st.lists(st.integers(min_value=0, max_value=30), min_size=1,
+                max_size=64),
+       st.integers(min_value=1, max_value=16),
+       st.integers(min_value=1, max_value=20))
+@settings(max_examples=300, deadline=None)
+def test_probe_widening_terminates_and_suffices(clusters, nprobe, k):
+    """The two laws the filtered serving path needs: the loop runs at
+    most log2(n) doubling steps, and the final probe set holds
+    min(k, total_allowed) candidates — a restrictive filter can starve
+    the shortlist ONLY when the whole index holds fewer than k allowed
+    vectors (at which point every one of them is probed)."""
+    total = sum(clusters)
+    final_np, reachable, steps = _widen(clusters, nprobe, k)
+    assert steps <= max(1, len(clusters)).bit_length()
+    assert reachable >= min(k, total)
+
+
+# --- trainer hash-sample nesting (mirrors similarity._train_sample) --------
+
+
+def _sample(ids, fraction):
+    permille = max(1, int(round(fraction * 1000)))
+    return {i for i in ids
+            if _h(sim.TRAIN_SALT + str(i)) % 1000 < permille}
+
+
+@given(st.sets(st.integers(min_value=0, max_value=10**6), max_size=300),
+       st.floats(min_value=0.01, max_value=0.99),
+       st.floats(min_value=0.01, max_value=0.99))
+@settings(max_examples=200, deadline=None)
+def test_train_sample_is_nested_and_deterministic(ids, f1, f2):
+    """Samples at different fractions NEST (the threshold filter is
+    monotone in the fraction), so raising train_fraction only adds
+    vectors — no churn in which vectors train — and re-sampling at the
+    same fraction is bit-stable."""
+    lo, hi = sorted((f1, f2))
+    assert _sample(ids, lo) <= _sample(ids, hi)
+    assert _sample(ids, f1) == _sample(ids, f1)

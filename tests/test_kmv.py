@@ -1,13 +1,19 @@
 """pipeline/profile.py kmv_distinct — the oracle-able cardinality
 sketch: exactness under k, error bound over k, null handling, and the
-TakeOrderedAndProject plan shape."""
+TakeOrderedAndProject plan shape; plus hypothesis properties of the
+set algebra behind the sketch merges and kmv_overlap."""
 
 from __future__ import annotations
 
+import hashlib
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from public_transit_data_platform_sql_nosql_spark.pipeline.profile import (
     KMV_K,
+    KMV_SPACE,
     kmv_distinct,
 )
 
@@ -119,3 +125,77 @@ def test_kmv_overlap_disjoint_and_identical(spark):
     row = kmv_overlap(a, a, "v").head()
     assert row["est_jaccard_permille"] == 1000
     assert row["est_intersection"] == row["est_union"]
+
+
+# --- properties of the sketch algebra (hypothesis, pure Python) -----------
+
+
+@given(st.lists(st.integers(min_value=0, max_value=10**9), max_size=200),
+       st.lists(st.integers(min_value=0, max_value=10**9), max_size=200),
+       st.integers(min_value=1, max_value=32))
+def test_kmv_merge_law(a, b, k):
+    """kmin(A ∪ B) == kmin(kmin(A) ∪ kmin(B)) — the exact-merge law
+    stream_kmv_cardinality is built on."""
+    def kmin(s):
+        return sorted(set(s))[:k]
+
+    assert kmin(a + b) == kmin(kmin(a) + kmin(b))
+
+
+def _h(v) -> int:
+    """Stand-in for core.md5_hash64's bounded hash: md5 -> [0, P)."""
+    return int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16) \
+        % KMV_SPACE
+
+
+def _kmv(values, k=KMV_K):
+    return sorted({_h(v) for v in values})[:k]
+
+
+def _overlap(a, b, k=KMV_K):
+    """Python mirror of pipeline/profile.kmv_overlap's set algebra."""
+    ka, kb = _kmv(a, k), _kmv(b, k)
+    merged = sorted(set(ka) | set(kb))[:k]
+    n = len(merged)
+    match = sum(1 for h in merged if h in set(ka) and h in set(kb))
+    est_union = n if n < k else (k - 1) * KMV_SPACE // max(merged[-1], 1)
+    return n, match, est_union
+
+
+sets_small = st.sets(st.integers(min_value=0, max_value=10_000),
+                     max_size=40)
+
+
+@given(sets_small, sets_small)
+@settings(max_examples=200, deadline=None)
+def test_kmv_overlap_exact_in_under_k_regime(a, b):
+    """Below k the sketches ARE the hash sets: match equals the true
+    intersection size and est_union the true union size (hash
+    collisions are possible in principle but astronomically unlikely
+    over these domains — and they would be engine-identical anyway)."""
+    n, match, est_union = _overlap(a, b)
+    assert n == len(a | b) < KMV_K
+    assert match == len(a & b)
+    assert est_union == len(a | b)
+
+
+@given(st.sets(st.integers(min_value=0, max_value=10**9), min_size=500,
+               max_size=800),
+       st.integers(min_value=0, max_value=400))
+@settings(max_examples=30, deadline=None)
+def test_kmv_union_minima_decide_membership(universe, n_shared):
+    """The law kmv_overlap leans on: every union k-minimum that belongs
+    to side A is IN A's sketch (A's kth minimum bounds the union's), so
+    testing sketch membership equals testing set membership."""
+    u = sorted(universe)
+    shared = set(u[:n_shared])
+    rest = u[n_shared:]
+    a = shared | set(rest[: len(rest) // 2])
+    b = shared | set(rest[len(rest) // 2:])
+    ka, kb = set(_kmv(a)), set(_kmv(b))
+    merged = sorted(set(_kmv(a)) | set(_kmv(b)))[:KMV_K]
+    ha = {_h(v) for v in a}
+    hb = {_h(v) for v in b}
+    for h in merged:
+        assert (h in ka) == (h in ha)
+        assert (h in kb) == (h in hb)

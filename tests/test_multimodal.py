@@ -1,10 +1,15 @@
 """Multimodal plumbing: binary payloads stay opaque inside the plan, the
 mapInPandas stages keep their schema contracts, and stages compose
-(resize output feeds feature extraction)."""
+(resize output feeds feature extraction); hypothesis round-trips pin
+the WAV and AVI decoders as exact inverses of their encoders."""
 
 from __future__ import annotations
 
+import struct
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.pipeline import (
@@ -145,14 +150,11 @@ def test_bmp_end_to_end_through_extract_features(spark):
 # --- real WAV/PCM decode path ------------------------------------------------
 
 
-def _make_wav(samples, bits=16, channels=1, extra_chunk=False,
-              odd_pad=False):
+def _make_wav(samples, bits=16, channels=1, chunks_before=()):
     """Minimal uncompressed PCM WAV encoder for fixtures: standard
-    RIFF/WAVE with fmt + data chunks; ``extra_chunk`` inserts a LIST
-    chunk before data (the walk must skip it), ``odd_pad`` makes that
-    chunk odd-sized to exercise RIFF even-padding."""
-    import struct
-
+    RIFF/WAVE with fmt + data chunks; ``chunks_before`` inserts ``(id,
+    payload)`` chunks between them (the walk must skip them; an
+    odd-sized payload exercises RIFF even-padding)."""
     if bits == 16:
         data = struct.pack(f"<{len(samples)}h", *samples)
     else:
@@ -161,11 +163,10 @@ def _make_wav(samples, bits=16, channels=1, extra_chunk=False,
     fmt = struct.pack("<HHIIHH", 1, channels, 8000, byte_rate,
                       channels * bits // 8, bits)
     chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    if extra_chunk:
-        body = b"INFOx" if odd_pad else b"INFO"
-        chunks += b"LIST" + struct.pack("<I", len(body)) + body
-        if odd_pad:
-            chunks += b"\x00"
+    for cid, payload in chunks_before:
+        chunks += cid + struct.pack("<I", len(payload)) + payload
+        if len(payload) & 1:
+            chunks += b"\x00"                  # RIFF even padding
     chunks += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
@@ -179,9 +180,9 @@ def test_wav_decode_unpacks_pcm():
     assert mm.decode_payload(
         _make_wav(_SAMPLES_16), "audio") == _SAMPLES_16
     assert mm.decode_payload(
-        _make_wav(_SAMPLES_16, extra_chunk=True), "audio") == _SAMPLES_16
+        _make_wav(_SAMPLES_16, chunks_before=[(b"LIST", b"INFO")]), "audio") == _SAMPLES_16
     assert mm.decode_payload(
-        _make_wav(_SAMPLES_16, extra_chunk=True, odd_pad=True),
+        _make_wav(_SAMPLES_16, chunks_before=[(b"LIST", b"INFOx")]),
         "audio") == _SAMPLES_16
     eight = [0, 1, 127, 128, 255]
     assert mm.decode_payload(
@@ -209,7 +210,7 @@ def test_wav_end_to_end_through_extract_features(spark):
     """A generated WAV flows through the REAL (fake=False) decode inside
     the Arrow batch stage: byte_len / checksum / features computed from
     the signed sample stream, not the raw container bytes."""
-    payload = _make_wav(_SAMPLES_16, extra_chunk=True)
+    payload = _make_wav(_SAMPLES_16, chunks_before=[(b"LIST", b"INFO")])
     df = spark.createDataFrame(
         [(1, "audio", bytearray(payload))],
         "media_id long, kind string, payload binary")
@@ -317,3 +318,56 @@ def test_avi_end_to_end_through_extract_features(spark):
         bucket[s % mm.FEATURE_DIM] += s
     want = [b / 255.0 / len(samples) for b in bucket]
     assert list(row["features"]) == want
+
+
+# --- WAV/PCM codec (mirrors pipeline/multimodal._decode_wav) ---------------
+
+
+samples16 = st.lists(
+    st.integers(min_value=-32768, max_value=32767), max_size=64)
+samples8 = st.lists(st.integers(min_value=0, max_value=255), max_size=64)
+junk_chunks = st.lists(
+    st.tuples(
+        st.sampled_from([b"LIST", b"cue ", b"fact", b"bext"]),
+        st.binary(max_size=17)),
+    max_size=3)
+
+
+@given(samples16, junk_chunks)
+@settings(max_examples=200, deadline=None)
+def test_wav16_roundtrip_through_any_chunk_layout(samples, junk):
+    """encode -> decode is the identity on 16-bit sample streams, no
+    matter what (odd- or even-sized) chunks sit between fmt and data —
+    the chunk walk the decoder does is a real container traversal."""
+    assert mm._decode_wav(_make_wav(samples, chunks_before=junk)) \
+        == samples
+
+
+@given(samples8, junk_chunks)
+@settings(max_examples=200, deadline=None)
+def test_wav8_roundtrip(samples, junk):
+    assert mm._decode_wav(
+        _make_wav(samples, bits=8, chunks_before=junk)) == samples
+
+
+# --- AVI codec (mirrors pipeline/multimodal._decode_avi) -------------------
+
+
+pixel = st.tuples(*[st.integers(min_value=0, max_value=255)] * 3)
+
+
+@given(st.integers(min_value=1, max_value=5),
+       st.integers(min_value=1, max_value=4),
+       st.integers(min_value=1, max_value=3),
+       st.booleans(), st.data())
+@settings(max_examples=100, deadline=None)
+def test_avi_roundtrip_any_geometry(w, h, n_frames, top_down, data):
+    """encode -> decode is the identity on the flat frame stream for
+    any (width, height, frame-count, row-order) — padding strip and
+    bottom-up flip are exact inverses of the encoder's layout."""
+    frames = [
+        [data.draw(pixel) for _ in range(w * h)]
+        for _ in range(n_frames)]
+    flat = [b for px_frame in frames for px in px_frame for b in px]
+    assert mm._decode_avi(
+        _make_avi(w, h, frames, top_down=top_down)) == flat

@@ -469,29 +469,46 @@ def test_maintain_pq_keeps_resolution_at_or_above_default(spark, emb,
 
 
 # ---------------------------------------------------------------------------
-# writer-path PQ trainer: one materialization, bit-identical books
+# the PQ trainer: one evaluation of the books, the assignment stream beside
 
 
-def test_pq_books_trained_equals_loop_books(spark, emb):
-    """The stored-PQ writers train via _pq_books_trained (all m chains
-    in ONE job, degenerate guard applied after) — its codebook table
-    must be BIT-identical to the in-flight trainer's books half (the
-    integer milli-quantized centroid sums are order-independent, so
-    this is an equality the plans must keep)."""
+def test_pq_books_match_assignment_stream(spark, emb):
+    """_pq_train collects its books from one evaluation of the m chains
+    and returns the assignment stream as a second, lazy evaluation of
+    the same chains: refitting each subspace's unit codewords from that
+    stream gives the books back BIT-identically (the integer
+    milli-quantized centroid sums are order-independent, so the two
+    evaluations must agree)."""
+    from pyspark.sql import functions as F
+
+    from public_transit_data_platform_sql_nosql_spark.pipeline.core import (
+        dot,
+    )
+
     m, k, dim = 4, 8, 64
-    fused = sorted(
-        (int(r["subspace"]), int(r["code"]),
-         tuple(float(x) for x in r["centroid"]))
-        for r in sim._pq_books_trained(emb, m, k, dim, 3).collect())
-    books, _ = sim._pq_books_and_assignments(emb, m, k, dim, 3)
-    loop = sorted(
-        (int(r["subspace"]), int(r["code"]),
-         tuple(float(x) for x in r["centroid"]))
-        for r in books.collect())
-    assert fused == loop
+    sub = dim // m
+    books, asg = sim._pq_train(emb, m, k, dim, 3)
+    want = {(int(r["subspace"]), int(r["code"]),
+             tuple(float(x) for x in r["centroid"]))
+            for r in books.collect()}
+    got = set()
+    for j in range(m):
+        nz = emb.select(
+            "vec_id",
+            F.slice("embedding", j * sub + 1, sub).alias("embedding"),
+        ).filter(dot(F.col("embedding"), F.col("embedding")) != 0)
+        cents = sim._quantized_centroids(
+            asg.filter(F.col("subspace") == j).join(nz, "vec_id"))
+        norm = F.sqrt(dot(F.col("centroid"), F.col("centroid")))
+        refit = {(j, int(r["cid"]), tuple(float(x) for x in r["c"]))
+                 for r in cents.select("cid", F.transform(
+                     "centroid", lambda x: x / F.nullif(norm, F.lit(0.0)))
+                     .alias("c")).collect()}
+        got |= refit or {(j, 0, (0.0,) * sub)}
+    assert got == want
 
 
-def test_pq_books_trained_pins_degenerate_subspace(spark):
+def test_pq_train_pins_degenerate_subspace(spark):
     """An entirely-zero training subspace still gets its pinned zero
     codeword at code 0 (the m-wide byte-layout guard), now applied
     driver-side after the single materialization."""
@@ -502,7 +519,7 @@ def test_pq_books_trained_pins_degenerate_subspace(spark):
         rows, "vec_id long, embedding array<double>")
     got = {(int(r["subspace"]), int(r["code"])):
            [float(x) for x in r["centroid"]]
-           for r in sim._pq_books_trained(emb2, m, 4, dim, 3).collect()}
+           for r in sim._pq_train(emb2, m, 4, dim, 3)[0].collect()}
     # subspaces 1-3 are all-zero -> exactly one pinned zero codeword
     for j in (1, 2, 3):
         assert got[(j, 0)] == [0.0, 0.0]

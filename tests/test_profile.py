@@ -1,7 +1,14 @@
 """Table profiler: exact variant vs DuckDB, approx variant error-bounded
-vs exact, single-scan plan shape."""
+vs exact, single-scan plan shape; hypothesis properties of the
+integer-moment Pearson form numeric_correlations computes."""
 
 from __future__ import annotations
+
+import math
+import statistics
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.pipeline import (
@@ -212,3 +219,54 @@ def test_correlations_partitioning_invariance(spark):
     b = sorted(map(tuple, numeric_correlations(
         li.repartition(13), cols).collect()))
     assert a == b
+
+
+# --- integer-moment correlation algebra (hypothesis, pure Python) ---------
+
+floats = st.integers(min_value=-10_000, max_value=10_000)
+pairs = st.lists(st.tuples(floats, floats), min_size=3, max_size=60)
+
+
+def _corr_from_int_moments(xy):
+    """The integer-moment Pearson form numeric_correlations computes."""
+    n = len(xy)
+    sx = sum(x for x, _ in xy)
+    sy = sum(y for _, y in xy)
+    sxx = sum(x * x for x, _ in xy)
+    syy = sum(y * y for _, y in xy)
+    sxy = sum(x * y for x, y in xy)
+    den_x = n * sxx - sx * sx
+    den_y = n * syy - sy * sy
+    if den_x <= 0 or den_y <= 0:
+        return None
+    return (n * sxy - sx * sy) / math.sqrt(den_x) / math.sqrt(den_y)
+
+
+@given(pairs)
+@settings(max_examples=200, deadline=None)
+def test_integer_moment_corr_matches_library(xy):
+    got = _corr_from_int_moments(xy)
+    xs = [x for x, _ in xy]
+    ys = [y for _, y in xy]
+    if got is None:
+        assert len(set(xs)) == 1 or len(set(ys)) == 1
+        return
+    want = statistics.correlation(xs, ys)
+    assert abs(got - want) < 1e-9
+    assert -1.0 - 1e-12 <= got <= 1.0 + 1e-12
+
+
+@given(pairs, st.integers(min_value=1, max_value=50),
+       st.integers(min_value=-100, max_value=100))
+@settings(max_examples=100, deadline=None)
+def test_integer_moment_corr_scale_shift_invariant(xy, scale, shift):
+    """Pearson r is invariant under positive affine maps — the property
+    that makes the quantization step (v -> round(v * scale)) a no-op on
+    the statistic beyond granularity."""
+    got = _corr_from_int_moments(xy)
+    mapped = [(x * scale + shift, y) for x, y in xy]
+    got2 = _corr_from_int_moments(mapped)
+    if got is None or got2 is None:
+        assert got == got2
+        return
+    assert abs(got - got2) < 1e-9

@@ -296,6 +296,31 @@ def test_rebalance_unsplittable_commits_nothing(spark, tmp_path):
     assert "excluded_clusters" not in m
 
 
+def test_rebalance_keeps_tuned_full_probe_full(spark, tmp_path):
+    """A split adds one cluster: a tuned default_nprobe that probed
+    every cluster moves to the new count, so the exact ``ivf`` kind
+    still serves exact recall after the split."""
+    import __spark_entry__ as E
+    from tests.conftest import SF_DIR
+
+    emb = E._emb(spark, SF_DIR).select("vec_id", "embedding")
+    path = str(tmp_path / "ivf")
+    sim.write_index(emb, path, "ivf")
+    n0 = sim.index_stats(spark, path)["n_clusters"]
+    tuned = sim.tune_index(spark, path, emb, target_recall_permille=1000,
+                           nprobes=(n0,))
+    assert tuned["nprobe"] == n0
+    assert sim.rebalance_index(spark, path, emb,
+                               max_imbalance_permille=0)["decision"] \
+        == "split"
+    st = sim.index_stats(spark, path)
+    assert st["n_clusters"] == n0 + 1
+    assert st["default_nprobe"] == st["n_clusters"]
+    out = sim.maintain_index(spark, path, emb.filter("vec_id < 4"), emb,
+                             rebuild=False)
+    assert out["recall_permille"] == 1000, out
+
+
 # SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --
 # excluded from the driver's default gate; run with -m slow after
 # touching this family (see the verify skill).

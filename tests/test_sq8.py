@@ -1,11 +1,15 @@
 """pipeline/similarity.py sq8_topk — scalar-quantized ANN: recall vs
-the exact baseline, rank contract, constant-dimension robustness, and
-partitioning invariance.  Driver parity at sf0.001/0.01 pins the exact
-values against the DuckDB mirror."""
+the exact baseline, rank contract, constant-dimension robustness,
+partitioning invariance, the byte-pack codec and cache hygiene.
+Driver parity at sf0.001/0.01 pins the exact values against the
+DuckDB mirror.  Most tests here are slow-tier (stored-index e2e);
+the codec property and the cache check run in the default tier."""
 
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 import __spark_entry__ as E
 from public_transit_data_platform_sql_nosql_spark.pipeline.similarity import (
@@ -20,6 +24,7 @@ def emb(spark):
     return E._emb(spark, SF_DIR)
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_recall_vs_exact_baseline(spark, emb):
     """8-bit reconstruction barely moves cosine ranks: demand >= 90%
     of the exact top-10 recovered per query (the 4x shortlist absorbs
@@ -38,6 +43,7 @@ def test_recall_vs_exact_baseline(spark, emb):
         assert recall >= 0.9, (qid, recall)
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_rank_contract_and_no_self(spark, emb):
     out = sq8_topk(emb, num_queries=4, k=5).collect()
     assert all(r.query_id != r.neighbor_id for r in out)
@@ -51,6 +57,7 @@ def test_rank_contract_and_no_self(spark, emb):
         assert sims == sorted(sims, reverse=True), qid
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_constant_dimension_is_harmless(spark):
     """A zero-spread dimension hits the mx==mn NULL guard: codes
     collapse to the reconstruction midpoint and ranking still works."""
@@ -68,6 +75,7 @@ def test_constant_dimension_is_harmless(spark):
     assert out.count() == 6
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_partitioning_invariance(spark, emb):
     a = sorted(map(tuple, sq8_topk(emb, num_queries=2, k=5).collect()))
     b = sorted(map(tuple, sq8_topk(emb.repartition(7),
@@ -75,6 +83,7 @@ def test_partitioning_invariance(spark, emb):
     assert a == b
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_index_roundtrip_and_compression(spark, emb, tmp_path):
     """write_index -> index_topk on the sq8 kind serves the same neighbors the
     in-flight operator finds for the same query, the packed codes table
@@ -117,6 +126,7 @@ def test_index_roundtrip_and_compression(spark, emb, tmp_path):
     assert codes_size < 0.35 * _dirsize(vec_path)
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_index_agrees_with_inflight_operator(spark, emb, tmp_path):
     """Same quantizer, same reconstruction: the served top-k for query
     vec 3 equals the in-flight sq8_topk row set for that query (modulo
@@ -139,6 +149,7 @@ def test_index_agrees_with_inflight_operator(spark, emb, tmp_path):
     assert inflight <= served or inflight == (served - {3})
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_ivf_sq8_composed_layout(spark, emb, tmp_path):
     """Pruning x compression: the composed index partition-prunes to
     the probed cluster directories (PartitionFilters in the plan),
@@ -184,6 +195,7 @@ def test_ivf_sq8_composed_layout(spark, emb, tmp_path):
     assert a == b
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_index_upsert_decision_loop(spark, emb, tmp_path):
     """In-range batches append and become servable; a batch whose
     values drift outside the trained quantizer range refuses to write
@@ -234,6 +246,7 @@ def test_index_upsert_decision_loop(spark, emb, tmp_path):
     assert read_index_codes(spark, path).count() == n1
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_upsert_replaces_resubmitted_vec_ids(spark, emb, tmp_path):
     """A batch re-submitting an already-indexed vec_id rewrites that
     row instead of appending a duplicate: the index stays one-row-per-
@@ -287,6 +300,7 @@ def test_upsert_replaces_resubmitted_vec_ids(spark, emb, tmp_path):
         index_upsert(spark, path, dup, kind="sq8")
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_pack_unpack_round_trips_every_byte(spark):
     """The packed-blob codec is exact for all 256 code values."""
     from pyspark.sql import functions as F
@@ -306,6 +320,7 @@ def test_pack_unpack_round_trips_every_byte(spark):
     assert list(row["back"]) == list(range(256))
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_crash_between_data_and_manifest_is_invisible(spark, emb,
                                                       tmp_path):
     """Torn-write safety: data dirs written without their manifest (a
@@ -355,6 +370,7 @@ def test_crash_between_data_and_manifest_is_invisible(spark, emb,
     assert read_index_codes(spark, path).count() == n0 + 2
 
 
+@pytest.mark.slow  # SLOW TIER: see pytest.ini
 def test_index_scan_reads_only_codes_columns(spark, emb, tmp_path):
     """The serving scan's IO claim, asserted on the plan: the SQ8
     shortlist stage scans ONLY (vec_id, codes) from the codes table —
@@ -396,7 +412,29 @@ def test_index_scan_reads_only_codes_columns(spark, emb, tmp_path):
     assert saw_codes
 
 
-# SLOW TIER (pytest.ini): stored-index/tune/streaming/CLI e2e --
-# excluded from the driver's default gate; run with -m slow after
-# touching this family (see the verify skill).
-pytestmark = pytest.mark.slow
+
+# ---------------------------------------------------------------------------
+# default tier: the codec's byte algebra and the operator's cache hygiene
+
+
+@given(st.lists(st.integers(min_value=0, max_value=255), min_size=1,
+                max_size=128))
+@settings(max_examples=300, deadline=None)
+def test_hex_pack_codec_is_a_bijection(codes):
+    """The pure-Python mirror of _sq8_pack/_sq8_unpack: zero-padded hex
+    pairs concatenated then parsed back recover any byte sequence, and
+    the packed width is exactly len(codes) bytes."""
+    packed = bytes.fromhex("".join(f"{c:02x}" for c in codes))
+    assert len(packed) == len(codes)
+    hexed = packed.hex()
+    back = [int(hexed[i:i + 2], 16) for i in range(0, len(hexed), 2)]
+    assert back == codes
+
+
+def test_sq8_topk_leaves_no_cached_block(spark, emb):
+    """The in-flight quantizer row is collected, not persisted: after a
+    run the session's persistent-RDD count is back at its baseline."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert sq8_topk(emb, num_queries=4, k=5).collect()
+    assert jsc.getPersistentRDDs().size() == before

@@ -631,6 +631,21 @@ def test_upsert_keeps_committed_operating_point(spark, emb, tmp_path,
             assert st["tuned"] is True, (want, st)
 
 
+@pytest.mark.parametrize("kind", sorted(INDEX_KINDS))
+def test_empty_upsert_commits_nothing(spark, emb, tmp_path, kind):
+    """An empty batch is a noop: no manifest version, no codes dir."""
+    path = str(tmp_path / kind)
+    write_index(emb.select("vec_id", "embedding"), path, kind, k=4,
+                ksub=16)
+    before = list_versions(spark, path)
+    m0 = _index_manifest(spark, path)
+    st = index_upsert(spark, path,
+                      emb.filter("vec_id < 0").select("vec_id", "embedding"))
+    assert st == {"decision": "noop", "n_new": 0, "n_replaced": 0}
+    assert list_versions(spark, path) == before
+    assert _index_manifest(spark, path)["codes"] == m0["codes"]
+
+
 def test_deleted_codes_dir_is_index_corrupt_error(spark, emb, tmp_path):
     """A committed manifest whose codes dir is gone is a typed
     IndexCorruptError naming the path and saying "rebuild" at every

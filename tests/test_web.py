@@ -4,6 +4,8 @@ behavior; these tests pin the SEMANTICS on hand-built URLs."""
 
 from __future__ import annotations
 
+from hypothesis import given
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from public_transit_data_platform_sql_nosql_spark.pipeline.web import (
@@ -119,3 +121,16 @@ def test_blocklist_is_suffix_scoped(spark):
     assert kept == [3, 4]
     # empty blocklist keeps everything
     assert blocklist_filter(docs, blocked=()).count() == 4
+
+
+@given(st.lists(st.sampled_from(
+    ["a", "b", "m0", "mid", "example", "org", "net"]),
+    min_size=1, max_size=5))
+def test_host_suffix_structure(labels):
+    """The python mirror of host_suffixes: |suffixes| == |labels| and
+    each drops exactly one leading label."""
+    host = ".".join(labels)
+    sfx = [".".join(labels[i:]) for i in range(len(labels))]
+    assert len(sfx) == len(labels)
+    for i in range(1, len(sfx)):
+        assert sfx[i - 1] == labels[i - 1] + "." + sfx[i]
